@@ -1,6 +1,7 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.{HashMap => JHashMap}
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -118,7 +119,11 @@ case class MisraGriesAgg(
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     out.writeInt(buf.size())
-    buf.forEach((k, v) => { out.writeUTF(k); out.writeLong(v) })
+    buf.forEach { (k, v) =>
+      val b = k.getBytes(UTF_8)
+      ByteCounts.writeKey(out, b, 0, b.length)
+      out.writeLong(v)
+    }
     out.flush()
     bos.toByteArray
   }
@@ -128,7 +133,10 @@ case class MisraGriesAgg(
     val n = in.readInt()
     val m = new JHashMap[String, Long](n * 2)
     var i = 0
-    while (i < n) { m.put(in.readUTF(), in.readLong()); i += 1 }
+    while (i < n) {
+      m.put(new String(ByteCounts.readKey(in), UTF_8), in.readLong())
+      i += 1
+    }
     m
   }
 

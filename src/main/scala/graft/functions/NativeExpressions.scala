@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.call_function
@@ -570,7 +570,9 @@ case class CentroidAssignExpr(child: Expression,
   * is one tight loop per row inside whole-stage codegen. Order of
   * emitted pairs matches the HOF form (outer index ascending, inner
   * ascending), so on a sorted distinct basket every pair is a < b. */
-case class SortedPairsExpr(child: Expression) extends UnaryExpression {
+case class SortedPairsExpr(child: Expression) extends UnaryExpression
+  with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("a", LongType,
@@ -679,12 +681,16 @@ object GraftFunctions {
       graft.ops.Quality.langOrder.map(l =>
         l -> graft.ops.Quality.langMarkers(l)), 0.02)))
 
-  /** Register into an existing (classic) session; safe to call per query. */
+  /** Register into an existing (classic) session; safe to call per query.
+    * Only names the session lacks are registered, so a session built with
+    * [[GraftExtensions]] (or already served by an earlier call) keeps its
+    * builders and logs no "replaced a previously registered function". */
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 

@@ -32,12 +32,19 @@ object StockCount {
   }
 
   /** Scale variant of [[fromLines]]: identical results, but the whole
-    * mapper (real Java `String.split`, arity filter, last-field trim) and
-    * counting run inside a map-side [[graft.functions.TokenCountsAgg]] —
-    * one pass per line (the declarative plan re-evaluates the split
-    * emulation in both the pushed-down filter and the projection), no
-    * per-ticker row materialized, and the shuffle carries one small
-    * ticker->count map per partition. */
+    * mapper and counting run inside a map-side
+    * [[graft.functions.TokenCountsAgg]] over the line's UTF-8 bytes — one
+    * pass per line (the declarative plan re-evaluates the split emulation
+    * in both the pushed-down filter and the projection), no per-ticker row
+    * materialized, and the shuffle carries one small ticker->count map per
+    * partition.
+    *
+    * The mapper is Java's `fields = line.split(",")`, kept when
+    * `fields.length > 3`, keyed by `fields.last.trim`. Split drops trailing
+    * empty fields but keeps leading and inner ones, so a line has
+    * (commas after dropping trailing commas) + 1 fields, and the ticker is
+    * the text after the last such comma with chars <= U+0020 trimmed from
+    * both ends — possibly empty (`"1,h,d,  "` counts ""). */
   def fromLinesAgg(lines: DataFrame, lineCol: String = "value"): DataFrame = {
     val counts = lines
       .agg(graft.functions.GraftFunctions

@@ -39,10 +39,19 @@ object WordCount {
 
   /** Scale variant of [[fromLines]]: identical results, but word counting
     * happens inside a [[graft.functions.TokenCountsAgg]] map-side aggregate
-    * — no per-token row is ever materialized (the explode plan generates
-    * one row per token before partial aggregation collapses them; at 500k
-    * lines that is ~27M rows). The shuffle carries one small token->count
-    * map per partition. Restriction: uses the reference stop-word list. */
+    * over the line's UTF-8 bytes — no per-token row is ever materialized
+    * (the explode plan generates one row per token before partial
+    * aggregation collapses them; at 500k lines that is ~27M rows). The
+    * shuffle carries one small token->count map per partition.
+    * Restriction: uses the reference stop-word list.
+    *
+    * The mapper is Java's `fields = line.split(",")`, then the headline
+    * `fields(1..n-3).mkString(",")` when `n = fields.length > 1`. Split
+    * drops trailing empty fields but keeps leading and inner ones, so the
+    * headline is exactly the text between the first comma and the
+    * second-to-last comma once trailing commas are dropped (empty with
+    * fewer than three commas). Its tokens are the a-z runs after
+    * lower-casing; every other char, commas included, delimits. */
   def fromLinesAgg(lines: DataFrame, lineCol: String = "value",
                    k: Int = TopK): DataFrame = {
     val counts = lines

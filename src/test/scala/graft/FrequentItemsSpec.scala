@@ -89,6 +89,15 @@ class FrequentItemsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("capacity"))
   }
 
+  test("misra_gries carries a key over 64 KB through the shuffle") {
+    val big = "k" * 70000
+    val m = Seq(big, "x", big).toDF("token").repartition(2)
+      .agg(graft.functions.GraftFunctions.misraGries(spark, col("token"), 4)
+        .as("mg"))
+      .head().getMap[String, Long](0)
+    assert(m == Map(big -> 2L, "x" -> 1L))
+  }
+
   test("deletion-signature join finds exactly the brute-force " +
     "distance-<=1 pairs (substitutions, inserts, deletes, decoys)") {
     // crafted neighborhood: substitution pairs, insert/delete pairs,

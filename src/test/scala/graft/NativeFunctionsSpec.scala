@@ -398,4 +398,33 @@ class NativeFunctionsSpec extends AnyFunSuite {
     assert(r.getSeq[Long](1) ==
       TextHashes.minhashSig("one two three four", 4).toSeq)
   }
+
+  test("graft_pairs rejects non-array<bigint> input at analysis") {
+    GraftFunctions.ensureRegistered(spark)
+    Seq("array(1, 2)", "'x'", "array('a', 'b')").foreach { arg =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT graft_pairs($arg)"))
+      assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), s"$arg: $e")
+    }
+    assert(spark.sql("SELECT graft_pairs(array(1L, 5L, 9L))").head()
+      .getSeq[org.apache.spark.sql.Row](0).size == 3)
+  }
+
+  test("ensureRegistered adds only missing names; a repeat replaces none") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = spark.newSession()
+    val reg = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val pairs = FunctionIdentifier("graft_pairs")
+    reg.dropFunction(pairs)
+    assert(!reg.functionExists(pairs))
+    GraftFunctions.ensureRegistered(s)
+    assert(reg.functionExists(pairs))
+    val graft = reg.listFunction().filter(_.funcName.startsWith("graft_"))
+    assert(graft.size > 20)
+    val before = graft.map(f => f -> reg.lookupFunctionBuilder(f).get).toMap
+    GraftFunctions.ensureRegistered(s)
+    graft.foreach(f =>
+      assert(reg.lookupFunctionBuilder(f).get eq before(f), f.funcName))
+  }
 }
