@@ -126,7 +126,7 @@ object SparkEntry {
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
       .select(explode(
-        graft.functions.GraftFunctions.sortedPairs(s, col("parts")))
+        graft.functions.GraftFunctions.sortedPairs(col("parts")))
         .as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("n")).where(col("n") >= 2)
@@ -578,7 +578,7 @@ object SparkEntry {
     * the dedup_minhash/lsh/jaccard queries. */
   private def minhashSigDf(s: SparkSession, dir: String): DataFrame = {
     val sigs = tbl(s, dir, "documents").select(col("doc_id"),
-      graft.functions.GraftFunctions.minhashSig(s, col("text"), 8).as("sig"))
+      graft.functions.GraftFunctions.minhashSig(col("text"), 8).as("sig"))
     sigs.select(col("doc_id") +:
       (0 until 8).map(i => element_at(col("sig"), i + 1).as(s"sig$i")): _*)
   }
@@ -605,10 +605,10 @@ object SparkEntry {
   private def jaccardPairsWithSetsDf(s: SparkSession, dir: String)
   : DataFrame = {
     val sh = tbl(s, dir, "documents").select(col("doc_id"),
-      graft.functions.GraftFunctions.shingles(s, col("text")).as("shg"))
+      graft.functions.GraftFunctions.shingles(col("text")).as("shg"))
       .localCheckpoint(false)
     val sigArr = graft.functions.GraftFunctions
-      .minhashSigFromShingles(s, col("shg"), 8).as("sig")
+      .minhashSigFromShingles(col("shg"), 8).as("sig")
     val sigs = sh.select(col("doc_id"), sigArr)
       .select(col("doc_id") +:
         (0 until 8).map(i => element_at(col("sig"), i + 1).as(s"sig$i")): _*)
@@ -1112,7 +1112,7 @@ object SparkEntry {
     * superset bound under real Zipfian skew are exercised in
     * HeavyHittersSpec. */
   private def heavyHittersDf(s: SparkSession, dir: String): DataFrame =
-    graft.ops.FrequentItems.exactHeavyHitters(s,
+    graft.ops.FrequentItems.exactHeavyHitters(
       tbl(s, dir, "documents")
         .select(explode(Dedup.cleanTokens(col("text"))).as("token")),
       col("token"),
@@ -1166,7 +1166,7 @@ object SparkEntry {
     Dedup.exactSimilarityPairs(
       tbl(s, dir, "documents").select(col("doc_id"),
         array_distinct(
-          graft.functions.GraftFunctions.shingles(s, col("text"))).as("sh")),
+          graft.functions.GraftFunctions.shingles(col("text"))).as("sh")),
       // no checkpoint: the operator consumes `sh` exactly once (its
       // dictionary-encoded per-doc arrays are what feed prefix + verify)
       t = 0.6)
@@ -1369,7 +1369,7 @@ object SparkEntry {
         out
       }
       val zDir = stage("zorder_2d",
-        graft.functions.GraftFunctions.zorder(s, pq, dq))
+        graft.functions.GraftFunctions.zorder(pq, dq))
       val pDir = stage("zorder_1d", col("o_totalprice"))
       // the zone-map manifest: per-file [min, max] of the DAY number
       def manifest(d: String): Array[(String, Long, Long)] =
@@ -1768,7 +1768,7 @@ object SparkEntry {
         .cast("long"), lit(65535L))
       val dq = least(greatest(floor(day * 65535.0 / 2405.0).cast("long"),
         lit(0L)), lit(65535L))
-      val zcol = graft.functions.GraftFunctions.zorder(s, pq, dq)
+      val zcol = graft.functions.GraftFunctions.zorder(pq, dq)
       def ingest(version: Long, batch: DataFrame): Unit = {
         val out = s"$root/batch_$version"
         batch.repartitionByRange(8, zcol).sortWithinPartitions(zcol)
@@ -2510,7 +2510,7 @@ object SparkEntry {
       val gen = substring(col("source"), 4, 10).cast("int")
       def withSigs(df: DataFrame): DataFrame = {
         val sig = df.withColumn("sig",
-          graft.functions.GraftFunctions.minhashSig(s, col("text"), 8))
+          graft.functions.GraftFunctions.minhashSig(col("text"), 8))
         (0 until 8).foldLeft(sig)((d, i) =>
           d.withColumn(s"sig$i", element_at(col("sig"), i + 1)))
       }
@@ -2871,11 +2871,11 @@ object SparkEntry {
       // its FP bound at any scale; driver state stays one long.
       val nKeys = math.max(20000L, (cust.count() * 13L) / 10L)
       val bloom = cust.agg(graft.functions.GraftFunctions
-        .bloomAgg(s, xxhash64(col("c_custkey")), nKeys).as("bf"))
+        .bloomAgg(xxhash64(col("c_custkey")), nKeys).as("bf"))
       tbl(s, dir, "orders")
         .crossJoin(broadcast(bloom))
         .where(graft.functions.GraftFunctions.bloomMightContain(
-          s, col("bf"), xxhash64(col("o_custkey"))))
+          col("bf"), xxhash64(col("o_custkey"))))
         .join(broadcast(cust.select(col("c_custkey"))),
           col("o_custkey") === col("c_custkey"))
         .groupBy("o_orderstatus")
@@ -2899,11 +2899,11 @@ object SparkEntry {
       val nKeys = math.max(20000L, (seg.count() * 13L) / 10L)
       val bloom = seg
         .agg(graft.functions.GraftFunctions
-          .bloomAgg(s, xxhash64(col("c_custkey")), nKeys).as("bf"))
+          .bloomAgg(xxhash64(col("c_custkey")), nKeys).as("bf"))
       cust.crossJoin(broadcast(bloom))
         .select((col("c_mktsegment") === "BUILDING").as("present"),
           graft.functions.GraftFunctions.bloomMightContain(
-            s, col("bf"), xxhash64(col("c_custkey"))).as("hit"))
+            col("bf"), xxhash64(col("c_custkey"))).as("hit"))
         .agg(
           sum(when(col("present") && !col("hit"), 1L).otherwise(0L))
             .as("n_present_missed"),
@@ -4018,7 +4018,7 @@ object SparkEntry {
         .crossJoin(broadcast(sketch))
         .select(col("event_type"),
           (graft.functions.GraftFunctions
-            .cmsEstimate(s, col("cms"), col("event_type"))
+            .cmsEstimate(col("cms"), col("event_type"))
             .between(col("exact"),
               col("exact") + ceil(col("n") * 0.001).cast("long")))
             .cast("long").as("within_eps"))
@@ -4036,14 +4036,14 @@ object SparkEntry {
         .agg(expr("count_min_sketch(event_type, 0.001d, 0.999d, 42)")
           .as("cms"), count(lit(1)).as("n"))
       val merged = daily.agg(
-        graft.functions.GraftFunctions.cmsMerge(s, col("cms")).as("cms"),
+        graft.functions.GraftFunctions.cmsMerge(col("cms")).as("cms"),
         sum(col("n")).as("n"))
       events(s, dir).groupBy("event_type")
         .agg(count(lit(1)).as("exact"))
         .crossJoin(broadcast(merged))
         .select(col("event_type"),
           (graft.functions.GraftFunctions
-            .cmsEstimate(s, col("cms"), col("event_type"))
+            .cmsEstimate(col("cms"), col("event_type"))
             .between(col("exact"),
               col("exact") + ceil(col("n") * 0.001).cast("long")))
             .cast("long").as("within_eps"))
@@ -4057,7 +4057,7 @@ object SparkEntry {
     // NativeFunctionsSpec on range-partitioned bounding boxes.
     "rel_zorder_value" -> ((s, dir) =>
       events(s, dir).select(col("event_id"),
-        graft.functions.GraftFunctions.zorder(s,
+        graft.functions.GraftFunctions.zorder(
           pmod(col("user_id"), lit(65536)),
           pmod(col("event_id"), lit(65536))).as("zval"))),
 
@@ -4230,7 +4230,7 @@ object SparkEntry {
       val docs = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
       def lshRows(in: DataFrame): DataFrame = {
         val sigs = in.select(col("doc_id"),
-          graft.functions.GraftFunctions.minhashSig(s, col("text"), 8)
+          graft.functions.GraftFunctions.minhashSig(col("text"), 8)
             .as("sig"))
           .select(col("doc_id") +: (0 until 8).map(i =>
             element_at(col("sig"), i + 1).as(s"sig$i")): _*)
@@ -4287,7 +4287,7 @@ object SparkEntry {
     // over the same first-8-md5-bytes words the minhash oracle parses).
     "dedup_simhash" -> ((s, dir) =>
       tbl(s, dir, "documents").select(col("doc_id"),
-        graft.functions.GraftFunctions.simhash64(s, col("text"))
+        graft.functions.GraftFunctions.simhash64(col("text"))
           .as("simhash"))),
 
     // Content-defined chunking dedup: rolling-hash chunk boundaries
@@ -4299,7 +4299,7 @@ object SparkEntry {
     "dedup_cdc_chunks" -> ((s, dir) =>
       tbl(s, dir, "documents")
         .select(col("doc_id"),
-          explode(graft.functions.GraftFunctions.cdcChunks(s, col("text")))
+          explode(graft.functions.GraftFunctions.cdcChunks(col("text")))
             .as("chunk"))
         .groupBy(md5(col("chunk")).as("chunk_md5"))
         .agg(count(lit(1)).as("n_occ"),
@@ -4377,7 +4377,7 @@ object SparkEntry {
     // the oracle is unchanged. This was the ladder's one ratio outlier
     // (9.4 s at sf1, round 11/12).
     "text_quality" -> ((s, dir) => {
-      val st = graft.functions.GraftFunctions.textStats(s, col("text"))
+      val st = graft.functions.GraftFunctions.textStats(col("text"))
       def ratio(num: org.apache.spark.sql.Column,
                 den: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         when(den === 0L, lit(0.0))
@@ -4401,7 +4401,7 @@ object SparkEntry {
     // Language-ID heuristic (marker-word argmax)
     "text_lang_id" -> ((s, dir) =>
       tbl(s, dir, "documents").select(col("doc_id"),
-        graft.functions.GraftFunctions.langId(s, col("text"))
+        graft.functions.GraftFunctions.langId(col("text"))
           .as("lang_pred"))),
 
     // End-to-end training-data pipeline — the capstone composition every
@@ -4451,7 +4451,7 @@ object SparkEntry {
 
     "pipeline_training_data" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents").select(col("doc_id"), col("text"),
-        graft.functions.GraftFunctions.langId(s, col("text"))
+        graft.functions.GraftFunctions.langId(col("text"))
           .as("lang_pred"),
         size(Dedup.cleanTokens(col("text"))).cast("long").as("n_tok"))
       val kept = docs.where(col("lang_pred") =!= "unknown" &&
@@ -5256,7 +5256,7 @@ object SparkEntry {
         .localCheckpoint(false)
       val pairs = baskets
         .select(explode(
-          graft.functions.GraftFunctions.sortedPairs(s, col("parts")))
+          graft.functions.GraftFunctions.sortedPairs(col("parts")))
           .as("p"))
         .groupBy(col("p.a").as("part_a"), col("p.b").as("part_b"))
         .agg(count(lit(1)).as("cnt"))
@@ -6125,14 +6125,14 @@ object SparkEntry {
     "text_bigram_pmi" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
       val uni = docs.select(explode(
-          graft.functions.GraftFunctions.shingles(s, col("text"), 1))
+          graft.functions.GraftFunctions.shingles(col("text"), 1))
           .as("w"))
         .where(col("w") =!= "")
         .groupBy("w").agg(count(lit(1)).as("cw"))
         .localCheckpoint(false)
       val n1 = uni.agg(sum(col("cw")).as("n1"))
       val bg = docs.select(explode(
-          graft.functions.GraftFunctions.shingles(s, col("text"), 2))
+          graft.functions.GraftFunctions.shingles(col("text"), 2))
           .as("bigram"))
         .where(size(split(col("bigram"), " ")) === 2)
         .groupBy("bigram").agg(count(lit(1)).as("cxy"))
@@ -6653,8 +6653,8 @@ object SparkEntry {
 
     // Running revenue, written in the TEXTBOOK single-partition window
     // form — and rewritten to the distributed GlobalScan by
-    // GlobalScanRule (session-wide via GraftExtensions in the Bench/
-    // Verify/Explain/test session builders), so the rule's value parity
+    // GlobalScanRule (injected by GraftExtensions.inject, which builds
+    // every Bench/Verify/Explain/test session), so the rule's value parity
     // is proven by the oracle gate itself, not just specs. On a session
     // without the extensions the query still runs correctly as a plain
     // window. Cents as long: exact prefix sums, no float
@@ -7395,7 +7395,7 @@ object SparkEntry {
     "text_bigram_counts" -> ((s, dir) =>
       tbl(s, dir, "documents")
         .select(explode(
-          graft.functions.GraftFunctions.shingles(s, col("text"), 2))
+          graft.functions.GraftFunctions.shingles(col("text"), 2))
           .as("bigram"))
         .groupBy("bigram").agg(count(lit(1)).as("cnt"))),
 
@@ -7410,14 +7410,14 @@ object SparkEntry {
     "text_gopher_rules" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
       val toks = docs.select(col("doc_id"),
-          explode(graft.functions.GraftFunctions.shingles(s, col("text"), 1))
+          explode(graft.functions.GraftFunctions.shingles(col("text"), 1))
             .as("tok"))
         .where(col("tok") =!= "")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_words"),
           round(avg(length(col("tok"))), 6).as("mean_word_len"))
       val bg = docs.select(col("doc_id"),
-          explode(graft.functions.GraftFunctions.shingles(s, col("text"), 2))
+          explode(graft.functions.GraftFunctions.shingles(col("text"), 2))
             .as("bigram"))
         .where(col("bigram").contains(" "))
         .groupBy("doc_id", "bigram").agg(count(lit(1)).as("cnt"))
@@ -7453,7 +7453,7 @@ object SparkEntry {
     "text_contamination" -> ((s, dir) => {
       val sg = tbl(s, dir, "documents").select(col("doc_id"), col("source"),
         explode(array_distinct(
-          graft.functions.GraftFunctions.shingles(s, col("text"))))
+          graft.functions.GraftFunctions.shingles(col("text"))))
           .as("sh"))
       val benchmark = sg.where(col("source") === "src0")
         .select(col("sh"), col("doc_id").as("eval_id")).distinct()
@@ -7482,7 +7482,7 @@ object SparkEntry {
       // each re-run the full tokenize+shingle explode — the dominant
       // cost at corpus scale (measured 6.3x at the 10x ladder rung)
       val docBg = docs.select(col("doc_id"),
-          explode(graft.functions.GraftFunctions.shingles(s, col("text"), 2))
+          explode(graft.functions.GraftFunctions.shingles(col("text"), 2))
             .as("bigram"))
         .where(col("bigram").contains(" "))
         .withColumn("w1", substring_index(col("bigram"), " ", 1))
@@ -7570,7 +7570,7 @@ object SparkEntry {
       val halves = tbl(s, dir, "embeddings")
         .groupBy(col("label"), (col("vec_id") % 2).cast("long").as("half"))
         .agg(graft.functions.GraftFunctions
-            .vecMean(s, col("embedding")).as("c"),
+            .vecMean(col("embedding")).as("c"),
           count(lit(1)).as("n"))
         .select(col("label"), col("half"),
           transform(col("c"), x => round(x, 6)).as("c"), col("n"))
@@ -7786,7 +7786,7 @@ object SparkEntry {
     "text_lang_confusion" -> ((s, dir) =>
       tbl(s, dir, "documents")
         .groupBy(col("lang"),
-          graft.functions.GraftFunctions.langId(s, col("text"))
+          graft.functions.GraftFunctions.langId(col("text"))
             .as("lang_pred"))
         .agg(count(lit(1)).as("cnt"))),
 
@@ -7925,7 +7925,7 @@ object SparkEntry {
         .where(col("id1").isNotNull)
       val sh = tbl(s, dir, "documents").select(col("doc_id"),
         array_distinct(
-          graft.functions.GraftFunctions.shingles(s, col("text"))).as("sh"))
+          graft.functions.GraftFunctions.shingles(col("text"))).as("sh"))
       pairs
         .join(sh.select(col("doc_id").as("id1"), col("sh").as("sh1")), "id1")
         .join(sh.select(col("doc_id").as("id2"), col("sh").as("sh2")), "id2")
@@ -8070,7 +8070,7 @@ object SparkEntry {
       val sh = tbl(s, dir, "documents").where(sampled)
         .select(col("doc_id"),
           array_distinct(graft.functions.GraftFunctions
-            .shingles(s, col("text"))).as("sh"))
+            .shingles(col("text"))).as("sh"))
         .localCheckpoint(false) // feeds the explode + both size lookups
       val ex = sh.select(col("doc_id"), explode(col("sh")).as("g"))
       // exact co-occurrence counts WITHOUT the shingle self-join: group
@@ -9034,7 +9034,7 @@ object SparkEntry {
     "text_repetition_score" -> ((s, dir) =>
       tbl(s, dir, "documents")
         .select(col("doc_id"),
-          graft.functions.GraftFunctions.shingles(s, col("text")).as("sh"))
+          graft.functions.GraftFunctions.shingles(col("text")).as("sh"))
         .select(col("doc_id"),
           size(col("sh")).cast("long").as("n_shingles"),
           size(array_distinct(col("sh"))).cast("long").as("n_distinct"),
@@ -9067,9 +9067,9 @@ object SparkEntry {
     }),
 
     // SQL-STRING TWINS OF THE Global* REWRITE FAMILIES — the session
-    // extensions (GraftExtensions.inject) register optimizer rules, so
-    // the distributed-window rewrites must fire on ANY logical plan,
-    // however it was built. rel_sql_interface proved the hash-aggregate
+    // extensions (GraftExtensions.inject, the one registration path)
+    // inject optimizer rules, so the distributed-window rewrites must
+    // fire on ANY logical plan, however it was built. rel_sql_interface proved the hash-aggregate
     // shape reaches SQL users; these six prove the custom-operator
     // surface does too: each is the textbook un-partitioned window
     // written as an ANSI SQL STRING through spark.sql, one per rewrite
@@ -9159,8 +9159,9 @@ object SparkEntry {
     }),
 
     // Native TYPED AGGREGATE from a SQL string — the injected function
-    // surface: GraftExtensions registers graft_kmv_sketch (and the
-    // other natives) into the session's function registry, so a SQL
+    // surface: GraftExtensions.inject puts graft_kmv_sketch (and the
+    // other natives) into the function registry as the session is
+    // built, so a SQL
     // user builds the bounded sketch with no DataFrame API at all; the
     // estimator is plain SQL over the returned array. Oracle = the
     // k-smallest construction in DuckDB, value-exact.
@@ -9186,7 +9187,6 @@ object SparkEntry {
     // per segment by graft_kmv_merge, both stages raw SQL. Lossless
     // merge ⇒ the same from-scratch oracle as rel_sql_sketch_agg.
     "rel_sql_kmv_merge" -> ((s, dir) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       events(s, dir).select(col("event_type"),
         to_date(col("ts")).as("day"),
         thetaHash((col("user_id") * 100000L +
@@ -9214,7 +9214,6 @@ object SparkEntry {
     // Lossless merge ⇒ the same from-scratch oracle as
     // rel_quantile_sketch.
     "rel_sql_qsketch" -> ((s, dir) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       events(s, dir).select(col("event_type"),
         unix_date(to_date(col("ts"))).cast("long").as("day"),
         thetaHash(col("event_id")).as("h"),
@@ -9392,7 +9391,7 @@ object SparkEntry {
       base.select(col("event_type"), col("key"),
         thetaHash(col("key")).as("h"))
         .groupBy("event_type")
-        .agg(graft.functions.GraftFunctions.kmvSketch(s, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"), countDistinct(col("key")).as("exact"))
         .select(col("event_type"),
           size(col("ks")).cast("long").as("n_kept"),
@@ -9417,10 +9416,10 @@ object SparkEntry {
             .cast("long").as("key"))
       val daily = base.select(col("day"), thetaHash(col("key")).as("h"))
         .groupBy("day")
-        .agg(graft.functions.GraftFunctions.kmvSketch(s, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"))
       val merged = daily.select(explode(col("ks")).as("h"))
-        .agg(graft.functions.GraftFunctions.kmvSketch(s, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"))
       val exact = base.agg(countDistinct(col("key")).as("exact"))
       merged.crossJoin(broadcast(exact))
@@ -9445,7 +9444,7 @@ object SparkEntry {
             .cast("long").as("key"))
       val sk = base.select(col("event_type"), thetaHash(col("key")).as("h"))
         .groupBy("event_type")
-        .agg(graft.functions.GraftFunctions.kmvSketch(s, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"))
       val a = sk.where(col("event_type") === "click")
         .select(col("ks").as("ka")).limit(1)
@@ -9483,7 +9482,7 @@ object SparkEntry {
             .cast("long").as("key"))
       val sk = base.select(col("event_type"), thetaHash(col("key")).as("h"))
         .groupBy("event_type")
-        .agg(graft.functions.GraftFunctions.kmvSketch(s, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"))
       val a = sk.where(col("event_type") === "click")
         .select(col("ks").as("ka")).limit(1)
@@ -9588,7 +9587,7 @@ object SparkEntry {
         .select(unix_date(to_date(col("ts"))).cast("long").as("day"),
           thetaHash(col("user_id").cast("long")).as("h"))
         .groupBy("day")
-        .agg(graft.functions.GraftFunctions.kmvSketch(s, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"))
       val span = daily.agg(max(col("day")).as("d1"))
       daily
@@ -9599,7 +9598,7 @@ object SparkEntry {
         .groupBy("obs_day")
         // O(k) column merge (graft_kmv_merge): the window stage ships
         // O(days × 7) sketch ROWS, never explodes them back to hashes
-        .agg(graft.functions.GraftFunctions.kmvMerge(s, col("ks"), k)
+        .agg(graft.functions.GraftFunctions.kmvMerge(col("ks"), k)
           .as("ks"))
         .select(col("obs_day").cast("long").as("obs_day"),
           size(col("ks")).cast("long").as("n_kept"),
@@ -9626,7 +9625,7 @@ object SparkEntry {
           expr("cast(round(value * 1000) AS bigint)").as("cents"))
         .groupBy("day")
         .agg(graft.functions.GraftFunctions
-          .qsketch(s, col("h"), col("cents"), cap).as("qs"))
+          .qsketch(col("h"), col("cents"), cap).as("qs"))
       val span = daily.agg(max(col("day")).as("d1"))
       daily
         .select(explode(expr("sequence(day, day + 6)")).as("obs_day"),
@@ -9635,7 +9634,7 @@ object SparkEntry {
         .where(col("obs_day") <= col("d1")) // no post-horizon days
         .groupBy("obs_day")
         .agg(graft.functions.GraftFunctions
-          .qsketchMerge(s, col("qs"), cap).as("qs"))
+          .qsketchMerge(col("qs"), cap).as("qs"))
         .select(col("obs_day"), col("qs"),
           expr("array_sort(filter(qs, (x, i) -> i >= 2 AND i % 2 = 0))")
             .as("vals"))
@@ -9772,13 +9771,13 @@ object SparkEntry {
         .select(col("event_type"), col("is_delta"),
           thetaHash(col("key")).as("h"))
         .groupBy("event_type", "is_delta")
-        .agg(graft.functions.GraftFunctions.kmvSketch(s, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"))
       // refresh = O(k) merge of the two partial sketch COLUMNS
       // (graft_kmv_merge), never a rescan and never an explode
       val merged = parts
         .groupBy("event_type")
-        .agg(graft.functions.GraftFunctions.kmvMerge(s, col("ks"), k)
+        .agg(graft.functions.GraftFunctions.kmvMerge(col("ks"), k)
           .as("ks"))
       val exact = staged.groupBy("event_type")
         .agg(countDistinct(col("key")).as("exact"))
@@ -9810,7 +9809,7 @@ object SparkEntry {
           thetaHash((col("user_id") * 100000L +
             unix_date(to_date(col("ts")))).cast("long")).as("h"))
         .groupBy("event_type", "day")
-        .agg(graft.functions.GraftFunctions.kmvSketch(s, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"))
         .write.mode("overwrite").parquet(store)
       // separate read: merge-at-read over the persisted partials only.
@@ -9820,7 +9819,7 @@ object SparkEntry {
         s.read.parquet(store)
           .groupBy("event_type")
           // O(k) column merge: partials never explode back to rows
-          .agg(graft.functions.GraftFunctions.kmvMerge(s, col("ks"), k)
+          .agg(graft.functions.GraftFunctions.kmvMerge(col("ks"), k)
             .as("ks"))
           .select(col("event_type"),
             size(col("ks")).cast("long").as("n_kept"),
@@ -9851,7 +9850,7 @@ object SparkEntry {
         .select(col("key"), thetaHash(col("key")).as("h"))
       val aggs = countDistinct(col("key")).as("exact") +:
         caps.map(k => graft.functions.GraftFunctions
-          .kmvSketch(s, col("h"), k).as(s"ks$k"))
+          .kmvSketch(col("h"), k).as(s"ks$k"))
       // one row (exact + three sketches); checkpointed so the three
       // per-cap readouts below never rescan events
       val one = hashed.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
@@ -9888,7 +9887,7 @@ object SparkEntry {
     "rel_sketch_cube" -> ((s, dir) => {
       val k = 128
       val kmv = (c: Column) =>
-        graft.functions.GraftFunctions.kmvSketch(s, c, k)
+        graft.functions.GraftFunctions.kmvSketch(c, k)
       val fin = events(s, dir)
         .select(col("event_type"),
           (unix_date(to_date(col("ts"))).cast("long") % 7).as("dow"),
@@ -9902,7 +9901,7 @@ object SparkEntry {
       // rollups = O(cells × k) column merges (graft_kmv_merge): the
       // partials never explode back to cells × k rows
       val mrg = (c: Column) =>
-        graft.functions.GraftFunctions.kmvMerge(s, c, k)
+        graft.functions.GraftFunctions.kmvMerge(c, k)
       val cell = fin.select(col("event_type").as("event_type_g"),
         col("dow").as("dow_g"), col("ks"))
       val byType = fin
@@ -9989,7 +9988,7 @@ object SparkEntry {
           expr("cast(round(value * 1000) AS bigint)").as("cents"))
         .groupBy("event_type")
         .agg(graft.functions.GraftFunctions
-          .qsketch(s, col("h"), col("cents"), cap).as("qs"))
+          .qsketch(col("h"), col("cents"), cap).as("qs"))
         // values sit at even 0-based positions >= 2 of [L, h1, v1, ...]
         .select(col("event_type"), col("qs"),
           expr("array_sort(filter(qs, (x, i) -> i >= 2 AND i % 2 = 0))")
@@ -10021,7 +10020,7 @@ object SparkEntry {
       val perCap = Seq(256, 1024, 4096).map { cap =>
         ev.groupBy("event_type")
           .agg(graft.functions.GraftFunctions
-            .qsketch(s, col("h"), col("cents"), cap).as("qs"))
+            .qsketch(col("h"), col("cents"), cap).as("qs"))
           .select(col("event_type"), lit(cap.toLong).as("cap"),
             element_at(col("qs"), 1).as("lvl"),
             expr("array_sort(filter(qs, (x, i) -> i >= 2 AND i % 2 = 0))")
@@ -10069,7 +10068,7 @@ object SparkEntry {
           expr("cast(round(value * 1000) AS bigint)").as("cents"))
         .groupBy("event_type", "day")
         .agg(graft.functions.GraftFunctions
-          .qsketch(s, col("h"), col("cents"), cap).as("qs"))
+          .qsketch(col("h"), col("cents"), cap).as("qs"))
         .write.mode("overwrite").parquet(store)
       try {
         val parts = s.read.parquet(store)
@@ -10078,7 +10077,7 @@ object SparkEntry {
           .where(col("day") > col("d1") - 7)
           .groupBy("event_type")
           .agg(graft.functions.GraftFunctions
-            .qsketchMerge(s, col("qs"), cap).as("qs"))
+            .qsketchMerge(col("qs"), cap).as("qs"))
           .select(col("event_type"), col("qs"),
             expr("array_sort(filter(qs, (x, i) -> i >= 2 AND i % 2 = 0))")
               .as("vals"))
@@ -10109,7 +10108,7 @@ object SparkEntry {
             .cast("long").as("key"))
       val sk = base.select(col("event_type"), thetaHash(col("key")).as("h"))
         .groupBy("event_type")
-        .agg(graft.functions.GraftFunctions.kmvSketch(s, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"))
       val a = sk.where(col("event_type") === "click")
         .select(col("ks").as("ka")).limit(1)
@@ -10146,7 +10145,7 @@ object SparkEntry {
           .cast("long").as("key"))
       val sk = base.select(col("event_type"), thetaHash(col("key")).as("h"))
         .groupBy("event_type")
-        .agg(graft.functions.GraftFunctions.kmvSketch(s, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"))
       val a = sk.select(col("event_type").as("ta"), col("ks").as("ka"))
       val b = sk.select(col("event_type").as("tb"), col("ks").as("kb"))
@@ -10367,12 +10366,12 @@ object SparkEntry {
               org.apache.spark.sql.types.LongType))),
           "gate_skhandoff", store)(df =>
           df.groupBy("event_type")
-            .agg(graft.functions.GraftFunctions.kmvSketch(s, col("h"), k)
+            .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
               .as("ks")))
         val merged = s.read.parquet(store)
           .groupBy("event_type")
           // O(k) column merge of the appended batch partials
-          .agg(graft.functions.GraftFunctions.kmvMerge(s, col("ks"), k)
+          .agg(graft.functions.GraftFunctions.kmvMerge(col("ks"), k)
             .as("ks"))
         val exact = base.groupBy("event_type")
           .agg(countDistinct(col("key")).as("exact"))
@@ -10658,7 +10657,7 @@ object SparkEntry {
           "gate_qshandoff", store)(df =>
           df.groupBy("event_type")
             .agg(graft.functions.GraftFunctions
-              .qsketch(s, col("h"), col("cents"), cap).as("qs")))
+              .qsketch(col("h"), col("cents"), cap).as("qs")))
         // replay batch 0 through the identical exactly-once write path
         // — the store must be unchanged or the multiset merge breaks
         graft.streaming.StreamGate.writeBatchPartition(
@@ -10667,7 +10666,7 @@ object SparkEntry {
         s.read.parquet(store)
           .groupBy("event_type")
           .agg(graft.functions.GraftFunctions
-            .qsketchMerge(s, col("qs"), cap).as("qs"))
+            .qsketchMerge(col("qs"), cap).as("qs"))
           .select(col("event_type"), col("qs"),
             expr("array_sort(filter(qs, (x, i) -> i >= 2 AND i % 2 = 0))")
               .as("vals"))
@@ -10792,7 +10791,7 @@ object SparkEntry {
         .localCheckpoint(false) // feeds pair generation + supports
       val pairs = baskets
         .select(explode(
-          graft.functions.GraftFunctions.sortedPairs(s, col("parts")))
+          graft.functions.GraftFunctions.sortedPairs(col("parts")))
           .as("p"))
         .groupBy(col("p.a").as("pa"), col("p.b").as("pb"))
         .agg(count(lit(1)).as("cnt"))

@@ -15,14 +15,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * the candidate-generation pass of the two-pass EXACT heavy-hitters
   * operator (`rel_heavy_hitters`).
   *
-  * Each partition maintains at most `capacity` counters; inserting a key
-  * not in a full summary decrements every counter by the largest step
-  * that frees a slot (the batched form of the classic decrement loop).
-  * Partition summaries merge by adding counts and then shrinking back to
-  * `capacity` via the mergeable-summaries rule (Agarwal et al., PODS'12):
-  * subtract the (capacity+1)-th largest count from everything and drop
-  * the non-positives. Both operations only ever SUBTRACT mass uniformly
-  * across keys, so the invariant holds end to end:
+  * Each partition counts keys until it holds more than 2 x `capacity`
+  * counters, then shrinks back to `capacity` by the mergeable-summaries
+  * rule (Agarwal et al., PODS'12): subtract the (capacity+1)-th largest
+  * count from everything and drop the non-positives (the batched form of
+  * the classic decrement loop, run once per `capacity` new keys instead of
+  * on every miss). Partition summaries merge by adding counts and then
+  * shrinking the same way. A shrink by `d` removes at least
+  * d x (capacity+1) units of mass, since capacity+1 counters are >= d, and
+  * it only ever SUBTRACTS mass uniformly across keys, so the invariant
+  * holds end to end:
   *
   *   true_count(k) - N / (capacity + 1)  <=  estimate(k)  <=  true_count(k)
   *
@@ -34,8 +36,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * cardinality, which is what makes global heavy-hitters tractable at
   * 100 TB (a plain groupBy/HAVING shuffles EVERY distinct key).
   *
-  * The buffer is bounded at `capacity` entries at every point after an
-  * update/merge completes — driver memory is O(capacity), never O(keys).
+  * The buffer holds at most 2 x `capacity` entries after an update and at
+  * most `capacity` after a merge or eval — memory is O(capacity), never
+  * O(keys).
   */
 case class MisraGriesAgg(
     child: Expression,
@@ -81,14 +84,10 @@ case class MisraGriesAgg(
     val v = child.eval(input)
     if (v != null) {
       val k = v.asInstanceOf[UTF8String].toString
-      val cur = buf.get(k)
-      if (cur != null || buf.size() < capacity) {
-        buf.merge(k, 1L, (a, b) => a + b)
-      } else {
-        // full and key absent: insert then batch-decrement back to size
-        buf.put(k, 1L)
-        shrink(buf)
-      }
+      buf.merge(k, 1L, (a, b) => a + b)
+      // only a new key grows the map, so this fires once per `capacity`
+      // new keys
+      if (buf.size() > 2 * capacity) shrink(buf)
     }
     buf
   }
@@ -101,6 +100,9 @@ case class MisraGriesAgg(
   }
 
   override def eval(buf: JHashMap[String, Long]): Any = {
+    // a buffer that saw only updates (no merge) may still hold up to
+    // 2 x capacity counters
+    shrink(buf)
     val n = buf.size()
     val keys = new Array[Any](n)
     val vals = new Array[Any](n)

@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -580,6 +581,15 @@ case class SortedPairsExpr(child: Expression) extends UnaryExpression
       org.apache.spark.sql.types.StructField("b", LongType,
         nullable = false))), containsNull = false)
   override def prettyName: String = "graft_pairs"
+  // a null element would read as 0 through getLong: reject it at analysis
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, true) => TypeCheckResult.DataTypeMismatch(
+      "UNEXPECTED_INPUT_TYPE", Map("paramIndex" -> "first",
+        "requiredType" -> "\"ARRAY<BIGINT>\" (no null elements)",
+        "inputSql" -> s"\"${child.sql}\"",
+        "inputType" -> "\"ARRAY<BIGINT>\" (nullable elements)"))
+    case _ => super.checkInputDataTypes()
+  }
   override protected def nullSafeEval(input: Any): Any =
     SortedPairsExpr.pairsData(
       input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
@@ -627,15 +637,13 @@ case class ShinglesExpr(child: Expression, n: Int)
   : ShinglesExpr = copy(child = newChild)
 }
 
-/** Registration + Column-level API. Functions are injected per-session
-  * (idempotent) through the internal function registry; sessions built with
-  * `.withExtensions(GraftExtensions.inject)` get them at construction. */
+/** The builder table plus the Column-level API. [[GraftExtensions.inject]]
+  * registers every builder when a session is built; each helper below is a
+  * pure `call_function` over a registered name, so the DataFrame and SQL
+  * paths resolve through the same builder and analyze to the same plans. */
 object GraftFunctions {
 
-  private[functions] def builderSeq
-  : Seq[(String, Seq[Expression] => Expression)] = builders
-
-  private def builders = Seq[(String, Seq[Expression] => Expression)](
+  private[graft] val builders = Seq[(String, Seq[Expression] => Expression)](
     "graft_simhash64" -> (es => SimHash64Expr(es.head)),
     "graft_minhash_sig" -> (es => MinHashSigExpr(es.head,
       es(1).eval().asInstanceOf[Number].intValue())),
@@ -681,215 +689,131 @@ object GraftFunctions {
       graft.ops.Quality.langOrder.map(l =>
         l -> graft.ops.Quality.langMarkers(l)), 0.02)))
 
-  /** Register into an existing (classic) session; safe to call per query.
-    * Only names the session lacks are registered, so a session built with
-    * [[GraftExtensions]] (or already served by an earlier call) keeps its
-    * builders and logs no "replaced a previously registered function". */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
+  def simhash64(c: Column): Column = call_function("graft_simhash64", c)
 
-  def simhash64(spark: SparkSession, c: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_simhash64", c)
-  }
+  def minhashSig(c: Column, k: Int): Column =
+    call_function("graft_minhash_sig", c, lit(k))
 
-  def minhashSig(spark: SparkSession, c: Column, k: Int): Column = {
-    ensureRegistered(spark)
-    call_function("graft_minhash_sig", c,
-      org.apache.spark.sql.functions.lit(k))
-  }
-
-  def shingles(spark: SparkSession, c: Column, n: Int = 3): Column = {
-    ensureRegistered(spark)
-    call_function("graft_shingles", c, org.apache.spark.sql.functions.lit(n))
-  }
+  def shingles(c: Column, n: Int = 3): Column =
+    call_function("graft_shingles", c, lit(n))
 
   /** All i < j pairs of a long array as array<struct<a, b>> (see
     * [[SortedPairsExpr]]). */
-  def sortedPairs(spark: SparkSession, c: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_pairs", c)
-  }
+  def sortedPairs(c: Column): Column = call_function("graft_pairs", c)
 
   /** MinHash signature from a pre-computed shingle array (see
     * [[MinHashFromShinglesExpr]]). */
-  def minhashSigFromShingles(spark: SparkSession, c: Column, k: Int)
-  : Column = {
-    ensureRegistered(spark)
-    call_function("graft_minhash_from_shingles", c,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def minhashSigFromShingles(c: Column, k: Int): Column =
+    call_function("graft_minhash_from_shingles", c, lit(k))
 
   /** Map-side word counting (see [[TokenCountsAgg]]); aggregate function —
     * use inside `.agg(...)`; stop words are the reference list. */
-  def tokenCounts(spark: SparkSession, c: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_token_counts", c)
-  }
+  def tokenCounts(c: Column): Column = call_function("graft_token_counts", c)
 
   /** Whole reference WordCount mapper (naive split -> headline re-join ->
     * tokenize -> stop-filter -> count) as one map-side aggregate over raw
     * csv lines. */
-  def tokenCountsCsv(spark: SparkSession, c: Column): Column = {
-    ensureRegistered(spark)
+  def tokenCountsCsv(c: Column): Column =
     call_function("graft_token_counts_csv", c)
-  }
 
   /** Whole reference StockCount mapper (Java split -> arity filter ->
     * trimmed last field -> count) as one map-side aggregate over raw csv
     * lines. */
-  def tickerCounts(spark: SparkSession, c: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_ticker_counts", c)
-  }
+  def tickerCounts(c: Column): Column = call_function("graft_ticker_counts", c)
 
   /** Content-defined chunks (rolling-hash boundaries; see
     * [[TextHashes.cdcChunks]]). */
-  def cdcChunks(spark: SparkSession, c: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_cdc_chunks", c)
-  }
+  def cdcChunks(c: Column): Column = call_function("graft_cdc_chunks", c)
 
   /** Estimated count of `item` from a serialized count-min sketch (see
     * [[CmsEstimateExpr]]); pairs with the built-in `count_min_sketch`
     * aggregate. */
-  def cmsEstimate(spark: SparkSession, sketch: Column, item: Column)
-  : Column = {
-    ensureRegistered(spark)
+  def cmsEstimate(sketch: Column, item: Column): Column =
     call_function("graft_cms_estimate", sketch, item)
-  }
 
   /** Bloom-filter build aggregate over an `xxhash64`-ed key column (the
     * built-in [[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate]],
     * which Spark uses for runtime filters but does not register as a SQL
     * function); returns the serialized filter bytes. */
-  def bloomAgg(spark: SparkSession, hashed: Column, estItems: Long)
-  : Column = {
-    ensureRegistered(spark)
-    call_function("graft_bloom_agg", hashed,
-      org.apache.spark.sql.functions.lit(estItems))
-  }
+  def bloomAgg(hashed: Column, estItems: Long): Column =
+    call_function("graft_bloom_agg", hashed, lit(estItems))
 
   /** Probe of serialized bloom-filter bytes against an `xxhash64`-ed key
     * (see [[BloomMightContainExpr]]); pairs with [[bloomAgg]]. */
-  def bloomMightContain(spark: SparkSession, sketch: Column, hashed: Column)
-  : Column = {
-    ensureRegistered(spark)
+  def bloomMightContain(sketch: Column, hashed: Column): Column =
     call_function("graft_bloom_might_contain", sketch, hashed)
-  }
 
   /** Merge serialized count-min sketches into one (see [[CmsMergeAgg]]);
     * aggregate function — use inside `.agg(...)`. */
-  def cmsMerge(spark: SparkSession, c: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_cms_merge", c)
-  }
+  def cmsMerge(c: Column): Column = call_function("graft_cms_merge", c)
 
   /** Misra-Gries frequent-items candidate summary (see [[MisraGriesAgg]]);
     * aggregate function — use inside `.agg(...)`. Returns a
     * `map<string,bigint>` of at most `capacity` candidate keys whose set
     * is a guaranteed superset of every key with frequency >
     * N/(capacity+1). */
-  def misraGries(spark: SparkSession, c: Column, capacity: Int): Column = {
-    ensureRegistered(spark)
-    call_function("graft_misra_gries", c,
-      org.apache.spark.sql.functions.lit(capacity))
-  }
+  def misraGries(c: Column, capacity: Int): Column =
+    call_function("graft_misra_gries", c, lit(capacity))
 
   /** KMV/Theta sketch: k smallest distinct hash values as a sorted
     * `array<bigint>` (see [[KmvSketchAgg]]); aggregate function — use
     * inside `.agg(...)`. */
-  def kmvSketch(spark: SparkSession, c: Column, k: Int): Column = {
-    ensureRegistered(spark)
-    call_function("graft_kmv_sketch", c,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def kmvSketch(c: Column, k: Int): Column =
+    call_function("graft_kmv_sketch", c, lit(k))
 
   /** O(k) union of KMV sketch COLUMNS keeping the k smallest distinct
     * values (see [[KmvMergeAgg]]): merges already-built sketches
     * without exploding them back to rows; lossless vs re-sketching the
     * concatenated raw streams. Aggregate function — use inside
     * `.agg(...)`. */
-  def kmvMerge(spark: SparkSession, c: Column, k: Int): Column = {
-    ensureRegistered(spark)
-    call_function("graft_kmv_merge", c,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def kmvMerge(c: Column, k: Int): Column =
+    call_function("graft_kmv_merge", c, lit(k))
 
   /** Deterministic mergeable quantile sketch over (rowHash, value) —
     * md5-level sampling, rank error ~O(sqrt(1/capacity)); see
     * [[QSketch]] for the wire format and the lossless-merge identity.
     * Aggregate function — use inside `.agg(...)`. */
-  def qsketch(spark: SparkSession, hash: Column, value: Column,
-              capacity: Int): Column = {
-    ensureRegistered(spark)
-    call_function("graft_qsketch", hash, value,
-      org.apache.spark.sql.functions.lit(capacity))
-  }
+  def qsketch(hash: Column, value: Column, capacity: Int): Column =
+    call_function("graft_qsketch", hash, value, lit(capacity))
 
   /** O(capacity) merge of quantile-sketch COLUMNS (the [[QSketch]]
     * wire format) — the partials-store read path; lossless vs
     * sketching the concatenated raw data. Aggregate function — use
     * inside `.agg(...)`. */
-  def qsketchMerge(spark: SparkSession, c: Column, capacity: Int)
-  : Column = {
-    ensureRegistered(spark)
-    call_function("graft_qsketch_merge", c,
-      org.apache.spark.sql.functions.lit(capacity))
-  }
+  def qsketchMerge(c: Column, capacity: Int): Column =
+    call_function("graft_qsketch_merge", c, lit(capacity))
 
   /** Z-order (Morton) value of two long columns (see [[ZOrderExpr]]). */
-  def zorder(spark: SparkSession, x: Column, y: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_zorder", x, y)
-  }
+  def zorder(x: Column, y: Column): Column = call_function("graft_zorder", x, y)
 
   /** Element-wise mean of a vector column (see [[VectorMeanAgg]]);
     * aggregate function — use inside `.agg(...)`. */
-  def vecMean(spark: SparkSession, c: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_vec_mean", c)
-  }
+  def vecMean(c: Column): Column = call_function("graft_vec_mean", c)
 
   /** Second-moment sums of a vector column (see [[VectorOuterSumAgg]]):
     * [n, Σxᵢ…, upper-tri Σxᵢxⱼ…] — the covariance/PCA one-pass
     * primitive; aggregate function — use inside `.agg(...)`. */
-  def vecOuterSum(spark: SparkSession, c: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_vec_outer_sum", c)
-  }
+  def vecOuterSum(c: Column): Column = call_function("graft_vec_outer_sum", c)
 
   /** Stop-word share of clean tokens (native [[WordSetRatioExpr]] over the
     * reference stop list); equals [[graft.ops.Quality.stopwordRatio]]. */
-  def stopRatio(spark: SparkSession, c: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_stop_ratio", c)
-  }
+  def stopRatio(c: Column): Column = call_function("graft_stop_ratio", c)
 
   /** One-pass curation statistics struct (see [[TextStatsExpr]]):
     * n_chars, n_punct, n_tokens, n_stop, n_distinct. */
-  def textStats(spark: SparkSession, c: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_text_stats", c)
-  }
+  def textStats(c: Column): Column = call_function("graft_text_stats", c)
 
   /** Marker-argmax language ID (native [[LangIdExpr]]); equals
     * [[graft.ops.Quality.langId]]. */
-  def langId(spark: SparkSession, c: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_lang_id", c)
-  }
+  def langId(c: Column): Column = call_function("graft_lang_id", c)
 }
 
 /** SparkSessionExtensions hook: `SparkSession.builder.withExtensions(
   * GraftExtensions.inject)` or `spark.sql.extensions=graft.functions.
-  * GraftExtensions`. */
+  * GraftExtensions`. This is the one way graft functions, optimizer rules
+  * and planner strategies enter a session; nothing mutates a built
+  * session. To switch a rewrite off, exclude its rule by class name in
+  * `spark.sql.optimizer.excludedRules` on that session. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
     GraftExtensions.inject(ext)
@@ -897,9 +821,7 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
 
 object GraftExtensions {
   val inject: org.apache.spark.sql.SparkSessionExtensions => Unit = { ext =>
-    // the same builder table the per-session registration path uses, so
-    // extension-built sessions get the complete function surface
-    GraftFunctions.builderSeq.foreach { case (name, b) =>
+    GraftFunctions.builders.foreach { case (name, b) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name), b))
     }
@@ -939,5 +861,8 @@ object GraftExtensions {
     // prefix minus/plus the bounded gap frame (null-faithful via count
     // guards); the family rules then fuse the members onto one sort
     ext.injectOptimizerRule(_ => graft.plans.GlobalHalfRangeRule)
+    // linear recurrence: no SQL shape rewrites to it, but the strategy
+    // plans the node graft.plans.Recurrence.scan builds
+    ext.injectPlannerStrategy(_ => graft.plans.GlobalRecurStrategy)
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Frequency-threshold and fuzzy-match primitives whose whole point is
@@ -25,15 +25,15 @@ object FrequentItems {
     * Result == the naive groupBy/HAVING answer, bit for bit.
     *
     * Returns (key, cnt) with `cnt` the exact count. */
-  def exactHeavyHitters(s: SparkSession, df: DataFrame, key: Column,
-      k: Long, cap: Int): DataFrame = {
+  def exactHeavyHitters(df: DataFrame, key: Column, k: Long, cap: Int)
+  : DataFrame = {
     require(cap >= k - 1,
       s"capacity $cap < k-1 = ${k - 1}: the Misra-Gries superset " +
         "guarantee (keys above N/(cap+1) survive) would not cover the " +
         "report threshold N/k")
     val toks = df.select(key.as("token"))
     val sk = toks.agg(
-      graft.functions.GraftFunctions.misraGries(s, col("token"), cap)
+      graft.functions.GraftFunctions.misraGries(col("token"), cap)
         .as("mg"),
       count(lit(1)).as("n")).collect()(0)
     val candidates = sk.getMap[String, Long](0).keys.toSeq.sorted

@@ -57,7 +57,7 @@ object Pca {
   /** One-pass moment sums: (n, Σxᵢ, full symmetric Σxᵢxⱼ). */
   def momentSums(df: DataFrame, emb: Column): (Long, Array[Double], Array[Array[Double]]) =
     parseMoments(df.agg(graft.functions.GraftFunctions
-        .vecOuterSum(df.sparkSession, emb).as("m"))
+        .vecOuterSum(emb).as("m"))
       .head().getSeq[Double](0).toArray)
 
   /** Population covariance Cᵢⱼ = Σxᵢxⱼ/n − (Σxᵢ/n)(Σxⱼ/n). */

@@ -264,7 +264,8 @@ object Similarity {
     * full-table shuffle (window argmax), which at a realistic IVF book
     * (k in the thousands) would otherwise dominate the job. */
   def assignToCentroids(df: DataFrame, emb: Column, id: Column,
-                        cents: Seq[(Any, Seq[Double])]): DataFrame =
+                        cents: Seq[(Any, Seq[Double])]): DataFrame = {
+    require(cents.nonEmpty, "assignToCentroids needs at least one centroid")
     if (cents.forall(_._1.isInstanceOf[Long])) {
       // model as constructor data on ONE native expression instead of
       // ~70 literal nodes per centroid (the PqEncodeExpr discipline);
@@ -278,6 +279,7 @@ object Similarity {
       v.select(col("vec_id"), best.getField("assigned").as("assigned"),
         best.getField("cos").as("cos"))
     } else assignToCentroidsLiteral(df, emb, id, cents)
+  }
 
   /** The literal-expression assignment [[assignToCentroids]] replaced
     * for long-labeled centroid tables — kept as the cross-check twin
@@ -312,7 +314,7 @@ object Similarity {
   def centroids(df: DataFrame, emb: Column, group: Column): DataFrame =
     df.groupBy(group.as("grp"))
       .agg(graft.functions.GraftFunctions
-        .vecMean(df.sparkSession, emb).as("centroid"))
+        .vecMean(emb).as("centroid"))
 
   /** Product-quantization encode (Jégou et al., "Product Quantization for
     * Nearest Neighbor Search", TPAMI 2011): split each vector into
@@ -333,6 +335,8 @@ object Similarity {
   def pqCodes(df: DataFrame, emb: Column, id: Column,
               codebook: Seq[Seq[(Long, Seq[Double])]], subDim: Int)
   : DataFrame = {
+    require(codebook.nonEmpty && codebook.forall(_.nonEmpty),
+      "pqCodes needs at least one subspace and one centroid per subspace")
     val v = df.select(id.as("vec_id"), asDouble(emb).as("e"))
     val codes = org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.PqEncodeExpr(

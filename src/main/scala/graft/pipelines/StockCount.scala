@@ -48,7 +48,7 @@ object StockCount {
   def fromLinesAgg(lines: DataFrame, lineCol: String = "value"): DataFrame = {
     val counts = lines
       .agg(graft.functions.GraftFunctions
-        .tickerCounts(lines.sparkSession, col(lineCol)).as("m"))
+        .tickerCounts(col(lineCol)).as("m"))
       .select(explode(col("m")).as(Seq("ticker", "cnt")))
     Rank.ranked(counts, col("cnt"), Seq(col("ticker")))
       .select(col("rank"), col("ticker"), col("cnt"))

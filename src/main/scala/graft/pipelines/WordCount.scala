@@ -56,7 +56,7 @@ object WordCount {
                    k: Int = TopK): DataFrame = {
     val counts = lines
       .agg(graft.functions.GraftFunctions
-        .tokenCountsCsv(lines.sparkSession, col(lineCol)).as("m"))
+        .tokenCountsCsv(col(lineCol)).as("m"))
       .select(explode(col("m")).as(Seq("word", "cnt")))
     Rank.ranked(counts, col("cnt"), Seq(col("word")), limit = k)
       .select(col("rank"), col("word"), col("cnt"))

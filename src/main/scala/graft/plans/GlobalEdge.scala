@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, GenericInternalRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -468,16 +467,4 @@ object GlobalEdge {
     * rows deep is no longer "a fixed small position" (same contract as
     * [[GlobalShift.MaxOffset]]). */
   val MaxN = 1024
-
-  def ensureStrategy(spark: SparkSession): Unit =
-    SessionHooks.ensureStrategy(spark, GlobalEdgeStrategy)
-
-  /** Register [[GlobalEdgeRule]] (+ its strategy) on a session,
-    * idempotently. */
-  def ensureRule(spark: SparkSession): Unit =
-    SessionHooks.ensureRule(spark, GlobalEdgeRule, GlobalEdgeStrategy)
-
-  /** Undo [[ensureRule]] (tests; a production session keeps it). */
-  def removeRule(spark: SparkSession): Unit =
-    SessionHooks.removeRule(spark, GlobalEdgeRule)
 }

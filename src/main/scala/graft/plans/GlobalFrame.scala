@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, GenericInternalRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -616,32 +616,12 @@ object GlobalFrame {
     * neighborhood and WindowExec keeps it. */
   val MaxFrame = 1024
 
-  def ensureStrategy(spark: SparkSession): Unit = {
-    SessionHooks.ensureStrategy(spark, GlobalFrameStrategy)
-    // mixed rewrites stack on GlobalScanPlan — its strategy must be
-    // registered wherever this one is
-    SessionHooks.ensureStrategy(spark, GlobalScanStrategy)
-  }
-
-  /** Register [[GlobalFrameRule]] (+ the strategies it plans through) on
-    * a session, idempotently: un-partitioned bounded-frame windows then
-    * plan as GlobalFrame automatically. */
-  def ensureRule(spark: SparkSession): Unit = {
-    ensureStrategy(spark)
-    SessionHooks.ensureRule(spark, GlobalFrameRule, GlobalFrameStrategy)
-  }
-
-  /** Undo [[ensureRule]] (tests; a production session keeps it). */
-  def removeRule(spark: SparkSession): Unit =
-    SessionHooks.removeRule(spark, GlobalFrameRule)
-
   /** df + `frame` column: the `[lo, hi]` ROWS-frame sliding `kind`
     * aggregate of `valueCol` under the total order given by `keys`
     * ((name, descending) pairs) — the scale-out replacement for
     * `agg(value).over(Window.orderBy(...).rowsBetween(lo, hi))`. */
   def sliding(df: DataFrame, valueCol: String, lo: Int, hi: Int,
               kind: ScanKind, keys: (String, Boolean)*): DataFrame = {
-    ensureStrategy(df.sparkSession)
     val plan = SessionHooks.analyzed(df)
     val value = SessionHooks.attr(plan, valueCol)
     if (kind == ScanKind.Sum || kind == ScanKind.Avg)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending,
   Attribute, Coalesce, EqualTo, Expression, If, Literal, NamedExpression,
   RangeFrame, SortOrder, SpecifiedWindowFrame, Subtract, UnaryMinus,
@@ -198,16 +197,4 @@ object GlobalHalfRangeRule
       Project(child.output ++ outer,
         Window(keep.toSeq, Seq(), orderSpec, child, hint))
   }
-}
-
-object GlobalHalfRange {
-  /** Register the decomposition rule on a session, idempotently. The
-    * paired strategy is GlobalScan's — the decomposition itself plans
-    * no new node; its helper members plan through the existing family
-    * strategies. */
-  def ensureRule(spark: SparkSession): Unit =
-    SessionHooks.ensureRule(spark, GlobalHalfRangeRule, GlobalScanStrategy)
-
-  def removeRule(spark: SparkSession): Unit =
-    SessionHooks.removeRule(spark, GlobalHalfRangeRule)
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -112,9 +112,9 @@ case class GlobalRankExec(order: Seq[SortOrder], rankAttr: Attribute,
 }
 
 /** One strategy for the whole rank family (row_number's GlobalRankPlan
-  * and rank/dense_rank's GlobalTiesPlan): every registration site —
-  * GraftExtensions, the ensureRule/ensureStrategy helpers — covers all
-  * three window functions with no extra wiring. */
+  * and rank/dense_rank's GlobalTiesPlan): the one injection in
+  * `graft.functions.GraftExtensions` covers all three window functions
+  * with no extra wiring. */
 object GlobalRankStrategy extends Strategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case g: GlobalRankPlan =>
@@ -140,8 +140,7 @@ object GlobalRankStrategy extends Strategy {
   * windows keep Spark's WindowExec (partitioned windows parallelize fine
   * on their own).
   *
-  * Registered via [[GlobalRank.ensureRule]] (experimental methods) or
-  * session-wide through `graft.functions.GraftExtensions`
+  * Registered session-wide through `graft.functions.GraftExtensions`
   * (`injectOptimizerRule` + `injectPlannerStrategy`). */
 object GlobalRankRule
   extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
@@ -326,25 +325,10 @@ object GlobalRankRule
 
 object GlobalRank {
 
-  /** Register the strategy on a session (idempotent). */
-  def ensureStrategy(spark: SparkSession): Unit =
-    SessionHooks.ensureStrategy(spark, GlobalRankStrategy)
-
-  /** Register [[GlobalRankRule]] (+ the strategy it plans through) on a
-    * session, idempotently: every global `row_number()` window on this
-    * session then plans as GlobalRank automatically. */
-  def ensureRule(spark: SparkSession): Unit =
-    SessionHooks.ensureRule(spark, GlobalRankRule, GlobalRankStrategy)
-
-  /** Undo [[ensureRule]] (tests; a production session keeps it). */
-  def removeRule(spark: SparkSession): Unit =
-    SessionHooks.removeRule(spark, GlobalRankRule)
-
   /** df + `rank` column (long, 1..n) under the given total order — the
     * scale-out replacement for `row_number().over(Window.orderBy(...))`.
     * `keys` are (columnName, descending) pairs, significant first. */
   def ranked(df: DataFrame, keys: (String, Boolean)*): DataFrame = {
-    ensureStrategy(df.sparkSession)
     val analyzed = SessionHooks.analyzed(df)
     SessionHooks.ofRows(df,
       GlobalRankPlan(SessionHooks.resolveOrder(analyzed, keys), analyzed))

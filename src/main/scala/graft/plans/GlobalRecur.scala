@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -202,16 +202,12 @@ object GlobalRecurStrategy extends Strategy {
   * rewrite, so these build the plan node directly). */
 object Recurrence {
 
-  def ensureStrategy(spark: SparkSession): Unit =
-    SessionHooks.ensureStrategy(spark, GlobalRecurStrategy)
-
   /** df + `y` column: `y_i = m_i * y_{i-1} + c_i` threaded over the
     * total order given by `keys` ((name, descending) pairs). `mCol` and
     * `cCol` must both be LONG (exact wrapping algebra) or both DOUBLE.
     * NULL m/c rows pass the state through unchanged. */
   def scan(df: DataFrame, mCol: String, cCol: String, seed: Any,
            keys: (String, Boolean)*): DataFrame = {
-    ensureStrategy(df.sparkSession)
     val analyzed = SessionHooks.analyzed(df)
     SessionHooks.ofRows(df,
       GlobalRecurPlan(SessionHooks.resolveOrder(analyzed, keys),

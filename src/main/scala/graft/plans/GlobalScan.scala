@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, GenericInternalRow, RowOrdering, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -886,18 +886,6 @@ object GlobalScan {
     (so, dlo, ok)
   }
 
-  def ensureStrategy(spark: SparkSession): Unit =
-    SessionHooks.ensureStrategy(spark, GlobalScanStrategy)
-
-  /** Register [[GlobalScanRule]] (+ its strategy) on a session,
-    * idempotently: plain running-sum windows then plan as GlobalScan. */
-  def ensureRule(spark: SparkSession): Unit =
-    SessionHooks.ensureRule(spark, GlobalScanRule, GlobalScanStrategy)
-
-  /** Undo [[ensureRule]] (tests; a production session keeps it). */
-  def removeRule(spark: SparkSession): Unit =
-    SessionHooks.removeRule(spark, GlobalScanRule)
-
   /** df + `running` column: prefix sum of LongType column `valueCol` under
     * the total order given by `keys` ((name, descending) pairs) — the
     * scale-out replacement for
@@ -905,7 +893,6 @@ object GlobalScan {
     * currentRow))`. */
   def runningSum(df: DataFrame, valueCol: String,
                  keys: (String, Boolean)*): DataFrame = {
-    ensureStrategy(df.sparkSession)
     val plan = SessionHooks.analyzed(df)
     val value = SessionHooks.attr(plan, valueCol)
     require(value.dataType == LongType,

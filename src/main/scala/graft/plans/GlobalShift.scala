@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Expression, GenericInternalRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -322,16 +321,4 @@ object GlobalShift {
     * driver; beyond this the frame is no longer a small fixed distance
     * and WindowExec keeps it. */
   val MaxOffset = 1024
-
-  def ensureStrategy(spark: SparkSession): Unit =
-    SessionHooks.ensureStrategy(spark, GlobalShiftStrategy)
-
-  /** Register [[GlobalShiftRule]] (+ its strategy) on a session,
-    * idempotently. */
-  def ensureRule(spark: SparkSession): Unit =
-    SessionHooks.ensureRule(spark, GlobalShiftRule, GlobalShiftStrategy)
-
-  /** Undo [[ensureRule]] (tests; a production session keeps it). */
-  def removeRule(spark: SparkSession): Unit =
-    SessionHooks.removeRule(spark, GlobalShiftRule)
 }

@@ -307,5 +307,5 @@ object GlobalTiesExec {
 }
 
 // Planned by [[GlobalRankStrategy]] — the rank family (row_number, rank,
-// dense_rank) shares one strategy so every existing registration site
-// (GraftExtensions, SessionHooks.ensureRule callers) covers all three.
+// dense_rank) shares one strategy, so its one injection in
+// GraftExtensions covers all three.

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute => CAttr, Cast, Expression, IntegerLiteral, NamedExpression, SortOrder, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Window}
 import org.apache.spark.sql.types.LongType
@@ -355,23 +354,4 @@ object GlobalWindowRule
         Project(child.output ++ results, cur): LogicalPlan
       }
   }
-}
-
-object GlobalWindow {
-  /** Register [[GlobalWindowRule]] + every strategy its stack plans
-    * through, idempotently: mixed-family un-partitioned windows then
-    * compose onto one shared sort automatically. */
-  def ensureRule(spark: SparkSession): Unit = {
-    GlobalRank.ensureStrategy(spark)
-    GlobalScan.ensureStrategy(spark)
-    GlobalShift.ensureStrategy(spark)
-    GlobalEdge.ensureStrategy(spark)
-    GlobalFrame.ensureStrategy(spark)
-    GlobalRange.ensureStrategy(spark)
-    SessionHooks.ensureRule(spark, GlobalWindowRule, GlobalRankStrategy)
-  }
-
-  /** Undo [[ensureRule]] (tests; a production session keeps it). */
-  def removeRule(spark: SparkSession): Unit =
-    SessionHooks.removeRule(spark, GlobalWindowRule)
 }

@@ -1,54 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.classic.Strategy
 
-/** Shared session-registration and order-resolution helpers for the custom
-  * operators (GlobalRank, GlobalScan): one definition of the idempotent
-  * experimental-list mutation and the (name, descending) -> SortOrder
-  * resolution, so a fix (thread-safety, error messages) lands once. */
+/** Shared helpers for the DataFrame entry points of the custom operators
+  * (GlobalRank.ranked, GlobalScan.runningSum, GlobalFrame.sliding,
+  * Recurrence.scan): the analyzed input plan, the (name, descending) ->
+  * SortOrder resolution and the plan -> DataFrame wrap. The entry points
+  * only build plan nodes; their strategies come from
+  * `graft.functions.GraftExtensions.inject`. */
 private[graft] object SessionHooks {
-
-  private def classic(spark: SparkSession)
-  : org.apache.spark.sql.classic.SparkSession =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-
-  // The experimental lists are bare vars with no synchronization of their
-  // own; check-then-act on them from concurrent threads could register a
-  // strategy/rule twice (rules then run twice per optimizer pass). One
-  // global lock keeps the idempotency contract actually true — these calls
-  // are rare (session setup), never hot-path.
-  def ensureStrategy(spark: SparkSession, s: Strategy): Unit =
-    SessionHooks.synchronized {
-      val c = classic(spark)
-      if (!c.experimental.extraStrategies.contains(s))
-        c.experimental.extraStrategies = s +: c.experimental.extraStrategies
-    }
-
-  def ensureRule(spark: SparkSession, r: Rule[LogicalPlan],
-                 s: Strategy): Unit = {
-    ensureStrategy(spark, s)
-    SessionHooks.synchronized {
-      val c = classic(spark)
-      if (!c.experimental.extraOptimizations.contains(r))
-        c.experimental.extraOptimizations =
-          r +: c.experimental.extraOptimizations
-    }
-  }
-
-  // Deliberately leaves the paired strategy registered: a strategy alone
-  // only fires on explicitly constructed Graft plan nodes (it rewrites
-  // nothing), and the DataFrame-API entry points (GlobalRank.ranked,
-  // GlobalScan.runningSum) depend on it staying.
-  def removeRule(spark: SparkSession, r: Rule[LogicalPlan]): Unit =
-    SessionHooks.synchronized {
-      val c = classic(spark)
-      c.experimental.extraOptimizations =
-        c.experimental.extraOptimizations.filterNot(_ == r)
-    }
 
   /** The analyzed plan of `df` plus its attribute-by-name resolver. */
   def analyzed(df: DataFrame): LogicalPlan =
@@ -70,5 +32,6 @@ private[graft] object SessionHooks {
 
   def ofRows(df: DataFrame, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.graftbridge.Bridge.ofRows(
-      classic(df.sparkSession), plan)
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      plan)
 }

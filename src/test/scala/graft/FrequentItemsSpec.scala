@@ -26,7 +26,7 @@ class FrequentItemsSpec extends AnyFunSuite {
     val df = zipfDf(keys = 200, scale = 3000) // ~24k rows, 200 distinct
     val cap = 24                              // << 200: shrink engages
     val row = df.agg(
-      graft.functions.GraftFunctions.misraGries(spark, col("token"), cap)
+      graft.functions.GraftFunctions.misraGries(col("token"), cap)
         .as("mg"),
       count(lit(1)).as("n")).collect()(0)
     val est = row.getMap[String, Long](0).toMap
@@ -48,11 +48,43 @@ class FrequentItemsSpec extends AnyFunSuite {
       s"lost heavy keys: ${mustSurvive -- est.keySet}")
   }
 
+  test("Misra-Gries update holds at most 2 x capacity counters over " +
+    "many distinct keys; merge and eval hold at most capacity") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.unsafe.types.UTF8String
+    val cap = 8
+    val agg = graft.functions.MisraGriesAgg(
+      BoundReference(0, org.apache.spark.sql.types.StringType, true), cap)
+    def feed(keys: Seq[String]) = {
+      val b = agg.createAggregationBuffer()
+      keys.foreach(k => agg.update(b, InternalRow(UTF8String.fromString(k))))
+      b
+    }
+    // 3,000 distinct keys with one heavy key interleaved every 3rd row
+    val keys = (0 until 3000).flatMap(i =>
+      if (i % 2 == 0) Seq(s"k$i", "heavy") else Seq(s"k$i"))
+    val b1 = feed(keys)
+    assert(b1.size() <= 2 * cap, s"update left ${b1.size()} counters")
+    val b2 = feed(keys.map(_ + "x"))
+    assert(b2.size() <= 2 * cap, s"update left ${b2.size()} counters")
+    val merged = agg.merge(b1, b2)
+    assert(merged.size() <= cap, s"merge left ${merged.size()} counters")
+    // the undercount bound holds through the batched shrinks: the heavy
+    // key (1,500 of N = 9,000 rows) clears N/(cap+1) = 1,000
+    val n = 2L * keys.size
+    val est = merged.get("heavy")
+    assert(est > 0L && 1500L - est <= n / (cap + 1), s"heavy estimate $est")
+    val solo = feed(keys)
+    assert(agg.eval(solo).asInstanceOf[
+      org.apache.spark.sql.catalyst.util.MapData].numElements() <= cap)
+  }
+
   test("two-pass exact heavy hitters equals the naive groupBy/HAVING " +
     "answer with capacity far below the distinct-key count") {
     val df = zipfDf(keys = 500, scale = 5000) // 500 distinct keys
     val k = 30L
-    val got = FrequentItems.exactHeavyHitters(spark, df, col("token"),
+    val got = FrequentItems.exactHeavyHitters(df, col("token"),
       k, cap = 32).as[(String, Long)].collect().toMap
     val n = df.count()
     val naive = df.groupBy("token").count().where(col("count") * k > n)
@@ -68,7 +100,7 @@ class FrequentItemsSpec extends AnyFunSuite {
     // times is unnecessary here — uniform keys suffice for the PIN
     val df = spark.range(20000)
       .select(concat(lit("key"), col("id") % 100).as("token"))
-    val plan = FrequentItems.exactHeavyHitters(spark, df, col("token"),
+    val plan = FrequentItems.exactHeavyHitters(df, col("token"),
       k = 99L, cap = 128).queryExecution.executedPlan.toString
     val ex = plan.indexOf("Exchange hashpartitioning(token")
     assert(ex >= 0, s"missing key exchange in:\n$plan")
@@ -83,7 +115,7 @@ class FrequentItemsSpec extends AnyFunSuite {
   test("misra_gries rejects non-positive capacity") {
     val e = intercept[Exception] {
       Seq("a").toDF("token").agg(
-        graft.functions.GraftFunctions.misraGries(spark, col("token"), 0))
+        graft.functions.GraftFunctions.misraGries(col("token"), 0))
         .collect()
     }
     assert(e.getMessage.contains("capacity"))
@@ -92,7 +124,7 @@ class FrequentItemsSpec extends AnyFunSuite {
   test("misra_gries carries a key over 64 KB through the shuffle") {
     val big = "k" * 70000
     val m = Seq(big, "x", big).toDF("token").repartition(2)
-      .agg(graft.functions.GraftFunctions.misraGries(spark, col("token"), 4)
+      .agg(graft.functions.GraftFunctions.misraGries(col("token"), 4)
         .as("mg"))
       .head().getMap[String, Long](0)
     assert(m == Map(big -> 2L, "x" -> 1L))

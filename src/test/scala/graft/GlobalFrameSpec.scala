@@ -12,9 +12,7 @@ class GlobalFrameSpec extends AnyFunSuite {
   // Native twin: a NON-FOLDABLE always-zero partition key. The session's
   // extensions keep every Global* rule active, and the optimizer
   // ELIMINATES foldable window partitions — a partitionBy(lit(0)) twin
-  // (or a plain "collect before ensureRule" scheme, which an
-  // extension-registered rule ignores) would compare the operator
-  // against itself. pmod(t, 1) survives optimization; assertNative pins
+  // would compare the operator against itself. pmod(t, 1) survives optimization; assertNative pins
   // that the twin truly ran WindowExec.
   private val wN = org.apache.spark.sql.expressions.Window
     .partitionBy(pmod(col("t"), lit(1))).orderBy(col("t"))

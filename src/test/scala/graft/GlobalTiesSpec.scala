@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{GlobalRank, GlobalTiesPlan, TieKind}
+import graft.plans.{GlobalTiesPlan, TieKind}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,39 +21,33 @@ class GlobalTiesSpec extends AnyFunSuite {
     // expected, computed sequentially: rank = 100*g + 1, dense = g + 1
     val expRank = (0 until 4000).map(i => (i / 100) * 100 + 1)
     val expDense = (0 until 4000).map(i => i / 100 + 1)
-    GlobalRank.ensureRule(spark)
-    try {
-      val r = df.withColumn("r", rank().over(w))
-      val pr = r.queryExecution.executedPlan.toString
-      assert(pr.contains("GlobalTies"), s"rank() not rewritten:\n$pr")
-      assert(!pr.contains("Window"), s"rank() fell back to a window:\n$pr")
-      assert(r.schema("r").dataType ==
-        org.apache.spark.sql.types.IntegerType)
-      assert(r.orderBy("payload").select("r").as[Int].collect().toSeq ==
-        expRank)
-      val d = df.withColumn("r", dense_rank().over(w))
-      val pd = d.queryExecution.executedPlan.toString
-      assert(pd.contains("GlobalTies"), s"dense_rank() not rewritten:\n$pd")
-      assert(!pd.contains("Window"), pd)
-      assert(d.orderBy("payload").select("r").as[Int].collect().toSeq ==
-        expDense)
-    } finally GlobalRank.removeRule(spark)
+    val r = df.withColumn("r", rank().over(w))
+    val pr = r.queryExecution.executedPlan.toString
+    assert(pr.contains("GlobalTies"), s"rank() not rewritten:\n$pr")
+    assert(!pr.contains("Window"), s"rank() fell back to a window:\n$pr")
+    assert(r.schema("r").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(r.orderBy("payload").select("r").as[Int].collect().toSeq ==
+      expRank)
+    val d = df.withColumn("r", dense_rank().over(w))
+    val pd = d.queryExecution.executedPlan.toString
+    assert(pd.contains("GlobalTies"), s"dense_rank() not rewritten:\n$pd")
+    assert(!pd.contains("Window"), pd)
+    assert(d.orderBy("payload").select("r").as[Int].collect().toSeq ==
+      expDense)
   }
 
   test("a single tie group spanning EVERY partition chains through: all " +
     "ranks 1") {
     val df = spark.range(2000).select(lit(7L).as("k"),
       col("id").as("payload")).repartition(11)
-    GlobalRank.ensureRule(spark)
-    try {
-      val r = df.withColumn("r", rank().over(w))
-        .select(countDistinct(col("r")).as("n"), min(col("r")).as("mn"))
-        .collect().head
-      assert((r.getLong(0), r.getInt(1)) == ((1L, 1)))
-      val d = df.withColumn("r", dense_rank().over(w))
-        .select(max(col("r"))).as[Int].collect().head
-      assert(d == 1)
-    } finally GlobalRank.removeRule(spark)
+    val r = df.withColumn("r", rank().over(w))
+      .select(countDistinct(col("r")).as("n"), min(col("r")).as("mn"))
+      .collect().head
+    assert((r.getLong(0), r.getInt(1)) == ((1L, 1)))
+    val d = df.withColumn("r", dense_rank().over(w))
+      .select(max(col("r"))).as[Int].collect().head
+    assert(d == 1)
   }
 
   test("rank matches WindowExec exactly on random data with nulls and " +
@@ -80,15 +74,12 @@ class GlobalTiesSpec extends AnyFunSuite {
     }
     val wantR = nat(df.withColumn("r", rank().over(wdN)))
     val wantD = nat(df.withColumn("r", dense_rank().over(wdN)))
-    GlobalRank.ensureRule(spark)
-    try {
-      val gotR = df.repartition(9).withColumn("r", rank().over(wd))
-      assert(gotR.queryExecution.executedPlan.toString
-        .contains("GlobalTies"))
-      assert(vals(gotR) == wantR)
-      val gotD = df.repartition(9).withColumn("r", dense_rank().over(wd))
-      assert(vals(gotD) == wantD)
-    } finally GlobalRank.removeRule(spark)
+    val gotR = df.repartition(9).withColumn("r", rank().over(wd))
+    assert(gotR.queryExecution.executedPlan.toString
+      .contains("GlobalTies"))
+    assert(vals(gotR) == wantR)
+    val gotD = df.repartition(9).withColumn("r", dense_rank().over(wd))
+    assert(vals(gotD) == wantD)
   }
 
   test("percent_rank()/ntile(n) rewrite and match WindowExec exactly, " +
@@ -118,26 +109,23 @@ class GlobalTiesSpec extends AnyFunSuite {
     }
     val wantP = nat2(df.withColumn("r", percent_rank().over(wNat)))
     val wantN = nat2(df.withColumn("r", ntile(7).over(wtNat)))
-    GlobalRank.ensureRule(spark)
-    try {
-      val gotP = df.repartition(9).withColumn("r", percent_rank().over(w))
-      val pp = gotP.queryExecution.executedPlan.toString
-      assert(pp.contains("GlobalTies"), s"percent_rank not rewritten:\n$pp")
-      assert(!pp.contains("Window"), pp)
-      assert(gotP.schema("r").dataType ==
-        org.apache.spark.sql.types.DoubleType)
-      assert(vals(gotP) == wantP)
-      val gotN = df.repartition(9).withColumn("r", ntile(7).over(wt))
-      val pn = gotN.queryExecution.executedPlan.toString
-      assert(pn.contains("GlobalTies"), s"ntile not rewritten:\n$pn")
-      assert(gotN.schema("r").dataType ==
-        org.apache.spark.sql.types.IntegerType)
-      assert(vals(gotN) == wantN)
-      // single-row edge: percent_rank is defined as 0.0
-      val one = Seq(5L).toDF("k").repartition(3)
-        .withColumn("r", percent_rank().over(w))
-      assert(one.select("r").as[Double].collect().toSeq == Seq(0.0))
-    } finally GlobalRank.removeRule(spark)
+    val gotP = df.repartition(9).withColumn("r", percent_rank().over(w))
+    val pp = gotP.queryExecution.executedPlan.toString
+    assert(pp.contains("GlobalTies"), s"percent_rank not rewritten:\n$pp")
+    assert(!pp.contains("Window"), pp)
+    assert(gotP.schema("r").dataType ==
+      org.apache.spark.sql.types.DoubleType)
+    assert(vals(gotP) == wantP)
+    val gotN = df.repartition(9).withColumn("r", ntile(7).over(wt))
+    val pn = gotN.queryExecution.executedPlan.toString
+    assert(pn.contains("GlobalTies"), s"ntile not rewritten:\n$pn")
+    assert(gotN.schema("r").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(vals(gotN) == wantN)
+    // single-row edge: percent_rank is defined as 0.0
+    val one = Seq(5L).toDF("k").repartition(3)
+      .withColumn("r", percent_rank().over(w))
+    assert(one.select("r").as[Double].collect().toSeq == Seq(0.0))
   }
 
   test("cume_dist() rewrites via the reversed order and matches " +
@@ -157,39 +145,32 @@ class GlobalTiesSpec extends AnyFunSuite {
       org.apache.spark.sql.expressions.Window
         .orderBy(col("k").asc_nulls_last))
     val wants = orders.map(o => vals(df.withColumn("r", cume_dist().over(o))))
-    GlobalRank.ensureRule(spark)
-    try {
-      orders.zip(wants).foreach { case (o, want) =>
-        val got = df.repartition(7).withColumn("r", cume_dist().over(o))
-        val p = got.queryExecution.executedPlan.toString
-        assert(p.contains("GlobalTies"), s"cume_dist not rewritten:\n$p")
-        assert(!p.contains("Window"), p)
-        assert(vals(got) == want)
-      }
-    } finally GlobalRank.removeRule(spark)
+    orders.zip(wants).foreach { case (o, want) =>
+      val got = df.repartition(7).withColumn("r", cume_dist().over(o))
+      val p = got.queryExecution.executedPlan.toString
+      assert(p.contains("GlobalTies"), s"cume_dist not rewritten:\n$p")
+      assert(!p.contains("Window"), p)
+      assert(vals(got) == want)
+    }
   }
 
   test("top-k rank filters and limit-bounded inputs keep WindowExec") {
-    GlobalRank.ensureRule(spark)
-    try {
-      val df = spark.range(500).select((col("id") % 50).as("k"))
-      // prunable top-k on the rank: InferWindowGroupLimit territory
-      val topk = df.withColumn("r", rank().over(w)).where(col("r") <= 10)
-      val pt = topk.queryExecution.executedPlan.toString
-      assert(!pt.contains("GlobalTies"),
-        s"top-k rank must stay prunable WindowExec:\n$pt")
-      // LIMIT-bounded input: provably tiny at any scale
-      val bounded = df.orderBy("k").limit(20)
-        .withColumn("r", rank().over(w))
-      val pb = bounded.queryExecution.executedPlan.toString
-      assert(!pb.contains("GlobalTies"),
-        s"limit-bounded rank must stay WindowExec:\n$pb")
-    } finally GlobalRank.removeRule(spark)
+    val df = spark.range(500).select((col("id") % 50).as("k"))
+    // prunable top-k on the rank: InferWindowGroupLimit territory
+    val topk = df.withColumn("r", rank().over(w)).where(col("r") <= 10)
+    val pt = topk.queryExecution.executedPlan.toString
+    assert(!pt.contains("GlobalTies"),
+      s"top-k rank must stay prunable WindowExec:\n$pt")
+    // LIMIT-bounded input: provably tiny at any scale
+    val bounded = df.orderBy("k").limit(20)
+      .withColumn("r", rank().over(w))
+    val pb = bounded.queryExecution.executedPlan.toString
+    assert(!pb.contains("GlobalTies"),
+      s"limit-bounded rank must stay WindowExec:\n$pb")
   }
 
   test("explicit GlobalTiesPlan node plans distributed (no Window, " +
     "range partitioning)") {
-    GlobalRank.ensureStrategy(spark)
     val df = spark.range(100).select((col("id") % 10).as("k"))
     val analyzed = df.queryExecution.analyzed
     val order = org.apache.spark.sql.catalyst.expressions.SortOrder(

@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.GlobalWindow
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 

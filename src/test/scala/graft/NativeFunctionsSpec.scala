@@ -49,7 +49,7 @@ class NativeFunctionsSpec extends AnyFunSuite {
 
   test("cdcChunks native expression == JVM twin") {
     val df = texts.toDF("t")
-    val got = df.select(GraftFunctions.cdcChunks(spark, col("t")))
+    val got = df.select(GraftFunctions.cdcChunks(col("t")))
       .as[Seq[String]].collect()
     got.zip(texts).foreach { case (g, t) =>
       assert(g == TextHashes.cdcChunks(t).toSeq, s"text=$t")
@@ -59,18 +59,18 @@ class NativeFunctionsSpec extends AnyFunSuite {
   test("minhash from pre-computed shingles == minhash from text") {
     val df = texts.toDF("t")
     val got = df.select(
-      GraftFunctions.minhashSigFromShingles(spark,
-        GraftFunctions.shingles(spark, col("t")), 8),
-      GraftFunctions.minhashSig(spark, col("t"), 8))
+      GraftFunctions.minhashSigFromShingles(
+        GraftFunctions.shingles(col("t")), 8),
+      GraftFunctions.minhashSig(col("t"), 8))
       .as[(Seq[Long], Seq[Long])].collect()
     got.zip(texts).foreach { case ((fromSh, fromText), t) =>
       assert(fromSh == fromText, s"text=$t")
     }
     // duplicate-invariance: distinct shingles give the same signature
     val dup = df.select(
-      GraftFunctions.minhashSigFromShingles(spark,
-        array_distinct(GraftFunctions.shingles(spark, col("t"))), 8),
-      GraftFunctions.minhashSig(spark, col("t"), 8))
+      GraftFunctions.minhashSigFromShingles(
+        array_distinct(GraftFunctions.shingles(col("t"))), 8),
+      GraftFunctions.minhashSig(col("t"), 8))
       .as[(Seq[Long], Seq[Long])].collect()
     dup.foreach { case (a, b) => assert(a == b) }
   }
@@ -78,7 +78,7 @@ class NativeFunctionsSpec extends AnyFunSuite {
   test("native simhash64 == builtin-expression simhash64 == reference") {
     val df = texts.toDF("t")
     val got = df.select(
-      GraftFunctions.simhash64(spark, col("t")),
+      GraftFunctions.simhash64(col("t")),
       Dedup.simhash64(col("t"))).as[(Long, Long)].collect()
     got.zip(texts).foreach { case ((native, builtin), t) =>
       assert(native == builtin, s"text=$t")
@@ -90,7 +90,7 @@ class NativeFunctionsSpec extends AnyFunSuite {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val native = df.select(col("doc_id"),
-      GraftFunctions.minhashSig(spark, col("text"), 8).as("sig"))
+      GraftFunctions.minhashSig(col("text"), 8).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
     val portable = Dedup.minhashSignature(df, col("text"), col("doc_id"), 8)
       .collect().map(r => r.getLong(0) -> (1 to 8).map(r.getLong)).toMap
@@ -103,7 +103,7 @@ class NativeFunctionsSpec extends AnyFunSuite {
   test("native shingles == builtin-expression shingles") {
     val df = texts.toDF("t")
     val got = df.select(
-      GraftFunctions.shingles(spark, col("t"), 3),
+      GraftFunctions.shingles(col("t"), 3),
       Dedup.shingles(col("t"), 3)).as[(Seq[String], Seq[String])].collect()
     got.zip(texts).foreach { case ((native, builtin), t) =>
       assert(native == builtin, s"text=$t")
@@ -117,7 +117,7 @@ class NativeFunctionsSpec extends AnyFunSuite {
         .sorted.toSeq)
     val df = arrs.toDF("parts")
     val native = df.select(
-      GraftFunctions.sortedPairs(spark, col("parts")).as("p"))
+      GraftFunctions.sortedPairs(col("parts")).as("p"))
       .select(expr("transform(p, x -> struct(x.a AS a, x.b AS b))"))
       .as[Seq[(Long, Long)]].collect()
     val hof = df.select(expr(
@@ -181,6 +181,24 @@ class NativeFunctionsSpec extends AnyFunSuite {
     }
   }
 
+  test("assignToCentroids rejects an empty centroid list at construction") {
+    val df = Seq((0L, Seq(1.0, 2.0))).toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](
+      graft.ops.Similarity.assignToCentroids(df, col("embedding"),
+        col("vec_id"), Nil))
+    assert(e.getMessage.contains("centroid"), e.getMessage)
+  }
+
+  test("pqCodes rejects an empty codebook or subspace at construction") {
+    val df = Seq((0L, Seq(1.0, 2.0))).toDF("vec_id", "embedding")
+    Seq(Nil, Seq(Seq(0L -> Seq(1.0)), Nil)).foreach { codebook =>
+      val e = intercept[IllegalArgumentException](
+        graft.ops.Similarity.pqCodes(df, col("embedding"), col("vec_id"),
+          codebook, 1))
+      assert(e.getMessage.contains("pqCodes"), e.getMessage)
+    }
+  }
+
   test("native dot product == declarative fold, bit-identical") {
     val rnd2 = new scala.util.Random(5)
     val vecs = Seq.fill(50)((Seq.fill(64)(rnd2.nextFloat()),
@@ -200,7 +218,7 @@ class NativeFunctionsSpec extends AnyFunSuite {
       "der hund und die katze ist ein tier nicht mit")
     val df = (texts ++ extra).toDF("t")
     val got = df.select(
-      GraftFunctions.stopRatio(spark, col("t")),
+      GraftFunctions.stopRatio(col("t")),
       graft.ops.Quality.stopwordRatio(col("t")))
       .as[(Double, Double)].collect()
     got.zip(texts ++ extra).foreach { case ((native, decl), t) =>
@@ -216,7 +234,7 @@ class NativeFunctionsSpec extends AnyFunSuite {
       "la la de de", "the el le der", "")
     val df = (texts ++ extra).toDF("t")
     val got = df.select(
-      GraftFunctions.langId(spark, col("t")),
+      GraftFunctions.langId(col("t")),
       graft.ops.Quality.langId(col("t")))
       .as[(String, String)].collect()
     got.zip(texts ++ extra).foreach { case ((native, decl), t) =>
@@ -236,7 +254,7 @@ class NativeFunctionsSpec extends AnyFunSuite {
     val df = items.distinct.toDF("item")
       .crossJoin(Seq(Tuple1(bytes)).toDF("cms"))
     val got = df.select(col("item"),
-      GraftFunctions.cmsEstimate(spark, col("cms"), col("item")))
+      GraftFunctions.cmsEstimate(col("cms"), col("item")))
       .as[(String, Long)].collect().toMap
     val exact = items.groupBy(identity).view.mapValues(_.size.toLong).toMap
     items.distinct.foreach { it =>
@@ -248,7 +266,7 @@ class NativeFunctionsSpec extends AnyFunSuite {
       .agg(expr("count_min_sketch(item, 0.001d, 0.999d, 42)").as("cms"))
     val viaAgg = items.distinct.toDF("item").crossJoin(sketch)
       .select(col("item"),
-        GraftFunctions.cmsEstimate(spark, col("cms"), col("item")))
+        GraftFunctions.cmsEstimate(col("cms"), col("item")))
       .as[(String, Long)].collect().toMap
     items.distinct.foreach(it => assert(viaAgg(it) >= exact(it)))
   }
@@ -263,7 +281,7 @@ class NativeFunctionsSpec extends AnyFunSuite {
         "\t\n mixed  WS \f chars \r", "digits 123 only 456",
         "the the the the", "!!!???")
       val df = fixture.toDF("t")
-      val st = graft.functions.GraftFunctions.textStats(spark, col("t"))
+      val st = graft.functions.GraftFunctions.textStats(col("t"))
       def ratio(num: org.apache.spark.sql.Column,
                 den: org.apache.spark.sql.Column) =
         when(den === 0L, lit(0.0))
@@ -305,15 +323,15 @@ class NativeFunctionsSpec extends AnyFunSuite {
         .agg(expr("count_min_sketch(item, 0.001d, 0.999d, 42)").as("cms"))
       val rows = texts.toDF("t").crossJoin(sketch)
         .select(col("t"),
-          GraftFunctions.simhash64(spark, col("t")).as("sh"),
-          GraftFunctions.minhashSig(spark, col("t"), 8).as("mh"),
-          GraftFunctions.shingles(spark, col("t")).as("shg"),
-          GraftFunctions.cdcChunks(spark, col("t")).as("cdc"),
-          GraftFunctions.stopRatio(spark, col("t")).as("sr"),
-          GraftFunctions.langId(spark, col("t")).as("lid"),
-          GraftFunctions.cmsEstimate(spark, col("cms"), lit("a")).as("cms_a"))
+          GraftFunctions.simhash64(col("t")).as("sh"),
+          GraftFunctions.minhashSig(col("t"), 8).as("mh"),
+          GraftFunctions.shingles(col("t")).as("shg"),
+          GraftFunctions.cdcChunks(col("t")).as("cdc"),
+          GraftFunctions.stopRatio(col("t")).as("sr"),
+          GraftFunctions.langId(col("t")).as("lid"),
+          GraftFunctions.cmsEstimate(col("cms"), lit("a")).as("cms_a"))
         .withColumn("mh2",
-          GraftFunctions.minhashSigFromShingles(spark, col("shg"), 8))
+          GraftFunctions.minhashSigFromShingles(col("shg"), 8))
         .collect()
       rows.foreach { r =>
         val t = r.getString(0)
@@ -334,11 +352,11 @@ class NativeFunctionsSpec extends AnyFunSuite {
     spark.conf.set(key, "false") // a broken doGenCode must throw, not fall back
     try {
       val bloom = (0L until 500L).toDF("k")
-        .agg(GraftFunctions.bloomAgg(spark, xxhash64(col("k")), 1000L)
+        .agg(GraftFunctions.bloomAgg(xxhash64(col("k")), 1000L)
           .as("bf"))
       val probed = (0L until 5000L).toDF("k").crossJoin(bloom)
         .select(col("k"), GraftFunctions.bloomMightContain(
-          spark, col("bf"), xxhash64(col("k"))).as("hit"))
+          col("bf"), xxhash64(col("k"))).as("hit"))
         .as[(Long, Boolean)].collect().toMap
       (0L until 500L).foreach(k => assert(probed(k), s"false negative: $k"))
       val fp = (500L until 5000L).count(probed(_))
@@ -352,14 +370,14 @@ class NativeFunctionsSpec extends AnyFunSuite {
     def sketchOf(xs: Seq[String]) = xs.toDF("item")
       .agg(expr("count_min_sketch(item, 0.001d, 0.999d, 42)").as("cms"))
     val merged = sketchOf(a).unionAll(sketchOf(b))
-      .agg(GraftFunctions.cmsMerge(spark, col("cms")).as("cms"))
+      .agg(GraftFunctions.cmsMerge(col("cms")).as("cms"))
     val whole = sketchOf(items)
     // merge is an element-wise counter add at equal shape+seed: every
     // per-key estimate must be IDENTICAL to the build-once sketch's
     val keys = items.distinct.toDF("item")
     def estimates(sk: org.apache.spark.sql.DataFrame) =
       keys.crossJoin(sk).select(col("item"),
-        GraftFunctions.cmsEstimate(spark, col("cms"), col("item")))
+        GraftFunctions.cmsEstimate(col("cms"), col("item")))
         .as[(String, Long)].collect().toMap
     assert(estimates(merged) == estimates(whole))
     val exact = items.groupBy(identity).view.mapValues(_.size.toLong).toMap
@@ -371,7 +389,7 @@ class NativeFunctionsSpec extends AnyFunSuite {
   test("zorder: range partitioning by z clusters BOTH dimensions") {
     val grid = for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y)
     val parts = grid.toDF("x", "y")
-      .withColumn("z", GraftFunctions.zorder(spark, col("x"), col("y")))
+      .withColumn("z", GraftFunctions.zorder(col("x"), col("y")))
       .repartitionByRange(16, col("z"))
       .select(spark_partition_id().as("pid"), col("x"), col("y"))
       .groupBy("pid")
@@ -388,9 +406,8 @@ class NativeFunctionsSpec extends AnyFunSuite {
   }
 
   test("extensions hook registers the functions at session construction") {
-    // the shared TestSpark session isn't built with extensions; the
-    // ensureRegistered path must have made the SQL names resolvable
-    GraftFunctions.ensureRegistered(spark)
+    // the shared TestSpark session is built with GraftExtensions.inject,
+    // the only registration path: the SQL names resolve with no other call
     val r = spark.sql(
       "SELECT graft_simhash64('hello world') AS h, " +
         "graft_minhash_sig('one two three four', 4) AS s").head()
@@ -400,31 +417,15 @@ class NativeFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_pairs rejects non-array<bigint> input at analysis") {
-    GraftFunctions.ensureRegistered(spark)
-    Seq("array(1, 2)", "'x'", "array('a', 'b')").foreach { arg =>
-      val e = intercept[org.apache.spark.sql.AnalysisException](
-        spark.sql(s"SELECT graft_pairs($arg)"))
-      assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), s"$arg: $e")
-    }
+    // array(1L, null) is array<bigint> with nullable elements: a null
+    // would otherwise read as 0
+    Seq("array(1, 2)", "'x'", "array('a', 'b')", "array(1L, null)")
+      .foreach { arg =>
+        val e = intercept[org.apache.spark.sql.AnalysisException](
+          spark.sql(s"SELECT graft_pairs($arg)"))
+        assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), s"$arg: $e")
+      }
     assert(spark.sql("SELECT graft_pairs(array(1L, 5L, 9L))").head()
       .getSeq[org.apache.spark.sql.Row](0).size == 3)
-  }
-
-  test("ensureRegistered adds only missing names; a repeat replaces none") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val s = spark.newSession()
-    val reg = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    val pairs = FunctionIdentifier("graft_pairs")
-    reg.dropFunction(pairs)
-    assert(!reg.functionExists(pairs))
-    GraftFunctions.ensureRegistered(s)
-    assert(reg.functionExists(pairs))
-    val graft = reg.listFunction().filter(_.funcName.startsWith("graft_"))
-    assert(graft.size > 20)
-    val before = graft.map(f => f -> reg.lookupFunctionBuilder(f).get).toMap
-    GraftFunctions.ensureRegistered(s)
-    graft.foreach(f =>
-      assert(reg.lookupFunctionBuilder(f).get eq before(f), f.funcName))
   }
 }

@@ -96,7 +96,7 @@ class PcaSpec extends AnyFunSuite {
   test("covarianceDf plans one partial+final aggregate, no generator") {
     val df = fixture
     val q = df.agg(graft.functions.GraftFunctions
-      .vecOuterSum(spark, col("embedding")).as("m"))
+      .vecOuterSum(col("embedding")).as("m"))
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate") || plan.contains("SortAggregate"),
       s"expected an object aggregate:\n$plan")

@@ -28,7 +28,7 @@ class QuantileSketchSpec extends AnyFunSuite {
 
   private def sketch(df: org.apache.spark.sql.DataFrame, parts: Int) = df
     .repartition(parts)
-    .agg(GraftFunctions.qsketch(spark, col("h"), col("v"), cap))
+    .agg(GraftFunctions.qsketch(col("h"), col("v"), cap))
     .head().getSeq[Long](0)
 
   test("retained set matches the definition and is partitioning-" +
@@ -53,9 +53,9 @@ class QuantileSketchSpec extends AnyFunSuite {
     val merged = df
       .withColumn("g", col("h") % 17)
       .groupBy("g")
-      .agg(GraftFunctions.qsketch(spark, col("h"), col("v"), cap)
+      .agg(GraftFunctions.qsketch(col("h"), col("v"), cap)
         .as("qs"))
-      .agg(GraftFunctions.qsketchMerge(spark, col("qs"), cap))
+      .agg(GraftFunctions.qsketchMerge(col("qs"), cap))
       .head().getSeq[Long](0)
     assert(merged.toSeq == direct.toSeq)
   }
@@ -95,7 +95,7 @@ class QuantileSketchSpec extends AnyFunSuite {
     val qGrid = Seq(0.05, 0.25, 0.5, 0.75, 0.95)
     val rows = for (c <- Seq(256, 1024, 4096)) yield {
       val arr = df.repartition(16)
-        .agg(GraftFunctions.qsketch(spark, col("h"), col("v"), c))
+        .agg(GraftFunctions.qsketch(col("h"), col("v"), c))
         .head().getSeq[Long](0)
       val m = (arr.size - 1) / 2
       assert(m <= c && m > c / 4, s"cap=$c retained $m")
@@ -127,20 +127,20 @@ class QuantileSketchSpec extends AnyFunSuite {
     // MULTISET of (h, v) pairs (qsketch) double-counts it — pinning
     // the store-choice rationale documented in StreamGate
     val a = Seq(10L, 20L).toDF("h")
-      .agg(GraftFunctions.kmvSketch(spark, col("h"), 8)).head().getSeq[Long](0)
+      .agg(GraftFunctions.kmvSketch(col("h"), 8)).head().getSeq[Long](0)
     val b = Seq(30L, 40L).toDF("h")
-      .agg(GraftFunctions.kmvSketch(spark, col("h"), 8)).head().getSeq[Long](0)
+      .agg(GraftFunctions.kmvSketch(col("h"), 8)).head().getSeq[Long](0)
     def kmvM(parts: Seq[Seq[Long]]) = parts.toDF("ks")
-      .agg(GraftFunctions.kmvMerge(spark, col("ks"), 8)).head().getSeq[Long](0)
+      .agg(GraftFunctions.kmvMerge(col("ks"), 8)).head().getSeq[Long](0)
     assert(kmvM(Seq(a, b, a)) == kmvM(Seq(a, b)), "KMV must absorb dups")
 
     def qs(rows: Seq[(Long, Long)]) = rows.toDF("h", "v")
-      .agg(GraftFunctions.qsketch(spark, col("h"), col("v"), 8))
+      .agg(GraftFunctions.qsketch(col("h"), col("v"), 8))
       .head().getSeq[Long](0)
     val qa = qs(Seq((10L, 1L), (20L, 2L)))
     val qb = qs(Seq((30L, 3L), (40L, 4L)))
     def qsM(parts: Seq[Seq[Long]]) = parts.toDF("qs")
-      .agg(GraftFunctions.qsketchMerge(spark, col("qs"), 8))
+      .agg(GraftFunctions.qsketchMerge(col("qs"), 8))
       .head().getSeq[Long](0)
     assert(qsM(Seq(qa, qb)) == qs(Seq((10L, 1L), (20L, 2L), (30L, 3L),
       (40L, 4L))), "clean merge must be lossless")
@@ -154,7 +154,7 @@ class QuantileSketchSpec extends AnyFunSuite {
     val p = mk(10000)
       .withColumn("g", col("h") % 5)
       .groupBy("g")
-      .agg(GraftFunctions.qsketch(spark, col("h"), col("v"), cap))
+      .agg(GraftFunctions.qsketch(col("h"), col("v"), cap))
       .queryExecution.executedPlan.toString
     assert("ObjectHashAggregate".r.findAllIn(p).size == 2,
       s"expected partial+final ObjectHashAggregate:\n$p")
@@ -166,7 +166,7 @@ class QuantileSketchSpec extends AnyFunSuite {
     "(level 0, all rows retained)") {
     val df = Seq((Some(8L), Some(3L)), (None, Some(9L)), (Some(12L), None),
       (Some(5L), Some(1L))).toDF("h", "v")
-    val arr = df.agg(GraftFunctions.qsketch(spark, col("h"), col("v"), 16))
+    val arr = df.agg(GraftFunctions.qsketch(col("h"), col("v"), 16))
       .head().getSeq[Long](0)
     assert(arr.toSeq == Seq(0L, 5L, 1L, 8L, 3L), arr.toString)
   }

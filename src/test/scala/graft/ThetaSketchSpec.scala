@@ -27,7 +27,7 @@ class ThetaSketchSpec extends AnyFunSuite {
     for (parts <- Seq(1, 3, 8)) {
       val got = vals.toDF("h").repartition(parts)
         .agg(graft.functions.GraftFunctions
-          .kmvSketch(spark, col("h"), 32).as("ks"))
+          .kmvSketch(col("h"), 32).as("ks"))
         .head().getAs[scala.collection.Seq[Long]]("ks")
       assert(got.toSeq == expected,
         s"parts=$parts: ${got.take(5)}... != ${expected.take(5)}...")
@@ -50,14 +50,14 @@ class ThetaSketchSpec extends AnyFunSuite {
       1, 15), 16, 10).cast("long")
     val k = 48
     val direct = base.select(h.as("h"))
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k))
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k))
       .head().getSeq[Long](0)
     val merged = base.select(col("day"), h.as("h"))
       .groupBy("day")
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k)
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
         .as("ks"))
       .select(explode(col("ks")).as("h"))
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k))
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k))
       .head().getSeq[Long](0)
     assert(direct == merged, "per-day merge lost a global k-smallest hash")
   }
@@ -147,7 +147,7 @@ class ThetaSketchSpec extends AnyFunSuite {
       (unix_date(to_date(col("ts"))).cast("long") % 7).as("dow"),
       h.as("h"))
     val fin = base.groupBy("event_type", "dow")
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k)
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
         .as("ks"))
     def collectMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.get(0).toString ->
@@ -156,18 +156,18 @@ class ThetaSketchSpec extends AnyFunSuite {
     val rolled = collectMap(fin
       .select(col("event_type"), explode(col("ks")).as("h"))
       .groupBy("event_type")
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k)
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
         .as("ks")))
     val direct = collectMap(base.groupBy("event_type")
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k)
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
         .as("ks")))
     assert(rolled == direct, "by-type rollup diverged from scratch")
     // grand total from partials vs from scratch
     val rolledAll = fin.select(explode(col("ks")).as("h"))
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k))
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k))
       .head().getSeq[Long](0)
     val directAll = base
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k))
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k))
       .head().getSeq[Long](0)
     assert(rolledAll == directAll, "grand-total rollup diverged")
     assert(rolledAll.size == k, "expected a truncated (full-k) sketch — " +
@@ -207,7 +207,7 @@ class ThetaSketchSpec extends AnyFunSuite {
             org.apache.spark.sql.types.LongType))),
         "gate_skhotest", store)(df =>
         df.groupBy("event_type")
-          .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k)
+          .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
             .as("ks")))
       val parts = spark.read.parquet(store)
       // one file per trigger → one appended partial set per micro-batch
@@ -216,12 +216,12 @@ class ThetaSketchSpec extends AnyFunSuite {
       val merged = parts
         .select(col("event_type"), explode(col("ks")).as("h"))
         .groupBy("event_type")
-        .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"))
         .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSeq)
         .toMap
       val direct = ev.groupBy("event_type")
-        .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"))
         .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSeq)
         .toMap
@@ -236,7 +236,7 @@ class ThetaSketchSpec extends AnyFunSuite {
       val doubled = parts.unionAll(parts)
         .select(col("event_type"), explode(col("ks")).as("h"))
         .groupBy("event_type")
-        .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k)
+        .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
           .as("ks"))
         .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSeq)
         .toMap
@@ -268,7 +268,7 @@ class ThetaSketchSpec extends AnyFunSuite {
         .as("obs_day"))
       .where(col("obs_day") <= d1)
       .groupBy("obs_day")
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k)
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
         .as("ks"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     // merge-at-read: one k-long partial per day, re-merged per window
@@ -276,14 +276,14 @@ class ThetaSketchSpec extends AnyFunSuite {
       .select(unix_date(to_date(col("ts"))).cast("long").as("day"),
         h.as("h"))
       .groupBy("day")
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k)
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
         .as("ks"))
       .select(explode(expr("sequence(day, day + 6)")).as("obs_day"),
         col("ks"))
       .where(col("obs_day") <= d1)
       .select(col("obs_day"), explode(col("ks")).as("h"))
       .groupBy("obs_day")
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k)
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
         .as("ks"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     assert(merged == direct,
@@ -314,7 +314,7 @@ class ThetaSketchSpec extends AnyFunSuite {
     val h = conv(substring(md5(col("key").cast("string").cast("binary")),
       1, 15), 16, 10).cast("long")
     val ks = df.select(h.as("h"))
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), 128))
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), 128))
       .head().getSeq[Long](0)
     assert(ks.size == 40, s"expected 40 retained, got ${ks.size}")
     assert(ks == ks.sorted && ks.distinct.size == ks.size)
@@ -331,11 +331,11 @@ class ThetaSketchSpec extends AnyFunSuite {
     val partials = vals.zipWithIndex
       .map { case (v, i) => (i % 13, v) }.toDF("g", "h")
       .groupBy("g")
-      .agg(graft.functions.GraftFunctions.kmvSketch(spark, col("h"), k)
+      .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
         .as("ks"))
     for (parts <- Seq(1, 3, 8)) {
       val got = partials.repartition(parts)
-        .agg(graft.functions.GraftFunctions.kmvMerge(spark, col("ks"), k))
+        .agg(graft.functions.GraftFunctions.kmvMerge(col("ks"), k))
         .head().getSeq[Long](0)
       assert(got.toSeq == expected, s"parts=$parts")
     }
@@ -351,7 +351,7 @@ class ThetaSketchSpec extends AnyFunSuite {
       (4, Some(Seq(20L, 10L, 40L)))) // overlapping values dedup
       .toDF("g", "ks")
     val got = df
-      .agg(graft.functions.GraftFunctions.kmvMerge(spark, col("ks"), 4))
+      .agg(graft.functions.GraftFunctions.kmvMerge(col("ks"), 4))
       .head().getSeq[Long](0)
     assert(got.toSeq == Seq(10L, 20L, 30L, 40L), got.toString)
   }
@@ -359,7 +359,6 @@ class ThetaSketchSpec extends AnyFunSuite {
   test("graft_kmv_merge is reachable from a raw SQL string and agrees " +
     "with the DataFrame path") {
     import spark.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     (1L to 300L).map(v => (v % 5, v * 271L % 997L))
       .toDF("g", "h").createOrReplaceTempView("kmv_merge_probe")
     val got = spark.sql("""

@@ -137,9 +137,9 @@ class TokenCountsAggSpec extends AnyFunSuite {
       if (parts == 1) d.coalesce(1) else d.repartition(parts)
     }
     val c = mode match {
-      case ModeText => GraftFunctions.tokenCounts(spark, col("value"))
-      case ModeCsvTokens => GraftFunctions.tokenCountsCsv(spark, col("value"))
-      case ModeCsvTicker => GraftFunctions.tickerCounts(spark, col("value"))
+      case ModeText => GraftFunctions.tokenCounts(col("value"))
+      case ModeCsvTokens => GraftFunctions.tokenCountsCsv(col("value"))
+      case ModeCsvTicker => GraftFunctions.tickerCounts(col("value"))
     }
     df.agg(c.as("m")).head().getMap[String, Long](0).toMap
   }
@@ -244,7 +244,6 @@ class TokenCountsAggSpec extends AnyFunSuite {
   }
 
   test("string-input natives reject other types at analysis") {
-    GraftFunctions.ensureRegistered(spark)
     Seq("graft_token_counts", "graft_token_counts_csv",
       "graft_ticker_counts").foreach { f =>
       val e = intercept[AnalysisException](spark.sql(s"SELECT $f(42)"))
