@@ -86,30 +86,6 @@ object SparkEntry {
       when(col("event_type") =!= "error",
         round(col("value") * 1000).cast("long")).as("v"))
 
-  /** Scale-adaptive parquet split size for a LOCAL session over `sfDir`.
-    * The test inputs are single small files (lineitem at sf0.1 is one
-    * ~11 MB file), so Spark's production default of 128 MB per split
-    * serializes every base-table scan into ONE task at any core count —
-    * the biggest single source of the anti-scaling the r18 driver bench
-    * measured (a scan-plus-aggregate query like rel_q14_promo ran as one
-    * 1.7 s serial task on 32 idle cores). The split derives from the
-    * actual input size so a few waves of scan tasks cover the cores,
-    * clamped to [512 KB, 128 MB]: at production scale the derivation
-    * saturates at the 128 MB default (guide §6 — large sequential splits
-    * are what a 100 TB scan wants), so this is scale-shape adaptation,
-    * not a local-only constant. SPARK_GRAFT_MAX_SPLIT_BYTES overrides
-    * both the derivation and the cap. */
-  def adaptiveMaxSplitBytes(sfDir: String, cpus: Int): Long =
-    sys.env.get("SPARK_GRAFT_MAX_SPLIT_BYTES").map(_.toLong).getOrElse {
-      val total =
-        try {
-          Option(new java.io.File(sfDir).listFiles())
-            .map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
-        } catch { case _: Throwable => 0L }
-      math.min(128L << 20,
-        math.max(512L << 10, total / math.max(1, 2 * cpus)))
-    }
-
   /** Support-filtered part co-purchase pair list shared by the
     * kcore/coreness/ktruss decompositions: parts sharing an order >= 2
     * times, directed a < b. Basket shape (the rel_basket_pairs /
@@ -157,6 +133,12 @@ object SparkEntry {
   private def thetaHash(c: Column): Column =
     conv(substring(md5(c.cast("string").cast("binary")), 1, 15), 16, 10)
       .cast("long")
+
+  /** Per-micro-batch partial of the count handoff stores: events and
+    * summed cents per event_type. */
+  private def centsPartial(df: DataFrame): DataFrame =
+    df.groupBy("event_type")
+      .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("sum_cents"))
 
   /** Same value shape but keeping the raw TIMESTAMP key — for the
     * interval-RANGE frames that order by the instant directly. */
@@ -267,8 +249,8 @@ object SparkEntry {
     * FileAlreadyExistsException. The renamed objects carry no per-object
     * _SUCCESS markers (harmless to the txn-log readers, which list only
     * the paths the log names). */
-  private def stagePartitionedObjects(s: SparkSession, root: String,
-      prefix: String, df: DataFrame, nBuckets: Int = 4): Seq[String] = {
+  private def stagePartitionedObjects(root: String, prefix: String,
+      df: DataFrame, nBuckets: Int = 4): Seq[String] = {
     val broot = s"$root/_parts"
     df.write.mode("overwrite").partitionBy("bucket").parquet(broot)
     val out = (0 until nBuckets).map { i =>
@@ -325,7 +307,7 @@ object SparkEntry {
     // the root holds exactly the objects the log names — orphan GC and
     // the path-shape requires in the vacuum/clone/gc queries see the
     // same layout as before.
-    val b = stagePartitionedObjects(s, root, "b",
+    val b = stagePartitionedObjects(root, "b",
       orders.withColumn("bucket", col("o_orderkey") % 4))
     // checkpointEvery = 2 routes the history through real checkpoints
     // (v2, v4): snapshot resolution in every src_txn_* query below reads
@@ -381,7 +363,7 @@ object SparkEntry {
     // to its object) — versus 4 full-scan writes + 4 read-back
     // aggregates of fixed cost per invocation. Stats still come from
     // the bytes on disk.
-    val bPaths = stagePartitionedObjects(s, root, "b",
+    val bPaths = stagePartitionedObjects(root, "b",
       orders.withColumn("bucket", expr(s"o_orderkey div $w")))
     val statRows = s.read.parquet(bPaths: _*)
       .groupBy(expr(s"o_orderkey div $w").as("bucket"))
@@ -2227,31 +2209,18 @@ object SparkEntry {
     // of draining into batch 0. File-to-batch order is arbitrary, so the
     // lateness covers the whole event-time span (no watermark late-drops;
     // in complete mode the state is retained regardless).
-    "stream_windowed_counts_file" -> ((s, dir) => {
-      val src = graft.streaming.StreamGate.scratchDir("stage", "win_counts_file")
-      events(s, dir)
-        .select(unix_micros(col("ts")).as("ts_us"), col("event_type"))
-        .repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
-      // the replay drains the staged files into the memory sink before
-      // returning, so the directory can be removed immediately — waiting
-      // for JVM exit (deleteOnExit) would leak it: non-empty dirs are
-      // never deleted that way
-      try graft.streaming.StreamGate.replayCsvMultiBatch(s, src,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("ts_us",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType))),
-        "gate_win_counts_file", "complete")(df =>
-        graft.streaming.EventStream.windowedCounts(
-          df.select(timestamp_micros(col("ts_us")).as("ts"),
-            col("event_type")),
-          "ts", "event_type", window = "1 hour", lateness = "3650 days"))
+    "stream_windowed_counts_file" -> ((s, dir) =>
+      graft.streaming.StreamGate.stageCsvAndReplay(events(s, dir)
+        .select(unix_micros(col("ts")).as("ts_us"), col("event_type")),
+        "gate_win_counts_file")(
+        graft.streaming.StreamGate.replayCsvMultiBatch(s, _, _,
+          "gate_win_counts_file", "complete")(df =>
+          graft.streaming.EventStream.windowedCounts(
+            df.select(timestamp_micros(col("ts_us")).as("ts"),
+              col("event_type")),
+            "ts", "event_type", window = "1 hour", lateness = "3650 days")))
         .select(unix_micros(col("win_start")).as("win_start_us"),
-          col("event_type"), col("cnt"))
-      finally graft.streaming.StreamGate.deleteRecursively(src)
-    }),
+          col("event_type"), col("cnt"))),
 
     // STREAMING heavy hitters with bounded state: users above N/150 of
     // the whole event stream. The stream side maintains hash-sharded
@@ -2266,18 +2235,11 @@ object SparkEntry {
     "stream_heavy_hitters" -> ((s, dir) => {
       val k = 150L; val shards = 4; val cap = 64
       val ev = events(s, dir).select(col("user_id").cast("long").as("k"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "hh")
-      ev.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
-      val sink =
-        try graft.streaming.StreamGate.replayCsvMultiBatch(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("k",
-              org.apache.spark.sql.types.LongType))),
+      val sink = graft.streaming.StreamGate.stageCsvAndReplay(ev, "gate_hh")(
+        graft.streaming.StreamGate.replayCsvMultiBatch(s, _, _,
           "gate_hh", "update")(df =>
           graft.streaming.EventStream.heavyHitterCandidates(
-            df, "k", shards, cap))
-        finally graft.streaming.StreamGate.deleteRecursively(src)
+            df, "k", shards, cap)))
       // final snapshot per shard = the emission with the largest version
       val fin = sink.groupBy("shard")
         .agg(max(struct(col("seen"), col("keys"))).as("m"))
@@ -2320,20 +2282,11 @@ object SparkEntry {
     "stream_bitmap_distinct" -> ((s, dir) => {
       import s.implicits._
       val ev = events(s, dir).select(col("event_type"), col("user_id"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "bmdist")
-      ev.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
-      val sink =
-        try graft.streaming.StreamGate.replayCsvMultiBatch(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("user_id",
-              org.apache.spark.sql.types.LongType))),
+      val sink = graft.streaming.StreamGate.stageCsvAndReplay(ev,
+        "gate_bmdist")(graft.streaming.StreamGate.replayCsvMultiBatch(s, _, _,
           "gate_bmdist", "update")(df =>
           graft.streaming.EventStream.bitmapDistinct(
-            df.toDF("_1", "_2").as[(String, Long)]).toDF())
-        finally graft.streaming.StreamGate.deleteRecursively(src)
+            df.toDF("_1", "_2").as[(String, Long)]).toDF()))
       sink.groupBy(col("key"), col("bucket"))
         .agg(max(struct(col("ver"), col("distinct"))).as("m"))
         .groupBy(col("key").as("event_type"))
@@ -2353,22 +2306,13 @@ object SparkEntry {
         // float -> shortest-round-trip string -> float is exact, so the
         // CSV gate cannot perturb the vectors
         concat_ws(";", col("embedding").cast("array<string>")).as("emb"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "momsum")
-      ev.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
-      val sink =
-        try graft.streaming.StreamGate.replayCsvMultiBatch(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("vec_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("emb",
-              org.apache.spark.sql.types.StringType))),
+      val sink = graft.streaming.StreamGate.stageCsvAndReplay(ev,
+        "gate_momsum")(graft.streaming.StreamGate.replayCsvMultiBatch(s, _, _,
           "gate_momsum", "update")(df =>
           graft.streaming.EventStream.momentSumsStream(
             df.select(col("vec_id"),
               split(col("emb"), ";").cast("array<float>").as("v"))
-              .as[(Long, Seq[Float])]).toDF())
-        finally graft.streaming.StreamGate.deleteRecursively(src)
+              .as[(Long, Seq[Float])]).toDF()))
       val bufs = sink.groupBy(col("shard"))
         .agg(max(struct(col("ver"), col("buf"))).as("m"))
         .select(col("m.buf")).as[Seq[Double]].collect() // shards, model-sized
@@ -2395,22 +2339,11 @@ object SparkEntry {
         .where(col("event_type").isin("signup", "view", "purchase"))
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("t_us"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "funnel")
-      ev.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
-      val sink =
-        try graft.streaming.StreamGate.replayCsvMultiBatch(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("user_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("t_us",
-              org.apache.spark.sql.types.LongType))),
+      val sink = graft.streaming.StreamGate.stageCsvAndReplay(ev,
+        "gate_funnel")(graft.streaming.StreamGate.replayCsvMultiBatch(s, _, _,
           "gate_funnel", "update")(df =>
           graft.streaming.EventStream.firstTouchFunnel(
-            df.toDF("_1", "_2", "_3").as[(Long, String, Long)]).toDF())
-        finally graft.streaming.StreamGate.deleteRecursively(src)
+            df.toDF("_1", "_2", "_3").as[(Long, String, Long)]).toDF()))
       val none = Long.MaxValue
       val fin = sink.groupBy(col("userId"))
         .agg(max(struct(col("ver"), col("s"), col("v"), col("p"),
@@ -4243,7 +4176,7 @@ object SparkEntry {
       // ONE partitioned write lays down all 3 doc-range objects
       // (identical rows/columns to three filtered writes — the staging
       // discipline txnLogStage established)
-      val Seq(o0, o1, o2) = stagePartitionedObjects(s, root, "d",
+      val Seq(o0, o1, o2) = stagePartitionedObjects(root, "d",
         docs.withColumn("bucket",
           when(col("doc_id") < 200, 0L)
             .when(col("doc_id") < 350, 1L).otherwise(2L)),
@@ -8541,7 +8474,7 @@ object SparkEntry {
       // ONE partitioned write lays down all 3 vec-range objects
       // (txnLogStage staging discipline; contents identical to three
       // filtered writes)
-      val Seq(oA, oB, oC) = stagePartitionedObjects(s, root, "e",
+      val Seq(oA, oB, oC) = stagePartitionedObjects(root, "e",
         emb.withColumn("bucket",
           when(col("vec_id") < 200, 0L)
             .when(col("vec_id") < 350, 1L).otherwise(2L)),
@@ -10257,20 +10190,11 @@ object SparkEntry {
         (col("user_id") * 100000L + unix_date(to_date(col("ts"))))
           .cast("long").as("key"))
       val ev = base.select(col("event_type"), thetaHash(col("key")).as("h"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "thetadist")
-      ev.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
-      val sink =
-        try graft.streaming.StreamGate.replayCsvMultiBatch(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("h",
-              org.apache.spark.sql.types.LongType))),
-          "gate_thetadist", "update")(df =>
+      val sink = graft.streaming.StreamGate.stageCsvAndReplay(ev,
+        "gate_thetadist")(graft.streaming.StreamGate.replayCsvMultiBatch(s,
+          _, _, "gate_thetadist", "update")(df =>
           graft.streaming.EventStream.thetaSketchStream(
-            df.toDF("_1", "_2").as[(String, Long)]).toDF())
-        finally graft.streaming.StreamGate.deleteRecursively(src)
+            df.toDF("_1", "_2").as[(String, Long)]).toDF()))
       val sketches = sink.groupBy(col("key"))
         .agg(max(struct(col("ver"), col("ks"))).as("m"))
         .select(col("key").as("event_type"), col("m.ks").as("ks"))
@@ -10302,22 +10226,11 @@ object SparkEntry {
       val base = events(s, dir).select(col("event_type"),
         thetaHash(col("event_id")).as("h"),
         expr("cast(round(value * 1000) AS bigint)").as("cents"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "qstream")
-      base.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
-      val sink =
-        try graft.streaming.StreamGate.replayCsvMultiBatch(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("h",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("cents",
-              org.apache.spark.sql.types.LongType))),
-          "gate_qstream", "update")(df =>
+      val sink = graft.streaming.StreamGate.stageCsvAndReplay(base,
+        "gate_qstream")(graft.streaming.StreamGate.replayCsvMultiBatch(s,
+          _, _, "gate_qstream", "update")(df =>
           graft.streaming.EventStream.qsketchStream(
-            df.toDF("_1", "_2", "_3").as[(String, Long, Long)], cap).toDF())
-        finally graft.streaming.StreamGate.deleteRecursively(src)
+            df.toDF("_1", "_2", "_3").as[(String, Long, Long)], cap).toDF()))
       sink.groupBy(col("key"))
         .agg(max(struct(col("ver"), col("qs"))).as("m"))
         .select(col("key").as("event_type"), col("m.qs").as("qs"))
@@ -10352,22 +10265,17 @@ object SparkEntry {
         (col("user_id") * 100000L + unix_date(to_date(col("ts"))))
           .cast("long").as("key"))
       val ev = base.select(col("event_type"), thetaHash(col("key")).as("h"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "skhandoff")
       val store = graft.streaming.StreamGate
         .scratchDir("stage", "skhandoffstore")
-      ev.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
       try {
-        graft.streaming.StreamGate.replayCsvToParquetStore(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("h",
-              org.apache.spark.sql.types.LongType))),
-          "gate_skhandoff", store)(df =>
-          df.groupBy("event_type")
-            .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
-              .as("ks")))
+        graft.streaming.StreamGate.stageCsvAndReplay(ev, "gate_skhandoff")(
+          graft.streaming.StreamGate.replayCsvForeachBatch(s, _, _,
+            "gate_skhandoff")(
+            (df, id) => graft.streaming.StreamGate.appendBatch(
+              df.groupBy("event_type")
+                .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
+                  .as("ks")),
+              id, store)))
         val merged = s.read.parquet(store)
           .groupBy("event_type")
           // O(k) column merge of the appended batch partials
@@ -10385,14 +10293,11 @@ object SparkEntry {
             col("exact"))
           // eager: the scratch store is deleted on exit
           .localCheckpoint(true)
-      } finally {
-        graft.streaming.StreamGate.deleteRecursively(src)
-        graft.streaming.StreamGate.deleteRecursively(store)
-      }
+      } finally graft.streaming.StreamGate.deleteRecursively(store)
     }),
 
     // NON-IDEMPOTENT HANDOFF CONSUMER, PROVEN — the at-least-once
-    // caveat on replayCsvToParquetStore made concrete: COUNT/SUM
+    // caveat on StreamGate.appendBatch made concrete: COUNT/SUM
     // partials (NOT idempotent under re-append, unlike the sketch
     // handoff's k-smallest union) land per micro-batch in an append
     // store, and the query then INJECTS the failure mode into its own
@@ -10407,21 +10312,14 @@ object SparkEntry {
     "stream_count_handoff" -> ((s, dir) => {
       val base = events(s, dir).select(col("event_type"),
         expr("cast(round(value * 1000) AS bigint)").as("cents"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "cnthandoff")
       val store = graft.streaming.StreamGate
         .scratchDir("stage", "cnthandoffstore")
-      base.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
       try {
-        graft.streaming.StreamGate.replayCsvToParquetStore(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("cents",
-              org.apache.spark.sql.types.LongType))),
-          "gate_cnthandoff", store)(df =>
-          df.groupBy("event_type")
-            .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("sum_cents")))
+        graft.streaming.StreamGate.stageCsvAndReplay(base, "gate_cnthandoff")(
+          graft.streaming.StreamGate.replayCsvForeachBatch(s, _, _,
+            "gate_cnthandoff")(
+            (df, id) => graft.streaming.StreamGate.appendBatch(
+              centsPartial(df), id, store)))
         // inject the at-least-once failure mode: re-append batch 0's
         // partial (a recovered foreachBatch re-running after a crash
         // that hit between store append and checkpoint commit)
@@ -10436,16 +10334,13 @@ object SparkEntry {
             sum(col("sum_cents")).as("sum_cents"))
           // eager: the scratch store is deleted on exit
           .localCheckpoint(true)
-      } finally {
-        graft.streaming.StreamGate.deleteRecursively(src)
-        graft.streaming.StreamGate.deleteRecursively(store)
-      }
+      } finally graft.streaming.StreamGate.deleteRecursively(store)
     }),
 
     // EXACTLY-ONCE HANDOFF — the idempotent alternative to the append
     // store above: each micro-batch's partial lands via DYNAMIC
     // PARTITION OVERWRITE into its own batch_id= partition
-    // (StreamGate.replayCsvToPartitionedStore), so a replayed batch
+    // (StreamGate.writeBatchPartition), so a replayed batch
     // REPLACES its previous partition instead of duplicating it. The
     // query re-presents batch 0 through the identical write path (the
     // same recovery scenario the append-store query injects) and the
@@ -10457,20 +10352,13 @@ object SparkEntry {
     "stream_count_handoff_eo" -> ((s, dir) => {
       val base = events(s, dir).select(col("event_type"),
         expr("cast(round(value * 1000) AS bigint)").as("cents"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "cnteo")
       val store = graft.streaming.StreamGate.scratchDir("stage", "cnteostore")
-      base.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
       try {
-        graft.streaming.StreamGate.replayCsvToPartitionedStore(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("cents",
-              org.apache.spark.sql.types.LongType))),
-          "gate_cnteo", store)(df =>
-          df.groupBy("event_type")
-            .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("sum_cents")))
+        graft.streaming.StreamGate.stageCsvAndReplay(base, "gate_cnteo")(
+          graft.streaming.StreamGate.replayCsvForeachBatch(s, _, _,
+            "gate_cnteo")(
+            (df, id) => graft.streaming.StreamGate.writeBatchPartition(
+              centsPartial(df), id, store)))
         // replay batch 0 through the identical exactly-once write path:
         // dynamic overwrite replaces partition batch_id=0 in place
         graft.streaming.StreamGate.writeBatchPartition(
@@ -10483,10 +10371,7 @@ object SparkEntry {
             sum(col("sum_cents")).as("sum_cents"))
           // eager: the scratch store is deleted on exit
           .localCheckpoint(true)
-      } finally {
-        graft.streaming.StreamGate.deleteRecursively(src)
-        graft.streaming.StreamGate.deleteRecursively(store)
-      }
+      } finally graft.streaming.StreamGate.deleteRecursively(store)
     }),
 
     // TRANSACTION-LOG HANDOFF — the third idempotence mechanism, completing
@@ -10506,21 +10391,14 @@ object SparkEntry {
       import graft.sources.TxnLog
       val base = events(s, dir).select(col("event_type"),
         expr("cast(round(value * 1000) AS bigint)").as("cents"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "txnsink")
       val store = graft.streaming.StreamGate
         .scratchDir("stage", "txnsinkstore")
-      base.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
       try {
-        graft.streaming.StreamGate.replayCsvToTxnStore(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("cents",
-              org.apache.spark.sql.types.LongType))),
-          "gate_txnsink", store)(df =>
-          df.groupBy("event_type")
-            .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("sum_cents")))
+        graft.streaming.StreamGate.stageCsvAndReplay(base, "gate_txnsink")(
+          graft.streaming.StreamGate.replayCsvForeachBatch(s, _, _,
+            "gate_txnsink")(
+            (df, id) => graft.streaming.StreamGate.publishBatchTxn(
+              centsPartial(df), id, store)))
         val logDir = s"$store/_log"
         val head = TxnLog.latestVersion(s, logDir)
         // (1) recovery replay: re-present batch 0's partial through the
@@ -10544,10 +10422,7 @@ object SparkEntry {
             sum(col("sum_cents")).as("sum_cents"))
           // eager: the scratch store is deleted on exit
           .localCheckpoint(true)
-      } finally {
-        graft.streaming.StreamGate.deleteRecursively(src)
-        graft.streaming.StreamGate.deleteRecursively(store)
-      }
+      } finally graft.streaming.StreamGate.deleteRecursively(store)
     }),
 
     // THE FULL STREAMING CDC LOOP — ingest through the exactly-once txn
@@ -10568,25 +10443,18 @@ object SparkEntry {
       import graft.sources.TxnLog
       val base = events(s, dir).select(col("event_type"),
         expr("cast(round(value * 1000) AS bigint)").as("cents"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "txncdc")
       val store = graft.streaming.StreamGate
         .scratchDir("stage", "txncdcstore")
-      // staged fanout (3 files / 2 under the bench-light knob, like
-      // every other multi-batch CSV replay): each staged file is one
-      // micro-batch = one log version for the tailing consumer below;
-      // the head >= 1 require keeps the multi-batch shape load-bearing
-      base.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
+      // 3 staged files, like every other multi-batch CSV replay: each
+      // staged file is one micro-batch = one log version for the tailing
+      // consumer below; the head >= 1 require keeps the multi-batch shape
+      // load-bearing
       try {
-        graft.streaming.StreamGate.replayCsvToTxnStore(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("cents",
-              org.apache.spark.sql.types.LongType))),
-          "gate_txncdc", store)(df =>
-          df.groupBy("event_type")
-            .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("sum_cents")))
+        graft.streaming.StreamGate.stageCsvAndReplay(base, "gate_txncdc")(
+          graft.streaming.StreamGate.replayCsvForeachBatch(s, _, _,
+            "gate_txncdc")(
+            (df, id) => graft.streaming.StreamGate.publishBatchTxn(
+              centsPartial(df), id, store)))
         val logDir = s"$store/_log"
         val log = TxnLog.readLog(s, logDir)
         val head = TxnLog.latestVersion(s, logDir)
@@ -10617,10 +10485,7 @@ object SparkEntry {
           .isEmpty,
           "incremental CDC state diverged from the snapshot recompute")
         state
-      } finally {
-        graft.streaming.StreamGate.deleteRecursively(src)
-        graft.streaming.StreamGate.deleteRecursively(store)
-      }
+      } finally graft.streaming.StreamGate.deleteRecursively(store)
     }),
 
     // STREAM-TO-STORE QUANTILE-SKETCH HANDOFF — the qsketch partials
@@ -10640,24 +10505,17 @@ object SparkEntry {
       val base = events(s, dir).select(col("event_type"),
         thetaHash(col("event_id")).as("h"),
         expr("cast(round(value * 1000) AS bigint)").as("cents"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "qshandoff")
       val store = graft.streaming.StreamGate
         .scratchDir("stage", "qshandoffstore")
-      base.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
       try {
-        graft.streaming.StreamGate.replayCsvToPartitionedStore(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("h",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("cents",
-              org.apache.spark.sql.types.LongType))),
-          "gate_qshandoff", store)(df =>
-          df.groupBy("event_type")
-            .agg(graft.functions.GraftFunctions
-              .qsketch(col("h"), col("cents"), cap).as("qs")))
+        graft.streaming.StreamGate.stageCsvAndReplay(base, "gate_qshandoff")(
+          graft.streaming.StreamGate.replayCsvForeachBatch(s, _, _,
+            "gate_qshandoff")(
+            (df, id) => graft.streaming.StreamGate.writeBatchPartition(
+              df.groupBy("event_type")
+                .agg(graft.functions.GraftFunctions
+                  .qsketch(col("h"), col("cents"), cap).as("qs")),
+              id, store)))
         // replay batch 0 through the identical exactly-once write path
         // — the store must be unchanged or the multiset merge breaks
         graft.streaming.StreamGate.writeBatchPartition(
@@ -10680,10 +10538,7 @@ object SparkEntry {
             concat_ws(";", col("qs").cast("array<string>")).as("contents"))
           // eager: the scratch store is deleted on exit
           .localCheckpoint(true)
-      } finally {
-        graft.streaming.StreamGate.deleteRecursively(src)
-        graft.streaming.StreamGate.deleteRecursively(store)
-      }
+      } finally graft.streaming.StreamGate.deleteRecursively(store)
     }),
 
     // STREAMING THETA SET OPERATIONS ACROSS TWO STREAMS — the audience-
@@ -10715,20 +10570,11 @@ object SparkEntry {
       // and idempotent — so each side's final (max-version) sketch is
       // identical to what its own single-side replay produced.
       val ev = base.select(col("event_type"), thetaHash(col("key")).as("h"))
-      val src = graft.streaming.StreamGate.scratchDir("stage", "thetaso")
-      ev.repartition(graft.streaming.StreamGate.stageFanout)
-        .write.mode("overwrite").csv(src)
-      val sink =
-        try graft.streaming.StreamGate.replayCsvMultiBatch(s, src,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("h",
-              org.apache.spark.sql.types.LongType))),
-          "gate_thetaso", "update")(df =>
+      val sink = graft.streaming.StreamGate.stageCsvAndReplay(ev,
+        "gate_thetaso")(graft.streaming.StreamGate.replayCsvMultiBatch(s,
+          _, _, "gate_thetaso", "update")(df =>
           graft.streaming.EventStream.thetaSketchStream(
-            df.toDF("_1", "_2").as[(String, Long)]).toDF())
-        finally graft.streaming.StreamGate.deleteRecursively(src)
+            df.toDF("_1", "_2").as[(String, Long)]).toDF()))
       val fin = sink.groupBy(col("key"))
         .agg(max(struct(col("ver"), col("ks"))).as("m"))
       val a = fin.where(col("key") === "click")

@@ -12,10 +12,6 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // scale-adaptive scan splits (see SparkEntry.adaptiveMaxSplitBytes);
-      // same setting as Bench so the oracle gate runs the bench's shape
-      .config("spark.sql.files.maxPartitionBytes",
-        SparkEntry.adaptiveMaxSplitBytes(sfDir, cpus.toInt))
       // session-wide graft surface: native functions + the GlobalRank/
       // GlobalScan rewrites, so textbook global windows plan distributed
       // without per-query registration

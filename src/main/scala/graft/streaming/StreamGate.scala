@@ -1,18 +1,28 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 
 /** Drives an [[EventStream]] transform through the real Structured
-  * Streaming engine (file source -> micro-batch execution -> memory sink)
-  * and returns the sink contents as a batch DataFrame, so streaming
-  * operators can sit in `SparkEntry.queries` and be checked against the
-  * same DuckDB oracles as the batch ops.
+  * Streaming engine (file source -> micro-batch execution -> memory sink
+  * or a foreachBatch store write) and returns the sink contents as a
+  * batch DataFrame, so streaming operators can sit in `SparkEntry.queries`
+  * and be checked against the same DuckDB oracles as the batch ops.
   *
-  * Every replay is FULLY DISTRIBUTED: input is staged as parquet by the
-  * executors and read back by the engine's own file source on the
-  * executors — the driver only names directories; nothing is collected
-  * anywhere. Swap the staged directory for an object-store path (or the
-  * source for Kafka) and the query under test is unchanged — that is the
+  * Two stagers feed every replay: [[stageAndReplay]] writes the input as
+  * parquet, drained in one micro-batch; [[stageCsvAndReplay]] writes it
+  * as 3 CSV files, replayed one micro-batch per file so state carries
+  * across batches. The CSV stager is the one multi-batch shape: Bench,
+  * Verify and perfbench all run it. Every query, memory or store, runs
+  * the same lifecycle ([[drain]]).
+  *
+  * Every replay is FULLY DISTRIBUTED: input is staged by the executors
+  * and read back by the engine's own file source on the executors — the
+  * driver only names directories; nothing is collected anywhere. Swap
+  * the staged directory for an object-store path (or the source for
+  * Kafka) and the query under test is unchanged — that is the
   * production shape at 100 TB/day.
   */
 object StreamGate {
@@ -67,15 +77,11 @@ object StreamGate {
     }
   }
 
-  /** Staged-input fan-out for the multi-batch CSV replays: 3 files (=
-    * 3 micro-batches) by default, so incremental state genuinely
-    * carries across batches; 2 under the bench-context system property
-    * `graft.bench.stream.light` (set by Bench unless
-    * SPARK_GRAFT_BENCH_STREAM_FULL=1) — still multi-batch, one fewer
-    * fixed-cost micro-batch per query across the ~13 staged replays.
-    * Correctness runs (Verify) never set the property. */
-  def stageFanout: Int =
-    if (sys.props.get("graft.bench.stream.light").contains("1")) 2 else 3
+  /** Files a staged CSV replay is split into: the CSV replays read one
+    * file per trigger, so 3 files are 3 micro-batches and incremental
+    * state genuinely carries across batches. Every caller — Bench,
+    * Verify, the perfbench JVM, the specs — replays this one shape. */
+  private val StagedFiles = 3
 
   /** Scratch directory for replay transients. CHECKPOINTS ("ckpt") go to
     * tmpfs when available: they are kilobytes of offset/commit/state files
@@ -109,6 +115,42 @@ object StreamGate {
       }
     } catch { case _: Exception => () }
 
+  /** The one query lifecycle every replay runs: start `w` against a
+    * fresh checkpoint, drain every available input, stop the query and
+    * delete its checkpoint — the stop and the delete run even when the
+    * drain throws. */
+  private def drain(name: String, w: DataStreamWriter[Row]): Unit = {
+    val ckpt = ckptDir(name)
+    val q = w.option("checkpointLocation", ckpt).start()
+    try q.processAllAvailable() finally { q.stop(); deleteRecursively(ckpt) }
+  }
+
+  /** Drain `out` into the memory table `name` under the replay
+    * partitioning and the complete-mode no-data setting, then return
+    * the table as a batch frame. */
+  private def drainToMemory(spark: SparkSession, name: String,
+                            mode: String)(out: => DataFrame)
+  : DataFrame = withReplayPartitions(spark) {
+    withCompleteModeNoDataOff(spark, mode) {
+      drain(name, out.writeStream
+        .format("memory").queryName(name).outputMode(mode))
+    }
+    spark.table(name)
+  }
+
+  /** The CSV file source with a one-file-per-trigger cap: the engine
+    * runs one micro-batch PER FILE, so incremental stateful aggregation
+    * across micro-batches is actually exercised, unlike the parquet
+    * replay, which drains every file into batch 0. The text source also
+    * covers schema enforcement + typed parsing (the parquet source
+    * carries its own schema). Batch-to-file assignment is NOT
+    * time-ordered, so callers must use a lateness larger than the
+    * data's event-time span or accept watermark late-drops. */
+  private def csvSource(spark: SparkSession, sourceDir: String,
+                        schema: StructType): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").csv(sourceDir)
+
   /** Fully distributed replay: stream a staged parquet directory through
     * the real FILE source (`spark.readStream.schema(...).parquet(dir)`) —
     * the executors list and read the files; nothing is collected to the
@@ -118,98 +160,61 @@ object StreamGate {
     * into the first micro-batch (no maxFilesPerTrigger cap), so a bounded
     * replay is one batch + the engine's own watermark-advance batch. */
   def replayFileSource(spark: SparkSession, sourceDir: String,
-                       schema: org.apache.spark.sql.types.StructType,
-                       name: String, mode: String)
-                      (transform: DataFrame => DataFrame)
-  : DataFrame = withReplayPartitions(spark) {
-    withCompleteModeNoDataOff(spark, mode) {
-      val src = spark.readStream.schema(schema).parquet(sourceDir)
-      val ckpt = ckptDir(name)
-      val q = transform(src).writeStream
-        .format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally { q.stop(); deleteRecursively(ckpt) }
-    }
-    spark.table(name)
-  }
+                       schema: StructType, name: String, mode: String)
+                      (transform: DataFrame => DataFrame): DataFrame =
+    drainToMemory(spark, name, mode)(
+      transform(spark.readStream.schema(schema).parquet(sourceDir)))
 
-  /** CSV-source replay with a one-file-per-trigger cap: the caller stages
-    * the input split across multiple files, and the engine runs one
-    * micro-batch PER FILE — so incremental stateful aggregation across
-    * micro-batches is actually exercised, unlike the parquet replay,
-    * which drains every file into batch 0. The text source also covers
-    * schema enforcement + typed parsing (the parquet source carries its
-    * own schema). Batch-to-file assignment is NOT time-ordered, so
-    * callers must use a lateness larger than the data's event-time span
-    * or accept watermark late-drops. */
+  /** Directory-level CSV replay into the memory sink: one micro-batch per
+    * file of `sourceDir` (see [[csvSource]]). Staged frames reach it
+    * through [[stageCsvAndReplay]]; hand-written files, whose contents
+    * and modification times fix the batch order, are replayed directly. */
   def replayCsvMultiBatch(spark: SparkSession, sourceDir: String,
-                          schema: org.apache.spark.sql.types.StructType,
-                          name: String, mode: String)
-                         (transform: DataFrame => DataFrame)
-  : DataFrame = withReplayPartitions(spark) {
-    withCompleteModeNoDataOff(spark, mode) {
-      val tlog = sys.env.get("SPARK_GRAFT_STREAM_TLOG").contains("1")
-      var t = System.nanoTime()
-      def mark(what: String): Unit = if (tlog) {
-        val now = System.nanoTime()
-        System.err.println(f"[tlog] $name $what ${(now - t) / 1e9}%.3fs")
-        t = now
-      }
-      val src = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").csv(sourceDir)
-      val ckpt = ckptDir(name)
-      val q = transform(src).writeStream
-        .format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation", ckpt).start()
-      mark("start")
-      try { q.processAllAvailable(); mark("drain") }
-      finally { q.stop(); mark("stop"); deleteRecursively(ckpt) }
-    }
-    spark.table(name)
-  }
+                          schema: StructType, name: String, mode: String)
+                         (transform: DataFrame => DataFrame): DataFrame =
+    drainToMemory(spark, name, mode)(
+      transform(csvSource(spark, sourceDir, schema)))
 
-  /** CSV multi-batch replay whose sink is a parquet STORE, not a memory
-    * table: foreachBatch hands each micro-batch to `perBatch` as a plain
-    * batch frame and APPENDS the result (tagged with its batch id) to
-    * `storeDir` — the stream-to-warehouse handoff shape, where a
-    * streaming pipeline materializes mergeable partials and batch
-    * consumers merge them at read. The stream itself keeps NO state
-    * between batches (per-batch work is a normal batch aggregation),
-    * so executor memory is bounded by the per-batch reduction output
-    * regardless of stream length; durability is the store's.
+  /** Directory-level CSV replay whose sink is a STORE, not a memory
+    * table: foreachBatch hands each micro-batch (one per file, see
+    * [[csvSource]]) with its batch id to `write` — the stream-to-
+    * warehouse handoff shape, where a streaming pipeline materializes
+    * mergeable partials and batch consumers merge them at read. The
+    * stream itself keeps NO state between batches (per-batch work is a
+    * normal batch aggregation inside `write`), so executor memory is
+    * bounded by the per-batch reduction output regardless of stream
+    * length; durability is the store's.
     *
-    * foreachBatch is AT-LEAST-ONCE: a crash between the store append
-    * and the checkpoint commit replays the batch, appending its partial
-    * twice. Consumers that merge with an idempotent operation (KMV/theta
-    * k-smallest union, bitmap OR, max/min) are unaffected — duplicate
-    * partials merge away — which is why the sketch handoff needs no
-    * dedup-by-batch_id read filter; non-idempotent consumers (count
-    * sums) must dedup on the appended batch_id column first.
-    * One micro-batch per staged file, same as [[replayCsvMultiBatch]]. */
-  def replayCsvToParquetStore(spark: SparkSession, sourceDir: String,
-                              schema: org.apache.spark.sql.types.StructType,
-                              name: String, storeDir: String)
-                             (perBatch: DataFrame => DataFrame)
+    * foreachBatch is AT-LEAST-ONCE: a crash between the store write and
+    * the checkpoint commit re-presents the batch with the same batch id.
+    * Where idempotence lives is the choice of `write`:
+    *  - [[appendBatch]]: duplicates the partial; the read side must
+    *    merge idempotently or dedup by batch_id;
+    *  - [[writeBatchPartition]]: replaces the batch's partition;
+    *  - [[publishBatchTxn]]: finds its log version already committed. */
+  def replayCsvForeachBatch(spark: SparkSession, sourceDir: String,
+                            schema: StructType, name: String)
+                           (write: (DataFrame, Long) => Unit)
   : Unit = withReplayPartitions(spark) {
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").csv(sourceDir)
-    val ckpt = ckptDir(name)
-    val q = src.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        perBatch(df)
-          .withColumn("batch_id",
-            org.apache.spark.sql.functions.lit(batchId))
-          .write.mode("append").parquet(storeDir)
-      }
-      .option("checkpointLocation", ckpt).start()
-    try q.processAllAvailable() finally { q.stop(); deleteRecursively(ckpt) }
+    drain(name, csvSource(spark, sourceDir, schema).writeStream
+      .foreachBatch(write))
   }
 
-  /** The EXACTLY-ONCE sibling of [[replayCsvToParquetStore]]: each
-    * micro-batch's partial lands via DYNAMIC PARTITION OVERWRITE into
-    * its own `batch_id=` partition instead of a blind append — a
-    * replayed batch (the at-least-once failure mode: crash between the
-    * store write and the checkpoint commit) REPLACES its previous
+  /** The AT-LEAST-ONCE store write for ONE batch partial: APPEND it to
+    * `storeDir`, tagged with its batch id. A replayed batch appends its
+    * partial twice. Consumers that merge with an idempotent operation
+    * (KMV/theta k-smallest union, bitmap OR, max/min) are unaffected —
+    * duplicate partials merge away — which is why the sketch handoff
+    * needs no dedup-by-batch_id read filter; non-idempotent consumers
+    * (count sums) must dedup on the batch_id column first. */
+  def appendBatch(partial: DataFrame, batchId: Long,
+                  storeDir: String): Unit =
+    partial.withColumn("batch_id", lit(batchId))
+      .write.mode("append").parquet(storeDir)
+
+  /** The EXACTLY-ONCE store write for ONE batch partial: it lands via
+    * DYNAMIC PARTITION OVERWRITE into its own `batch_id=` partition
+    * instead of a blind append — a replayed batch REPLACES its previous
     * partition byte-for-byte rather than duplicating it, because
     * foreachBatch re-presents the same batch with the same batchId.
     * That makes the store write idempotent and the read path a plain
@@ -218,70 +223,32 @@ object StreamGate {
     * deterministic, which per-batch aggregations are. Only the
     * replayed batch's partition is touched: overwrite mode with
     * partitionOverwriteMode=dynamic deletes nothing outside the
-    * partitions present in the written frame. */
-  def replayCsvToPartitionedStore(spark: SparkSession, sourceDir: String,
-                                  schema: org.apache.spark.sql.types.StructType,
-                                  name: String, storeDir: String)
-                                 (perBatch: DataFrame => DataFrame)
-  : Unit = withReplayPartitions(spark) {
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").csv(sourceDir)
-    val ckpt = ckptDir(name)
-    val q = src.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        writeBatchPartition(perBatch(df), batchId, storeDir)
-      }
-      .option("checkpointLocation", ckpt).start()
-    try q.processAllAvailable() finally { q.stop(); deleteRecursively(ckpt) }
-  }
-
-  /** The exactly-once store write for ONE batch partial — factored out
-    * so a test (or a recovering pipeline) can re-present a batch through
-    * the identical write path and observe the store unchanged. */
+    * partitions present in the written frame. Public so a test (or a
+    * recovering pipeline) can re-present a batch through the identical
+    * write path and observe the store unchanged. */
   def writeBatchPartition(partial: DataFrame, batchId: Long,
                           storeDir: String): Unit =
     partial
-      .withColumn("batch_id",
-        org.apache.spark.sql.functions.lit(batchId))
+      .withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id").parquet(storeDir)
 
-  /** The TRANSACTION-LOG sibling of the two handoff stores — the third
-    * place sink idempotence can live: each micro-batch's partial is
-    * written as a data object and then PUBLISHED by a create-exclusive
-    * log commit whose version IS the engine's batchId
-    * (sources/TxnLog.idempotentCommit — the public Delta-streaming
-    * mechanism). A replayed batch (crash between object write and
-    * checkpoint commit) rewrites its object in place and then finds its
-    * version already committed, so the store is unchanged; a batch that
-    * crashed MID-WRITE leaves a half-written object that no commit
-    * names — readers resolve the snapshot from the log and never see
-    * it. That last property is what neither the append store (read-side
-    * dedup) nor the partition store (write-side replace) gives: those
-    * readers trust the directory, this one trusts only published
-    * commits. Bonus: every prefix of the stream is a readable snapshot
-    * (batch-aligned time travel). One micro-batch per staged file. */
-  def replayCsvToTxnStore(spark: SparkSession, sourceDir: String,
-                          schema: org.apache.spark.sql.types.StructType,
-                          name: String, storeRoot: String)
-                         (perBatch: DataFrame => DataFrame)
-  : Unit = withReplayPartitions(spark) {
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").csv(sourceDir)
-    val ckpt = ckptDir(name)
-    val q = src.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        publishBatchTxn(perBatch(df), batchId, storeRoot): Unit
-      }
-      .option("checkpointLocation", ckpt).start()
-    try q.processAllAvailable() finally { q.stop(); deleteRecursively(ckpt) }
-  }
-
-  /** The txn-store publish for ONE batch partial — factored out so a
-    * test (or a recovering pipeline) can re-present a batch through the
-    * identical path and observe the store unchanged. Returns whether
-    * this call was the one that published the version.
+  /** The TRANSACTION-LOG store write for ONE batch partial — the third
+    * place sink idempotence can live: the partial is written as a data
+    * object and then PUBLISHED by a create-exclusive log commit whose
+    * version IS the engine's batchId (sources/TxnLog.idempotentCommit —
+    * the public Delta-streaming mechanism). A replayed batch (crash
+    * between object write and checkpoint commit) rewrites its object in
+    * place and then finds its version already committed, so the store is
+    * unchanged; a batch that crashed MID-WRITE leaves a half-written
+    * object that no commit names — readers resolve the snapshot from the
+    * log and never see it. That last property is what neither the append
+    * store (read-side dedup) nor the partition store (write-side replace)
+    * gives: those readers trust the directory, this one trusts only
+    * published commits. Bonus: every prefix of the stream is a readable
+    * snapshot (batch-aligned time travel). Returns whether this call was
+    * the one that published the version.
     *
     * Schema rides the log: batch 0 DECLARES the sink's schema as the
     * table's `meta` action, and every batch names its write schema —
@@ -322,6 +289,20 @@ object StreamGate {
     finally deleteRecursively(src)
   }
 
+  /** The multi-batch twin of [[stageAndReplay]] and the one stager of
+    * every CSV replay: write `df` as [[StagedFiles]] CSV files to a
+    * scratch directory (a DISTRIBUTED write), hand the directory and
+    * `df.schema` to `replay` — [[replayCsvMultiBatch]] for a memory
+    * sink, [[replayCsvForeachBatch]] for a store — and delete the
+    * directory once `replay` returns. Both replays drain the files
+    * before returning, so nothing reads the directory afterwards. */
+  def stageCsvAndReplay[A](df: DataFrame, name: String)
+                          (replay: (String, StructType) => A): A = {
+    val src = scratchDir("stage", name)
+    df.repartition(StagedFiles).write.mode("overwrite").csv(src)
+    try replay(src, df.schema) finally deleteRecursively(src)
+  }
+
   /** Two-source FILE replay for stream-stream joins: both sides stream
     * from staged parquet directories through the real file source — fully
     * distributed, nothing collected.
@@ -351,7 +332,7 @@ object StreamGate {
     * batch-0's join work still splits — and beats 4/8). */
   def replayJoinFileSource(spark: SparkSession,
                            leftDir: String, rightDir: String,
-                           schema: org.apache.spark.sql.types.StructType,
+                           schema: StructType,
                            name: String,
                            watermarkFlush: Boolean = false)
                           (transform: (DataFrame, DataFrame) => DataFrame)
@@ -362,11 +343,8 @@ object StreamGate {
     try {
       val l = spark.readStream.schema(schema).parquet(leftDir)
       val r = spark.readStream.schema(schema).parquet(rightDir)
-      val ckpt = ckptDir(name)
-      val q = transform(l, r).writeStream
-        .format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally { q.stop(); deleteRecursively(ckpt) }
+      drain(name, transform(l, r).writeStream
+        .format("memory").queryName(name).outputMode("append"))
     } finally spark.conf.set(noDataKey, oldNoData)
     spark.table(name)
   }

@@ -106,4 +106,17 @@ class BenchGuardSpec extends AnyFunSuite {
     // small registry floor
     assert(new BenchGuard(ref, 5.0).rerunBudgetSec == 30.0)
   }
+
+  test("unrecovered outliers are published as stall readings only when " +
+    "the stall detector fired; otherwise as outliers") {
+    val healthy = new BenchGuard(ref, outlierK = 5.0)
+    healthy.queryDone("q1", stillOutlier = true, ok = true)
+    assert(!healthy.hostStall)
+    assert(healthy.publishedLabel == "outlier_published")
+    val stalled = new BenchGuard(ref, outlierK = 5.0)
+    Seq("q1", "q2", "q3").foreach(
+      stalled.queryDone(_, stillOutlier = true, ok = true))
+    assert(stalled.hostStall)
+    assert(stalled.publishedLabel == "stall_published")
+  }
 }

@@ -3,7 +3,6 @@ package graft
 import graft.streaming.StreamGate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The stream-to-store handoff's failure-mode contracts, proven at the
@@ -21,16 +20,6 @@ class HandoffSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  private val schema = StructType(Seq(
-    StructField("k", StringType), StructField("v", LongType)))
-
-  /** stage rows as n csv files (one micro-batch each) */
-  private def stage(rows: Seq[(String, Long)], n: Int): String = {
-    val dir = StreamGate.scratchDir("stage", "handoffspec")
-    rows.toDF("k", "v").repartition(n).write.mode("overwrite").csv(dir)
-    dir
-  }
-
   private def perBatch(df: DataFrame): DataFrame =
     df.groupBy("k").agg(count(lit(1)).as("cnt"), sum("v").as("sv"))
 
@@ -38,6 +27,14 @@ class HandoffSpec extends AnyFunSuite {
     ("c", 5L), ("a", 6L), ("c", 7L), ("b", 8L))
   private val want = rows.groupBy(_._1).map { case (k, vs) =>
     (k, vs.size.toLong, vs.map(_._2).sum) }.toSet
+
+  /** Stage `rows` through the CSV stager (one micro-batch per staged
+    * file) and hand each batch's partial to the store write `write`. */
+  private def replayInto(store: String, name: String)
+                        (write: (DataFrame, Long, String) => Unit): Unit =
+    StreamGate.stageCsvAndReplay(rows.toDF("k", "v"), name)(
+      StreamGate.replayCsvForeachBatch(spark, _, _, name)(
+        (df, id) => write(perBatch(df), id, store)))
 
   private def dedupRead(store: String): Set[(String, Long, Long)] =
     spark.read.parquet(store)
@@ -48,11 +45,9 @@ class HandoffSpec extends AnyFunSuite {
       .toSet
 
   test("append store: duplicated batch append survives the dedup read") {
-    val src = stage(rows, 3)
     val store = StreamGate.scratchDir("stage", "alo-store")
     try {
-      StreamGate.replayCsvToParquetStore(spark, src, schema,
-        "handoff_alo", store)(perBatch)
+      replayInto(store, "handoff_alo")(StreamGate.appendBatch)
       val before = spark.read.parquet(store).count()
       assert(dedupRead(store) == want)
       // inject the failure mode: re-append one batch's partial
@@ -70,17 +65,14 @@ class HandoffSpec extends AnyFunSuite {
       assert(naive != want, "duplicate should corrupt the naive read")
       // the dedup-by-batch_id read still serves exact totals
       assert(dedupRead(store) == want)
-    } finally { StreamGate.deleteRecursively(src)
-      StreamGate.deleteRecursively(store) }
+    } finally StreamGate.deleteRecursively(store)
   }
 
   test("partitioned store: replayed batch replaces its partition; the " +
     "plain read stays exact") {
-    val src = stage(rows, 3)
     val store = StreamGate.scratchDir("stage", "eo-store")
     try {
-      StreamGate.replayCsvToPartitionedStore(spark, src, schema,
-        "handoff_eo", store)(perBatch)
+      replayInto(store, "handoff_eo")(StreamGate.writeBatchPartition)
       def snapshot() = spark.read.parquet(store)
         .collect().map(_.toSeq).toSet
       val before = snapshot()
@@ -99,8 +91,7 @@ class HandoffSpec extends AnyFunSuite {
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .toSet
       assert(got == want)
-    } finally { StreamGate.deleteRecursively(src)
-      StreamGate.deleteRecursively(store) }
+    } finally StreamGate.deleteRecursively(store)
   }
 
   test("partitioned store: a replayed batch with corrected content " +

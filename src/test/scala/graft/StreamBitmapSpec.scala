@@ -2,27 +2,20 @@ package graft
 
 import graft.streaming.{EventStream, StreamGate}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamBitmapSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  private val schema = StructType(Seq(
-    StructField("k", StringType), StructField("v", LongType)))
-
   /** Replay through the multi-batch CSV gate; return (per-key distinct
     * totals from max-version snapshots, all emitted snapshots). */
   private def replay(rows: Seq[(String, Long)], name: String)
   : (Map[String, Long], Seq[(String, Long, Long, Long)]) = {
-    val src = StreamGate.scratchDir("stage", name)
-    rows.toDF("k", "v").repartition(4).write.mode("overwrite").csv(src)
-    val sink =
-      try StreamGate.replayCsvMultiBatch(spark, src, schema, name, "update")(
+    val sink = StreamGate.stageCsvAndReplay(rows.toDF("k", "v"), name)(
+      StreamGate.replayCsvMultiBatch(spark, _, _, name, "update")(
         df => EventStream.bitmapDistinct(
-          df.toDF("_1", "_2").as[(String, Long)]).toDF())
-      finally StreamGate.deleteRecursively(src)
+          df.toDF("_1", "_2").as[(String, Long)]).toDF()))
     val snaps = sink.select("key", "bucket", "distinct", "ver")
       .as[(String, Long, Long, Long)].collect().toSeq
     val totals = sink.groupBy(col("key"), col("bucket"))

@@ -2,29 +2,21 @@ package graft
 
 import graft.streaming.{EventStream, StreamGate}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamFunnelSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  private val schema = StructType(Seq(
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("t_us", LongType)))
-
   /** Replay `rows` through the multi-batch CSV gate and return the final
     * (max-version) snapshot per user as (user, s, v, p, n). */
   private def replay(rows: Seq[(Long, String, Long)], name: String)
   : Map[Long, (Long, Long, Long, Long)] = {
-    val src = StreamGate.scratchDir("stage", name)
-    rows.toDF("user_id", "event_type", "t_us")
-      .repartition(4).write.mode("overwrite").csv(src)
-    val sink =
-      try StreamGate.replayCsvMultiBatch(spark, src, schema, name, "update")(
+    val sink = StreamGate.stageCsvAndReplay(
+      rows.toDF("user_id", "event_type", "t_us"), name)(
+      StreamGate.replayCsvMultiBatch(spark, _, _, name, "update")(
         df => EventStream.firstTouchFunnel(
-          df.toDF("_1", "_2", "_3").as[(Long, String, Long)]).toDF())
-      finally StreamGate.deleteRecursively(src)
+          df.toDF("_1", "_2", "_3").as[(Long, String, Long)]).toDF()))
     sink.groupBy(col("userId"))
       .agg(max(struct(col("ver"), col("s"), col("v"), col("p"), col("n")))
         .as("m"))

@@ -2,7 +2,6 @@ package graft
 
 import graft.streaming.{EventStream, StreamGate}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamHeavyHitterSpec extends AnyFunSuite {
@@ -21,14 +20,10 @@ class StreamHeavyHitterSpec extends AnyFunSuite {
     val data = zipfKeys(keys = 300, scale = 4000) // ~30k rows, 300 keys
     val shards = 4
     val cap = 24 // << 300/shards: the decrement path engages
-    val src = StreamGate.scratchDir("stage", "hh-spec")
     // several csv files -> several micro-batches -> state carries over
-    data.toDF("k").repartition(5).write.mode("overwrite").csv(src)
-    val sink =
-      try StreamGate.replayCsvMultiBatch(spark, src,
-        StructType(Seq(StructField("k", LongType))), "hh_spec", "update")(
-        df => EventStream.heavyHitterCandidates(df, "k", shards, cap))
-      finally StreamGate.deleteRecursively(src)
+    val sink = StreamGate.stageCsvAndReplay(data.toDF("k"), "hh_spec")(
+      StreamGate.replayCsvMultiBatch(spark, _, _, "hh_spec", "update")(
+        df => EventStream.heavyHitterCandidates(df, "k", shards, cap)))
     val rows = sink.select("shard", "seen", "keys")
       .as[(Int, Long, Seq[Long])].collect()
     // at least one shard emitted more than once (true multi-batch replay)
@@ -58,13 +53,9 @@ class StreamHeavyHitterSpec extends AnyFunSuite {
     "answer end to end") {
     val data = zipfKeys(keys = 200, scale = 3000)
     val k = 40L
-    val src = StreamGate.scratchDir("stage", "hh-e2e")
-    data.toDF("k").repartition(4).write.mode("overwrite").csv(src)
-    val sink =
-      try StreamGate.replayCsvMultiBatch(spark, src,
-        StructType(Seq(StructField("k", LongType))), "hh_e2e", "update")(
-        df => EventStream.heavyHitterCandidates(df, "k", 4, 64))
-      finally StreamGate.deleteRecursively(src)
+    val sink = StreamGate.stageCsvAndReplay(data.toDF("k"), "hh_e2e")(
+      StreamGate.replayCsvMultiBatch(spark, _, _, "hh_e2e", "update")(
+        df => EventStream.heavyHitterCandidates(df, "k", 4, 64)))
     val fin = sink.select("shard", "seen", "keys")
       .as[(Int, Long, Seq[Long])].collect()
       .groupBy(_._1).map { case (_, rs) => rs.maxBy(_._2) }

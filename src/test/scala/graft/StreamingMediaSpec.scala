@@ -173,21 +173,13 @@ class StreamingMediaSpec extends AnyFunSuite {
     // stream: 3 files -> 3 micro-batches through the CSV gate
     val staged = df.select(col("vec_id"),
       concat_ws(";", col("embedding").cast("array<string>")).as("emb"))
-    val src = graft.streaming.StreamGate.scratchDir("stage", "momspec")
-    staged.repartition(3).write.mode("overwrite").csv(src)
-    val sink =
-      try graft.streaming.StreamGate.replayCsvMultiBatch(spark, src,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("emb",
-            org.apache.spark.sql.types.StringType))),
-        "gate_momspec", "update")(d =>
+    val sink = graft.streaming.StreamGate.stageCsvAndReplay(staged,
+      "gate_momspec")(graft.streaming.StreamGate.replayCsvMultiBatch(spark,
+        _, _, "gate_momspec", "update")(d =>
         graft.streaming.EventStream.momentSumsStream(
           d.select(col("vec_id"),
             split(col("emb"), ";").cast("array<float>").as("v"))
-            .as[(Long, Seq[Float])], shards = 4).toDF())
-      finally graft.streaming.StreamGate.deleteRecursively(src)
+            .as[(Long, Seq[Float])], shards = 4).toDF()))
     // multiple versions per shard prove multi-batch state actually ran
     val maxVer = sink.agg(max("ver")).as[Long].head()
     assert(maxVer >= 2, s"replay collapsed to one micro-batch ($maxVer)")

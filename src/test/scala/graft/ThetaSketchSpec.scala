@@ -194,21 +194,15 @@ class ThetaSketchSpec extends AnyFunSuite {
         (col("user_id") * 100000L + unix_date(to_date(col("ts"))))
           .cast("long").cast("string").cast("binary")), 1, 15), 16, 10)
         .cast("long").as("h"))
-    val src = graft.streaming.StreamGate.scratchDir("stage", "skhotest")
     val store = graft.streaming.StreamGate
       .scratchDir("stage", "skhoteststore")
-    ev.repartition(3).write.mode("overwrite").csv(src)
     try {
-      graft.streaming.StreamGate.replayCsvToParquetStore(spark, src,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("h",
-            org.apache.spark.sql.types.LongType))),
-        "gate_skhotest", store)(df =>
-        df.groupBy("event_type")
-          .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
-            .as("ks")))
+      graft.streaming.StreamGate.stageCsvAndReplay(ev, "gate_skhotest")(
+        graft.streaming.StreamGate.replayCsvForeachBatch(spark, _, _,
+          "gate_skhotest")((df, id) =>
+          graft.streaming.StreamGate.appendBatch(df.groupBy("event_type")
+            .agg(graft.functions.GraftFunctions.kmvSketch(col("h"), k)
+              .as("ks")), id, store)))
       val parts = spark.read.parquet(store)
       // one file per trigger → one appended partial set per micro-batch
       assert(parts.select("batch_id").distinct().count() >= 2,
@@ -243,10 +237,7 @@ class ThetaSketchSpec extends AnyFunSuite {
       assert(doubled == direct,
         "a replayed (duplicated) partial changed the served sketch — " +
           "merge lost idempotence")
-    } finally {
-      graft.streaming.StreamGate.deleteRecursively(src)
-      graft.streaming.StreamGate.deleteRecursively(store)
-    }
+    } finally graft.streaming.StreamGate.deleteRecursively(store)
   }
 
   test("rolling-window sketch: merged per-day partials equal the " +
