@@ -9,8 +9,9 @@ import org.apache.spark.sql.SparkSession
   * sweep state).
   *
   * Per-query rule: a reading > K× its committed reference AND > 1 s over
-  * it is an outlier — re-run (at most twice) and keep the min. Breakers,
-  * both disclosed in the JSON:
+  * it is an outlier — re-run (at most twice) and keep the min. K is 3 for
+  * a reference of 1 s or more and 5 below that, where ratios jitter more.
+  * Breakers, both disclosed in the JSON:
   *  - global re-run budget: total extra seconds ≤ 10% of the committed
   *    reference total (floor 30 s) — scattered transients get weathered,
   *    the sweep never doubles;
@@ -23,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   *    RESETS the streak (feeding the PRE-rerun flag declared stalls on
   *    recovered transients and silently disarmed the guard for the rest
   *    of the sweep). Un-guarded (new this round) queries are blind. */
-final class BenchGuard(refTimes: Map[String, Double], outlierK: Double) {
+final class BenchGuard(refTimes: Map[String, Double]) {
   val rerunBudgetSec: Double = math.max(30.0, 0.10 * refTimes.values.sum)
   var rerunSpentSec: Double = 0.0
   private var consecutiveStuck = 0
@@ -31,7 +32,7 @@ final class BenchGuard(refTimes: Map[String, Double], outlierK: Double) {
 
   def isOutlier(name: String, best: Double): Boolean =
     best > 0 && refTimes.get(name).exists(r =>
-      best > outlierK * r && best - r > 1.0)
+      best > BenchGuard.outlierK(r) * r && best - r > 1.0)
 
   /** May the sweep spend another re-run on this query right now? */
   def mayRerun(name: String, best: Double, reranSoFar: Int): Boolean =
@@ -56,6 +57,15 @@ final class BenchGuard(refTimes: Map[String, Double], outlierK: Double) {
     * real slowdown and must not read as a stall. */
   def publishedLabel: String =
     if (hostStall) "stall_published" else "outlier_published"
+}
+
+object BenchGuard {
+  /** The outlier ratio for a committed reference of `ref` seconds. */
+  def outlierK(ref: Double): Double = if (ref >= 1.0) 3.0 else 5.0
+
+  /** Both tiers, as the artifact's `outlier_k` field reports them. */
+  val outlierKJson: String =
+    s"""{"ref_ge_1s":${outlierK(1.0)},"ref_lt_1s":${outlierK(0.0)}}"""
 }
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR,
@@ -157,14 +167,12 @@ object Bench {
     // min-of-2 because the stall spanned both repeats). Against the last
     // COMMITTED reference at the SAME sf dir (BENCH_FULL.json by
     // default, overridable via SPARK_GRAFT_BENCH_REF), any query reading
-    // > K× its committed time (and > 1 s over it — tiny queries jitter
-    // in ratios) is automatically re-run in-session and the min kept;
+    // > K× its committed time (K = 3 from a 1 s reference, 5 below it)
+    // and > 1 s over it is automatically re-run in-session, min kept;
     // the JSON flags every such query in "reruns" so a reader can
     // distinguish a measured regression from a weathered transient. A
     // missing/mismatched-sf reference disables the guard (rung sweeps at
     // ×10/×30 pass their own reference via the env).
-    val outlierK =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUTLIER_K", "5.0").toDouble
     val refPath = sys.env.get("SPARK_GRAFT_BENCH_REF").orElse {
       val p = java.nio.file.Paths.get("BENCH_FULL.json")
       if (java.nio.file.Files.exists(p)) Some(p.toString) else None
@@ -184,7 +192,7 @@ object Bench {
         }
       } catch { case _: Throwable => None }
     }.getOrElse(Map.empty)
-    val guard = new BenchGuard(refTimes, outlierK)
+    val guard = new BenchGuard(refTimes)
     // SPARK_GRAFT_BENCH_EXPLAIN=1 dumps each selected query's formatted
     // physical plan to stderr before timing — used by the scale-ladder
     // adjudication protocol to check e.g. broadcast-vs-shuffle flips
@@ -348,7 +356,8 @@ object Bench {
             ",\"raw\":" + st.rawBeforeGuard + "}")
           .mkString(""","reruns":{""", ",", "}")
       val refField = refTimes.headOption.map(_ =>
-        s""","outlier_ref":"${refPath.get}","outlier_k":$outlierK""" +
+        s""","outlier_ref":"${refPath.get}"""" +
+          s""","outlier_k":${BenchGuard.outlierKJson}""" +
           s""","rerun_budget_sec":${guard.rerunBudgetSec}""")
         .getOrElse("")
       val stallField = if (guard.hostStall) ""","host_stall":true""" else ""

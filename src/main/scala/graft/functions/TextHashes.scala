@@ -16,18 +16,6 @@ object TextHashes {
 
   private val md = ThreadLocal.withInitial[MessageDigest](() =>
     MessageDigest.getInstance("MD5"))
-  private val HEX = "0123456789abcdef".toCharArray
-
-  private def toHex(bytes: Array[Byte]): String = {
-    val out = new Array[Char](bytes.length * 2)
-    var i = 0
-    while (i < bytes.length) {
-      out(2 * i) = HEX((bytes(i) >> 4) & 0xf)
-      out(2 * i + 1) = HEX(bytes(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
 
   /** Exactly Catalyst's `lower()` (`UTF8String.toLowerCase`): locale-
     * independent ASCII mapping on all-ASCII strings, JVM-default-locale

@@ -113,7 +113,6 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     // transition count conservation: n_transitions = n_events - n_users
     // (every user's sequence contributes len-1 transitions)
     val total = m.agg(sum("cnt")).head().getLong(0)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sf/events.parquet")
     val nEvents = raw.count()
     val nUsers = raw.select("user_id").distinct().count()
@@ -122,7 +121,6 @@ class AnalyticsOpsSpec extends AnyFunSuite {
 
   test("rel_mutual_info: cells reconcile and terms are well-formed") {
     val mi = run("rel_mutual_info")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val nEvents = spark.read.parquet(s"$sf/events.parquet").count()
     assert(mi.agg(sum("cnt")).head().getLong(0) == nEvents)
     // chi² terms are non-negative, expected counts positive
@@ -238,7 +236,6 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     val got = run("rel_rolling_median").collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id")) ->
         r.getAs[Double]("rmed")).toMap
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val rows = spark.read.parquet(s"$sf/events.parquet")
       .selectExpr("user_id", "event_id",
         "unix_micros(cast(ts as timestamp)) AS tsl", "value").collect()
@@ -296,7 +293,6 @@ class AnalyticsOpsSpec extends AnyFunSuite {
       .map(r => (r.getAs[String]("hour"), r.getAs[Long]("cnt"),
         r.getAs[Double]("cusum"))).sortBy(_._1)
     assert(rows.nonEmpty)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val nEvents = spark.read.parquet(s"$sf/events.parquet").count()
     assert(rows.map(_._2).sum == nEvents, "hour mass must conserve")
     // S_n = total - n*(total/n) telescopes to 0 (up to the round-6)
@@ -377,7 +373,6 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     }
     // the last point of each curve times cohort size sums to the total
     // purchase revenue of signed-up users
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet(s"$sf/events.parquet")
     val su = ev.where(col("event_type") === "signup")
       .select("user_id").distinct()

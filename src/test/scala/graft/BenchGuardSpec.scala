@@ -20,20 +20,29 @@ class BenchGuardSpec extends AnyFunSuite {
 
   test("per-query rule: outlier needs BOTH the K-ratio and the 1 s " +
     "absolute floor; un-guarded queries never trip") {
-    val g = new BenchGuard(ref, outlierK = 5.0)
-    assert(!g.isOutlier("q1", 4.9))            // under K×
-    assert(g.isOutlier("q1", 5.1))             // over both
+    val g = new BenchGuard(ref)
+    assert(!g.isOutlier("q1", 2.9))            // under K× (K = 3 from 1 s)
+    assert(g.isOutlier("q1", 3.1))             // over both
     assert(!g.isOutlier("q1", -1.0))           // failed run is not an outlier
     assert(!g.isOutlier("brand_new_query", 99.0)) // no reference
-    val tiny = new BenchGuard(Map("t" -> 0.1), outlierK = 5.0)
+    val tiny = new BenchGuard(Map("t" -> 0.1))
     assert(!tiny.isOutlier("t", 0.9)) // 9x but under the 1 s floor: jitter
     assert(tiny.isOutlier("t", 1.2))
+  }
+
+  test("outlier ratio: K = 3 for a reference of 1 s or more, K = 5 " +
+    "below it") {
+    val g = new BenchGuard(Map("slow" -> 2.5, "fast" -> 0.5))
+    assert(g.isOutlier("slow", 8.0))  // 3.2x a 2.5 s reference
+    assert(!g.isOutlier("fast", 2.0)) // 4x a 0.5 s reference, under K = 5
+    assert(g.isOutlier("fast", 2.6))  // 5.2x and 2.1 s over
+    assert(BenchGuard.outlierK(1.0) == 3.0 && BenchGuard.outlierK(0.99) == 5.0)
   }
 
   test("scattered transients: re-runs allowed (max 2 per query), and a " +
     "RECOVERED re-run resets the streak — transients never declare a " +
     "stall no matter how many of them land back-to-back") {
-    val g = new BenchGuard(ref, outlierK = 5.0)
+    val g = new BenchGuard(ref)
     assert(g.mayRerun("q1", 10.0, reranSoFar = 0))
     assert(g.mayRerun("q1", 10.0, reranSoFar = 1))
     assert(!g.mayRerun("q1", 10.0, reranSoFar = 2)) // per-query cap
@@ -51,7 +60,7 @@ class BenchGuardSpec extends AnyFunSuite {
   test("host stall: 3 consecutive queries STILL outliers after their " +
     "re-runs disable re-runs for the rest of the sweep — bounded extra " +
     "work, artifact still written") {
-    val g = new BenchGuard(ref, outlierK = 5.0)
+    val g = new BenchGuard(ref)
     Seq("q1", "q2", "q3").foreach { q =>
       assert(g.mayRerun(q, 20.0, 0))
       g.chargeRerun(1.0)
@@ -69,13 +78,13 @@ class BenchGuardSpec extends AnyFunSuite {
   test("a normal guarded reading between two stuck queries breaks the " +
     "streak; un-guarded (new) queries are blind — they neither extend " +
     "nor break it") {
-    val g = new BenchGuard(ref, outlierK = 5.0)
+    val g = new BenchGuard(ref)
     g.queryDone("q1", stillOutlier = true, ok = true)
     g.queryDone("q2", stillOutlier = true, ok = true)
     g.queryDone("q3", stillOutlier = false, ok = true) // normal: reset
     g.queryDone("q4", stillOutlier = true, ok = true)
     assert(!g.hostStall) // never 3 consecutive
-    val h = new BenchGuard(ref, outlierK = 5.0)
+    val h = new BenchGuard(ref)
     h.queryDone("q1", stillOutlier = true, ok = true)
     h.queryDone("new_a", stillOutlier = false, ok = true) // no ref: blind
     h.queryDone("q2", stillOutlier = true, ok = true)
@@ -89,7 +98,7 @@ class BenchGuardSpec extends AnyFunSuite {
     "cannot double the sweep") {
     // big registry: 1000 s committed -> 100 s budget
     val big = (1 to 100).map(i => s"q$i" -> 10.0).toMap
-    val g = new BenchGuard(big, outlierK = 5.0)
+    val g = new BenchGuard(big)
     assert(g.rerunBudgetSec == 100.0)
     // every transient recovers (so stall never arms) while the budget
     // drains
@@ -104,16 +113,16 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(!g.mayRerun("q7", 60.0, 0)) // budget spent: single-pass now
     assert(g.rerunSpentSec <= g.rerunBudgetSec + 25.0) // one overshoot max
     // small registry floor
-    assert(new BenchGuard(ref, 5.0).rerunBudgetSec == 30.0)
+    assert(new BenchGuard(ref).rerunBudgetSec == 30.0)
   }
 
   test("unrecovered outliers are published as stall readings only when " +
     "the stall detector fired; otherwise as outliers") {
-    val healthy = new BenchGuard(ref, outlierK = 5.0)
+    val healthy = new BenchGuard(ref)
     healthy.queryDone("q1", stillOutlier = true, ok = true)
     assert(!healthy.hostStall)
     assert(healthy.publishedLabel == "outlier_published")
-    val stalled = new BenchGuard(ref, outlierK = 5.0)
+    val stalled = new BenchGuard(ref)
     Seq("q1", "q2", "q3").foreach(
       stalled.queryDone(_, stillOutlier = true, ok = true))
     assert(stalled.hostStall)

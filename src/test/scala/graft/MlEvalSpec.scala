@@ -176,8 +176,9 @@ class MlEvalSpec extends AnyFunSuite {
     }
     val th = Seq(0.36787944117144233, 0.7357588823428847, 0.9196986029286058,
       0.9810118431238462, 0.9963401531726563, 0.9994058151824183)
-    val mix = SparkEntry.bootMix.map(m => m._1.toInt -> (m._2, m._3)).toMap
-    val P = SparkEntry.BootP
+    val mix = graft.registry.RelStatQueries.bootMix
+      .map(m => m._1.toInt -> (m._2, m._3)).toMap
+    val P = graft.registry.RelStatQueries.BootP
     val o = spark.read.parquet(s"$sf/orders.parquet")
       .select(col("o_orderkey"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))

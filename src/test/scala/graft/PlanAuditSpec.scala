@@ -542,17 +542,25 @@ class PlanAuditSpec extends AnyFunSuite {
     // STATISTICS are tiny, which a casual refactor (e.g. joining a
     // non-aggregated small frame) can silently break into a
     // CartesianProduct. The hint makes the intent load-bearing.
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val calls = "crossJoin\\(".r.findAllMatchIn(src).toSeq
+    import java.nio.file.{Files, Path, Paths}
+    val registry = Paths.get("src/main/scala/graft/registry")
+    val files = Paths.get("src/main/scala/graft/SparkEntry.scala") +:
+      Files.list(registry).toArray.toSeq.map(_.asInstanceOf[Path])
+        .filter(_.toString.endsWith(".scala")).sortBy(_.toString)
+    assert(files.size > 1, s"no registry sources under $registry")
+    val calls = files.flatMap { f =>
+      val src = new String(Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.UTF_8)
+      "crossJoin\\(".r.findAllMatchIn(src).map(m => (f, src, m)).toSeq
+    }
     assert(calls.nonEmpty)
-    val unhinted = calls.filterNot { m =>
+    val unhinted = calls.filterNot { case (_, src, m) =>
       src.regionMatches(m.end, "broadcast(", 0, "broadcast(".length)
     }
     assert(unhinted.isEmpty,
       s"${unhinted.size} crossJoin call(s) without an immediate " +
-        s"broadcast(...) hint at char offsets ${unhinted.map(_.start)}")
+        "broadcast(...) hint at " +
+        unhinted.map { case (f, _, m) => s"${f.getFileName}@${m.start}" })
   }
 
   test("broadcast census: every explicit broadcast() hint sources a " +

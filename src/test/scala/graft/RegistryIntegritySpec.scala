@@ -2,36 +2,26 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The registry is a Map literal, so a DUPLICATE key silently shadows
-  * the earlier entry — the earlier query (and its oracle) vanish from
-  * the surface with no compile error and no test failure anywhere else
-  * (this nearly shipped once: a second "text_feature_hashing" replaced
-  * the round-13 bucket-profile query). This spec counts the keys in the
-  * SOURCE and requires the constructed Maps to be the same size, and
-  * pins that every query carries an oracle. */
+/** Structural checks on the registry: a repeated name fails the
+  * registry's construction (naming the name), the registry holds every
+  * family's queries, and the census lists and schemas stay in step with
+  * it. Each query carries its oracle in the same `Query` value, so a
+  * query without an oracle cannot be written. */
 class RegistryIntegritySpec extends AnyFunSuite {
 
-  private lazy val source = {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    src
+  test("a repeated query name fails registry construction and is named") {
+    val q = graft.registry.Query("dup_name",
+      (s, _) => s.range(1).toDF(), "SELECT 1")
+    val other = q.copy(name = "other_name")
+    val e = intercept[IllegalArgumentException](
+      new graft.registry.Registry(Seq(q, other, q.copy(oracle = "SELECT 2"))))
+    assert(e.getMessage.contains("dup_name"), e.getMessage)
+    assert(!e.getMessage.contains("other_name"), e.getMessage)
   }
 
-  test("no duplicate query key shadows an earlier registry entry") {
-    val names = """"([a-z0-9_]+)" -> \(\(s, dir\)""".r
-      .findAllMatchIn(source).map(_.group(1)).toSeq
-    val dupes = names.groupBy(identity).filter(_._2.size > 1).keys
-    assert(dupes.isEmpty, s"duplicate query keys in source: $dupes")
-    assert(SparkEntry.queries.size == names.size,
-      "constructed queries map lost entries vs source")
-  }
-
-  test("every registered query has a DuckDB oracle and vice versa") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o).isEmpty, s"queries without oracle: ${q -- o}")
-    assert((o -- q).isEmpty, s"oracles without query: ${o -- q}")
+  test("the registry holds all 397 queries") {
+    // a family left out of Registry.default fails here
+    assert(SparkEntry.queries.size == 397)
   }
 
   test("plan-census exclusion list names only real registry queries") {

@@ -125,4 +125,22 @@ class SessionSurfaceSpec extends AnyFunSuite {
     assert(plan(off).contains("Window") && !plan(off).contains("GlobalRank"))
     assert(plan(spark).contains("GlobalRank"))
   }
+
+  test("building an events-backed registry query leaves the session's " +
+    "conf untouched") {
+    val s = spark.newSession()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    // a one-table sf dir: events with ts as TIMESTAMP_NTZ, as the
+    // fixtures' naive TIMESTAMP(MICROS) column reads
+    val dir = TestSpark.scratchDir("surface_sf").toString
+    s.range(3).selectExpr("id AS event_id", "id AS user_id",
+        "'click' AS event_type", "1.0D AS value",
+        "TIMESTAMP_NTZ '2024-01-01 00:00:00' AS ts",
+        """'{"k": 1}' AS props""")
+      .write.parquet(s"$dir/events.parquet")
+    val df = SparkEntry.queries("rel_json_extract")(s, dir)
+    assert(df.collect().toSeq.map(r => (r.getLong(1), r.getLong(2))) ==
+      Seq((3L, 3L)))
+    assert(s.conf.get(key) == "false")
+  }
 }

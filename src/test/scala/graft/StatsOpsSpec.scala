@@ -23,7 +23,6 @@ class StatsOpsSpec extends AnyFunSuite {
     // brute force on the collected sf0.001 sample: U1 counts (a, b)
     // pairs with a > b, ties at half weight — the DEFINITION the
     // rank-sum shortcut must reproduce
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet(s"$sf/events.parquet")
       .where(col("event_type").isin("purchase", "click"))
       .select(col("event_type"), col("value")).collect()
@@ -46,7 +45,6 @@ class StatsOpsSpec extends AnyFunSuite {
     assert(acf.keySet == (1L to 24L).toSet)
     acf.values.foreach(v => assert(v >= -1.0 - 1e-9 && v <= 1.0 + 1e-9))
     // independent naive recompute of lag-1 in plain doubles
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ts = spark.read.parquet(s"$sf/events.parquet").select("ts")
     val hours = (ts.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -152,7 +150,6 @@ class StatsOpsSpec extends AnyFunSuite {
   test("rel_hll_intersect_bounded: contract holds, exact side correct") {
     val row = run("rel_hll_intersect_bounded").head()
     assert(row.getAs[Long]("within_bound") == 1L)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet(s"$sf/events.parquet")
     val a = ev.where(col("event_type") === "purchase")
       .select("user_id").distinct()
@@ -180,7 +177,6 @@ class StatsOpsSpec extends AnyFunSuite {
     val row = run("rel_ks_test").head()
     val n1 = row.getAs[Long]("n1")
     val n2 = row.getAs[Long]("n2")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet(s"$sf/events.parquet")
       .where(col("event_type").isin("purchase", "click"))
       .select(col("event_type"), col("value")).collect()
@@ -208,7 +204,6 @@ class StatsOpsSpec extends AnyFunSuite {
     assert(rows.nonEmpty)
     // the first risk set is every user with a signup; every row's risk
     // set is total minus everyone who died/censored strictly earlier
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val users = spark.read.parquet(s"$sf/events.parquet")
       .where(col("event_type") === "signup")
       .select("user_id").distinct().count()
@@ -260,7 +255,6 @@ class StatsOpsSpec extends AnyFunSuite {
       "sweep and the means recompute") {
     val row = run("rel_changepoint_hourly").head()
     // brute force over the hourly series
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val h = run("rel_cusum_hourly").collect()
       .map(r => (r.getAs[String]("hour"), r.getAs[Long]("cnt")))
       .sortBy(_._1)
@@ -313,7 +307,6 @@ class StatsOpsSpec extends AnyFunSuite {
 
   test("rel_welch_ttest: t and df match a brute-force two-sample pass") {
     val row = run("rel_welch_ttest").head()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet(s"$sf/events.parquet")
       .where(col("event_type").isin("purchase", "click"))
       .select(col("event_type"), col("value")).collect()

@@ -25,7 +25,6 @@ class StreamHllDistinctSpec extends AnyFunSuite {
     // the register table the stream maintains is the BATCH histogram of
     // (type, reg) -> max(rho) — recompute it batch-side and pin the
     // bound; max() associativity is what makes replay == batch
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val regs = spark.read.parquet(s"$sf/events.parquet")
       .select(col("event_type"), xxhash64(col("user_id")).as("h"))
       .select(col("event_type"), col("h").bitwiseAND(1023).as("reg"),

@@ -20,7 +20,6 @@ class StreamQuantileSketchSpec extends AnyFunSuite {
         (r.getAs[Long]("n"), r.getAs[Double]("p50_est"),
           r.getAs[Double]("p95_est"))).toMap
     assert(rows.nonEmpty)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet(s"$sf/events.parquet")
       .select(col("event_type"), col("value")).collect()
       .map(r => (r.getString(0), r.getDouble(1)))

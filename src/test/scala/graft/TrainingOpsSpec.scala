@@ -108,7 +108,6 @@ class TrainingOpsSpec extends AnyFunSuite {
   test("rel_cumulative_users ends at the true distinct-user count") {
     val cum = run("rel_cumulative_users")
     val last = cum.agg(max(col("cum_users"))).head().getLong(0)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val truth = spark.read.parquet(s"$sf/events.parquet")
       .select("user_id").distinct().count()
     assert(last == truth)
