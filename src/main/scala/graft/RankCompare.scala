@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Dev measurement utility: single-partition `row_number()` window vs the
   * planned GlobalRank operator on the same total order, timed to the noop
   * sink (full evaluation, nothing collected). Quantifies what
-  * [[graft.plans.GlobalRankRule]] buys when it rewrites the former into
+  * [[graft.plans.GlobalWindowRule]] buys when it rewrites the former into
   * the latter. The window side runs on a child session that excludes
-  * every graft rewrite rule through `spark.sql.optimizer.excludedRules`.
+  * both graft rewrite rules through `spark.sql.optimizer.excludedRules`.
   * Usage: runMain graft.RankCompare [sfDir] */
 object RankCompare {
   def main(args: Array[String]): Unit = {
@@ -23,12 +23,9 @@ object RankCompare {
     spark.sparkContext.setLogLevel("WARN")
     // same extensions, every rewrite rule off: plans Spark's own WindowExec
     val native = spark.newSession()
-    native.conf.set("spark.sql.optimizer.excludedRules", {
-      import graft.plans._
-      Seq(GlobalRankRule, GlobalScanRule, GlobalShiftRule, GlobalEdgeRule,
-        GlobalFrameRule, GlobalWindowRule, GlobalRangeRule,
-        GlobalHalfRangeRule).map(_.ruleName).mkString(",")
-    })
+    native.conf.set("spark.sql.optimizer.excludedRules",
+      Seq(graft.plans.GlobalWindowRule, graft.plans.GlobalHalfRangeRule)
+        .map(_.ruleName).mkString(","))
     def lineitem(ss: SparkSession) = ss.read.parquet(s"$sfDir/lineitem.parquet")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
     val li = lineitem(spark)

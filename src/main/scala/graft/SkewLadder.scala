@@ -56,7 +56,6 @@ object SkewLadder {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     val OFF = 100000000L
 

@@ -812,8 +812,10 @@ object GraftFunctions {
   * GraftExtensions.inject)` or `spark.sql.extensions=graft.functions.
   * GraftExtensions`. This is the one way graft functions, optimizer rules
   * and planner strategies enter a session; nothing mutates a built
-  * session. To switch a rewrite off, exclude its rule by class name in
-  * `spark.sql.optimizer.excludedRules` on that session. */
+  * session. To switch the window rewrites off, set
+  * `spark.sql.optimizer.excludedRules` on that session to the
+  * `ruleName`s of `graft.plans.GlobalWindowRule` and
+  * `graft.plans.GlobalHalfRangeRule`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
     GraftExtensions.inject(ext)
@@ -825,44 +827,12 @@ object GraftExtensions {
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name), b))
     }
-    // global-rank rewrite: un-partitioned row_number windows plan as the
-    // range-partitioned GlobalRank operator instead of a single-partition
-    // WindowExec (rule + the strategy that plans the logical node)
-    ext.injectOptimizerRule(_ => graft.plans.GlobalRankRule)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
-    // running-sum rewrite: sum() OVER (ORDER BY ... ROWS UNBOUNDED
-    // PRECEDING) plans as the distributed GlobalScan prefix sum
-    ext.injectOptimizerRule(_ => graft.plans.GlobalScanRule)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalScanStrategy)
-    // offset rewrite: un-partitioned lag/lead plans as the boundary-row
-    // GlobalShift operator instead of a single-partition WindowExec
-    ext.injectOptimizerRule(_ => graft.plans.GlobalShiftRule)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalShiftStrategy)
-    // edge-value rewrite: un-partitioned first_value/last_value/nth_value
-    // plans as the spliced-threshold GlobalEdge operator
-    ext.injectOptimizerRule(_ => graft.plans.GlobalEdgeRule)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalEdgeStrategy)
-    // sliding-frame rewrite: un-partitioned ROWS k PRECEDING..CURRENT ROW
-    // aggregates (optionally mixed with prefix aggregates) plan as the
-    // boundary-seeded GlobalFrame operator, stacked on GlobalScan
-    ext.injectOptimizerRule(_ => graft.plans.GlobalFrameRule)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalFrameStrategy)
-    // mixed-family rewrite: ONE un-partitioned window projecting rank /
-    // tie-ranks / lag / edge values / prefix + sliding aggregates
-    // together composes the family operators onto one shared sort
+    // un-partitioned windows plan as the distributed Global* operators
+    // instead of a single-partition WindowExec; half-bounded value-range
+    // sums/counts first decompose into members the window rule fuses
     ext.injectOptimizerRule(_ => graft.plans.GlobalWindowRule)
-    // value-range rewrite: un-partitioned RANGE x PRECEDING..CURRENT ROW
-    // aggregates over a numeric ORDER BY plan as the key-spliced
-    // GlobalRange operator
-    ext.injectOptimizerRule(_ => graft.plans.GlobalRangeRule)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalRangeStrategy)
-    // half-bounded value-range rewrite: sum/count OVER (RANGE UNBOUNDED
-    // PRECEDING .. y PRECEDING/FOLLOWING) decomposes into the running
-    // prefix minus/plus the bounded gap frame (null-faithful via count
-    // guards); the family rules then fuse the members onto one sort
     ext.injectOptimizerRule(_ => graft.plans.GlobalHalfRangeRule)
-    // linear recurrence: no SQL shape rewrites to it, but the strategy
-    // plans the node graft.plans.Recurrence.scan builds
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalRecurStrategy)
+    // plans every Global* node, rewritten or built by an entry point
+    ext.injectPlannerStrategy(_ => graft.plans.GlobalStrategy)
   }
 }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first shape: the distinct aggregation is an ordinary two-phase
   * hash aggregate; the sweep is an un-partitioned running max + lag that
-  * the session's GlobalScanRule/GlobalShiftRule plan as the two-pass
+  * the session's GlobalWindowRule plans as the two-pass
   * boundary-partials operators stacked on ONE range sort — no
   * single-partition WindowExec, no dominance join (pinned in
   * PlanAuditSpec). O(n log n) total, driver state O(partitions).

@@ -3,9 +3,8 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, GenericInternalRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.classic.Strategy
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
 
 /** GLOBAL EDGE-VALUE WINDOW — `first_value` / `last_value` / `nth_value`
   * over a total order, with NO single-partition stage: the fourth member
@@ -47,7 +46,7 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   *   - `nth_value(x, n)` = the n-th qualifying row's value once the frame
   *     contains it, NULL before — At(n, ·);
   *   - `last_value(x)` over ROWS = the current row's value — rewritten by
-  *     [[GlobalEdgeRule]] to a plain Project, no operator at all;
+  *     [[GlobalWindowRule]] to a plain Project, no operator at all;
   *   - `last_value(x)` over the default RANGE frame = the current PEER
   *     GROUP's last value — [[EdgeKind.LastValue]];
   *   - `last_value(x IGNORE NULLS)` = the latest non-null value at or
@@ -95,15 +94,11 @@ object GlobalEdgePlan {
 
 case class GlobalEdgePlan(order: Seq[SortOrder], kind: EdgeKind,
     range: Boolean, input: Attribute, child: LogicalPlan,
-    // constructor field (not a body val) so copy()/transform preserve the
-    // exprId — a body val would mint a fresh attribute on every tree copy
     edgeAttr: AttributeReference)
-  extends UnaryNode {
-  override def output: Seq[Attribute] = child.output :+ edgeAttr
-  override def producedAttributes
-  : org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(edgeAttr :: Nil)
-  override def maxRows: Option[Long] = child.maxRows
+  extends GlobalNode {
+  override def added: Seq[Attribute] = edgeAttr :: Nil
+  override def exec(planned: SparkPlan): SparkPlan =
+    GlobalEdgeExec(order, kind, range, input, edgeAttr, planned)
   override protected def withNewChildInternal(newChild: LogicalPlan)
   : GlobalEdgePlan = copy(child = newChild)
 }
@@ -111,21 +106,8 @@ case class GlobalEdgePlan(order: Seq[SortOrder], kind: EdgeKind,
 case class GlobalEdgeExec(order: Seq[SortOrder], kind: EdgeKind,
     range: Boolean, input: Attribute, edgeAttr: Attribute,
     child: SparkPlan)
-  extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output :+ edgeAttr
-
-  override def requiredChildDistribution
-  : Seq[org.apache.spark.sql.catalyst.plans.physical.Distribution] =
-    org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution(order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(order)
-  override def outputOrdering: Seq[SortOrder] = order
-  // per-partition 1:1 operator: rows never move, so the child's (range)
-  // partitioning survives — without this the default UnknownPartitioning
-  // makes EnsureRequirements re-shuffle every consumer that wants the
-  // same distribution (e.g. a second scan stacked on this one)
-  override def outputPartitioning
-  : org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
+  extends GlobalExec {
+  override def added: Seq[Attribute] = edgeAttr :: Nil
 
   import GlobalEdgeExec.{EdgeChain, EdgePartial}
 
@@ -148,13 +130,7 @@ case class GlobalEdgeExec(order: Seq[SortOrder], kind: EdgeKind,
       case _ => false
     }
     val wantLastNonNull = theKind == EdgeKind.LastNonNull
-    // same persist rationale as the siblings: the sorted child feeds two
-    // passes; the exchange is reused but the post-shuffle sort is not,
-    // and both passes must see the identical row order (rows copied —
-    // operators reuse mutable UnsafeRow buffers)
-    val inputRdd = child.execute()
-      .mapPartitions(it => it.map(_.copy()), preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val inputRdd = persistedInput()
     // pass 1: constant-size partials per partition (at most `need`
     // single-column values plus two boundary rows)
     val partials = inputRdd.mapPartitions({ it =>
@@ -387,78 +363,6 @@ object GlobalEdgeExec {
     * "no contribution"). */
   private[plans] case class EdgeChain(len: Long, lastVal: UnsafeRow,
       lastNonNull: UnsafeRow)
-}
-
-object GlobalEdgeStrategy extends Strategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case g: GlobalEdgePlan =>
-      GlobalEdgeExec(g.order, g.kind, g.range, g.input, g.edgeAttr,
-        org.apache.spark.sql.execution.PlanLater(g.child)) :: Nil
-    case _ => Nil
-  }
-}
-
-/** Optimizer rule: rewrite un-partitioned `first_value` / `last_value` /
-  * `nth_value` windows over the running frames (ROWS or the default
-  * RANGE, UNBOUNDED PRECEDING .. CURRENT ROW) into [[GlobalEdgePlan]] —
-  * or, for ROWS-frame respect-nulls last_value, into a plain Project
-  * (the frame's last row IS the current row). Same fallbacks as the
-  * siblings: partitioned windows parallelize on their own and
-  * LIMIT-bounded inputs are provably tiny — both keep WindowExec. No
-  * top-k suppression is needed: InferWindowGroupLimit cannot prune on
-  * these functions, so a rank-limit Filter above never makes the
-  * single-partition WindowExec preferable. */
-object GlobalEdgeRule
-  extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{Alias,
-    Attribute => CAttr, CurrentRow, Expression, IntegerLiteral, NthValue,
-    RangeFrame, RowFrame, SpecifiedWindowFrame, UnboundedPreceding,
-    WindowExpression, WindowSpecDefinition}
-  import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, First, Last}
-  import org.apache.spark.sql.catalyst.plans.logical.{Project, Window}
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
-    case w @ Window(Seq(a @ Alias(WindowExpression(fn,
-          WindowSpecDefinition(Seq(), order,
-            SpecifiedWindowFrame(ft, UnboundedPreceding, CurrentRow))), name)),
-        Seq(), _, child, _)
-        if order.nonEmpty && (ft == RowFrame || ft == RangeFrame) &&
-          !GlobalRankRule.isLimitBounded(child) =>
-      val range = ft == RangeFrame
-      // the aggregate-shaped functions arrive wrapped in an
-      // AggregateExpression (plain: non-distinct, unfiltered); nth_value
-      // is an AggregateWindowFunction and arrives bare
-      val parsed: Option[Either[CAttr, (EdgeKind, CAttr)]] = fn match {
-        case AggregateExpression(First(v: CAttr, ignoreNulls), _, false,
-            None, _) =>
-          Some(Right((EdgeKind.At(1, ignoreNulls), v)))
-        case AggregateExpression(Last(v: CAttr, false), _, false, None, _) =>
-          // ROWS: the frame ends at the current row — last_value IS the
-          // input column; RANGE: the peer group's last value
-          if (range) Some(Right((EdgeKind.LastValue, v)))
-          else Some(Left(v))
-        case AggregateExpression(Last(v: CAttr, true), _, false, None, _) =>
-          Some(Right((EdgeKind.LastNonNull, v)))
-        case NthValue(v: CAttr, IntegerLiteral(n), ignoreNulls)
-            if n > 0 && n <= GlobalEdge.MaxN =>
-          Some(Right((EdgeKind.At(n, ignoreNulls), v)))
-        case _ => None
-      }
-      parsed.map {
-        case Left(v) =>
-          Project(child.output :+
-            Alias(v, name)(exprId = a.exprId, qualifier = a.qualifier,
-              explicitMetadata = a.explicitMetadata),
-            child): LogicalPlan
-        case Right((kind, v)) =>
-          val g = GlobalEdgePlan(order, kind, range, v, child)
-          Project(child.output :+
-            Alias(g.edgeAttr, name)(exprId = a.exprId,
-              qualifier = a.qualifier,
-              explicitMetadata = a.explicitMetadata),
-            g): LogicalPlan
-      }.getOrElse(w)
-  }
 }
 
 object GlobalEdge {

@@ -4,9 +4,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, GenericInternalRow, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.classic.Strategy
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.LongType
 
 /** GLOBAL SLIDING FRAME — `agg(x) OVER (ORDER BY ... ROWS BETWEEN lo AND
@@ -116,35 +115,18 @@ object GlobalFramePlan {
 case class GlobalFramePlan(order: Seq[SortOrder], specs: Seq[FrameSpec],
     values: Seq[Attribute], child: LogicalPlan,
     frameAttrs: Seq[AttributeReference])
-  extends UnaryNode {
-  /** head output attribute — single-aggregate callers */
-  def frameAttr: AttributeReference = frameAttrs.head
-  override def output: Seq[Attribute] = child.output ++ frameAttrs
-  override def producedAttributes
-  : org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(frameAttrs)
-  override def maxRows: Option[Long] = child.maxRows
+  extends GlobalNode {
+  override def added: Seq[Attribute] = frameAttrs
+  override def exec(planned: SparkPlan): SparkPlan =
+    GlobalFrameExec(order, specs, values, frameAttrs, planned)
   override protected def withNewChildInternal(newChild: LogicalPlan)
   : GlobalFramePlan = copy(child = newChild)
 }
 
 case class GlobalFrameExec(order: Seq[SortOrder], specs: Seq[FrameSpec],
     values: Seq[Attribute], frameAttrs: Seq[Attribute], child: SparkPlan)
-  extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output ++ frameAttrs
-
-  override def requiredChildDistribution
-  : Seq[org.apache.spark.sql.catalyst.plans.physical.Distribution] =
-    org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution(order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(order)
-  override def outputOrdering: Seq[SortOrder] = order
-  // per-partition 1:1 operator: rows never move, so the child's (range)
-  // partitioning survives — without this the default UnknownPartitioning
-  // makes EnsureRequirements re-shuffle every consumer that wants the
-  // same distribution (e.g. a GlobalScan stacked below this node)
-  override def outputPartitioning
-  : org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
+  extends GlobalExec {
+  override def added: Seq[Attribute] = frameAttrs
 
   override protected def doExecute(): RDD[InternalRow] = {
     val nSpecs = specs.length
@@ -174,12 +156,7 @@ case class GlobalFrameExec(order: Seq[SortOrder], specs: Seq[FrameSpec],
     // slot the newest push just reused
     val width = after + before + 2
 
-    // same persist rationale as the siblings: the sorted child feeds two
-    // passes, and both must see identical row order (rows copied —
-    // operators reuse mutable UnsafeRow buffers)
-    val input = child.execute()
-      .mapPartitions(it => it.map(_.copy()), preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val input = persistedInput()
 
     // pass 1: each partition's FIRST `after` and LAST `before` value
     // rows, in row order — narrow rows only
@@ -432,181 +409,6 @@ case class GlobalFrameExec(order: Seq[SortOrder], specs: Seq[FrameSpec],
 
   override protected def withNewChildInternal(newChild: SparkPlan)
   : GlobalFrameExec = copy(child = newChild)
-}
-
-object GlobalFrameStrategy extends Strategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case g: GlobalFramePlan =>
-      GlobalFrameExec(g.order, g.specs, g.values, g.frameAttrs,
-        org.apache.spark.sql.execution.PlanLater(g.child)) :: Nil
-    case _ => Nil
-  }
-}
-
-/** Optimizer rule: rewrite an un-partitioned Window whose expressions are
-  * bounded ROWS-frame aggregates (`ROWS BETWEEN lo AND hi`, |lo| and |hi|
-  * <= [[GlobalFrame.MaxFrame]]) — optionally MIXED with prefix aggregates
-  * from GlobalScan's domain (`ROWS/RANGE UNBOUNDED PRECEDING`, the
-  * everyday "running total + moving average" dashboard) — into
-  * [[GlobalFramePlan]] stacked on [[GlobalScanPlan]] over ONE shared
-  * range sort. All-or-nothing, same rationale as GlobalScanRule:
-  * rewriting a subset would still leave a single-partition Window for
-  * the rest. Partitioned windows parallelize on their own and
-  * LIMIT-bounded inputs are provably tiny — both keep WindowExec. */
-object GlobalFrameRule
-  extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{Alias,
-    Attribute => CAttr, Cast, CurrentRow, Expression, IntegerLiteral,
-    NamedExpression, RowFrame, SpecifiedWindowFrame, UnaryMinus,
-    WindowExpression, WindowSpecDefinition}
-  import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-  import org.apache.spark.sql.catalyst.plans.logical.{Project, Window}
-
-  /** A bounded frame offset as Catalyst encodes it: CurrentRow (0), a
-    * signed literal (DataFrame `rowsBetween(lo, hi)`, or SQL after
-    * constant folding — negative = PRECEDING, positive = FOLLOWING), or
-    * the parser's still-unfolded `UnaryMinus(k)` for PRECEDING. */
-  private object BoundOffset {
-    def unapply(e: Expression): Option[Int] = e match {
-      case CurrentRow => Some(0)
-      case IntegerLiteral(n) if n != Int.MinValue => Some(n)
-      case UnaryMinus(IntegerLiteral(n), _) if n != Int.MinValue =>
-        Some(-n)
-      case _ => None
-    }
-  }
-
-  // private[plans]: [[GlobalWindowRule]] reuses the bounded-frame parser
-  // to compose mixed-family global windows onto one shared sort
-  private[plans] case class FParsed(alias: Alias, order: Seq[SortOrder],
-      lo: Int, hi: Int, kind: ScanKind, value: CAttr, ansi: Boolean,
-      widen: Boolean)
-
-  private[plans] def parseFrame(e: NamedExpression,
-                         child: org.apache.spark.sql.catalyst.plans
-                           .logical.LogicalPlan): Option[FParsed] = e match {
-    case a @ Alias(WindowExpression(agg: AggregateExpression,
-          WindowSpecDefinition(Seq(), order,
-            SpecifiedWindowFrame(RowFrame, BoundOffset(lo),
-              BoundOffset(hi)))),
-        _) if order.nonEmpty && !agg.isDistinct && agg.filter.isEmpty &&
-          lo <= hi && math.max(math.abs(lo), math.abs(hi)) <=
-            GlobalFrame.MaxFrame =>
-      GlobalScanRule.scannable(agg, child).map { case (kind, v, ansi,
-          widen) => FParsed(a, order, lo, hi, kind, v, ansi, widen) }
-    // respect-nulls lag/lead with a NULL default are 1-row DETACHED ROWS
-    // frames: min over [±n, ±n] is exactly that row's value (or NULL when
-    // the row is null or absent) — bit-identical to the offset function.
-    // The same conversion lives in GlobalWindowRule's mixed-stack parser;
-    // having it HERE makes an ALL-offset window (e.g. the w lags of
-    // sorted-neighborhood blocking) fuse into ONE frame node too — that
-    // shape previously fell between the single-member GlobalShiftRule and
-    // the mixed-only GlobalWindowRule and kept a single-partition
-    // WindowExec. Non-null defaults and IGNORE NULLS keep GlobalShift.
-    case a @ Alias(WindowExpression(
-          org.apache.spark.sql.catalyst.expressions
-            .Lag(v: CAttr, IntegerLiteral(off), d, false),
-          WindowSpecDefinition(Seq(), order, _)), _)
-        if order.nonEmpty && off > 0 && off <= GlobalFrame.MaxFrame &&
-          isNullLiteral(d) &&
-          org.apache.spark.sql.catalyst.expressions.RowOrdering
-            .isOrderable(v.dataType) =>
-      Some(FParsed(a, order, -off, -off, ScanKind.Min, v,
-        ansi = false, widen = false))
-    case a @ Alias(WindowExpression(
-          org.apache.spark.sql.catalyst.expressions
-            .Lead(v: CAttr, IntegerLiteral(off), d, false),
-          WindowSpecDefinition(Seq(), order, _)), _)
-        if order.nonEmpty && off > 0 && off <= GlobalFrame.MaxFrame &&
-          isNullLiteral(d) &&
-          org.apache.spark.sql.catalyst.expressions.RowOrdering
-            .isOrderable(v.dataType) =>
-      Some(FParsed(a, order, off, off, ScanKind.Min, v,
-        ansi = false, widen = false))
-    case _ => None
-  }
-
-  private def isNullLiteral(e: Expression): Boolean = e match {
-    case l: org.apache.spark.sql.catalyst.expressions.Literal =>
-      l.value == null
-    case _ => false
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
-    case w @ Window(exprs, Seq(), _, child, _) if exprs.nonEmpty =>
-      val framed = exprs.map(parseFrame(_, child))
-      if (!framed.exists(_.isDefined)) w // no bounded frame: not ours
-      else {
-        // every non-frame expression must be a rewritable PREFIX
-        // aggregate (GlobalScan's parser) sharing the same order
-        val prefixes = exprs.zip(framed).map { case (e, f) =>
-          if (f.isDefined) None else GlobalScanRule.parse(e, child) }
-        val unmatched = exprs.indices.exists(i =>
-          framed(i).isEmpty && prefixes(i).isEmpty)
-        val orders = (framed.flatten.map(_.order) ++
-          prefixes.flatten.map(_.order)).distinct
-        if (unmatched || orders.size != 1 ||
-            GlobalRankRule.isLimitBounded(child)) w
-        else {
-          val order = orders.head
-          // integral inputs of widen-marked specs are upcast to Long in
-          // ONE Project below everything (deduped by exprId — a frame
-          // sum and a prefix sum of the same column share the widened
-          // attribute); the helpers never escape the outer Project
-          val widenPairs =
-            (framed.flatten.filter(_.widen).map(_.value) ++
-              prefixes.flatten.filter(_.widen).map(_.value))
-            .filter(_.dataType != LongType)
-            .groupBy(_.exprId).map(_._2.head)
-            .map(v => v.exprId ->
-              Alias(Cast(v, LongType), v.name + "_framel")())
-            .toMap
-          val inner: LogicalPlan =
-            if (widenPairs.isEmpty) child
-            else Project(child.output ++ widenPairs.values, child)
-          def valOf(v: CAttr, widen: Boolean): CAttr =
-            if (widen) widenPairs.get(v.exprId)
-              .map(_.toAttribute: CAttr).getOrElse(v)
-            else v
-          // prefix aggregates (if any) scan FIRST — both operators are
-          // order/partitioning-preserving 1:1 nodes, so the stack shares
-          // one exchange + sort and EnsureRequirements inserts nothing
-          // between them
-          val scanPs = prefixes.flatten
-          val base: LogicalPlan =
-            if (scanPs.isEmpty) inner
-            else GlobalScanPlan(order,
-              scanPs.map(p => ScanSpec(p.kind, p.ansi, p.range)),
-              scanPs.map(p => valOf(p.value, p.widen)), inner)
-          val scanAttrs = base match {
-            case s: GlobalScanPlan => s.scanAttrs
-            case _ => Nil
-          }
-          val framePs = framed.flatten
-          val g = GlobalFramePlan(order,
-            framePs.map(p => FrameSpec(p.kind, p.lo, p.hi, p.ansi)),
-            framePs.map(p => valOf(p.value, p.widen)), base)
-          // results in the original expression order, each narrowed back
-          // to its alias type under the original exprId so downstream
-          // references resolve unchanged
-          var si = -1; var fi = -1
-          val results = exprs.indices.map { i =>
-            val (alias, attr: CAttr) = framed(i) match {
-              case Some(p) => fi += 1; (p.alias, g.frameAttrs(fi))
-              case None =>
-                val p = prefixes(i).get; si += 1; (p.alias, scanAttrs(si))
-            }
-            val result: Expression =
-              if (attr.dataType == alias.dataType) attr
-              else Cast(attr, alias.dataType)
-            Alias(result, alias.name)(exprId = alias.exprId,
-              qualifier = alias.qualifier,
-              explicitMetadata = alias.explicitMetadata)
-          }
-          Project(child.output ++ results, g): LogicalPlan
-        }
-      }
-  }
 }
 
 object GlobalFrame {

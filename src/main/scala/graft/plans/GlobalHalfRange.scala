@@ -30,11 +30,11 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * The count guard is what makes the subtraction NULL-faithful: an
   * empty (or all-null-input) half-bounded frame must yield NULL for sum
   * — `prefixSum - gapSum` alone would yield 0 whenever the two regions
-  * cancel. count(*) needs no guard (empty frame counts 0). The family
-  * rules then fuse the four helper members onto ONE shared range sort
-  * (GlobalScan multi-spec + GlobalRange multi-spec under
-  * GlobalWindowRule), so the whole decomposition costs the same single
-  * exchange + sort as any other global window here.
+  * cancel. count(*) needs no guard (empty frame counts 0).
+  * [[GlobalWindowRule]] then fuses the four helper members onto ONE
+  * shared range sort (GlobalScan multi-spec + GlobalRange multi-spec),
+  * so the whole decomposition costs the same single exchange + sort as
+  * any other global window here.
   *
   * Scope: Sum / Count / Count(*) over integral (long-domain) order-key
   * ATTRIBUTES, ascending; timestamps route through unix_micros.
@@ -48,7 +48,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * can overflow where the half-bounded frame alone would not; under
   * ANSI that raises loudly (never a wrong answer), matching the
   * engine-wide overflow discipline. Decimal sums are NOT rewritten at
-  * all: the long-domain family rules couldn't distribute the helper
+  * all: the long-domain Global* operators couldn't distribute the helper
   * members anyway, and under non-ANSI a decimal prefix overflow nulls
   * out (longs wrap exactly; decimals don't) and would assemble into a
   * silently wrong 0 — they keep their native WindowExec.
@@ -87,7 +87,7 @@ object GlobalHalfRangeRule
           !agg.isDistinct && agg.filter.isEmpty =>
       agg.aggregateFunction match {
         // decimal sums are excluded outright, for two independent
-        // reasons: (1) the family rules the helper members plan through
+        // reasons: (1) the operators the helper members plan through
         // (GlobalScan / GlobalRange) are long-domain only, so the
         // decomposition would keep its single-partition WindowExec
         // anyway — all cost, no distribution win; (2) under non-ANSI

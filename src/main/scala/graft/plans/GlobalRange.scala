@@ -3,9 +3,8 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Cast, GenericInternalRow, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.classic.Strategy
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.LongType
 
 /** GLOBAL VALUE-RANGE FRAME — `agg(x) OVER (ORDER BY k RANGE BETWEEN lo
@@ -116,12 +115,10 @@ object GlobalRangePlan {
 case class GlobalRangePlan(order: Seq[SortOrder], key: Attribute,
     specs: Seq[RangeSpec], values: Seq[Attribute], child: LogicalPlan,
     rangeAttrs: Seq[AttributeReference])
-  extends UnaryNode {
-  override def output: Seq[Attribute] = child.output ++ rangeAttrs
-  override def producedAttributes
-  : org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(rangeAttrs)
-  override def maxRows: Option[Long] = child.maxRows
+  extends GlobalNode {
+  override def added: Seq[Attribute] = rangeAttrs
+  override def exec(planned: SparkPlan): SparkPlan =
+    GlobalRangeExec(order, key, specs, values, rangeAttrs, planned)
   override protected def withNewChildInternal(newChild: LogicalPlan)
   : GlobalRangePlan = copy(child = newChild)
 }
@@ -129,19 +126,8 @@ case class GlobalRangePlan(order: Seq[SortOrder], key: Attribute,
 case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
     specs: Seq[RangeSpec], values: Seq[Attribute],
     rangeAttrs: Seq[Attribute], child: SparkPlan)
-  extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output ++ rangeAttrs
-
-  override def requiredChildDistribution
-  : Seq[org.apache.spark.sql.catalyst.plans.physical.Distribution] =
-    org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution(order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(order)
-  override def outputOrdering: Seq[SortOrder] = order
-  // per-partition 1:1 operator: rows never move, so the child's (range)
-  // partitioning survives for consumers wanting the same distribution
-  override def outputPartitioning
-  : org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
+  extends GlobalExec {
+  override def added: Seq[Attribute] = rangeAttrs
 
   import GlobalRangeExec.{Partial, satAdd}
 
@@ -179,12 +165,7 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
     val maxHi = his.max
     val cap = GlobalRange.MaxBoundary
 
-    // same persist rationale as the siblings: the sorted child feeds two
-    // passes that must see identical row order (rows copied — operators
-    // reuse mutable UnsafeRow buffers)
-    val input = child.execute()
-      .mapPartitions(it => it.map(_.copy()), preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val input = persistedInput()
 
     // pass 1: per partition, its row count, edge keys, and the head/tail
     // rows within the frame reach of its edges — narrow rows only.
@@ -579,134 +560,6 @@ object GlobalRangeExec {
     if (b > 0 && r < a) Long.MaxValue
     else if (b < 0 && r > a) Long.MinValue
     else r
-  }
-}
-
-object GlobalRangeStrategy extends Strategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case g: GlobalRangePlan =>
-      GlobalRangeExec(g.order, g.key, g.specs, g.values, g.rangeAttrs,
-        org.apache.spark.sql.execution.PlanLater(g.child)) :: Nil
-    case _ => Nil
-  }
-}
-
-/** Optimizer rule: rewrite an un-partitioned Window whose expressions
-  * are ALL bounded value-RANGE aggregates over one ascending
-  * non-nullable integral ORDER key into one fused [[GlobalRangePlan]].
-  * All-or-nothing, same rationale as the siblings; LIMIT-bounded inputs
-  * keep WindowExec. */
-object GlobalRangeRule
-  extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending,
-    Attribute => CAttr, CurrentRow, Expression, Literal, NamedExpression,
-    RangeFrame, SpecifiedWindowFrame, UnaryMinus, WindowExpression,
-    WindowSpecDefinition}
-  import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-  import org.apache.spark.sql.catalyst.plans.logical.{Project, Window}
-  import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
-
-  /** A bounded RANGE offset normalized to the key's LONG domain:
-    * CurrentRow (0), an integral literal, a day-time interval literal
-    * (physical micros — the boundary type Spark resolves for a
-    * timestamp ORDER BY), or a calendar interval with no month
-    * component (months are not a fixed number of micros) — possibly
-    * under the parser's unfolded UnaryMinus. */
-  private object RangeOffset {
-    def unapply(e: Expression): Option[Long] = e match {
-      case CurrentRow => Some(0L)
-      case Literal(v: Long, LongType) if v != Long.MinValue => Some(v)
-      case Literal(v: Int, IntegerType) => Some(v.toLong)
-      case Literal(v: Short, ShortType) => Some(v.toLong)
-      case Literal(v: Byte, ByteType) => Some(v.toLong)
-      case Literal(v: Long, _: org.apache.spark.sql.types
-          .DayTimeIntervalType) if v != Long.MinValue => Some(v)
-      case Literal(iv: org.apache.spark.unsafe.types.CalendarInterval, _)
-          if iv.months == 0 =>
-        Some(iv.days * 86400000000L + iv.microseconds)
-      case UnaryMinus(RangeOffset(n), _) if n != Long.MinValue => Some(-n)
-      case _ => None
-    }
-  }
-
-  /** Keys whose physical representation is a long the frame arithmetic
-    * can run on directly: integrals (upcast below the plan) and
-    * timestamps (micros — interval offsets are micros too). */
-  private def supportedKey(a: CAttr): Boolean =
-    a.dataType == LongType || a.dataType == IntegerType ||
-      a.dataType == ShortType || a.dataType == ByteType ||
-      a.dataType == org.apache.spark.sql.types.TimestampType ||
-      a.dataType == org.apache.spark.sql.types.TimestampNTZType
-
-  // private[plans]: [[GlobalWindowRule]] reuses the value-range parser
-  // to compose mixed-family global windows onto one shared sort
-  private[plans] case class RParsed(alias: Alias, order: Seq[SortOrder],
-      key: CAttr, lo: Long, hi: Long, kind: ScanKind, value: CAttr,
-      ansi: Boolean, widen: Boolean)
-
-  private[plans] def parseRange(e: NamedExpression,
-                         child: LogicalPlan): Option[RParsed] = e match {
-    case a @ Alias(WindowExpression(agg: AggregateExpression,
-          WindowSpecDefinition(Seq(), Seq(so),
-            SpecifiedWindowFrame(RangeFrame, RangeOffset(lo),
-              RangeOffset(hi)))),
-        _) if so.direction == Ascending && !agg.isDistinct &&
-          agg.filter.isEmpty && lo <= hi &&
-          // unbounded sides never parse (RangeOffset rejects them);
-          // nullable keys are fine: the exec implements the SQL null
-          // peer-group semantics
-          so.child.isInstanceOf[CAttr] &&
-          supportedKey(so.child.asInstanceOf[CAttr]) =>
-      GlobalScanRule.scannable(agg, child).map { case (kind, v, ansi,
-          widen) =>
-        RParsed(a, Seq(so), so.child.asInstanceOf[CAttr], lo, hi, kind, v,
-          ansi, widen)
-      }
-    case _ => None
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
-    case w @ Window(exprs, Seq(), _, child, _) if exprs.nonEmpty =>
-      val parsed = exprs.map(parseRange(_, child))
-      val orders = parsed.flatten.map(_.order).distinct
-      if (parsed.exists(_.isEmpty) || orders.size != 1 ||
-          GlobalRankRule.isLimitBounded(child)) w
-      else {
-        val ps = parsed.flatten
-        val key = ps.head.key
-        // integral inputs of widen-marked specs upcast to Long in ONE
-        // Project below the plan (deduped by exprId), same as siblings
-        val widenPairs = ps.filter(_.widen).map(_.value)
-          .filter(_.dataType != LongType)
-          .groupBy(_.exprId).map(_._2.head)
-          .map(v => v.exprId ->
-            Alias(org.apache.spark.sql.catalyst.expressions
-              .Cast(v, LongType), v.name + "_rngl")())
-          .toMap
-        val inner: LogicalPlan =
-          if (widenPairs.isEmpty) child
-          else Project(child.output ++ widenPairs.values, child)
-        val values = ps.map(p =>
-          if (p.widen) widenPairs.get(p.value.exprId)
-            .map(_.toAttribute: CAttr).getOrElse(p.value)
-          else p.value)
-        val g = GlobalRangePlan(orders.head, key,
-          ps.map(p => RangeSpec(p.kind, p.lo, p.hi, p.ansi)), values,
-          inner)
-        var i = -1
-        val results = ps.map { p =>
-          i += 1
-          val attr = g.rangeAttrs(i)
-          val result: Expression =
-            if (attr.dataType == p.alias.dataType) attr
-            else org.apache.spark.sql.catalyst.expressions
-              .Cast(attr, p.alias.dataType)
-          Alias(result, p.alias.name)(exprId = p.alias.exprId,
-            qualifier = p.alias.qualifier,
-            explicitMetadata = p.alias.explicitMetadata)
-        }
-        Project(child.output ++ results, g): LogicalPlan
-      }
   }
 }
 

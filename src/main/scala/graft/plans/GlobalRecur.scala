@@ -4,9 +4,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.classic.Strategy
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** GLOBAL FIRST-ORDER LINEAR RECURRENCE — `y_i = m_i * y_{i-1} + c_i`
@@ -50,18 +49,15 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *
   * No optimizer rule: Spark has no SQL surface for recurrences, so there
   * is no Window shape to intercept — [[Recurrence]] builds this plan
-  * directly (like `GlobalRank.ranked`), and [[GlobalRecurStrategy]]
-  * plans it. */
+  * directly (like `GlobalRank.ranked`), and [[GlobalStrategy]] plans
+  * it. */
 case class GlobalRecurPlan(order: Seq[SortOrder], m: Attribute,
     c: Attribute, seed: Any, child: LogicalPlan,
-    // constructor field so copy()/transform preserve the exprId
     yAttr: AttributeReference)
-  extends UnaryNode {
-  override def output: Seq[Attribute] = child.output :+ yAttr
-  override def producedAttributes
-  : org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(yAttr :: Nil)
-  override def maxRows: Option[Long] = child.maxRows
+  extends GlobalNode {
+  override def added: Seq[Attribute] = yAttr :: Nil
+  override def exec(planned: SparkPlan): SparkPlan =
+    GlobalRecurExec(order, m, c, seed, yAttr, planned)
   override protected def withNewChildInternal(newChild: LogicalPlan)
   : GlobalRecurPlan = copy(child = newChild)
 }
@@ -80,18 +76,8 @@ object GlobalRecurPlan {
 
 case class GlobalRecurExec(order: Seq[SortOrder], m: Attribute,
     c: Attribute, seed: Any, yAttr: Attribute, child: SparkPlan)
-  extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output :+ yAttr
-
-  override def requiredChildDistribution
-  : Seq[org.apache.spark.sql.catalyst.plans.physical.Distribution] =
-    org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution(order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(order)
-  override def outputOrdering: Seq[SortOrder] = order
-  // 1:1 per-partition operator: rows never move (see GlobalShiftExec)
-  override def outputPartitioning
-  : org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
+  extends GlobalExec {
+  override def added: Seq[Attribute] = yAttr :: Nil
 
   override protected def doExecute(): RDD[InternalRow] = {
     val isLong = m.dataType == LongType
@@ -99,11 +85,7 @@ case class GlobalRecurExec(order: Seq[SortOrder], m: Attribute,
     val cOrd = child.output.indexWhere(_.exprId == c.exprId)
     require(mOrd >= 0 && cOrd >= 0,
       s"recurrence columns $m/$c not in child output")
-    // same persist rationale as the siblings: sorted child feeds two
-    // passes; rows copied (operators reuse UnsafeRow buffers)
-    val inputRdd = child.execute()
-      .mapPartitions(it => it.map(_.copy()), preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val inputRdd = persistedInput()
     // pass 1: fold each partition into its composed affine transform —
     // TWO scalars per partition, regardless of partition size
     val partials: Array[(Any, Any)] =
@@ -187,15 +169,6 @@ case class GlobalRecurExec(order: Seq[SortOrder], m: Attribute,
 
   override protected def withNewChildInternal(newChild: SparkPlan)
   : GlobalRecurExec = copy(child = newChild)
-}
-
-object GlobalRecurStrategy extends Strategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case g: GlobalRecurPlan =>
-      GlobalRecurExec(g.order, g.m, g.c, g.seed, g.yAttr,
-        org.apache.spark.sql.execution.PlanLater(g.child)) :: Nil
-    case _ => Nil
-  }
 }
 
 /** Library surface for the recurrence operator (no SQL shape exists to

@@ -4,9 +4,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, GenericInternalRow, RowOrdering, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.classic.Strategy
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.LongType
 
 /** DISTRIBUTED PREFIX SCAN: `running = agg(value) over rows <= current` in
@@ -146,14 +145,10 @@ object GlobalScanPlan {
 case class GlobalScanPlan(order: Seq[SortOrder], specs: Seq[ScanSpec],
     values: Seq[Attribute], child: LogicalPlan,
     scanAttrs: Seq[AttributeReference])
-  extends UnaryNode {
-  /** head output attribute — single-aggregate callers */
-  def scanAttr: AttributeReference = scanAttrs.head
-  override def output: Seq[Attribute] = child.output ++ scanAttrs
-  override def producedAttributes
-  : org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(scanAttrs)
-  override def maxRows: Option[Long] = child.maxRows
+  extends GlobalNode {
+  override def added: Seq[Attribute] = scanAttrs
+  override def exec(planned: SparkPlan): SparkPlan =
+    GlobalScanExec(order, specs, values, scanAttrs, planned)
   override protected def withNewChildInternal(newChild: LogicalPlan)
   : GlobalScanPlan = copy(child = newChild)
 }
@@ -161,21 +156,8 @@ case class GlobalScanPlan(order: Seq[SortOrder], specs: Seq[ScanSpec],
 case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
                           values: Seq[Attribute], scanAttrs: Seq[Attribute],
                           child: SparkPlan)
-  extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output ++ scanAttrs
-
-  override def requiredChildDistribution
-  : Seq[org.apache.spark.sql.catalyst.plans.physical.Distribution] =
-    org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution(order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(order)
-  override def outputOrdering: Seq[SortOrder] = order
-  // per-partition 1:1 operator: rows never move, so the child's (range)
-  // partitioning survives — without this the default UnknownPartitioning
-  // makes EnsureRequirements re-shuffle every consumer that wants the
-  // same distribution (e.g. a second scan stacked on this one)
-  override def outputPartitioning
-  : org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
+  extends GlobalExec {
+  override def added: Seq[Attribute] = scanAttrs
 
   import GlobalScanExec.{ScanDeltas, ScanPartial}
 
@@ -214,13 +196,7 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
     val anyRows = ranges.exists(!_)
     val orderLocal = order
     val childOutput = child.output
-    // same persist rationale as GlobalRankExec: the sorted child feeds two
-    // passes; without it the post-shuffle sort re-runs per pass, and the
-    // two passes could disagree on tie order (rows must also be copied —
-    // operators reuse mutable UnsafeRow buffers)
-    val input = child.execute()
-      .mapPartitions(it => it.map(_.copy()), preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val input = persistedInput()
     // pass 1: per-partition partials (per spec: sum, non-null count, min,
     // max, double-sum, overflow flag; shared: row count) — a few scalars
     // per partition cross the driver. The non-null count carries SQL null
@@ -665,183 +641,6 @@ object GlobalScanExec {
       new Array[Long](k), 0L, Array.fill(k)(Long.MaxValue),
       Array.fill(k)(Long.MinValue), new Array[Double](k),
       Array.fill(k)(true), new Array[Any](k))
-  }
-}
-
-object GlobalScanStrategy extends Strategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case g: GlobalScanPlan =>
-      GlobalScanExec(g.order, g.specs, g.values, g.scanAttrs,
-        org.apache.spark.sql.execution.PlanLater(g.child)) :: Nil
-    case _ => Nil
-  }
-}
-
-/** Optimizer rule, the [[GlobalRankRule]] sibling: rewrite
-  * `agg(x) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)` — the running
-  * aggregate Spark executes in ONE partition — into [[GlobalScanPlan]],
-  * for agg in sum / count / count(*) / min / max / avg. Conservatively
-  * fires only on the exact scale-out-safe shape: an un-partitioned
-  * window whose expressions are ALL plain (non-DISTINCT, unfiltered)
-  * aggregates the scan can run: sums/avgs over LongType or
-  * narrower-integral attributes — including the `Cast(int -> long)` the
-  * analyzer wraps around integral sum inputs; narrower values are
-  * widened below the scan and integral min/max results narrowed back,
-  * so schemas are unchanged (count: any type — it only null-checks;
-  * count(*): no column at all); min/max additionally over ANY orderable
-  * type (double, string, timestamp, date, decimal ... — the generic
-  * boxed path, running high-water marks are not integer-only shapes). A multi-expression
-  * window becomes ONE scan node computing every aggregate in a single
-  * pair of passes over one persisted input. BOTH running frames rewrite,
-  * per expression: explicit ROWS, and the default RANGE the analyzer
-  * gives a frameless `agg(x) OVER (ORDER BY ...)` — the exec emits peer
-  * groups their group total there (see [[GlobalScanPlan]]). Null
-  * semantics preserved: sum/min/max/avg are NULL until the first
-  * non-null value, counts never. Overflow semantics preserved per eval
-  * mode: sum LEGACY wraps, sum ANSI runs the scan with exact addition
-  * (raises on Long overflow) — both native-parity; avg never raises in
-  * either mode (native accumulates in Double) — the scan tries the
-  * exact long sum and degrades to its double sum on overflow;
-  * try_sum/try_avg (NULL on overflow) have no per-row running equivalent
-  * here and keep WindowExec. */
-object GlobalScanRule
-  extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute => CAttr,
-    Cast, CurrentRow, EvalMode, Expression, Literal, NumericEvalContext,
-    RangeFrame, RowFrame, SpecifiedWindowFrame, UnboundedPreceding,
-    WindowExpression, WindowSpecDefinition}
-  import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
-  import org.apache.spark.sql.catalyst.plans.logical.{Project, Window}
-  import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
-
-  private def integral(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt == IntegerType || dt == ShortType || dt == ByteType
-
-  /** The scan's long-valued input: a LongType attribute, a narrower
-    * integral attribute (the exec runs on Long — the rewrite widens it
-    * below the scan), or the `Cast(integral -> long)` the analyzer wraps
-    * around integral sum inputs — `sum(int_col)` analyzes as
-    * `Sum(Cast(attr, LongType))`, the common case. The upcast can neither
-    * null nor overflow, so value/null semantics are the attribute's own. */
-  private object LongValue {
-    def unapply(e: Expression): Option[CAttr] = e match {
-      case v: CAttr if v.dataType == LongType || integral(v.dataType) =>
-        Some(v)
-      case Cast(v: CAttr, LongType, _, _) if integral(v.dataType) => Some(v)
-      case _ => None
-    }
-  }
-
-  /** (kind, value column, ansi, widen) for a rewritable aggregate, else
-    * None. `widen` marks specs whose value the rewrite must upcast to
-    * Long below the scan (sums/avgs and integral extrema — the primitive
-    * path); count and generic extrema use the raw column — count only
-    * null-checks it, and a generic extremum folds boxed values under the
-    * column's own ordering (widening a non-numeric count column would
-    * EVALUATE a bogus cast for every row). count(*) carries no column —
-    * any child attribute serves as the (never evaluated) placeholder the
-    * spec wants. */
-  // private[plans]: [[GlobalFrameRule]] reuses the aggregate matcher and
-  // the prefix-window parser to fuse mixed prefix+sliding windows
-  private[plans] def scannable(agg: AggregateExpression, child: LogicalPlan)
-  : Option[(ScanKind, CAttr, Boolean, Boolean)] =
-    agg.aggregateFunction match {
-      case Sum(LongValue(v), ctx: NumericEvalContext)
-          if ctx.evalMode != EvalMode.TRY =>
-        Some((ScanKind.Sum, v, ctx.evalMode == EvalMode.ANSI, true))
-      case Count(Seq(v: CAttr)) =>
-        Some((ScanKind.Count, v, false, false))
-      // count over the analyzer's integral upcast: the cast never nulls,
-      // so counting its results == counting the attribute's non-nulls
-      case Count(Seq(Cast(v: CAttr, LongType, _, _)))
-          if integral(v.dataType) =>
-        Some((ScanKind.Count, v, false, false))
-      case Count(Seq(l: Literal)) if l.value != null =>
-        child.output.headOption.map((ScanKind.Rows, _, false, false))
-      case Min(LongValue(v)) => Some((ScanKind.Min, v, false, true))
-      case Max(LongValue(v)) => Some((ScanKind.Max, v, false, true))
-      // extrema over ANY other orderable type (double, string,
-      // timestamp, date, decimal, arrays): the scan's generic boxed
-      // path — running high-water marks and watermarks are not
-      // integer-only shapes
-      case Min(v: CAttr)
-          if org.apache.spark.sql.catalyst.expressions.RowOrdering
-            .isOrderable(v.dataType) =>
-        Some((ScanKind.Min, v, false, false))
-      case Max(v: CAttr)
-          if org.apache.spark.sql.catalyst.expressions.RowOrdering
-            .isOrderable(v.dataType) =>
-        Some((ScanKind.Max, v, false, false))
-      case Average(LongValue(v), mode) if mode != EvalMode.TRY =>
-        Some((ScanKind.Avg, v, mode == EvalMode.ANSI, true))
-      case _ => None
-    }
-
-  /** One window expression parsed for rewriting: its Alias, its order,
-    * its frame, and the scan parameters. */
-  private[plans] case class Parsed(alias: Alias, order: Seq[SortOrder],
-      range: Boolean, kind: ScanKind, value: CAttr, ansi: Boolean,
-      widen: Boolean)
-
-  private[plans] def parse(e: org.apache.spark.sql.catalyst.expressions
-      .NamedExpression, child: LogicalPlan): Option[Parsed] = e match {
-    case a @ Alias(WindowExpression(agg: AggregateExpression,
-          WindowSpecDefinition(Seq(), order,
-            SpecifiedWindowFrame(ft, UnboundedPreceding, CurrentRow))),
-        _) if order.nonEmpty && !agg.isDistinct && agg.filter.isEmpty &&
-          (ft == RowFrame || ft == RangeFrame) =>
-      scannable(agg, child).map { case (kind, v, ansi, widen) =>
-        Parsed(a, order, ft == RangeFrame, kind, v, ansi, widen) }
-    case _ => None
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
-    case w @ Window(exprs, Seq(), _, child, _) if exprs.nonEmpty =>
-      val parsed = exprs.map(parse(_, child))
-      // all-or-nothing: rewriting a subset would still leave a
-      // single-partition Window for the rest — no win, extra passes.
-      // Frames may differ per expression (each spec carries its own);
-      // the order must be shared — it is what the one sort provides.
-      val orders = parsed.flatten.map(_.order).distinct
-      if (parsed.exists(_.isEmpty) || orders.size != 1) w
-      else {
-        val ps = parsed.flatten
-        // narrower integral values of the widen-marked specs are upcast
-        // to the scan's Long domain in ONE Project BELOW the scan
-        // (deduped by exprId — sum(x) and avg(x) share a widened
-        // column); count and generic-extrema specs keep the raw column
-        // (their path never does long arithmetic). The helper columns
-        // never escape (the outer Project re-selects only child.output +
-        // the results).
-        val widenPairs = ps.filter(_.widen).map(_.value)
-          .filter(_.dataType != LongType)
-          .groupBy(_.exprId).map(_._2.head)
-          .map(v => v.exprId ->
-            Alias(Cast(v, LongType), v.name + "_scanl")())
-          .toMap
-        val inner: LogicalPlan =
-          if (widenPairs.isEmpty) child
-          else Project(child.output ++ widenPairs.values, child)
-        val specs = ps.map(p => ScanSpec(p.kind, p.ansi, p.range))
-        val values = ps.map(p =>
-          if (p.widen) widenPairs.get(p.value.exprId)
-            .map(_.toAttribute: CAttr).getOrElse(p.value)
-          else p.value)
-        val g = GlobalScanPlan(orders.head, specs, values, inner)
-        // min/max over an integral column keep its type (min(int) is
-        // int): narrow the scan's long back so the output schema is
-        // unchanged — values are original column values, the downcast
-        // cannot overflow
-        val results = ps.zip(g.scanAttrs).map { case (p, attr) =>
-          val result: Expression =
-            if (attr.dataType == p.alias.dataType) attr
-            else Cast(attr, p.alias.dataType)
-          Alias(result, p.alias.name)(exprId = p.alias.exprId,
-            qualifier = p.alias.qualifier,
-            explicitMetadata = p.alias.explicitMetadata)
-        }
-        Project(child.output ++ results, g): LogicalPlan
-      }
   }
 }
 

@@ -3,9 +3,8 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Expression, GenericInternalRow, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.classic.Strategy
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
 
 /** GLOBAL OFFSET WINDOW — `lag(x, n)` / `lead(x, n)` over a total order,
   * with NO single-partition stage: the third member of the two-pass
@@ -37,15 +36,11 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * small distance" (WindowExec keeps those). */
 case class GlobalShiftPlan(order: Seq[SortOrder], input: Attribute,
     offset: Int, default: Expression, ignoreNulls: Boolean,
-    child: LogicalPlan,
-    // constructor field so copy()/transform preserve the exprId
-    shiftAttr: AttributeReference)
-  extends UnaryNode {
-  override def output: Seq[Attribute] = child.output :+ shiftAttr
-  override def producedAttributes
-  : org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(shiftAttr :: Nil)
-  override def maxRows: Option[Long] = child.maxRows
+    child: LogicalPlan, shiftAttr: AttributeReference)
+  extends GlobalNode {
+  override def added: Seq[Attribute] = shiftAttr :: Nil
+  override def exec(planned: SparkPlan): SparkPlan = GlobalShiftExec(order,
+    input, offset, default, ignoreNulls, shiftAttr, planned)
   override protected def withNewChildInternal(newChild: LogicalPlan)
   : GlobalShiftPlan = copy(child = newChild)
 }
@@ -64,22 +59,9 @@ object GlobalShiftPlan {
 case class GlobalShiftExec(order: Seq[SortOrder], input: Attribute,
     offset: Int, default: Expression, ignoreNulls: Boolean,
     shiftAttr: Attribute, child: SparkPlan)
-  extends UnaryExecNode {
+  extends GlobalExec {
   require(offset != 0, "offset 0 is the identity — WindowExec keeps it")
-  override def output: Seq[Attribute] = child.output :+ shiftAttr
-
-  override def requiredChildDistribution
-  : Seq[org.apache.spark.sql.catalyst.plans.physical.Distribution] =
-    org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution(order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(order)
-  override def outputOrdering: Seq[SortOrder] = order
-  // per-partition 1:1 operator: rows never move, so the child's (range)
-  // partitioning survives — without this the default UnknownPartitioning
-  // makes EnsureRequirements re-shuffle every consumer that wants the
-  // same distribution (e.g. a second scan stacked on this one)
-  override def outputPartitioning
-  : org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
+  override def added: Seq[Attribute] = shiftAttr :: Nil
 
   override protected def doExecute(): RDD[InternalRow] = {
     val n = math.abs(offset)
@@ -95,11 +77,7 @@ case class GlobalShiftExec(order: Seq[SortOrder], input: Attribute,
     require(ordinal >= 0, s"shift column $input not in child output")
     val valueType = input.dataType
     val valueNullable = input.nullable
-    // same persist rationale as the siblings: sorted child feeds two
-    // passes; rows copied (operators reuse UnsafeRow buffers)
-    val inputRdd = child.execute()
-      .mapPartitions(it => it.map(_.copy()), preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val inputRdd = persistedInput()
     // pass 1: count + the n boundary-adjacent VALUES per partition,
     // projected to single-column UnsafeRows (copies — any value type)
     val partials: Array[(Long, Array[UnsafeRow])] =
@@ -253,67 +231,6 @@ case class GlobalShiftExec(order: Seq[SortOrder], input: Attribute,
 
   override protected def withNewChildInternal(newChild: SparkPlan)
   : GlobalShiftExec = copy(child = newChild)
-}
-
-object GlobalShiftStrategy extends Strategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case g: GlobalShiftPlan =>
-      GlobalShiftExec(g.order, g.input, g.offset, g.default,
-        g.ignoreNulls, g.shiftAttr,
-        org.apache.spark.sql.execution.PlanLater(g.child)) :: Nil
-    case _ => Nil
-  }
-}
-
-/** Optimizer rule: rewrite a bare un-partitioned `lag(col, n)` /
-  * `lead(col, n)` window (foldable default, respect-nulls, |n| <=
-  * [[GlobalShift.MaxOffset]]) into [[GlobalShiftPlan]]. Same fallbacks as
-  * the rank family: partitioned windows parallelize on their own and
-  * LIMIT-bounded inputs are provably tiny — both keep WindowExec. */
-object GlobalShiftRule
-  extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{Alias,
-    Attribute => CAttr, IntegerLiteral, Lag, Lead, WindowExpression,
-    WindowSpecDefinition}
-  import org.apache.spark.sql.catalyst.plans.logical.{Project, Window}
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
-    case w @ Window(Seq(a @ Alias(WindowExpression(fn,
-          WindowSpecDefinition(Seq(), order, _)), name)),
-        Seq(), _, child, _) if order.nonEmpty =>
-      // NOTE: Lag's case-class field is the POSITIVE user-facing offset
-      // (its toString renders the derived negation, which is a trap);
-      // Lead's is positive too. The plan's signed offset is derived here.
-      // IGNORE NULLS variants plan too: lag directly (the ring keeps the
-      // last n NON-NULL values); lead as ignore-nulls lag over the
-      // REVERSED order — "n-th non-null after, in the user's order" IS
-      // "n-th non-null before, in the reversed order", and the backward
-      // ring stays O(n) where a forward pending queue would hold an
-      // unbounded run of null-valued rows. (Like any offset window over
-      // a non-total order, results on TIES follow the executed sort.)
-      val shift = fn match {
-        case Lag(v: CAttr, IntegerLiteral(off), d, ign)
-            if off > 0 && off <= GlobalShift.MaxOffset && d.foldable =>
-          Some((v, -off, d, ign, order))
-        case Lead(v: CAttr, IntegerLiteral(off), d, false)
-            if off > 0 && off <= GlobalShift.MaxOffset && d.foldable =>
-          Some((v, off, d, false, order))
-        case Lead(v: CAttr, IntegerLiteral(off), d, true)
-            if off > 0 && off <= GlobalShift.MaxOffset && d.foldable =>
-          Some((v, -off, d, true, order.map(GlobalRankRule.reverseOrder)))
-        case _ => None
-      }
-      shift.filter(_ => !GlobalRankRule.isLimitBounded(child))
-        .map { case (v, off, d, ign, planOrder) =>
-          val g = GlobalShiftPlan(planOrder, v, off, d, child,
-            ignoreNulls = ign)
-          Project(child.output :+
-            Alias(g.shiftAttr, name)(exprId = a.exprId,
-              qualifier = a.qualifier,
-              explicitMetadata = a.explicitMetadata),
-            g): LogicalPlan
-        }.getOrElse(w)
-  }
 }
 
 object GlobalShift {

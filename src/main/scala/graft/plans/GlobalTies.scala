@@ -3,9 +3,8 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, RowOrdering, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.classic.Strategy
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.LongType
 
 /** GLOBAL RANK WITH TIES — `rank()` / `dense_rank()` / `percent_rank()` /
@@ -95,60 +94,33 @@ object GlobalTiesPlan {
     GlobalTiesPlan(order, kinds, child, attrs)
   }
 
-  /** Single-kind convenience (the family rules and tests). */
+  /** Single-kind convenience (tests). */
   def apply(order: Seq[SortOrder], kind: TieKind,
             child: LogicalPlan): GlobalTiesPlan =
     apply(order, Seq(kind), child)
 }
 
 case class GlobalTiesPlan(order: Seq[SortOrder], kinds: Seq[TieKind],
-    child: LogicalPlan,
-    // constructor field (not a body val) so copy()/transform preserve the
-    // exprIds — a body val would mint fresh attributes on every tree copy
-    rankAttrs: Seq[AttributeReference])
-  extends UnaryNode {
-  /** head output attribute — single-kind callers */
-  def rankAttr: AttributeReference = rankAttrs.head
-  override def output: Seq[Attribute] = child.output ++ rankAttrs
-  override def producedAttributes
-  : org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(rankAttrs)
-  override def maxRows: Option[Long] = child.maxRows
+    child: LogicalPlan, rankAttrs: Seq[AttributeReference])
+  extends GlobalNode {
+  override def added: Seq[Attribute] = rankAttrs
+  override def exec(planned: SparkPlan): SparkPlan =
+    GlobalTiesExec(order, kinds, rankAttrs, planned)
   override protected def withNewChildInternal(newChild: LogicalPlan)
   : GlobalTiesPlan = copy(child = newChild)
 }
 
 case class GlobalTiesExec(order: Seq[SortOrder], kinds: Seq[TieKind],
                           rankAttrs: Seq[Attribute], child: SparkPlan)
-  extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output ++ rankAttrs
-
-  override def requiredChildDistribution
-  : Seq[org.apache.spark.sql.catalyst.plans.physical.Distribution] =
-    org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution(order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(order)
-  override def outputOrdering: Seq[SortOrder] = order
-  // per-partition 1:1 operator: rows never move, so the child's (range)
-  // partitioning survives — without this the default UnknownPartitioning
-  // makes EnsureRequirements re-shuffle every consumer that wants the
-  // same distribution (e.g. a second scan stacked on this one)
-  override def outputPartitioning
-  : org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
+  extends GlobalExec {
+  override def added: Seq[Attribute] = rankAttrs
 
   import GlobalTiesExec.Partial
 
   override protected def doExecute(): RDD[InternalRow] = {
     val orderLocal = order
     val childOutput = child.output
-    // same persist rationale as GlobalRankExec: the sorted child feeds two
-    // passes; the exchange is reused but the post-shuffle sort is not, and
-    // both passes must see the identical row order for the group
-    // structure to line up (rows copied — operators reuse UnsafeRow
-    // buffers)
-    val input = child.execute()
-      .mapPartitions(it => it.map(_.copy()), preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val input = persistedInput()
     // pass 1: constant-size partials per partition
     val partials = input.mapPartitions({ it =>
       val cmp = RowOrdering.create(orderLocal, childOutput)
@@ -305,7 +277,3 @@ object GlobalTiesExec {
   private[plans] case class Partial(count: Long, groups: Long, leadEq: Long,
       trailEq: Long, first: InternalRow, last: InternalRow)
 }
-
-// Planned by [[GlobalRankStrategy]] — the rank family (row_number, rank,
-// dense_rank) shares one strategy, so its one injection in
-// GraftExtensions covers all three.

@@ -28,7 +28,7 @@ private[graft] object RelWindowQueries {
         round(col("value") * 1000).cast("long")).as("v"))
 
   /** `ROWS UNBOUNDED PRECEDING .. CURRENT ROW` over the (t, event_id)
-    * total order. GlobalScanRule rewrites this explicit-ROWS frame and
+    * total order. GlobalWindowRule rewrites this explicit-ROWS frame and
     * the default RANGE frame alike (RANGE emits tie groups their group
     * total — see `rel_running_range_total`). */
   private def prefixWindow: org.apache.spark.sql.expressions.WindowSpec =
@@ -39,7 +39,7 @@ private[graft] object RelWindowQueries {
         org.apache.spark.sql.expressions.Window.currentRow)
 
   /** `ROWS k PRECEDING .. CURRENT ROW` over the same (t, event_id) total
-    * order — the bounded sliding frame GlobalFrameRule rewrites into the
+    * order — the bounded sliding frame GlobalWindowRule rewrites into the
     * boundary-seeded GlobalFrame operator. */
   private def slidingWindow(k: Int)
   : org.apache.spark.sql.expressions.WindowSpec = slidingBetween(-k, 0)
@@ -158,7 +158,7 @@ private[graft] object RelWindowQueries {
         |FROM events""".stripMargin),
 
     // Global rank() WITH TIES, written as the textbook un-partitioned
-    // window — rewritten by GlobalRankRule into the boundary-chained
+    // window — rewritten by GlobalWindowRule into the boundary-chained
     // GlobalTies operator (tie groups span range partitions; the driver
     // chains first/last boundary rows), so the plan has no
     // single-partition stage. Date-granular order guarantees dense tie
@@ -230,7 +230,7 @@ private[graft] object RelWindowQueries {
         |FROM e""".stripMargin),
 
     // first_value() — the globally first order's price attached to every
-    // row. GlobalEdgeRule plans this as GlobalEdge: the value is spliced
+    // row. GlobalWindowRule plans this as GlobalEdge: the value is spliced
     // from per-partition head partials on the driver (one single-column
     // row), never a single-partition window. Unique (date, key) order
     // keeps the oracle deterministic. Census-pinned.
@@ -479,7 +479,7 @@ private[graft] object RelWindowQueries {
 
     // Running revenue, written in the TEXTBOOK single-partition window
     // form — and rewritten to the distributed GlobalScan by
-    // GlobalScanRule (injected by GraftExtensions.inject, which builds
+    // GlobalWindowRule (injected by GraftExtensions.inject, which builds
     // every Bench/Verify/Explain/test session), so the rule's value parity
     // is proven by the oracle gate itself, not just specs. On a session
     // without the extensions the query still runs correctly as a plain
@@ -510,7 +510,7 @@ private[graft] object RelWindowQueries {
 
     // The remaining prefix-aggregate frames over a global order — each in
     // the textbook single-partition window form, each rewritten by
-    // GlobalScanRule into the two-pass distributed scan (PlanAuditSpec's
+    // GlobalWindowRule into the two-pass distributed scan (PlanAuditSpec's
     // census pins it). Value in milli-units as long (exact integers end
     // to end); non-'error' gate injects real NULLs so the SQL null
     // semantics (counts never null, min/max/avg null until the first
@@ -608,7 +608,7 @@ private[graft] object RelWindowQueries {
 
     // SEVERAL running aggregates in ONE window — the everyday dashboard
     // shape, written as one select so the analyzer places all three in a
-    // single multi-expression Window node. GlobalScanRule fuses that
+    // single multi-expression Window node. GlobalWindowRule fuses that
     // node into ONE GlobalScan computing every aggregate in a single
     // pair of passes over one persisted input (census-pinned: one
     // GlobalScan, one exchange, no Window).
@@ -637,7 +637,7 @@ private[graft] object RelWindowQueries {
         |FROM e""".stripMargin),
 
     // Running sum over an INTEGER column — the common analyzed shape
-    // `Sum(Cast(int -> long))`. GlobalScanRule widens p_size below the
+    // `Sum(Cast(int -> long))`. GlobalWindowRule widens p_size below the
     // scan, so the everyday `sum(int_col) OVER (ORDER BY ...)` plans as
     // the distributed two-pass scan too, not a single-partition window
     // (census-pinned). Result type stays the native window's long.
@@ -678,7 +678,7 @@ private[graft] object RelWindowQueries {
     // The DEFAULT window frame — `agg(v) OVER (ORDER BY sec)` with no
     // frame clause, which the analyzer resolves to RANGE UNBOUNDED
     // PRECEDING .. CURRENT ROW: every peer (order tie — here, all events
-    // in one second) carries the tie GROUP's total. GlobalScanRule
+    // in one second) carries the tie GROUP's total. GlobalWindowRule
     // rewrites this shape too (peer-group emission + driver boundary
     // chain for groups spanning partitions); both aggregates fuse into
     // one scan over one range sort. Census-pinned: one GlobalScan, no
@@ -753,7 +753,7 @@ private[graft] object RelWindowQueries {
         |FROM orders""".stripMargin),
 
     // Row-to-row delta over the global event order — the textbook
-    // un-partitioned lag(1), rewritten by GlobalShiftRule into the
+    // un-partitioned lag(1), rewritten by GlobalWindowRule into the
     // boundary-row GlobalShift operator (each partition receives the |n|
     // values adjacent to its range boundary; no single-partition stage).
     // Census-pinned in PlanAuditSpec.
@@ -793,7 +793,7 @@ private[graft] object RelWindowQueries {
 
     // Previous VALID reading — `lag(v, 1) IGNORE NULLS`: the most recent
     // non-null value strictly before each event (error events carry null
-    // v). GlobalShiftRule plans it distributed: the boundary ships each
+    // v). GlobalWindowRule plans it distributed: the boundary ships each
     // partition's last NON-NULL value and the ring advances only on
     // non-nulls, so arbitrarily long error runs cost nothing.
     Query("rel_prev_valid_value", (s, dir) =>
@@ -838,7 +838,7 @@ private[graft] object RelWindowQueries {
     // Trailing 100-event moving sum + count over the global event order —
     // `ROWS BETWEEN 99 PRECEDING AND CURRENT ROW` with no PARTITION BY,
     // the bounded-frame window Spark plans as a single-partition
-    // WindowExec. GlobalFrameRule rewrites it into the boundary-seeded
+    // WindowExec. GlobalWindowRule rewrites it into the boundary-seeded
     // GlobalFrame operator: each partition receives the 99 value rows
     // adjacent to its range boundary and slides a ring buffer — both
     // aggregates O(1)/row (enter/exit deltas), both fused into ONE node.
@@ -896,7 +896,7 @@ private[graft] object RelWindowQueries {
     // Running total AND trailing peak in ONE window — the everyday mixed
     // dashboard (prefix aggregate + bounded frame over the same order).
     // The analyzer groups both into one Window node (same partition/order
-    // spec, different frames); GlobalFrameRule splits it into GlobalFrame
+    // spec, different frames); GlobalWindowRule splits it into GlobalFrame
     // stacked on GlobalScan over ONE shared range sort (both operators
     // are 1:1 and partitioning/order-preserving, so EnsureRequirements
     // inserts nothing between them). Census-pinned: one exchange, one
@@ -926,7 +926,7 @@ private[graft] object RelWindowQueries {
     // ROW` over unix micros). Frame membership is decided by KEY
     // DISTANCE, not row position (ties share their frame, sparse regions
     // shrink it), which is exactly what GlobalFrame's row splice cannot
-    // express: GlobalRangeRule plans the key-spliced GlobalRange
+    // express: GlobalWindowRule plans the key-spliced GlobalRange
     // operator instead — boundary rows within 5 s of each partition's
     // edge key, spliced on the driver, no single-partition stage.
     // Census-pinned. Results depend only on t, so ties keep the output
@@ -957,7 +957,7 @@ private[graft] object RelWindowQueries {
 
     // Interval value-RANGE frame DIRECTLY over the timestamp ORDER BY —
     // `RANGE BETWEEN INTERVAL '5' SECOND PRECEDING AND CURRENT ROW`
-    // with no manual epoch conversion: GlobalRangeRule normalizes the
+    // with no manual epoch conversion: GlobalWindowRule normalizes the
     // day-time interval bound to micros and keeps the timestamp key in
     // its physical long-micros form (a seconds cast would destroy
     // sub-second precision). Same key-spliced plan as
@@ -1106,7 +1106,7 @@ private[graft] object RelWindowQueries {
     // operator; GlobalHalfRangeRule decomposes it algebraically into
     // the running RANGE prefix minus the bounded [-5s+1, 0] gap frame
     // (null-faithful via count guards, null order keys via the IsNull
-    // branch), and the family rules fuse all four helper members onto
+    // branch), and GlobalWindowRule fuses all four helper members onto
     // ONE shared range sort — no single-partition stage, no new
     // physical operator (plans/GlobalHalfRange.scala).
     Query("rel_range_lagged_total", (s, dir) => {

@@ -90,7 +90,7 @@ class GlobalRankSpec extends AnyFunSuite {
     assert(renamed.collect().map(_.getString(0)).toSet == Set("b", "e"))
     // the guard walk itself, on the PRE-pushdown shape
     // Filter(pos <= 2, Project(pos := rn, Window(...))) — no rewrite
-    val keptWindow = graft.plans.GlobalRankRule(
+    val keptWindow = graft.plans.GlobalWindowRule(
       renamed.queryExecution.analyzed).collectFirst {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
     assert(keptWindow.isDefined)

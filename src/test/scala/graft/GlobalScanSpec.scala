@@ -452,4 +452,18 @@ class GlobalScanSpec extends AnyFunSuite {
       assert(got == Seq(Long.MaxValue, Long.MinValue))
     } finally spark.conf.set("spark.sql.ansi.enabled", was)
   }
+
+  test("a running sum over a LIMIT-bounded input keeps WindowExec") {
+    import org.apache.spark.sql.expressions.Window
+    // at most 10 rows at any data scale: the two-pass scan's extra jobs
+    // and persist would be pure overhead over a one-task window
+    val top = spark.range(1000).orderBy("id").limit(10)
+      .withColumn("rs", sum(col("id")).over(Window.orderBy(col("id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val p = top.queryExecution.executedPlan.toString
+    assert(p.contains("Window"), p)
+    assert(!p.contains("GlobalScan"), p)
+    assert(top.orderBy("id").select("rs").as[Long].collect().toSeq ==
+      (0L until 10L).scanLeft(0L)(_ + _).drop(1))
+  }
 }

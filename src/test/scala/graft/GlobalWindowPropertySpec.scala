@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +17,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GlobalWindowPropertySpec extends AnyFunSuite {
   import TestSpark.spark
-  import spark.implicits._
 
   private type WS = org.apache.spark.sql.expressions.WindowSpec
   private val w = org.apache.spark.sql.expressions.Window.orderBy(col("t"))

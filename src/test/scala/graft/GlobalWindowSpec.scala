@@ -13,7 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * WindowExec (see `assertNative`). */
 class GlobalWindowSpec extends AnyFunSuite {
   import TestSpark.spark
-  import spark.implicits._
 
   private val gw = org.apache.spark.sql.expressions.Window
     .orderBy(col("t"), col("id"))

@@ -115,15 +115,38 @@ class SessionSurfaceSpec extends AnyFunSuite {
   }
 
   test("a rewrite is switched off per session through excludedRules") {
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("id"))
-    def plan(s: org.apache.spark.sql.SparkSession) = s.range(100)
-      .withColumn("r", row_number().over(w))
-      .queryExecution.executedPlan.toString
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.orderBy(col("id"))
+    val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // one window per operator family, a half-bounded value range and a
+    // mixed window
+    val shapes = Seq(
+      "row_number" -> Seq(row_number().over(w)),
+      "running sum" -> Seq(sum("id").over(running)),
+      "lag" -> Seq(lag("id", 1).over(w)),
+      "first_value" -> Seq(first("id").over(running)),
+      "rows 3 preceding" -> Seq(sum("id").over(w.rowsBetween(-3, 0))),
+      "value range" -> Seq(sum("id").over(w.rangeBetween(-3, 0))),
+      "half-bounded range" ->
+        Seq(sum("id").over(w.rangeBetween(Window.unboundedPreceding, -2))),
+      "mixed" -> Seq(rank().over(w), sum("id").over(running),
+        lag("id", 1).over(w)))
+    def plan(s: org.apache.spark.sql.SparkSession,
+             shape: Seq[org.apache.spark.sql.Column]) =
+      s.range(100).select(col("id") +: shape: _*)
+        .queryExecution.executedPlan.toString
     val off = spark.newSession()
     off.conf.set("spark.sql.optimizer.excludedRules",
-      graft.plans.GlobalRankRule.ruleName)
-    assert(plan(off).contains("Window") && !plan(off).contains("GlobalRank"))
-    assert(plan(spark).contains("GlobalRank"))
+      Seq(graft.plans.GlobalWindowRule, graft.plans.GlobalHalfRangeRule)
+        .map(_.ruleName).mkString(","))
+    shapes.foreach { case (name, shape) =>
+      val native = plan(off, shape)
+      assert(native.contains("Window") && !native.contains("Global"),
+        s"$name: $native")
+      val rewritten = plan(spark, shape)
+      assert(rewritten.contains("Global") && !rewritten.contains("Window"),
+        s"$name: $rewritten")
+    }
   }
 
   test("building an events-backed registry query leaves the session's " +

@@ -40,7 +40,6 @@ class ThetaSketchSpec extends AnyFunSuite {
     // union — so its very correctness pass proves this; here the claim
     // is pinned at the sketch-content level for a different k to rule
     // out coincidence
-    import spark.implicits._
     val base = SparkEntry.events(spark, sf)
       .where(col("event_type").isin("click", "purchase"))
       .select(to_date(col("ts")).as("day"),
@@ -242,7 +241,6 @@ class ThetaSketchSpec extends AnyFunSuite {
 
   test("rolling-window sketch: merged per-day partials equal the " +
     "from-scratch window sketch, and estimates track exact WAU") {
-    import spark.implicits._
     // the sliding-window lossless-merge identity at sketch-content
     // level, with k=32 so truncation actually happens at sf0.001
     val k = 32
