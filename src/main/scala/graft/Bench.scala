@@ -186,7 +186,7 @@ object Bench {
         if (node.path("sf").asText() != sfDir) None
         else {
           import scala.jdk.CollectionConverters._
-          Some(node.path("queries").fields().asScala
+          Some(node.path("queries").properties().asScala
             .map(e => e.getKey -> e.getValue.asDouble())
             .filter(_._2 > 0).toMap)
         }

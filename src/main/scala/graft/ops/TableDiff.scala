@@ -56,7 +56,8 @@ object TableDiff {
     // (an empty IN-list doesn't analyze; use a constant-false filter)
     val bkt = (df: DataFrame) =>
       if (changed.isEmpty) df.where(lit(false))
-      else df.where(pmod(col("key"), lit(buckets.toLong)).isin(changed: _*))
+      else df.where(pmod(col("key"), lit(buckets.toLong))
+        .isin(changed.toIndexedSeq: _*))
     bkt(oldDf).select(col("key").as("k1"), col("val").as("v1"))
       .join(bkt(newDf).select(col("key").as("k2"), col("val").as("v2")),
         col("k1") === col("k2"), "full_outer")

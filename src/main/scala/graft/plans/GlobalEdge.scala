@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, GenericInternalRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 
@@ -17,23 +17,18 @@ import org.apache.spark.sql.execution.SparkPlan
   * even though the value each row needs is either (a) a SINGLE globally
   * fixed row — the first / n-th qualifying row of the whole ordering —
   * or (b) a row at the END of the current frame, reachable from
-  * per-partition boundary state. Both reduce to the family's partials
-  * mechanism:
-  *
-  *   1. the input is total-ordered by range partitioning (planned sort);
-  *   2. pass 1 ships per partition: row count, the first min(n, present)
-  *      qualifying values with their local positions ([[EdgeKind.At]]),
-  *      the last non-null value ([[EdgeKind.LastNonNull]]), and — for the
-  *      default RANGE frame — first/last row copies plus the leading
-  *      tie-run's length and edge values, so a peer group spanning
-  *      partitions can be completed without seeing its interior;
-  *   3. the driver splices the n-th qualifying row's GLOBAL position and
-  *      value (At), each partition's carried-in "latest non-null"
-  *      (LastNonNull), and the trailing-group completion chain (RANGE) —
-  *      O(numPartitions) work on single-column values — and broadcasts;
-  *   4. pass 2 streams each partition once (ROWS) or buffers one peer
-  *      group at a time (RANGE — the same bounded buffer WindowExec keeps
-  *      for a RANGE frame, distributed instead of all rows in one task).
+  * per-partition boundary state. In the [[GlobalExec]] protocol pass 1
+  * ships per partition: row count, the first min(n, present) qualifying
+  * values with their local positions ([[EdgeKind.At]]), the last non-null
+  * value ([[EdgeKind.LastNonNull]]), and — for the default RANGE frame —
+  * first/last row copies plus the leading tie-run's length and edge
+  * values, so a peer group spanning partitions can be completed without
+  * seeing its interior. The driver splices the n-th qualifying row's
+  * GLOBAL position and value (At), each partition's carried-in "latest
+  * non-null" (LastNonNull), and the trailing-group completion chain
+  * (RANGE). Pass 2 streams each partition once (ROWS) or buffers one peer
+  * group at a time (RANGE — the same bounded buffer WindowExec keeps for
+  * a RANGE frame, distributed instead of all rows in one task).
   *
   * The kinds cover every analyzer shape of the three functions over the
   * running frames (UNBOUNDED PRECEDING .. CURRENT ROW, ROWS or the
@@ -109,13 +104,14 @@ case class GlobalEdgeExec(order: Seq[SortOrder], kind: EdgeKind,
   extends GlobalExec {
   override def added: Seq[Attribute] = edgeAttr :: Nil
 
-  import GlobalEdgeExec.{EdgeChain, EdgePartial}
+  import GlobalEdgeExec.{EdgeCarry, EdgeChain, EdgePartial}
 
   override protected def doExecute(): RDD[InternalRow] = {
     val ordinal = child.output.indexWhere(_.exprId == input.exprId)
     require(ordinal >= 0, s"edge column $input not in child output")
     val valueType = input.dataType
     val valueNullable = input.nullable
+    val valueCol = Seq(BoundReference(ordinal, valueType, valueNullable))
     val theKind = kind // stable locals for task closures
     val isRange = range
     val orderLocal = order
@@ -130,12 +126,10 @@ case class GlobalEdgeExec(order: Seq[SortOrder], kind: EdgeKind,
       case _ => false
     }
     val wantLastNonNull = theKind == EdgeKind.LastNonNull
-    val inputRdd = persistedInput()
     // pass 1: constant-size partials per partition (at most `need`
     // single-column values plus two boundary rows)
-    val partials = inputRdd.mapPartitions({ it =>
-      val proj = UnsafeProjection.create(
-        Seq(BoundReference(ordinal, valueType, valueNullable)))
+    twoPass { (_, it) =>
+      val proj = UnsafeProjection.create(valueCol)
       val cmp = if (isRange) RowOrdering.create(orderLocal, childOutput)
         else null
       var count = 0L
@@ -167,102 +161,92 @@ case class GlobalEdgeExec(order: Seq[SortOrder], kind: EdgeKind,
         if (wantLastNonNull && !isNull) lastNonNull = proj(row).copy()
         count += 1L
       }
-      Iterator.single(EdgePartial(count, headPos.toArray, headVal.toArray,
-        lastNonNull, first, prev, leadEq, leadLastVal, leadLastNonNull))
-    }, preservesPartitioning = true).collect()
-    val nP = partials.length
-    val rowOffsets = partials.map(_.count).scanLeft(0L)(_ + _)
-    // driver: splice the n-th qualifying row's global position + value.
-    // A partial's head array shorter than `need` holds ALL that
-    // partition's qualifying rows (the cap is min(n, present)), so the
-    // walk never misses one. No n-th row in the corpus -> threshold
-    // MaxValue: every row emits NULL (the frame never contains it).
-    var atThreshold = Long.MaxValue
-    var atValue: UnsafeRow = null
-    theKind match {
-      case EdgeKind.At(n, _) =>
-        var qualSoFar = 0L
-        var q = 0
-        var found = false
-        while (!found && q < nP) {
-          val h = partials(q)
-          val want = n - qualSoFar
-          if (h.headVal.length >= want) {
-            atThreshold = rowOffsets(q) + h.headPos(want.toInt - 1) + 1L
-            atValue = h.headVal(want.toInt - 1)
-            found = true
-          } else {
-            qualSoFar += h.headVal.length
-            q += 1
-          }
-        }
-      case _ =>
-    }
-    // driver: per-partition carried-in "latest non-null" — the nearest
-    // earlier partition that saw one (nulls-only partitions are
-    // transparent)
-    val carryNonNull = new Array[UnsafeRow](nP)
-    if (wantLastNonNull) {
-      var latest: UnsafeRow = null
-      var p = 0
-      while (p < nP) {
-        carryNonNull(p) = latest
-        if (partials(p).lastNonNull != null) latest = partials(p).lastNonNull
-        p += 1
-      }
-    }
-    // RANGE: trailing-group completion per partition — chain the leading
-    // runs of later partitions whose rows tie this partition's last row
-    // (GlobalTiesExec's boundary chain, applied to edge values). The LAST
-    // chained partition's leading-run edge is the group's true edge.
-    val chains = new Array[EdgeChain](nP)
-    if (isRange) {
-      val cmp = RowOrdering.create(orderLocal, childOutput)
-      var p = 0
-      while (p < nP) {
-        var len = 0L
-        var lastVal: UnsafeRow = null
-        var lastNonNull: UnsafeRow = null
-        val pp = partials(p)
-        if (pp.count > 0L) {
-          var q = p + 1; var chained = true
-          while (chained && q < nP) {
-            val pq = partials(q)
-            if (pq.count == 0L) q += 1 // empty partitions are transparent
-            else if (cmp.compare(pp.last, pq.first) == 0) {
-              len += pq.leadEq
-              lastVal = pq.leadLastVal
-              if (pq.leadLastNonNull != null) lastNonNull = pq.leadLastNonNull
-              // the chain continues past q only if ALL of q is one group
-              chained = pq.leadEq == pq.count
+      EdgePartial(count, headPos.toArray, headVal.toArray, lastNonNull,
+        first, prev, leadEq, leadLastVal, leadLastNonNull)
+    } { partials =>
+      val nP = partials.length
+      val rowOffsets = partials.map(_.count).scanLeft(0L)(_ + _)
+      // driver: splice the n-th qualifying row's global position + value.
+      // A partial's head array shorter than `need` holds ALL that
+      // partition's qualifying rows (the cap is min(n, present)), so the
+      // walk never misses one. No n-th row in the corpus -> threshold
+      // MaxValue: every row emits NULL (the frame never contains it).
+      var atThreshold = Long.MaxValue
+      var atValue: UnsafeRow = null
+      theKind match {
+        case EdgeKind.At(n, _) =>
+          var qualSoFar = 0L
+          var q = 0
+          var found = false
+          while (!found && q < nP) {
+            val h = partials(q)
+            val want = n - qualSoFar
+            if (h.headVal.length >= want) {
+              atThreshold = rowOffsets(q) + h.headPos(want.toInt - 1) + 1L
+              atValue = h.headVal(want.toInt - 1)
+              found = true
+            } else {
+              qualSoFar += h.headVal.length
               q += 1
-            } else chained = false
+            }
           }
-        }
-        chains(p) = EdgeChain(len, lastVal, lastNonNull)
-        p += 1
+        case _ =>
       }
-    }
-    val bc = inputRdd.sparkContext.broadcast(
-      (rowOffsets, atThreshold, atValue, carryNonNull, chains))
-    // pass 2: emit through an UnsafeProjection (created per task — it
-    // holds codegen state); one scratch row per task, reused (the
-    // projection copies values into its own buffer)
-    val types = output.map(_.dataType).toArray
-    inputRdd.mapPartitionsWithIndex({ (pid, it) =>
-      val (rowOff, threshold, value, carries, chainArr) = bc.value
-      val base = rowOff(pid)
-      val nCols = types.length
-      val proj = UnsafeProjection.create(types)
-      val valueProj = UnsafeProjection.create(
-        Seq(BoundReference(ordinal, valueType, valueNullable)))
-      val out = new GenericInternalRow(nCols)
+      // driver: per-partition carried-in "latest non-null" — the nearest
+      // earlier partition that saw one (nulls-only partitions are
+      // transparent)
+      val carryNonNull = new Array[UnsafeRow](nP)
+      if (wantLastNonNull) {
+        var latest: UnsafeRow = null
+        var p = 0
+        while (p < nP) {
+          carryNonNull(p) = latest
+          if (partials(p).lastNonNull != null) latest = partials(p).lastNonNull
+          p += 1
+        }
+      }
+      // RANGE: trailing-group completion per partition — chain the leading
+      // runs of later partitions whose rows tie this partition's last row
+      // (GlobalTiesExec's boundary chain, applied to edge values). The LAST
+      // chained partition's leading-run edge is the group's true edge.
+      val chains = new Array[EdgeChain](nP)
+      if (isRange) {
+        val cmp = RowOrdering.create(orderLocal, childOutput)
+        var p = 0
+        while (p < nP) {
+          var len = 0L
+          var lastVal: UnsafeRow = null
+          var lastNonNull: UnsafeRow = null
+          val pp = partials(p)
+          if (pp.count > 0L) {
+            var q = p + 1; var chained = true
+            while (chained && q < nP) {
+              val pq = partials(q)
+              if (pq.count == 0L) q += 1 // empty partitions are transparent
+              else if (cmp.compare(pp.last, pq.first) == 0) {
+                len += pq.leadEq
+                lastVal = pq.leadLastVal
+                if (pq.leadLastNonNull != null) lastNonNull = pq.leadLastNonNull
+                // the chain continues past q only if ALL of q is one group
+                chained = pq.leadEq == pq.count
+                q += 1
+              } else chained = false
+            }
+          }
+          chains(p) = EdgeChain(len, lastVal, lastNonNull)
+          p += 1
+        }
+      }
+      Array.tabulate(nP)(p => EdgeCarry(rowOffsets(p), atThreshold, atValue,
+        carryNonNull(p), chains(p)))
+    } { (carry, it, out) =>
+      val base = carry.rowOffset
+      val threshold = carry.threshold
+      val value = carry.atValue
+      val valueProj = UnsafeProjection.create(valueCol)
       def emit(row: InternalRow, edge: UnsafeRow): UnsafeRow = {
-        var j = 0
-        while (j < nCols - 1) { out.update(j, row.get(j, types(j))); j += 1 }
-        if (edge == null || edge.isNullAt(0)) out.setNullAt(nCols - 1)
-        else out.update(nCols - 1, edge.get(0, valueType))
-        proj(out)
+        out.setFrom(0, edge, valueType)
+        out(row)
       }
       if (!isRange) theKind match {
         case EdgeKind.At(_, _) =>
@@ -274,7 +258,7 @@ case class GlobalEdgeExec(order: Seq[SortOrder], kind: EdgeKind,
             emit(row, if (pos >= threshold) value else null)
           }
         case EdgeKind.LastNonNull =>
-          var latest = carries(pid)
+          var latest = carry.lastNonNull
           it.map { row =>
             if (!(valueNullable && row.isNullAt(ordinal)))
               latest = valueProj(row).copy()
@@ -290,14 +274,14 @@ case class GlobalEdgeExec(order: Seq[SortOrder], kind: EdgeKind,
         // the group-END edge; the partition's LAST group folds in the
         // driver-chained completion. Memory: the largest peer group —
         // the buffer WindowExec keeps for a RANGE frame, distributed.
-        val chain = chainArr(pid)
+        val chain = carry.chain
         val cmp2 = RowOrdering.create(orderLocal, childOutput)
         val peers = it.buffered
         val group = new scala.collection.mutable.ArrayBuffer[InternalRow]
         var groupEdge: UnsafeRow = null
         var gi = 0
         var pos = base // global 1-based position of the last consumed row
-        var latest = if (wantLastNonNull) carries(pid) else null
+        var latest = carry.lastNonNull
         new Iterator[InternalRow] {
           override def hasNext: Boolean = gi < group.length || peers.hasNext
           override def next(): InternalRow = {
@@ -337,7 +321,7 @@ case class GlobalEdgeExec(order: Seq[SortOrder], kind: EdgeKind,
           }
         }
       }
-    }, preservesPartitioning = true)
+    }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan)
@@ -363,6 +347,13 @@ object GlobalEdgeExec {
     * "no contribution"). */
   private[plans] case class EdgeChain(len: Long, lastVal: UnsafeRow,
       lastNonNull: UnsafeRow)
+
+  /** Per-partition carry: rows before the partition, the n-th qualifying
+    * row's global 1-based position (`threshold`, MaxValue when there is
+    * none) and value, the latest non-null value before the partition,
+    * and its trailing group's chain (RANGE only). */
+  private[plans] case class EdgeCarry(rowOffset: Long, threshold: Long,
+      atValue: UnsafeRow, lastNonNull: UnsafeRow, chain: EdgeChain)
 }
 
 object GlobalEdge {

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, GenericInternalRow, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.LongType
@@ -22,22 +22,15 @@ import org.apache.spark.sql.types.LongType
   * neighborhood of at most hi-lo+1 rows. After range partitioning that
   * neighborhood is either local or within max(|lo|, |hi|) rows of a
   * partition boundary — the locality GlobalShift exploits for one offset
-  * row, generalized to a frame:
-  *
-  *   1. the input is total-ordered by range partitioning (planned sort);
-  *   2. pass 1 captures each partition's LAST `before` and FIRST `after`
-  *      value rows (before = max(0,-min lo), after = max(0, max hi)) —
-  *      a bounded number of narrow rows per partition to the driver;
-  *   3. the driver splices, per partition, the exact rows preceding its
-  *      first row and following its last row (walking across short or
-  *      empty partitions — a captured array shorter than requested means
-  *      that partition was captured whole, so the walk never skips an
-  *      in-range row), and broadcasts them;
-  *   4. pass 2 streams each partition once: preceding boundary ++ local
-  *      rows ++ following boundary push through a bounded ring buffer;
-  *      a local row is emitted once the stream has advanced max(hi,0)
-  *      rows past it (a pending queue of at most that many rows), so
-  *      every frame the emission reads is complete.
+  * row, generalized to a frame. In the [[GlobalExec]] protocol pass 1
+  * captures each partition's LAST `before` and FIRST `after` value rows
+  * (before = max(0,-min lo), after = max(0, max hi)), the driver splices
+  * the exact rows preceding each partition's first row and following its
+  * last ([[Boundary]]), and pass 2 streams preceding boundary ++ local
+  * rows ++ following boundary through a bounded ring buffer: a local row
+  * is emitted once the stream has advanced max(hi,0) rows past it (a
+  * pending queue of at most that many rows), so every frame the emission
+  * reads is complete.
   *
   * Per-row cost, per aggregate: count / count(*) / legacy sum are O(1)
   * (per-spec enter/exit pointers — every stream index enters and leaves
@@ -156,85 +149,24 @@ case class GlobalFrameExec(order: Seq[SortOrder], specs: Seq[FrameSpec],
     // slot the newest push just reused
     val width = after + before + 2
 
-    val input = persistedInput()
-
     // pass 1: each partition's FIRST `after` and LAST `before` value
     // rows, in row order — narrow rows only
-    val partials: Array[(Array[UnsafeRow], Array[UnsafeRow])] =
-      input.mapPartitions({ it =>
-        val proj = UnsafeProjection.create(bounds)
-        val head = new scala.collection.mutable.ArrayBuffer[UnsafeRow]()
-        val ring = new Array[UnsafeRow](math.max(before, 1))
-        var count = 0L
-        it.foreach { row =>
-          val r = proj(row).copy()
-          if (count < after) head += r
-          if (before > 0) ring((count % before).toInt) = r
-          count += 1L
-        }
-        val m = math.min(count, before.toLong).toInt
-        val tail = new Array[UnsafeRow](m)
-        var j = 0
-        while (j < m) {
-          tail(j) = ring(((count - m + j) % before).toInt); j += 1
-        }
-        Iterator.single((head.toArray, tail))
-      }, preservesPartitioning = true).collect()
-
-    // driver: per partition, the `before` rows immediately preceding its
-    // first row and the `after` rows immediately following its last row,
-    // walking across partitions shorter than the request (a captured
-    // array shorter than requested means that partition was captured
-    // WHOLE, so skipping past it never loses an in-range row). Spliced
-    // arrays shorter than requested mean the corpus genuinely ends
-    // within range — pass 2 reads that as "frame truncated at the edge".
-    val parts = partials.length
-    val preceding = new Array[Array[UnsafeRow]](parts)
-    val following = new Array[Array[UnsafeRow]](parts)
-    var p = 0
-    while (p < parts) {
-      val acc = new scala.collection.mutable.ArrayDeque[UnsafeRow]()
-      var need = before
-      var q = p - 1
-      while (need > 0 && q >= 0) {
-        val t = partials(q)._2
-        val take = math.min(need, t.length)
-        var j = take - 1
-        while (j >= 0) { acc.prepend(t(t.length - take + j)); j -= 1 }
-        need -= take
-        q -= 1
-      }
-      preceding(p) = acc.toArray
-      val fcc = new scala.collection.mutable.ArrayDeque[UnsafeRow]()
-      need = after
-      q = p + 1
-      while (need > 0 && q < parts) {
-        val t = partials(q)._1
-        val take = math.min(need, t.length)
-        var j = 0
-        while (j < take) { fcc.append(t(j)); j += 1 }
-        need -= take
-        q += 1
-      }
-      following(p) = fcc.toArray
-      p += 1
-    }
-    val bcPre = input.sparkContext.broadcast(preceding)
-    val bcPost = input.sparkContext.broadcast(following)
-
-    // pass 2: one streaming pass per partition. Stream = preceding
-    // boundary ++ local rows ++ following boundary, through a ring of
-    // the last `width` value rows; a local row emits once the stream is
-    // `delay` pushes past it (pending queue), so its widest frame is
-    // fully pushed.
-    val types = output.map(_.dataType).toArray
-    input.mapPartitionsWithIndex({ (pid, it) =>
-      val boundary = bcPre.value(pid)
-      val lookahead = bcPost.value(pid)
-      val nCols = types.length
-      val outProj = UnsafeProjection.create(types)
+    twoPass { (_, it) =>
+      val proj = UnsafeProjection.create(bounds)
+      Boundary.capture(it.map(row => proj(row)), before, after)
+    } { parts =>
+      // carry: the `before` rows immediately preceding each partition's
+      // first row and the `after` rows following its last. Shorter than
+      // requested means the corpus genuinely ends within range — pass 2
+      // reads that as "frame truncated at the edge".
+      Boundary.preceding(parts.map(_._2), before)
+        .zip(Boundary.following(parts.map(_._1), after))
+    } { case ((boundary, lookahead), it, out) =>
+      // one streaming pass: preceding boundary ++ local rows ++ following
+      // boundary, through a ring of the last `width` value rows; a local
+      // row emits once the stream is `delay` pushes past it (pending
+      // queue), so its widest frame is fully pushed.
       val valueProj = UnsafeProjection.create(bounds)
-      val out = new GenericInternalRow(nCols)
       val ring = new Array[UnsafeRow](width)
       var last = -1L // stream index of the most recent push
       var emitIdx = -1L // stream index of the most recent emission
@@ -275,12 +207,8 @@ case class GlobalFrameExec(order: Seq[SortOrder], specs: Seq[FrameSpec],
 
       def emit(row: InternalRow): UnsafeRow = {
         emitIdx += 1L
-        val base = nCols - nSpecs
-        var j = 0
-        while (j < base) { out.update(j, row.get(j, types(j))); j += 1 }
         var i = 0
         while (i < nSpecs) {
-          val col = base + i
           // frame of this emission in stream space, truncated to what
           // exists: [loIdx, hiIdx] (empty when hiIdx < loIdx — frames
           // not covering the current row, at the corpus edges)
@@ -335,12 +263,11 @@ case class GlobalFrameExec(order: Seq[SortOrder], specs: Seq[FrameSpec],
           }
           kinds(i) match {
             case ScanKind.Rows =>
-              out.update(col, math.max(0L, hiIdx - loIdx + 1L))
+              out.setLong(i, math.max(0L, hiIdx - loIdx + 1L))
             case ScanKind.Count =>
-              out.update(col, cnt(i))
+              out.setLong(i, cnt(i))
             case ScanKind.Sum if !ansis(i) =>
-              if (cnt(i) == 0L) out.setNullAt(col)
-              else out.update(col, wsum(i))
+              out.update(i, if (cnt(i) == 0L) null else wsum(i))
             case ScanKind.Sum => // ANSI: exact in-order re-fold — must
               // raise exactly when the native window's in-order frame
               // partial overflows (enter/exit deltas could overflow the
@@ -354,7 +281,7 @@ case class GlobalFrameExec(order: Seq[SortOrder], specs: Seq[FrameSpec],
                 }
                 idx += 1L
               }
-              if (any) out.update(col, s) else out.setNullAt(col)
+              out.update(i, if (any) s else null)
             case ScanKind.Avg =>
               // native parity: window Average accumulates the frame in
               // Double, in frame order, recomputed per slide
@@ -366,16 +293,16 @@ case class GlobalFrameExec(order: Seq[SortOrder], specs: Seq[FrameSpec],
                 if (!r.isNullAt(i)) { d += r.getLong(i); c += 1L }
                 idx += 1L
               }
-              if (c > 0L) out.update(col, d / c) else out.setNullAt(col)
+              out.update(i, if (c > 0L) d / c else null)
             case _ => // Min | Max: expire, then read the front
               val dq = deques(i)
               while (dq.nonEmpty && dq.head._1 < loIdx) dq.removeHead()
-              if (dq.isEmpty || dq.head._1 > hiIdx) out.setNullAt(col)
-              else out.update(col, dq.head._2)
+              out.update(i,
+                if (dq.isEmpty || dq.head._1 > hiIdx) null else dq.head._2)
           }
           i += 1
         }
-        outProj(out)
+        out(row)
       }
 
       boundary.foreach(push)
@@ -404,7 +331,7 @@ case class GlobalFrameExec(order: Seq[SortOrder], specs: Seq[FrameSpec],
         }
         drained ++ pending.iterator.map(emit)
       }
-    }, preservesPartitioning = true)
+    }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan)

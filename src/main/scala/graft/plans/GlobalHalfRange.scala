@@ -2,12 +2,12 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending,
   Attribute, Coalesce, EqualTo, Expression, If, Literal, NamedExpression,
-  RangeFrame, SortOrder, SpecifiedWindowFrame, Subtract, UnaryMinus,
+  RangeFrame, SortOrder, SpecifiedWindowFrame, Subtract,
   UnboundedPreceding, WindowExpression, WindowSpecDefinition, Add,
-  CurrentRow, IntegerLiteral}
+  CurrentRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Window}
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.LongType
 
 /** HALF-BOUNDED VALUE-RANGE FRAMES by ALGEBRAIC DECOMPOSITION —
   * `sum/count(x) OVER (ORDER BY k RANGE BETWEEN UNBOUNDED PRECEDING AND
@@ -56,23 +56,10 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 object GlobalHalfRangeRule
   extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
 
-  /** Literal RANGE offset in the key's long domain (the parser may leave
-    * `UnaryMinus` unfolded). */
-  private object Off {
-    def unapply(e: Expression): Option[Long] = e match {
-      case Literal(v: Long, LongType) if v != Long.MinValue => Some(v)
-      case IntegerLiteral(v) => Some(v.toLong)
-      case Literal(v: Short, ShortType) => Some(v.toLong)
-      case Literal(v: Byte, ByteType) => Some(v.toLong)
-      case UnaryMinus(Off(n), _) if n != Long.MinValue => Some(-n)
-      case _ => None
-    }
-  }
-
-  private def integralKey(e: Expression): Boolean = e.dataType match {
-    case LongType | IntegerType | ShortType | ByteType => true
-    case _ => false
-  }
+  // the window rule's offset parser; its interval forms never match here,
+  // since an interval offset needs a timestamp key and parse admits only
+  // integral keys
+  import GlobalWindowRule.{RangeOffset, integral}
 
   /** (alias, order, key attribute, signed offset y != 0, the aggregate) */
   private case class Half(alias: Alias, order: Seq[SortOrder],
@@ -81,9 +68,11 @@ object GlobalHalfRangeRule
   private def parse(e: NamedExpression): Option[Half] = e match {
     case a @ Alias(WindowExpression(agg: AggregateExpression,
           WindowSpecDefinition(Seq(), Seq(so),
-            SpecifiedWindowFrame(RangeFrame, UnboundedPreceding, Off(y)))),
+            SpecifiedWindowFrame(RangeFrame, UnboundedPreceding,
+              RangeOffset(y)))),
         _) if y != 0L && so.direction == Ascending &&
-          so.child.isInstanceOf[Attribute] && integralKey(so.child) &&
+          so.child.isInstanceOf[Attribute] &&
+          (so.child.dataType == LongType || integral(so.child.dataType)) &&
           !agg.isDistinct && agg.filter.isEmpty =>
       agg.aggregateFunction match {
         // decimal sums are excluded outright, for two independent
@@ -113,7 +102,7 @@ object GlobalHalfRangeRule
       org.apache.spark.sql.catalyst.expressions.NamedExpression.newExprId)
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
-    case w @ Window(exprs, Seq(), orderSpec, child, hint)
+    case Window(exprs, Seq(), orderSpec, child, hint)
         if exprs.exists(parse(_).isDefined) =>
       val prefixFrame =
         SpecifiedWindowFrame(RangeFrame, UnboundedPreceding, CurrentRow)

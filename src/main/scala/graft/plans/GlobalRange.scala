@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Cast, GenericInternalRow, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Cast, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.LongType
@@ -18,30 +18,26 @@ import org.apache.spark.sql.types.LongType
   * [t + lo, t + hi] — including FOLLOWING peers when hi >= 0 (the SQL
   * `CURRENT ROW` upper bound in range mode means "last peer"). After
   * range partitioning, that neighborhood is either local or lies within
-  * value distance max(|lo|, |hi|) of a partition's edge KEY:
+  * value distance max(|lo|, |hi|) of a partition's edge KEY. In the
+  * [[GlobalExec]] protocol:
   *
-  *   1. the input is total-ordered by range partitioning (planned sort);
-  *   2. pass 1 captures, per partition, the HEAD rows with
-  *      key <= firstKey + max(hi) and the TAIL rows with
-  *      key >= lastKey + min(lo) — the only rows any other partition
-  *      can need. Both captures ship to the driver and are capped at
-  *      [[GlobalRange.MaxBoundary]] narrow rows (a neighborhood wider
-  *      than that means the range spans a plateau the size of a
-  *      partition — the operator throws loudly rather than shipping it);
-  *   3. the driver splices, per partition, the exact preceding rows with
-  *      key >= firstKey(p) + min(lo) and following rows with
-  *      key <= lastKey(p) + max(hi), walking across partitions that
-  *      qualify WHOLE (a capture covering its entire partition whose
-  *      rows all qualify passes the walk through — the same mechanism as
-  *      GlobalFrame's row splice, re-keyed by value), and broadcasts
-  *      them;
-  *   4. pass 2 streams each partition once: preceding ++ local ++
-  *      following push through a growable buffer of narrow (key, value)
-  *      rows; a local row is emitted once a pushed key exceeds
-  *      t + max(hi) (sorted input: its widest frame is then complete).
-  *      Per spec, frame endpoints advance monotonically (enter/exit
-  *      pointers — each stream index enters and leaves each spec's
-  *      frame exactly once).
+  *   - pass 1 captures, per partition, the HEAD rows with
+  *     key <= firstKey + max(hi) and the TAIL rows with
+  *     key >= lastKey + min(lo) — the only rows any other partition can
+  *     need. Both are capped at [[GlobalRange.MaxBoundary]] narrow rows
+  *     (a neighborhood wider than that means the range spans a plateau
+  *     the size of a partition — the operator throws loudly rather than
+  *     shipping it);
+  *   - the driver splices, per partition, the exact preceding rows with
+  *     key >= firstKey(p) + min(lo) and following rows with
+  *     key <= lastKey(p) + max(hi), walking across partitions that
+  *     qualify WHOLE (GlobalFrame's row splice, re-keyed by value);
+  *   - pass 2 streams preceding ++ local ++ following through a growable
+  *     buffer of narrow (key, value) rows; a local row is emitted once a
+  *     pushed key exceeds t + max(hi) (sorted input: its widest frame is
+  *     then complete). Per spec, frame endpoints advance monotonically
+  *     (enter/exit pointers — each stream index enters and leaves each
+  *     spec's frame exactly once).
   *
   * Per-row cost per aggregate: count / count(*) / legacy sum are O(1)
   * amortized (enter/exit deltas; wrapping subtraction is exact on the
@@ -165,35 +161,30 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
     val maxHi = his.max
     val cap = GlobalRange.MaxBoundary
 
-    val input = persistedInput()
+    def blowUp(side: String): Nothing =
+      throw new IllegalStateException(
+        s"GlobalRange boundary blow-up: more than $cap rows lie " +
+          s"within frame reach of a partition's $side edge — the " +
+          "range spans a partition-sized plateau; use a partitioned " +
+          "window or a narrower range")
 
     // pass 1: per partition, its row count, edge keys, and the head/tail
     // rows within the frame reach of its edges — narrow rows only.
     // Null keys sort FIRST: a partition's null rows are a leading run;
-    // a partition whose LAST key is null is entirely null.
-    val numParts = input.getNumPartitions
-    val partials: Array[Partial] = input.mapPartitionsWithIndex({
-      (pid, it) =>
+    // a partition whose LAST key is null is entirely null. A capture
+    // over the cap ships as null; the driver throws only if a neighbor
+    // needs it (the first partition's head and the last one's tail serve
+    // nobody, so a plateau at the corpus edge never throws).
+    twoPass { (_, it) =>
       val proj = UnsafeProjection.create(bounds)
-      // boundary captures only exist to serve OTHER partitions: the
-      // first partition has nobody before it (no head), the last nobody
-      // after (no tail) — skipping them avoids both the work and any
-      // spurious cap throw on a plateau at the corpus edge
-      val wantHead = pid > 0
-      val wantTail = pid < numParts - 1
       var count = 0L
       var firstKey = 0L; var lastKey = 0L
       var firstNull = false; var lastNull = false
-      val head = new scala.collection.mutable.ArrayBuffer[UnsafeRow]()
+      var head = new scala.collection.mutable.ArrayBuffer[UnsafeRow]()
       var headOpen = true
       val tail = new scala.collection.mutable.ArrayDeque[UnsafeRow]()
       var inNullPrefix = true
-      def blowUp(side: String): Nothing =
-        throw new IllegalStateException(
-          s"GlobalRange boundary blow-up: more than $cap rows lie " +
-            s"within frame reach of a partition's $side edge — the " +
-            "range spans a partition-sized plateau; use a partitioned " +
-            "window or a narrower range")
+      var nullsOver = false // the null prefix alone passed the cap
       it.foreach { row =>
         val r = proj(row).copy()
         val kNull = r.isNullAt(0)
@@ -205,162 +196,147 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
         // starts with nulls, earlier partitions are entirely null and
         // need the leading null run (their peers); otherwise the usual
         // rows within maxHi of our first key. The head is a prefix
-        // capture (no eviction), so its inline cap check is final.
-        if (wantHead && headOpen) {
+        // capture (no eviction), so its cap check is final.
+        if (headOpen) {
           val qualifies =
             if (firstNull) kNull
             else !kNull && maxHi >= 0L && k <= satAdd(firstKey, maxHi)
-          if (qualifies) {
-            head += r
-            if (head.length > cap) blowUp("first")
-          } else headOpen = false
+          if (!qualifies) headOpen = false
+          else if (head.length < cap) head += r
+          else { head = null; headOpen = false }
         }
         // tail: rows any LATER partition could need. Null rows are
         // buffered while the global null prefix may continue past us
         // (needed as peers by later all-null partitions); the buffer is
         // discarded wholesale at the first non-null key — from there no
         // later partition can hold nulls, and the usual within-|minLo|
-        // eviction applies. The cap is checked on the FINAL tail below,
-        // not inline: only the final tail ships to the driver, and a
-        // mid-partition plateau that later evicts is pass-2-sized
-        // transient working memory, not a boundary.
-        if (wantTail) {
-          if (kNull) tail.append(r)
-          else {
-            if (inNullPrefix) { tail.clear(); inNullPrefix = false }
-            if (minLo <= 0L) {
-              while (tail.nonEmpty &&
-                tail.head.getLong(0) < satAdd(k, minLo)) tail.removeHead()
-              tail.append(r)
-            }
+        // eviction applies. Past the null prefix the cap applies to the
+        // FINAL tail only: a mid-partition plateau that later evicts is
+        // pass-2-sized transient working memory, not a boundary.
+        if (kNull) {
+          if (!nullsOver) tail.append(r)
+          if (tail.length > cap) { tail.clear(); nullsOver = true }
+        } else {
+          if (inNullPrefix) {
+            tail.clear(); inNullPrefix = false; nullsOver = false
+          }
+          if (minLo <= 0L) {
+            while (tail.nonEmpty &&
+              tail.head.getLong(0) < satAdd(k, minLo)) tail.removeHead()
+            tail.append(r)
           }
         }
       }
-      if (tail.length > cap) blowUp("last")
-      Iterator.single(Partial(count, firstKey, lastKey, firstNull,
-        lastNull, head.toArray, tail.toArray))
-    }, preservesPartitioning = true).collect()
-
-    // driver: per partition p, the exact preceding rows with
-    // key >= firstKey(p) + minLo and following rows with
-    // key <= lastKey(p) + maxHi, walked across whole-qualifying
-    // partitions (empty partitions are transparent). A partition
-    // touching the global null prefix additionally splices the null
-    // PEER GROUP across partitions (cap-checked like any plateau).
-    val parts = partials.length
-    val preceding = new Array[Array[UnsafeRow]](parts)
-    val following = new Array[Array[UnsafeRow]](parts)
-    def spliceBlowUp(): Nothing =
-      throw new IllegalStateException(
-        s"GlobalRange boundary blow-up: a spliced boundary exceeds " +
-          s"$cap rows — the range (or the null peer group) spans a " +
-          "partition-sized plateau; use a partitioned window or a " +
-          "narrower range")
-    var p = 0
-    while (p < parts) {
-      val me = partials(p)
-      if (me.count == 0L) {
-        preceding(p) = Array.empty; following(p) = Array.empty
-      } else {
-        val acc = new scala.collection.mutable.ArrayDeque[UnsafeRow]()
-        if (me.firstNull) {
-          // this partition starts inside the global null prefix: every
-          // earlier non-empty partition is entirely null, and its rows
-          // are this partition's null rows' PEERS — splice them all
-          var q = p - 1
-          while (q >= 0) {
-            val pq = partials(q)
-            if (pq.count > 0L) {
-              var j = pq.tail.length - 1
-              while (j >= 0) { acc.prepend(pq.tail(j)); j -= 1 }
-              if (acc.length > cap) spliceBlowUp()
-            }
-            q -= 1
-          }
-          // (no non-null preceding need: this partition's non-null rows,
-          // if any, have every preceding non-null row locally)
-        } else {
-          val needLo = satAdd(me.firstKey, minLo)
-          var q = p - 1
-          var walk = minLo <= 0L
-          while (walk && q >= 0) {
-            val pq = partials(q)
-            if (pq.count == 0L) q -= 1 // transparent
-            else {
-              // qualifying suffix of q's (sorted) tail capture — null
-              // tail rows (all-null partitions) never qualify for a
-              // non-null need, which also stops the walk below them
-              val t = pq.tail
-              var i = t.length - 1
-              while (i >= 0 && !t(i).isNullAt(0) &&
-                t(i).getLong(0) >= needLo) i -= 1
-              var j = t.length - 1
-              while (j > i) { acc.prepend(t(j)); j -= 1 }
-              // walk on only if q qualified WHOLE (capture covers the
-              // partition and every captured row was in range)
-              walk = (t.length - 1 - i).toLong == pq.count
+      Partial(count, firstKey, lastKey, firstNull, lastNull,
+        if (head == null) null else head.toArray,
+        if (nullsOver || tail.length > cap) null else tail.toArray)
+    } { partials =>
+      // driver: per partition p, the exact preceding rows with
+      // key >= firstKey(p) + minLo and following rows with
+      // key <= lastKey(p) + maxHi, walked across whole-qualifying
+      // partitions (empty partitions are transparent). A partition
+      // touching the global null prefix additionally splices the null
+      // PEER GROUP across partitions (cap-checked like any plateau).
+      def headOf(q: Partial) = if (q.head == null) blowUp("first") else q.head
+      def tailOf(q: Partial) = if (q.tail == null) blowUp("last") else q.tail
+      def spliceBlowUp(): Nothing =
+        throw new IllegalStateException(
+          s"GlobalRange boundary blow-up: a spliced boundary exceeds " +
+            s"$cap rows — the range (or the null peer group) spans a " +
+            "partition-sized plateau; use a partitioned window or a " +
+            "narrower range")
+      partials.indices.map { p =>
+        val me = partials(p)
+        if (me.count == 0L) (Array.empty[UnsafeRow], Array.empty[UnsafeRow])
+        else {
+          val acc = new scala.collection.mutable.ArrayDeque[UnsafeRow]()
+          if (me.firstNull) {
+            // this partition starts inside the global null prefix: every
+            // earlier non-empty partition is entirely null, and its rows
+            // are this partition's null rows' PEERS — splice them all
+            var q = p - 1
+            while (q >= 0) {
+              val pq = partials(q)
+              if (pq.count > 0L) {
+                val t = tailOf(pq)
+                var j = t.length - 1
+                while (j >= 0) { acc.prepend(t(j)); j -= 1 }
+                if (acc.length > cap) spliceBlowUp()
+              }
               q -= 1
             }
-          }
-        }
-        preceding(p) = acc.toArray
-        val fcc = new scala.collection.mutable.ArrayBuffer[UnsafeRow]()
-        if (me.lastNull) {
-          // entirely-null partition: later partitions' leading null
-          // runs are this partition's rows' peers
-          var q = p + 1
-          var walk = true
-          while (walk && q < parts) {
-            val pq = partials(q)
-            if (pq.count == 0L) q += 1
-            else {
-              val h = pq.head
-              var i = 0
-              while (i < h.length && h(i).isNullAt(0)) {
-                fcc += h(i); i += 1
+            // (no non-null preceding need: this partition's non-null rows,
+            // if any, have every preceding non-null row locally)
+          } else {
+            val needLo = satAdd(me.firstKey, minLo)
+            var q = p - 1
+            var walk = minLo <= 0L
+            while (walk && q >= 0) {
+              val pq = partials(q)
+              if (pq.count == 0L) q -= 1 // transparent
+              else {
+                // qualifying suffix of q's (sorted) tail capture — null
+                // tail rows (all-null partitions) never qualify for a
+                // non-null need, which also stops the walk below them
+                val t = tailOf(pq)
+                var i = t.length - 1
+                while (i >= 0 && !t(i).isNullAt(0) &&
+                  t(i).getLong(0) >= needLo) i -= 1
+                var j = t.length - 1
+                while (j > i) { acc.prepend(t(j)); j -= 1 }
+                // walk on only if q qualified WHOLE (capture covers the
+                // partition and every captured row was in range)
+                walk = (t.length - 1 - i).toLong == pq.count
+                q -= 1
               }
-              if (fcc.length > cap) spliceBlowUp()
-              // continue only while the next partition is null WHOLE
-              walk = pq.lastNull && i.toLong == pq.count
-              q += 1
             }
           }
-        } else {
-          val needHi = satAdd(me.lastKey, maxHi)
-          var q = p + 1
-          var walk = maxHi >= 0L
-          while (walk && q < parts) {
-            val pq = partials(q)
-            if (pq.count == 0L) q += 1
-            else {
-              val h = pq.head
-              var i = 0
-              while (i < h.length && !h(i).isNullAt(0) &&
-                h(i).getLong(0) <= needHi) {
-                fcc += h(i); i += 1
+          val fcc = new scala.collection.mutable.ArrayBuffer[UnsafeRow]()
+          if (me.lastNull) {
+            // entirely-null partition: later partitions' leading null
+            // runs are this partition's rows' peers
+            var q = p + 1
+            var walk = true
+            while (walk && q < partials.length) {
+              val pq = partials(q)
+              if (pq.count == 0L) q += 1
+              else {
+                val h = headOf(pq)
+                var i = 0
+                while (i < h.length && h(i).isNullAt(0)) {
+                  fcc += h(i); i += 1
+                }
+                if (fcc.length > cap) spliceBlowUp()
+                // continue only while the next partition is null WHOLE
+                walk = pq.lastNull && i.toLong == pq.count
+                q += 1
               }
-              walk = i.toLong == pq.count
-              q += 1
+            }
+          } else {
+            val needHi = satAdd(me.lastKey, maxHi)
+            var q = p + 1
+            var walk = maxHi >= 0L
+            while (walk && q < partials.length) {
+              val pq = partials(q)
+              if (pq.count == 0L) q += 1
+              else {
+                val h = headOf(pq)
+                var i = 0
+                while (i < h.length && !h(i).isNullAt(0) &&
+                  h(i).getLong(0) <= needHi) {
+                  fcc += h(i); i += 1
+                }
+                walk = i.toLong == pq.count
+                q += 1
+              }
             }
           }
+          (acc.toArray, fcc.toArray)
         }
-        following(p) = fcc.toArray
-      }
-      p += 1
-    }
-    val bcPre = input.sparkContext.broadcast(preceding)
-    val bcPost = input.sparkContext.broadcast(following)
-
-    // pass 2: one streaming pass per partition
-    val types = output.map(_.dataType).toArray
-    input.mapPartitionsWithIndex({ (pid, it) =>
-      val pre = bcPre.value(pid)
-      val post = bcPost.value(pid)
-      val nCols = types.length
-      val base = nCols - nSpecs
-      val outProj = UnsafeProjection.create(types)
+      }.toArray
+    } { case ((pre, post), it, out) =>
+      // one streaming pass per partition
       val valueProj = UnsafeProjection.create(bounds)
-      val out = new GenericInternalRow(nCols)
 
       // stream buffer of narrow rows, addressable by global stream index
       val buf = new scala.collection.mutable.ArrayDeque[UnsafeRow]()
@@ -390,8 +366,6 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
         new scala.collection.mutable.ArrayDeque[(Long, Any)]())
 
       def emit(full: InternalRow, t: Long, tNull: Boolean): UnsafeRow = {
-        var j = 0
-        while (j < base) { out.update(j, full.get(j, types(j))); j += 1 }
         var i = 0
         while (i < nSpecs) {
           val loK = satAdd(t, los(i))
@@ -441,15 +415,13 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
             }
             start(i) += 1L
           }
-          val col = base + i
           kinds(i) match {
             case ScanKind.Rows =>
-              out.update(col, end(i) - start(i))
+              out.setLong(i, end(i) - start(i))
             case ScanKind.Count =>
-              out.update(col, cnt(i))
+              out.setLong(i, cnt(i))
             case ScanKind.Sum if !ansis(i) =>
-              if (cnt(i) == 0L) out.setNullAt(col)
-              else out.update(col, wsum(i))
+              out.update(i, if (cnt(i) == 0L) null else wsum(i))
             case ScanKind.Sum => // ANSI: exact in-order re-fold — raises
               // exactly when the native frame's in-order partial would
               var s = 0L; var any = false
@@ -461,7 +433,7 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
                 }
                 gi += 1L
               }
-              if (any) out.update(col, s) else out.setNullAt(col)
+              out.update(i, if (any) s else null)
             case ScanKind.Avg =>
               // native parity: in-frame-order Double accumulation
               var d = 0.0; var c = 0L
@@ -471,12 +443,12 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
                 if (!r.isNullAt(i + 1)) { d += r.getLong(i + 1); c += 1L }
                 gi += 1L
               }
-              if (c > 0L) out.update(col, d / c) else out.setNullAt(col)
+              out.update(i, if (c > 0L) d / c else null)
             case _ => // Min | Max: expire, then read the front
               val dq = deques(i)
               while (dq.nonEmpty && dq.head._1 < start(i)) dq.removeHead()
-              if (dq.isEmpty || dq.head._1 >= end(i)) out.setNullAt(col)
-              else out.update(col, dq.head._2)
+              out.update(i,
+                if (dq.isEmpty || dq.head._1 >= end(i)) null else dq.head._2)
           }
           i += 1
         }
@@ -487,7 +459,7 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
           if (start(i) < minStart) minStart = start(i); i += 1
         }
         while (bufBase < minStart) { buf.removeHead(); bufBase += 1L }
-        outProj(out)
+        out(full)
       }
 
       pre.foreach(push)
@@ -538,7 +510,7 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
         drained ++ pending.iterator.map { case (row, t, tNull) =>
           emit(row, t, tNull) }
       }
-    }, preservesPartitioning = true)
+    }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan)
@@ -547,8 +519,8 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
 
 object GlobalRangeExec {
   /** Per-partition pass-1 summary: row count, edge keys (meaningless
-    * when count == 0), and the head/tail narrow-row captures. Top-level
-    * so task closures don't drag the SparkPlan in. */
+    * when count == 0), and the head/tail narrow-row captures (null when
+    * the capture exceeds [[GlobalRange.MaxBoundary]]). */
   private[plans] case class Partial(count: Long, firstKey: Long,
       lastKey: Long, firstNull: Boolean, lastNull: Boolean,
       head: Array[UnsafeRow], tail: Array[UnsafeRow])

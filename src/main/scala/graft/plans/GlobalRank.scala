@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.LongType
@@ -14,18 +14,11 @@ import org.apache.spark.sql.types.LongType
   * `row_number()` over an un-partitioned window (the direct translation of
   * the reference's single-reducer ranking, `StockCount.java:61-66`) funnels
   * every row through one partition — fine after an aggregation (key-space-
-  * sized input), fatal on raw 100 TB data. This operator instead:
-  *
-  *   1. total-orders the input via range partitioning (planned sort below);
-  *   2. computes per-partition row counts (one tiny job on counts only);
-  *   3. assigns `rank = partitionOffset + localIndex + 1` in a single pass.
-  *
-  * Every stage is distributed; the only global knowledge is the per-
-  * partition count array (numPartitions longs on the driver) — the same
-  * mechanism as `RDD.zipWithIndex`, but planned as a Catalyst operator:
-  * `GlobalRankPlan` (logical) -> [[GlobalStrategy]] -> [[GlobalRankExec]]
-  * (physical, requiredChildOrdering/Distribution = global sort, so the
-  * planner inserts the range-partitioned sort automatically).
+  * sized input), fatal on raw 100 TB data. This operator runs the
+  * [[GlobalExec]] protocol instead: pass 1 counts each partition's rows
+  * (numPartitions longs reach the driver), and pass 2 assigns
+  * `rank = partitionOffset + localIndex + 1` — the mechanism of
+  * `RDD.zipWithIndex`, planned as a Catalyst operator.
   *
   * Usage: [[GlobalRank.ranked]] (plan-level), or a lone un-partitioned
   * `row_number()` window, which [[GlobalWindowRule]] rewrites to it.
@@ -46,36 +39,13 @@ case class GlobalRankExec(order: Seq[SortOrder], rankAttr: Attribute,
   extends GlobalExec {
   override def added: Seq[Attribute] = rankAttr :: Nil
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val input = persistedInput()
-    // pass 1: per-partition counts (counts only cross the driver)
-    val counts = input.mapPartitions(
-      it => Iterator.single(it.size.toLong), preservesPartitioning = true)
-      .collect()
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val bc = input.sparkContext.broadcast(offsets)
-    // pass 2: attach rank = offset + local index + 1. Output goes through
-    // an UnsafeProjection (created per task — it holds codegen state):
-    // operators like collect()'s byte-array path require UnsafeRow, and
-    // nothing above this node is guaranteed to re-project.
-    val types = output.map(_.dataType).toArray
-    input.mapPartitionsWithIndex({ (pid, it) =>
-      var i = bc.value(pid)
-      val n = types.length
-      val proj = org.apache.spark.sql.catalyst.expressions
-        .UnsafeProjection.create(types)
-      // one scratch row per task, reused: the projection copies the
-      // values into its own buffer before the next iteration
-      val out = new GenericInternalRow(n)
-      it.map { row =>
-        i += 1
-        var j = 0
-        while (j < n - 1) { out.update(j, row.get(j, types(j))); j += 1 }
-        out.update(n - 1, i)
-        proj(out)
-      }
-    }, preservesPartitioning = true)
-  }
+  // pass 1: row counts; carry: the rows before each partition
+  override protected def doExecute(): RDD[InternalRow] =
+    twoPass((_, it) => it.size.toLong)(_.scanLeft(0L)(_ + _).init) {
+      (offset, it, out) =>
+        var i = offset
+        it.map { row => i += 1L; out.setLong(0, i); out(row) }
+    }
 
   override protected def withNewChildInternal(newChild: SparkPlan)
   : GlobalRankExec = copy(child = newChild)

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -16,15 +16,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *
   * The per-row transform `f_i(y) = m_i*y + c_i` is an affine map, and
   * affine maps COMPOSE associatively: `(f2 ∘ f1)(y) = (m2*m1)*y +
-  * (m2*b1 + c2)`. So:
-  *
-  *   1. the input is total-ordered by range partitioning (planned sort);
-  *   2. pass 1 folds each partition's rows into ONE composed transform
-  *      (M_p, B_p) — two scalars per partition to the driver;
-  *   3. the driver prefix-composes the P transforms to the exact state
-  *      entering each partition — O(partitions) scalar work;
-  *   4. pass 2 streams each partition once, threading the recurrence
-  *      from its spliced start state.
+  * (m2*b1 + c2)`. So in the [[GlobalExec]] protocol pass 1 folds each
+  * partition into ONE composed transform (M_p, B_p), the driver
+  * prefix-composes them to the exact state entering each partition, and
+  * pass 2 threads the recurrence from that state.
   *
   * Two element algebras, chosen by the m/c column type:
   *
@@ -85,86 +80,61 @@ case class GlobalRecurExec(order: Seq[SortOrder], m: Attribute,
     val cOrd = child.output.indexWhere(_.exprId == c.exprId)
     require(mOrd >= 0 && cOrd >= 0,
       s"recurrence columns $m/$c not in child output")
-    val inputRdd = persistedInput()
-    // pass 1: fold each partition into its composed affine transform —
-    // TWO scalars per partition, regardless of partition size
-    val partials: Array[(Any, Any)] =
-      inputRdd.mapPartitions({ it =>
-        if (isLong) {
-          var cm = 1L; var cb = 0L // identity transform
-          it.foreach { row =>
-            if (!row.isNullAt(mOrd) && !row.isNullAt(cOrd)) {
-              val mi = row.getLong(mOrd); val ci = row.getLong(cOrd)
-              cm = mi * cm // wrapping mod 2^64 — exact algebra
-              cb = mi * cb + ci
-            }
-          }
-          Iterator.single((cm: Any, cb: Any))
-        } else {
-          var cm = 1.0; var cb = 0.0
-          it.foreach { row =>
-            if (!row.isNullAt(mOrd) && !row.isNullAt(cOrd)) {
-              val mi = row.getDouble(mOrd); val ci = row.getDouble(cOrd)
-              cm = mi * cm
-              cb = mi * cb + ci
-            }
-          }
-          Iterator.single((cm: Any, cb: Any))
-        }
-      }, preservesPartitioning = true).collect()
-    // driver: prefix-compose to the exact state ENTERING each partition
-    val parts = partials.length
-    val starts = new Array[Any](parts)
-    if (isLong) {
-      var y = seed.asInstanceOf[Long]
-      var p = 0
-      while (p < parts) {
-        starts(p) = y
-        val (cm, cb) = (partials(p)._1.asInstanceOf[Long],
-          partials(p)._2.asInstanceOf[Long])
-        y = cm * y + cb
-        p += 1
-      }
-    } else {
-      var y = seed.asInstanceOf[Double]
-      var p = 0
-      while (p < parts) {
-        starts(p) = y
-        val (cm, cb) = (partials(p)._1.asInstanceOf[Double],
-          partials(p)._2.asInstanceOf[Double])
-        y = cm * y + cb
-        p += 1
-      }
-    }
-    val bc = inputRdd.sparkContext.broadcast(starts)
-    // pass 2: thread the recurrence from the spliced start state
-    val types = output.map(_.dataType).toArray
-    inputRdd.mapPartitionsWithIndex({ (pid, it) =>
-      val nCols = types.length
-      val proj = UnsafeProjection.create(types)
-      val out = new GenericInternalRow(nCols)
+    val y0 = seed
+    // pass 1: each partition's composed affine transform (M, B) — two
+    // scalars per partition, regardless of partition size
+    twoPass { (_, it) =>
       if (isLong) {
-        var y = bc.value(pid).asInstanceOf[Long]
+        var cm = 1L; var cb = 0L // identity transform
+        it.foreach { row =>
+          if (!row.isNullAt(mOrd) && !row.isNullAt(cOrd)) {
+            val mi = row.getLong(mOrd)
+            cm = mi * cm // wrapping mod 2^64 — exact algebra
+            cb = mi * cb + row.getLong(cOrd)
+          }
+        }
+        (cm: Any, cb: Any)
+      } else {
+        var cm = 1.0; var cb = 0.0
+        it.foreach { row =>
+          if (!row.isNullAt(mOrd) && !row.isNullAt(cOrd)) {
+            val mi = row.getDouble(mOrd)
+            cm = mi * cm
+            cb = mi * cb + row.getDouble(cOrd)
+          }
+        }
+        (cm: Any, cb: Any)
+      }
+    } { parts =>
+      // carry: the exact state ENTERING each partition (prefix-composed)
+      if (isLong)
+        parts.scanLeft(y0.asInstanceOf[Long]) { case (y, (cm, cb)) =>
+          cm.asInstanceOf[Long] * y + cb.asInstanceOf[Long] }
+          .init.map(y => y: Any)
+      else
+        parts.scanLeft(y0.asInstanceOf[Double]) { case (y, (cm, cb)) =>
+          cm.asInstanceOf[Double] * y + cb.asInstanceOf[Double] }
+          .init.map(y => y: Any)
+    } { (start, it, out) =>
+      // thread the recurrence from the spliced start state
+      if (isLong) {
+        var y = start.asInstanceOf[Long]
         it.map { row =>
           if (!row.isNullAt(mOrd) && !row.isNullAt(cOrd))
             y = row.getLong(mOrd) * y + row.getLong(cOrd)
-          var j = 0
-          while (j < nCols - 1) { out.update(j, row.get(j, types(j))); j += 1 }
-          out.update(nCols - 1, y)
-          proj(out)
+          out.setLong(0, y)
+          out(row)
         }
       } else {
-        var y = bc.value(pid).asInstanceOf[Double]
+        var y = start.asInstanceOf[Double]
         it.map { row =>
           if (!row.isNullAt(mOrd) && !row.isNullAt(cOrd))
             y = row.getDouble(mOrd) * y + row.getDouble(cOrd)
-          var j = 0
-          while (j < nCols - 1) { out.update(j, row.get(j, types(j))); j += 1 }
-          out.update(nCols - 1, y)
-          proj(out)
+          out.setDouble(0, y)
+          out(row)
         }
       }
-    }, preservesPartitioning = true)
+    }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan)

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, GenericInternalRow, RowOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, RowOrdering, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.LongType
@@ -16,16 +16,13 @@ import org.apache.spark.sql.types.LongType
   * `agg(x) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)` — the sweep-line
   * primitive behind concurrency counting, running balances, high-water
   * marks, and watermark accounting — plans in Spark as a single-partition
-  * WindowExec, the same non-scalable shape as global row_number. Here
-  * instead:
-  *
-  *   1. the input is total-ordered by range partitioning (planned sort);
-  *   2. pass 1 computes each partition's LOCAL partial (sum, non-null
-  *      count, row count, min, max — a few longs per partition to the
-  *      driver, the only global state);
-  *   3. pass 2 emits `running = combine(exclusivePartitionPrefix,
-  *      localPrefix)` — addition for sum/count, min/max fold for the
-  *      extrema, exact-integer division at emit for avg.
+  * WindowExec, the same non-scalable shape as global row_number. Here,
+  * in the [[GlobalExec]] protocol, pass 1 computes each partition's
+  * LOCAL partial (sum, non-null count, row count, min, max — a few longs
+  * per partition), the driver folds them into each partition's exclusive
+  * prefix, and pass 2 emits `running = combine(exclusivePartitionPrefix,
+  * localPrefix)` — addition for sum/count, min/max fold for the extrema,
+  * exact-integer division at emit for avg.
   *
   * One node computes ALL the aggregates of a window (a [[ScanSpec]] per
   * expression): a `sum + count + avg` dashboard window costs ONE persist
@@ -159,7 +156,7 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
   extends GlobalExec {
   override def added: Seq[Attribute] = scanAttrs
 
-  import GlobalScanExec.{ScanDeltas, ScanPartial}
+  import GlobalScanExec.{ScanPartial, ScanState}
 
   override protected def doExecute(): RDD[InternalRow] = {
     val k = specs.length
@@ -196,7 +193,6 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
     val anyRows = ranges.exists(!_)
     val orderLocal = order
     val childOutput = child.output
-    val input = persistedInput()
     // pass 1: per-partition partials (per spec: sum, non-null count, min,
     // max, double-sum, overflow flag; shared: row count) — a few scalars
     // per partition cross the driver. The non-null count carries SQL null
@@ -217,7 +213,7 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
     // and the LEADING tie-run's own partials, so the driver can complete
     // a peer group spanning partition boundaries without seeing any
     // interior row.
-    val partials = input.mapPartitions({ it =>
+    twoPass { (_, it) =>
       val cmp = if (anyRange) RowOrdering.create(orderLocal, childOutput)
         else null
       // generic-extrema orderings, built per task (DataType ships fine;
@@ -306,134 +302,133 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
           i += 1
         }
       }
-      Iterator.single(ScanPartial(s, c, r, mn, mx, d, ovf,
-        first, prev, leadEq, ls, lc, lmn, lmx, ld, lovf, gext, lgext))
-    }, preservesPartitioning = true).collect()
-    val nP = partials.length
-    // per-spec exclusive offsets. avg: exact long offsets while every
-    // earlier partial is exact and the combine itself stays in range;
-    // from the first overflow on, only the double offsets are meaningful
-    // (exOk marks the switch). extrema offsets fold with identity
-    // elements; validity is carried by cntOff (an offset min/max is
-    // meaningful iff some non-null value exists in an earlier partition).
-    val sumOff = new Array[Array[Long]](k)
-    val cntOff = new Array[Array[Long]](k)
-    val minOff = new Array[Array[Long]](k)
-    val maxOff = new Array[Array[Long]](k)
-    val gextOff = new Array[Array[Any]](k)
-    val dblOff = new Array[Array[Double]](k)
-    val exOk = new Array[Array[Boolean]](k)
-    // driver-side generic fold (same contract as the task-side one:
-    // null = identity, replace on strictly-better in the spec's
-    // direction)
-    val driverOrd = Array.tabulate(k)(i =>
-      if (generics(i))
-        org.apache.spark.sql.catalyst.util.TypeUtils
-          .getInterpretedOrdering(dts(i))
-      else null)
-    def gPick(i: Int, a: Any, b: Any): Any =
-      if (b == null) a
-      else if (a == null) b
-      else {
-        val c = driverOrd(i).compare(b, a)
-        if (if (isMin(i)) c < 0 else c > 0) b else a
-      }
-    var si = 0
-    while (si < k) {
-      if (isAvg(si)) {
-        val (so, dlo, ok) = GlobalScan.combineAvgOffsets(
-          partials.map(_.sums(si)), partials.map(_.dsums(si)),
-          partials.map(_.ovfs(si)))
-        sumOff(si) = so; dblOff(si) = dlo; exOk(si) = ok
-      } else {
-        sumOff(si) =
-          if (needSum(si))
-            GlobalScan.combineOffsets(partials.map(_.sums(si)), exacts(si))
-          else Array.fill(nP + 1)(0L)
-        dblOff(si) = Array.fill(nP + 1)(0.0)
-        exOk(si) = Array.fill(nP + 1)(true)
-      }
-      cntOff(si) = partials.map(_.cnts(si)).scanLeft(0L)(_ + _)
-      minOff(si) = partials.map(_.mns(si)).scanLeft(Long.MaxValue)(Math.min)
-      maxOff(si) = partials.map(_.mxs(si)).scanLeft(Long.MinValue)(Math.max)
-      gextOff(si) =
-        if (generics(si))
-          partials.map(_.gexts(si)).scanLeft(null: Any)(gPick(si, _, _))
-        else Array.fill[Any](nP + 1)(null)
-      si += 1
-    }
-    val rowOff = partials.map(_.rows).scanLeft(0L)(_ + _)
-    // RANGE: per-partition trailing-group completion — the chained
-    // leading-run partials of LATER partitions whose rows tie this
-    // partition's last row ([[GlobalTiesExec]]'s boundary chain, applied
-    // to aggregates). O(numPartitions) driver work on a few rows. The
-    // delta's exact long sums fold under the same overflow contract as
-    // the offsets: ANSI sum raises (the native frame containing those
-    // peers would raise too — same over-approximation as pass 1), legacy
-    // wraps, avg degrades to its double sum. The chain walk is shared
-    // across specs (it depends only on the order's tie structure).
-    val deltas = Array.fill(nP)(ScanDeltas.empty(k))
-    if (anyRange) {
-      val cmp = RowOrdering.create(orderLocal, childOutput)
-      var p = 0
-      while (p < nP) {
-        val pp = partials(p)
-        if (pp.rows > 0L) {
-          val dl = ScanDeltas.empty(k)
-          var rD = 0L
-          var q = p + 1; var chained = true
-          while (chained && q < nP) {
-            val pq = partials(q)
-            if (pq.rows == 0L) q += 1 // empty partitions are transparent
-            else if (cmp.compare(pp.last, pq.first) == 0) {
-              rD += pq.leadEq
-              var i = 0
-              while (i < k) {
-                dl.cnts(i) += pq.lcnts(i); dl.ds(i) += pq.lds(i)
-                if (pq.lmns(i) < dl.mns(i)) dl.mns(i) = pq.lmns(i)
-                if (pq.lmxs(i) > dl.mxs(i)) dl.mxs(i) = pq.lmxs(i)
-                if (generics(i))
-                  dl.gexts(i) = gPick(i, dl.gexts(i), pq.lgexts(i))
-                if (isAvg(i)) {
-                  if (dl.exacts(i) && !pq.lovfs(i)) {
-                    try dl.sums(i) = Math.addExact(dl.sums(i), pq.lsums(i))
-                    catch {
-                      case _: ArithmeticException => dl.exacts(i) = false
-                    }
-                  } else dl.exacts(i) = false
-                } else dl.sums(i) =
-                  if (exacts(i)) Math.addExact(dl.sums(i), pq.lsums(i))
-                  else dl.sums(i) + pq.lsums(i)
-                i += 1
-              }
-              // the chain continues past q only if ALL of q is one group
-              chained = pq.leadEq == pq.rows
-              q += 1
-            } else chained = false
-          }
-          deltas(p) = dl.copy(rows = rD)
+      ScanPartial(s, c, r, mn, mx, d, ovf,
+        first, prev, leadEq, ls, lc, lmn, lmx, ld, lovf, gext, lgext)
+    } { partials =>
+      val nP = partials.length
+      // per-spec exclusive offsets. avg: exact long offsets while every
+      // earlier partial is exact and the combine itself stays in range;
+      // from the first overflow on, only the double offsets are meaningful
+      // (exOk marks the switch). extrema offsets fold with identity
+      // elements; validity is carried by cntOff (an offset min/max is
+      // meaningful iff some non-null value exists in an earlier partition).
+      val sumOff = new Array[Array[Long]](k)
+      val cntOff = new Array[Array[Long]](k)
+      val minOff = new Array[Array[Long]](k)
+      val maxOff = new Array[Array[Long]](k)
+      val gextOff = new Array[Array[Any]](k)
+      val dblOff = new Array[Array[Double]](k)
+      val exOk = new Array[Array[Boolean]](k)
+      // driver-side generic fold (same contract as the task-side one:
+      // null = identity, replace on strictly-better in the spec's
+      // direction)
+      val driverOrd = Array.tabulate(k)(i =>
+        if (generics(i))
+          org.apache.spark.sql.catalyst.util.TypeUtils
+            .getInterpretedOrdering(dts(i))
+        else null)
+      def gPick(i: Int, a: Any, b: Any): Any =
+        if (b == null) a
+        else if (a == null) b
+        else {
+          val c = driverOrd(i).compare(b, a)
+          if (if (isMin(i)) c < 0 else c > 0) b else a
         }
-        p += 1
+      var si = 0
+      while (si < k) {
+        if (isAvg(si)) {
+          val (so, dlo, ok) = GlobalScan.combineAvgOffsets(
+            partials.map(_.sums(si)), partials.map(_.dsums(si)),
+            partials.map(_.ovfs(si)))
+          sumOff(si) = so; dblOff(si) = dlo; exOk(si) = ok
+        } else {
+          sumOff(si) =
+            if (needSum(si))
+              GlobalScan.combineOffsets(partials.map(_.sums(si)), exacts(si))
+            else Array.fill(nP + 1)(0L)
+          dblOff(si) = Array.fill(nP + 1)(0.0)
+          exOk(si) = Array.fill(nP + 1)(true)
+        }
+        cntOff(si) = partials.map(_.cnts(si)).scanLeft(0L)(_ + _)
+        minOff(si) = partials.map(_.mns(si)).scanLeft(Long.MaxValue)(Math.min)
+        maxOff(si) = partials.map(_.mxs(si)).scanLeft(Long.MinValue)(Math.max)
+        gextOff(si) =
+          if (generics(si))
+            partials.map(_.gexts(si)).scanLeft(null: Any)(gPick(si, _, _))
+          else Array.fill[Any](nP + 1)(null)
+        si += 1
       }
-    }
-    val bc = input.sparkContext.broadcast(
-      (sumOff, cntOff, rowOff, minOff, maxOff, gextOff, dblOff, exOk,
-        deltas))
-    // pass 2: running = combine(exclusive partition prefix, local
-    // inclusive prefix). Rows go out through an UnsafeProjection (created
-    // per task — it holds codegen state): operators like collect()'s
-    // byte-array path require UnsafeRow, and nothing above this node may
-    // re-project.
-    val types = output.map(_.dataType).toArray
-    input.mapPartitionsWithIndex({ (pid, it) =>
-      val (sumO, cntO, rowO, minO, maxO, gextO, dblO, exO, deltaArr) =
-        bc.value
-      val acc = Array.tabulate(k)(i => sumO(i)(pid))
-      val cnt = Array.tabulate(k)(i => cntO(i)(pid))
-      var rows = rowO(pid)
-      val mn = Array.tabulate(k)(i => minO(i)(pid))
-      val mx = Array.tabulate(k)(i => maxO(i)(pid))
-      val gacc = Array.tabulate[Any](k)(i => gextO(i)(pid))
+      val rowOff = partials.map(_.rows).scanLeft(0L)(_ + _)
+      // RANGE: per-partition trailing-group completion — the chained
+      // leading-run partials of LATER partitions whose rows tie this
+      // partition's last row ([[GlobalTiesExec]]'s boundary chain, applied
+      // to aggregates). O(numPartitions) driver work on a few rows. The
+      // delta's exact long sums fold under the same overflow contract as
+      // the offsets: ANSI sum raises (the native frame containing those
+      // peers would raise too — same over-approximation as pass 1), legacy
+      // wraps, avg degrades to its double sum. The chain walk is shared
+      // across specs (it depends only on the order's tie structure).
+      val deltas = Array.fill(nP)(ScanState.empty(k))
+      if (anyRange) {
+        val cmp = RowOrdering.create(orderLocal, childOutput)
+        var p = 0
+        while (p < nP) {
+          val pp = partials(p)
+          if (pp.rows > 0L) {
+            val dl = ScanState.empty(k)
+            var rD = 0L
+            var q = p + 1; var chained = true
+            while (chained && q < nP) {
+              val pq = partials(q)
+              if (pq.rows == 0L) q += 1 // empty partitions are transparent
+              else if (cmp.compare(pp.last, pq.first) == 0) {
+                rD += pq.leadEq
+                var i = 0
+                while (i < k) {
+                  dl.cnts(i) += pq.lcnts(i); dl.ds(i) += pq.lds(i)
+                  if (pq.lmns(i) < dl.mns(i)) dl.mns(i) = pq.lmns(i)
+                  if (pq.lmxs(i) > dl.mxs(i)) dl.mxs(i) = pq.lmxs(i)
+                  if (generics(i))
+                    dl.gexts(i) = gPick(i, dl.gexts(i), pq.lgexts(i))
+                  if (isAvg(i)) {
+                    if (dl.exacts(i) && !pq.lovfs(i)) {
+                      try dl.sums(i) = Math.addExact(dl.sums(i), pq.lsums(i))
+                      catch {
+                        case _: ArithmeticException => dl.exacts(i) = false
+                      }
+                    } else dl.exacts(i) = false
+                  } else dl.sums(i) =
+                    if (exacts(i)) Math.addExact(dl.sums(i), pq.lsums(i))
+                    else dl.sums(i) + pq.lsums(i)
+                  i += 1
+                }
+                // the chain continues past q only if ALL of q is one group
+                chained = pq.leadEq == pq.rows
+                q += 1
+              } else chained = false
+            }
+            deltas(p) = dl.copy(rows = rD)
+          }
+          p += 1
+        }
+      }
+      // carry: each partition's exclusive prefix and its trailing-group
+      // completion delta
+      Array.tabulate(nP)(p => (ScanState(Array.tabulate(k)(sumOff(_)(p)),
+        Array.tabulate(k)(cntOff(_)(p)), rowOff(p),
+        Array.tabulate(k)(minOff(_)(p)), Array.tabulate(k)(maxOff(_)(p)),
+        Array.tabulate(k)(dblOff(_)(p)), Array.tabulate(k)(exOk(_)(p)),
+        Array.tabulate[Any](k)(gextOff(_)(p))), deltas(p)))
+    } { case ((off, delta), it, out) =>
+      // running = combine(exclusive partition prefix, local inclusive
+      // prefix); the accumulators start as copies of the prefix (the
+      // broadcast carry is shared by the executor's tasks)
+      val acc = off.sums.clone()
+      val cnt = off.cnts.clone()
+      var rows = off.rows
+      val mn = off.mns.clone()
+      val mx = off.mxs.clone()
+      val gacc = off.gexts.clone()
       val gord2 = Array.tabulate(k)(i =>
         if (generics(i))
           org.apache.spark.sql.catalyst.util.TypeUtils
@@ -443,15 +438,8 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
         val c = gord2(i).compare(v, cur)
         if (isMin(i)) c < 0 else c > 0
       }
-      val dacc = Array.tabulate(k)(i => dblO(i)(pid))
-      val exactOk = Array.tabulate(k)(i => exO(i)(pid))
-      val n = types.length
-      val childN = n - k
-      val proj = org.apache.spark.sql.catalyst.expressions
-        .UnsafeProjection.create(types)
-      // one scratch row per task, reused: the projection copies the
-      // values into its own buffer before the next iteration
-      val out = new GenericInternalRow(n)
+      val dacc = off.ds.clone()
+      val exactOk = off.exacts.clone()
       def accumulate(row: InternalRow): Unit = {
         rows += 1L
         var i = 0
@@ -491,7 +479,7 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
       // only). null result = SQL NULL. avg: exact long sum / exact count,
       // divided at emit — the double is a function of the prefix CONTENT,
       // not its evaluation order; post-overflow the double sum takes over.
-      def valueAt(i: Int, del: ScanDeltas): Any = {
+      def valueAt(i: Int, del: ScanState): Any = {
         val hasD = del != null
         kinds(i) match {
           case ScanKind.Rows =>
@@ -535,19 +523,11 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
             }
         }
       }
-      def fill(row: InternalRow): Unit = {
-        var j = 0
-        while (j < childN) { out.update(j, row.get(j, types(j))); j += 1 }
-      }
-      def emit(i: Int, v: Any): Unit =
-        if (v == null) out.setNullAt(childN + i)
-        else out.update(childN + i, v)
       if (!anyRange) it.map { row =>
         accumulate(row)
-        fill(row)
         var i = 0
-        while (i < k) { emit(i, valueAt(i, null)); i += 1 }
-        proj(out)
+        while (i < k) { out.update(i, valueAt(i, null)); i += 1 }
+        out(row)
       } else {
         // RANGE: buffer one peer group at a time (row references into the
         // persisted, copied input — safe to hold), emit each RANGE spec's
@@ -556,7 +536,6 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
         // row has no later-partition peers). ROWS specs sharing the
         // window record their per-row values during group accumulation.
         // Memory: the largest peer group.
-        val delta = deltaArr(pid)
         val cmp2 = RowOrdering.create(orderLocal, childOutput)
         val peers = it.buffered
         val group = new scala.collection.mutable.ArrayBuffer[InternalRow]
@@ -595,17 +574,16 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
               }
             }
             val row = group(gi); val rv = rowVals(gi); gi += 1
-            fill(row)
             var i = 0
             while (i < k) {
-              emit(i, if (ranges(i)) groupVals(i) else rv(i))
+              out.update(i, if (ranges(i)) groupVals(i) else rv(i))
               i += 1
             }
-            proj(out)
+            out(row)
           }
         }
       }
-    }, preservesPartitioning = true)
+    }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan)
@@ -617,8 +595,7 @@ object GlobalScanExec {
     * fields cover the whole partition; `first`/`last` are row COPIES
     * (null on an empty partition) and the `l*` fields are the LEADING
     * tie-run's own partials — only meaningful when some spec is RANGE,
-    * identity otherwise. Top-level (not nested in the exec) so task
-    * closures don't drag the SparkPlan in. */
+    * identity otherwise. */
   private[plans] case class ScanPartial(sums: Array[Long],
       cnts: Array[Long], rows: Long, mns: Array[Long], mxs: Array[Long],
       dsums: Array[Double], ovfs: Array[Boolean],
@@ -627,17 +604,18 @@ object GlobalScanExec {
       lmxs: Array[Long], lds: Array[Double], lovfs: Array[Boolean],
       gexts: Array[Any], lgexts: Array[Any])
 
-  /** Driver-chained completion of a partition's trailing peer group: the
-    * folded leading-run partials of later partitions tying its last row;
-    * arrays indexed by spec (`rows` is shared — the tie structure is the
-    * order's, not a spec's). `exacts(i)` false means spec i's long sum
-    * overflowed somewhere in the chain and avg must emit from the double
-    * `ds(i)`. */
-  private[plans] case class ScanDeltas(sums: Array[Long],
+  /** Per-spec partials folded across partitions, arrays indexed by spec
+    * (`rows` is shared — the tie structure is the order's, not a
+    * spec's). A partition's carry holds two: its exclusive prefix over
+    * the earlier partitions, and its trailing peer group's completion
+    * (the folded leading-run partials of later partitions tying its last
+    * row). `exacts(i)` false means spec i's long sum overflowed and avg
+    * must emit from the double `ds(i)`. */
+  private[plans] case class ScanState(sums: Array[Long],
       cnts: Array[Long], rows: Long, mns: Array[Long], mxs: Array[Long],
       ds: Array[Double], exacts: Array[Boolean], gexts: Array[Any])
-  private[plans] object ScanDeltas {
-    def empty(k: Int): ScanDeltas = ScanDeltas(new Array[Long](k),
+  private[plans] object ScanState {
+    def empty(k: Int): ScanState = ScanState(new Array[Long](k),
       new Array[Long](k), 0L, Array.fill(k)(Long.MaxValue),
       Array.fill(k)(Long.MinValue), new Array[Double](k),
       Array.fill(k)(true), new Array[Any](k))

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Expression, GenericInternalRow, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 
@@ -14,20 +14,14 @@ import org.apache.spark.sql.execution.SparkPlan
   * An un-partitioned `lag`/`lead` plans in Spark as a single-partition
   * WindowExec even though each output row depends on exactly ONE other
   * row, at a fixed distance. After range partitioning, that row is either
-  * in the same partition or within |n| rows of the boundary — so:
-  *
-  *   1. the input is total-ordered by range partitioning (planned sort);
-  *   2. pass 1 collects each partition's row count and its first
-  *      (lead) or last (lag) min(n, count) VALUES of the shifted column —
-  *      at most n single-column rows per partition to the driver;
-  *   3. the driver splices, per partition, the exact n values adjacent to
-  *      its boundary (walking across short/empty partitions), and
-  *      broadcasts them;
-  *   4. pass 2 streams each partition once: lag keeps a ring buffer of
-  *      the last n values (seeded from the boundary), lead holds a
-  *      sliding queue of n pending rows and completes the tail from the
-  *      boundary. Rows that have no source row at distance n get the
-  *      (foldable) default.
+  * in the same partition or within |n| rows of the boundary — so in the
+  * [[GlobalExec]] protocol pass 1 captures each partition's first (lead)
+  * or last (lag) min(n, count) values, the driver splices the n values
+  * adjacent to each boundary (walking across short/empty partitions), and
+  * pass 2 streams each partition once: lag keeps a ring buffer of the
+  * last n values (seeded from the boundary), lead holds a sliding queue
+  * of n pending rows and completes the tail from the boundary. Rows that
+  * have no source row at distance n get the (foldable) default.
   *
   * `offset` is SIGNED, matching Catalyst's Lag/Lead encoding: negative
   * looks back (lag), positive looks forward (lead). The rule caps |n| at
@@ -76,105 +70,31 @@ case class GlobalShiftExec(order: Seq[SortOrder], input: Attribute,
     val ordinal = child.output.indexWhere(_.exprId == input.exprId)
     require(ordinal >= 0, s"shift column $input not in child output")
     val valueType = input.dataType
-    val valueNullable = input.nullable
-    val inputRdd = persistedInput()
-    // pass 1: count + the n boundary-adjacent VALUES per partition,
-    // projected to single-column UnsafeRows (copies — any value type)
-    val partials: Array[(Long, Array[UnsafeRow])] =
-      inputRdd.mapPartitions({ it =>
-        val proj = UnsafeProjection.create(
-          Seq(BoundReference(ordinal, valueType, valueNullable)))
-        // `count` counts QUALIFYING rows (all rows, or non-null values
-        // under ignore-nulls) — the splice invariant "array shorter than
-        // n means captured whole" must hold for the values that count
-        var count = 0L
-        if (isLag) {
-          // last n qualifying values: ring buffer, then unroll in order
-          val ring = new Array[UnsafeRow](n)
-          it.foreach { row =>
-            val pr = proj(row)
-            if (!skipNulls || !pr.isNullAt(0)) {
-              ring((count % n).toInt) = pr.copy()
-              count += 1L
-            }
-          }
-          val m = math.min(count, n.toLong).toInt
-          val tail = new Array[UnsafeRow](m)
-          var j = 0
-          while (j < m) {
-            tail(j) = ring(((count - m + j) % n).toInt); j += 1
-          }
-          Iterator.single((count, tail))
-        } else {
-          // first n values
-          val head = scala.collection.mutable.ArrayBuffer[UnsafeRow]()
-          it.foreach { row =>
-            if (count < n) head += proj(row).copy()
-            count += 1L
-          }
-          Iterator.single((count, head.toArray))
-        }
-      }, preservesPartitioning = true).collect()
-    // driver: per partition, splice the n values adjacent to its boundary
-    // (walking over partitions shorter than n). An array shorter than n
-    // means the corpus genuinely ends within n rows — pass 2 reads that
-    // as "no source row, emit default".
-    val parts = partials.length
-    val boundaries = new Array[Array[UnsafeRow]](parts)
-    var p = 0
-    while (p < parts) {
-      val acc = new scala.collection.mutable.ArrayDeque[UnsafeRow]()
-      // Walking past a partition is always safe: a pass-1 array shorter
-      // than n means that partition was captured WHOLE (min(n, count)),
-      // and one holding exactly n rows can satisfy any remaining need
-      // by itself (need <= n), ending the walk via need == 0.
-      if (isLag) {
-        var need = n
-        var q = p - 1
-        while (need > 0 && q >= 0) {
-          val t = partials(q)._2
-          val take = math.min(need, t.length)
-          var j = take - 1
-          while (j >= 0) { acc.prepend(t(t.length - take + j)); j -= 1 }
-          need -= take
-          q -= 1
-        }
-      } else {
-        var need = n
-        var q = p + 1
-        while (need > 0 && q < parts) {
-          val t = partials(q)._2
-          val take = math.min(need, t.length)
-          var j = 0
-          while (j < take) { acc.append(t(j)); j += 1 }
-          need -= take
-          q += 1
-        }
-      }
-      boundaries(p) = acc.toArray
-      p += 1
-    }
-    val bc = inputRdd.sparkContext.broadcast(boundaries)
-    // pass 2
-    val types = output.map(_.dataType).toArray
+    val value = Seq(BoundReference(ordinal, valueType, input.nullable))
     val defaultExpr = default
-    inputRdd.mapPartitionsWithIndex({ (pid, it) =>
-      val boundary = bc.value(pid)
-      val nCols = types.length
-      val proj = UnsafeProjection.create(types)
-      val valueProj = UnsafeProjection.create(
-        Seq(BoundReference(ordinal, valueType, valueNullable)))
-      val out = new GenericInternalRow(nCols)
+    // pass 1: the n boundary-adjacent VALUES per partition — lag the last
+    // n QUALIFYING values (all rows, or non-null values under
+    // ignore-nulls: a capture shorter than n must mean "captured whole"
+    // for the values that count), lead the first n
+    twoPass { (_, it) =>
+      val proj = UnsafeProjection.create(value)
+      val values = it.map(row => proj(row))
+      if (isLag)
+        Boundary.capture(values.filter(v => !skipNulls || !v.isNullAt(0)),
+          n, 0)._2
+      else Boundary.capture(values, 0, n)._1
+    } { edges =>
+      // carry: the n values adjacent to each partition's boundary. One
+      // shorter than n means the corpus genuinely ends within n rows —
+      // pass 2 reads that as "no source row, emit default".
+      if (isLag) Boundary.preceding(edges, n) else Boundary.following(edges, n)
+    } { (boundary, it, out) =>
+      val valueProj = UnsafeProjection.create(value)
       val defVal = defaultExpr.eval(InternalRow.empty)
-      def emit(row: InternalRow, shifted: InternalRow): UnsafeRow = {
-        var j = 0
-        while (j < nCols - 1) { out.update(j, row.get(j, types(j))); j += 1 }
-        if (shifted == null) {
-          if (defVal == null) out.setNullAt(nCols - 1)
-          else out.update(nCols - 1, defVal)
-        } else if (shifted.isNullAt(0)) out.setNullAt(nCols - 1)
-        else out.update(nCols - 1, shifted.get(0, valueType))
-        proj(out)
+      def emit(row: InternalRow, shifted: UnsafeRow): UnsafeRow = {
+        if (shifted == null) out.update(0, defVal)
+        else out.setFrom(0, shifted, valueType)
+        out(row)
       }
       if (isLag) {
         // ring of the last n pushed values, push order = boundary rows
@@ -226,7 +146,7 @@ case class GlobalShiftExec(order: Seq[SortOrder], input: Attribute,
           }
         }
       }
-    }, preservesPartitioning = true)
+    }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan)

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, RowOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, RowOrdering, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.LongType
@@ -16,23 +16,19 @@ import org.apache.spark.sql.types.LongType
   *
   * Ties make this harder than row_number: a tie group may SPAN partition
   * boundaries after range partitioning, so a row's rank can depend on rows
-  * it never sees. The fix is the same partials idea as GlobalScan's
-  * offsets, enriched with boundary rows:
+  * it never sees. In the [[GlobalExec]] protocol:
   *
-  *   1. the input is total-ordered by range partitioning (planned sort);
-  *   2. pass 1 computes, per partition: row count, tie-group count,
-  *      leading/trailing tie-run lengths, and COPIES OF THE FIRST AND LAST
-  *      ROW — a handful of scalars plus two rows per partition to the
-  *      driver, the only global state;
-  *   3. the driver chains boundary comparisons (does partition p's first
-  *      row tie partition p-1's last?) into three numbers per partition —
-  *      row offset, rank carry (earlier-partition rows tying the first
-  *      group), dense base (distinct groups before, net of shared
-  *      boundary groups) — and broadcasts them;
-  *   4. pass 2 re-detects tie groups locally and emits
-  *      `rank = rowOffset - carry + 1` for the first group,
-  *      `rowOffset + groupStart + 1` for later ones;
-  *      `dense_rank = denseBase + localGroupIndex`.
+  *   - pass 1 summarizes each partition: row count, tie-group count,
+  *     leading/trailing tie-run lengths, and COPIES OF THE FIRST AND LAST
+  *     ROW;
+  *   - the driver chains boundary comparisons (does partition p's first
+  *     row tie partition p-1's last?) into each partition's carry — row
+  *     offset, rank carry (earlier-partition rows tying the first group),
+  *     dense base (distinct groups before, net of shared boundary groups);
+  *   - pass 2 re-detects tie groups locally and emits
+  *     `rank = rowOffset - carry + 1` for the first group,
+  *     `rowOffset + groupStart + 1` for later ones;
+  *     `dense_rank = denseBase + localGroupIndex`.
   *
   * One node computes ANY NUMBER of kinds over the same order in ONE
   * pass-pair — the partials are identical for every kind, so a window
@@ -115,14 +111,15 @@ case class GlobalTiesExec(order: Seq[SortOrder], kinds: Seq[TieKind],
   extends GlobalExec {
   override def added: Seq[Attribute] = rankAttrs
 
-  import GlobalTiesExec.Partial
+  import GlobalTiesExec.{Partial, TieCarry}
 
   override protected def doExecute(): RDD[InternalRow] = {
     val orderLocal = order
     val childOutput = child.output
-    val input = persistedInput()
+    val theKinds = kinds.toArray // stable local for task closures
+    val nKinds = theKinds.length
     // pass 1: constant-size partials per partition
-    val partials = input.mapPartitions({ it =>
+    twoPass { (_, it) =>
       val cmp = RowOrdering.create(orderLocal, childOutput)
       var count = 0L; var groups = 0L
       var leadEq = 0L; var trailEq = 0L
@@ -139,65 +136,52 @@ case class GlobalTiesExec(order: Seq[SortOrder], kinds: Seq[TieKind],
         } else { leading = false; groups += 1L; trailEq = 1L }
         prev = row
       }
-      Iterator.single(Partial(count, groups, leadEq, trailEq, first, prev))
-    }, preservesPartitioning = true).collect()
-
-    // driver: chain boundaries into (rowOffset, rankCarry, denseBase) per
-    // partition. All O(numPartitions) work on a few rows — no data moves.
-    val cmp = RowOrdering.create(orderLocal, childOutput)
-    val n = partials.length
-    val rowOffsets = partials.map(_.count).scanLeft(0L)(_ + _)
-    val rankCarry = new Array[Long](n)
-    val denseBase = new Array[Long](n)
-    var distinctSoFar = 0L       // distinct groups in partitions < p
-    var prevNonEmpty = -1        // last non-empty partition before p
-    var p = 0
-    while (p < n) {
-      val part = partials(p)
-      if (part.count > 0L) {
-        // shared: does this partition's first group continue the previous
-        // non-empty partition's last group?
-        val shared = prevNonEmpty >= 0 &&
-          cmp.compare(partials(prevNonEmpty).last, part.first) == 0
-        // rank carry: rows in earlier partitions tying our first row —
-        // walk back through trailing runs while they span whole
-        // partitions (a partition that is entirely one tie group passes
-        // the chain through)
+      Partial(count, groups, leadEq, trailEq, first, prev)
+    } { partials =>
+      // driver: chain boundaries into a TieCarry per partition. All
+      // O(numPartitions) work on a few rows — no data moves.
+      val cmp = RowOrdering.create(orderLocal, childOutput)
+      val rowOffsets = partials.map(_.count).scanLeft(0L)(_ + _)
+      val total = rowOffsets.last
+      var distinctSoFar = 0L       // distinct groups in partitions < p
+      var prevNonEmpty = -1        // last non-empty partition before p
+      partials.indices.map { p =>
+        val part = partials(p)
         var carry = 0L
-        if (shared) {
-          var q = prevNonEmpty
-          var chained = true
-          while (chained && q >= 0) {
-            val pq = partials(q)
-            if (pq.count == 0L) q -= 1 // empty partitions are transparent
-            else if (cmp.compare(pq.last, part.first) == 0) {
-              carry += pq.trailEq
-              chained = pq.trailEq == pq.count
-              q -= 1
-            } else chained = false
+        var denseBase = distinctSoFar
+        if (part.count > 0L) {
+          // shared: does this partition's first group continue the
+          // previous non-empty partition's last group?
+          val shared = prevNonEmpty >= 0 &&
+            cmp.compare(partials(prevNonEmpty).last, part.first) == 0
+          // rank carry: rows in earlier partitions tying our first row —
+          // walk back through trailing runs while they span whole
+          // partitions (a partition that is entirely one tie group passes
+          // the chain through)
+          if (shared) {
+            var q = prevNonEmpty
+            var chained = true
+            while (chained && q >= 0) {
+              val pq = partials(q)
+              if (pq.count == 0L) q -= 1 // empty partitions are transparent
+              else if (cmp.compare(pq.last, part.first) == 0) {
+                carry += pq.trailEq
+                chained = pq.trailEq == pq.count
+                q -= 1
+              } else chained = false
+            }
+            denseBase -= 1L
           }
+          distinctSoFar += part.groups - (if (shared) 1L else 0L)
+          prevNonEmpty = p
         }
-        rankCarry(p) = carry
-        denseBase(p) = distinctSoFar - (if (shared) 1L else 0L)
-        distinctSoFar += part.groups - (if (shared) 1L else 0L)
-        prevNonEmpty = p
-      }
-      p += 1
-    }
-    val bc = input.sparkContext.broadcast((rowOffsets, rankCarry, denseBase))
-    val theKinds = kinds.toArray // stable local for task closures
-    val nKinds = theKinds.length
-    val totalRows = rowOffsets.last
-    // pass 2: re-detect local groups ONCE per row, emit every kind's
-    // value through an UnsafeProjection (created per task — it holds
-    // codegen state)
-    val types = output.map(_.dataType).toArray
-    input.mapPartitionsWithIndex({ (pid, it) =>
-      val (rowOff, carryArr, denseArr) = bc.value
+        TieCarry(rowOffsets(p), carry, denseBase, total)
+      }.toArray
+    } { (tc, it, out) =>
+      // pass 2: re-detect local groups ONCE per row, emit every kind
       val cmp2 = RowOrdering.create(orderLocal, childOutput)
-      val base = rowOff(pid)
-      val carry = carryArr(pid)
-      val dBase = denseArr(pid)
+      val base = tc.rowOffset
+      val totalRows = tc.total
       // ntile bucket geometry from the global count, per ntile kind: the
       // first `rem` buckets hold `big` rows, the rest hold big - 1
       // (Spark/SQL semantics). When N < n every row is its own bucket
@@ -215,11 +199,6 @@ case class GlobalTiesExec(order: Seq[SortOrder], kinds: Seq[TieKind],
         }
         ki += 1
       }
-      val nCols = types.length
-      val colBase = nCols - nKinds
-      val proj = org.apache.spark.sql.catalyst.expressions
-        .UnsafeProjection.create(types)
-      val out = new GenericInternalRow(nCols)
       var prev: InternalRow = null
       var localIdx = -1L   // 0-based row index within the partition
       var groupIdx = 0L    // 1-based tie-group index within the partition
@@ -232,37 +211,37 @@ case class GlobalTiesExec(order: Seq[SortOrder], kinds: Seq[TieKind],
         }
         prev = row
         // tie rank: first group continues the earlier partitions' value
-        def rank: Long =
-          if (groupIdx == 1L) base - carry + 1L
+        val rank =
+          if (groupIdx == 1L) base - tc.carry + 1L
           else base + groupStart + 1L
-        var j = 0
-        while (j < colBase) { out.update(j, row.get(j, types(j))); j += 1 }
         var i = 0
         while (i < nKinds) {
-          val value: Any = theKinds(i) match {
-            case TieKind.Rank => rank
-            case TieKind.DenseRank => dBase + groupIdx
-            case TieKind.RowNum => base + localIdx + 1L
+          theKinds(i) match {
+            case TieKind.Rank => out.setLong(i, rank)
+            case TieKind.DenseRank => out.setLong(i, tc.denseBase + groupIdx)
+            case TieKind.RowNum => out.setLong(i, base + localIdx + 1L)
             case TieKind.PercentRank =>
-              if (totalRows <= 1L) 0.0
-              else (rank - 1L).toDouble / (totalRows - 1L).toDouble
+              out.setDouble(i,
+                if (totalRows <= 1L) 0.0
+                else (rank - 1L).toDouble / (totalRows - 1L).toDouble)
             // this operator's order is the REVERSE of the user's window
             // order (see TieKind.CumeDist): rank here counts the strictly-
             // greater groups, so the complement is #{rows <= current}
             case TieKind.CumeDist =>
-              (totalRows - rank + 1L).toDouble / totalRows.toDouble
+              out.setDouble(i,
+                (totalRows - rank + 1L).toDouble / totalRows.toDouble)
             case TieKind.NTile(nb) =>
               val i0 = base + localIdx // global 0-based row position
-              if (i0 < ntileRem(i) * ntileBig(i)) i0 / ntileBig(i) + 1L
-              else ntileRem(i) + (i0 - ntileRem(i) * ntileBig(i)) /
-                (totalRows / nb) + 1L
+              out.setLong(i,
+                if (i0 < ntileRem(i) * ntileBig(i)) i0 / ntileBig(i) + 1L
+                else ntileRem(i) + (i0 - ntileRem(i) * ntileBig(i)) /
+                  (totalRows / nb) + 1L)
           }
-          out.update(colBase + i, value)
           i += 1
         }
-        proj(out)
+        out(row)
       }
-    }, preservesPartitioning = true)
+    }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan)
@@ -276,4 +255,11 @@ object GlobalTiesExec {
     * nested in the exec) so task closures don't drag the SparkPlan in. */
   private[plans] case class Partial(count: Long, groups: Long, leadEq: Long,
       trailEq: Long, first: InternalRow, last: InternalRow)
+
+  /** Per-partition carry: rows before the partition (`rowOffset`),
+    * earlier-partition rows tying its first row (`carry`), distinct
+    * groups before it net of a shared boundary group (`denseBase`), and
+    * the global row count (`total`). */
+  private[plans] case class TieCarry(rowOffset: Long, carry: Long,
+      denseBase: Long, total: Long)
 }

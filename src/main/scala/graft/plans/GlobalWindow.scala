@@ -98,7 +98,8 @@ object GlobalWindowRule extends Rule[LogicalPlan] {
   private case class Agg(kind: ScanKind, value: CAttr, ansi: Boolean,
       widen: Boolean)
 
-  private def integral(dt: DataType): Boolean =
+  /** Integral types narrower than Long (upcast without loss). */
+  private[plans] def integral(dt: DataType): Boolean =
     dt == IntegerType || dt == ShortType || dt == ByteType
 
   /** The long-domain input: a LongType attribute, a narrower integral
@@ -167,8 +168,9 @@ object GlobalWindowRule extends Rule[LogicalPlan] {
     * (physical micros — the boundary type Spark resolves for a timestamp
     * ORDER BY), or a calendar interval with no month component (a month
     * is not a fixed number of micros) — possibly under the parser's
-    * unfolded UnaryMinus. */
-  private object RangeOffset {
+    * unfolded UnaryMinus. [[GlobalHalfRangeRule]] reads its offsets with
+    * it too. */
+  private[plans] object RangeOffset {
     def unapply(e: Expression): Option[Long] = e match {
       case CurrentRow => Some(0L)
       case Literal(v: Long, LongType) if v != Long.MinValue => Some(v)

@@ -225,7 +225,7 @@ private[graft] object DedupQueries {
       val scratch = lshRows(TxnLog.readSnapshot(s, logDir, 1L))
       require(incremental.withColumn("_side", lit(1L))
         .unionByName(scratch.withColumn("_side", lit(-1L)))
-        .groupBy(incremental.columns.map(col): _*)
+        .groupBy(incremental.columns.toSeq.map(col): _*)
         .agg(sum(col("_side")).as("_d"))
         .where(col("_d") =!= 0L)
         .isEmpty,

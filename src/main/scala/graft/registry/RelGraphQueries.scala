@@ -603,7 +603,7 @@ private[graft] object RelGraphQueries {
         .repartition(col("node")).localCheckpoint(false)
       var levels = Vector(lv0)
       var visited = lv0.select("src", "node").localCheckpoint(false)
-      for (hop <- 1 to maxHop) {
+      for (_ <- 1 to maxHop) {
         val next = levels.last
           .join(edges, col("node") === col("a"))
           .select(col("src"), col("b").as("nxt"), col("sigma"))

@@ -95,7 +95,7 @@ private[graft] object StreamQueries {
         s"shard saw ${r.getLong(0)} of $n rows: MG cap $cap cannot " +
           s"guarantee the N/$k threshold — raise cap or shards"))
       val candidates = fin.flatMap(_.getSeq[Long](1)).distinct.sorted
-      ev.where(col("k").isin(candidates: _*))
+      ev.where(col("k").isin(candidates.toIndexedSeq: _*))
         .groupBy("k").agg(count(lit(1)).as("cnt"))
         .where(col("cnt") * k > n)
         .select(col("k").as("user_id"), col("cnt"))
@@ -1303,7 +1303,7 @@ private[graft] object StreamQueries {
         val scratch = fold(TxnLog.liveFilesAt(s, logDir, head))
         require(state.withColumn("_side", lit(1L))
           .unionByName(scratch.withColumn("_side", lit(-1L)))
-          .groupBy(state.columns.map(col): _*)
+          .groupBy(state.columns.toSeq.map(col): _*)
           .agg(sum(col("_side")).as("_d"))
           .where(col("_d") =!= 0L)
           .isEmpty,

@@ -144,7 +144,7 @@ class DedupSpec extends AnyFunSuite {
     val labels = Dedup.connectedComponents(nodes, edges, maxIter = 15)
     assert(labels.as[(Long, Long)].collect().toMap ==
       (1L to n).map(_ -> 1L).toMap)
-    val leaked = sc.getPersistentRDDs.keySet -- before
+    val leaked = sc.getPersistentRDDs.keySet.diff(before)
     // only the FINAL label snapshot may still hold blocks (the caller's
     // result); every per-round intermediate must have been unpersisted.
     // unpersist is async (blocking=false), so allow a small constant —

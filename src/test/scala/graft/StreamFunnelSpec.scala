@@ -39,7 +39,7 @@ class StreamFunnelSpec extends AnyFunSuite {
     "shuffled random stream (commutative state)") {
     val rnd = new scala.util.Random(7)
     val steps = Array("signup", "view", "purchase")
-    val rows = rnd.shuffle(Seq.tabulate(5000) { i =>
+    val rows = rnd.shuffle(Seq.fill(5000) {
       (rnd.nextLong(40), steps(rnd.nextInt(3)), rnd.nextLong(100000))
     })
     assert(replay(rows, "funnel_spec_a") == batchTruth(rows))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -98,6 +99,32 @@ class TaskRetrySpec extends AnyFunSuite {
       Recurrence.scan(d, "m", "c", 1L, "t" -> false)
         .orderBy("t").select("y").as[Long].collect().toSeq
     assert(run(failOnce(df, 2)) == run(df))
+  }
+
+  // the window-rule operators have no DataFrame entry point: each runs
+  // as the one Global* node of an un-partitioned window. Coalescing is
+  // off so the sort keeps several partitions and the boundary carries
+  // are non-trivial (ties, shifted rows and range neighbors cross them).
+  Seq(
+    "GlobalTies" -> rank().over(Window.orderBy("v")),
+    "GlobalShift" -> lag("v", 3).over(Window.orderBy("k", "v")),
+    "GlobalEdge" -> nth_value(col("k"), 700).over(Window.orderBy("v")),
+    "GlobalRange" ->
+      sum("v").over(Window.orderBy("k").rangeBetween(-2000, 2000))
+  ).foreach { case (node, win) =>
+    test(s"$node window is retry-exact") {
+      val key = "spark.sql.adaptive.coalescePartitions.enabled"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, "false")
+      try {
+        def run(df: DataFrame) = {
+          val q = df.select(col("k"), col("v"), win.as("w"))
+          assert(q.queryExecution.executedPlan.toString.contains(node))
+          q.orderBy("k", "v").collect().toSeq
+        }
+        assert(run(failOnce(base, 6)) == run(base))
+      } finally spark.conf.set(key, prev)
+    }
   }
 
   test("txn-log publish under an injected write failure: the commit " +

@@ -295,7 +295,7 @@ class TrainingOpsSpec extends AnyFunSuite {
     val idf = run("text_tfidf").collect()
       .map(r => r.getAs[String]("token") -> r.getAs[Double]("idf"))
       .toMap
-    rows.take(50).foreach { case (doc, _, token, score) =>
+    rows.take(50).foreach { case (_, _, token, score) =>
       // idf is rounded to 6 independently of the keyword score, so
       // only a loose agreement is exact-checkable: score/idf ~ integer
       val ratio = score / idf(token)

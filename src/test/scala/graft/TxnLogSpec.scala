@@ -583,7 +583,7 @@ class TxnLogSpec extends AnyFunSuite {
     }
     val full = TxnLog.readLog(spark, logDir)
     val before = (0L to 9L).map(v => TxnLog.liveFilesAt(spark, logDir, v))
-    val deleted = TxnLog.vacuum(spark, logDir, retain = 9L,
+    TxnLog.vacuum(spark, logDir, retain = 9L,
       keepCheckpoints = 2)
     // checkpoints existed at 2,4,6,8 -> GC keeps 6,8 (8 is the pointer)
     val f = new org.apache.hadoop.fs.Path(logDir)

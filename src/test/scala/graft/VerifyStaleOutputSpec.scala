@@ -12,7 +12,7 @@ class VerifyStaleOutputSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  private def ok(s: SparkSession, dir: String): DataFrame = {
+  private val ok: (SparkSession, String) => DataFrame = (s, _) => {
     import s.implicits._
     Seq(1L, 2L).toDF("v")
   }
