@@ -32,20 +32,13 @@ import org.apache.spark.sql.types.LongType
   *     key >= firstKey(p) + min(lo) and following rows with
   *     key <= lastKey(p) + max(hi), walking across partitions that
   *     qualify WHOLE (GlobalFrame's row splice, re-keyed by value);
-  *   - pass 2 streams preceding ++ local ++ following through a growable
-  *     buffer of narrow (key, value) rows; a local row is emitted once a
-  *     pushed key exceeds t + max(hi) (sorted input: its widest frame is
-  *     then complete). Per spec, frame endpoints advance monotonically
-  *     (enter/exit pointers — each stream index enters and leaves each
-  *     spec's frame exactly once).
+  *   - pass 2 streams preceding ++ local ++ following narrow (key,
+  *     value) rows through [[SlidingFrames]]; a local row is emitted once
+  *     a pushed key exceeds t + max(hi) (sorted input: its widest frame
+  *     is then complete). The frame ends move by key: per spec, the end
+  *     passes every pushed row with key <= t + hi, and the start every
+  *     row with key < t + lo.
   *
-  * Per-row cost per aggregate: count / count(*) / legacy sum are O(1)
-  * amortized (enter/exit deltas; wrapping subtraction is exact on the
-  * ring of Long); min/max amortized O(1) via monotonic deques; ANSI sum
-  * and avg re-fold the frame in order — ANSI sum must raise exactly when
-  * the native frame's in-order partial overflows, and avg must reproduce
-  * native Average's in-frame-order Double accumulation bit-for-bit
-  * (Spark's sliding frame recomputes its buffer per slide the same way).
   * Task memory is the frame's own working set (the rows within [lo, hi]
   * of the current key) — the buffering WindowExec does per frame, but
   * over a partition's slice instead of one task holding the whole
@@ -76,35 +69,18 @@ case class RangeSpec(kind: ScanKind, lo: Long, hi: Long, ansi: Boolean)
   def coversCurrent: Boolean = lo <= 0L && 0L <= hi
 }
 
-// Output typing mirrors GlobalFramePlan: counts are non-null longs;
-// sum/min/max/avg are nullable when the value is, or when the frame can
-// be empty (a frame not covering the current row truncates to empty at
-// the corpus edges / sparse key regions).
+// Output typing: [[ScanKind.output]] (a frame not covering the current
+// row is empty at the corpus edges and in sparse key regions).
 object GlobalRangePlan {
   def apply(order: Seq[SortOrder], key: Attribute, specs: Seq[RangeSpec],
             values: Seq[Attribute], child: LogicalPlan): GlobalRangePlan = {
     require(specs.nonEmpty, "GlobalRangePlan needs at least one spec")
     require(specs.length == values.length,
       "one value column per spec (a placeholder for count(*))")
-    val attrs = specs.zip(values).map { case (sp, value) =>
-      if (sp.kind == ScanKind.Sum || sp.kind == ScanKind.Avg)
-        require(value.dataType == LongType,
-          s"${sp.kind.sql} needs a LongType value column, got " +
-            s"${value.dataType} (the rule widens integral inputs)")
-      val maybeEmpty = !sp.coversCurrent
-      val (dt, nullable) = sp.kind match {
-        case ScanKind.Count | ScanKind.Rows =>
-          (LongType: org.apache.spark.sql.types.DataType, false)
-        case ScanKind.Avg =>
-          (org.apache.spark.sql.types.DoubleType,
-            value.nullable || maybeEmpty)
-        case ScanKind.Min | ScanKind.Max =>
-          (value.dataType, value.nullable || maybeEmpty)
-        case _ => (LongType, value.nullable || maybeEmpty)
-      }
-      AttributeReference("range", dt, nullable)()
-    }
-    GlobalRangePlan(order, key, specs, values, child, attrs)
+    GlobalRangePlan(order, key, specs, values, child, specs.zip(values).map {
+      case (sp, value) =>
+        ScanKind.output("range", sp.kind, value, !sp.coversCurrent)
+    })
   }
 }
 
@@ -338,131 +314,43 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
       // one streaming pass per partition
       val valueProj = UnsafeProjection.create(bounds)
 
-      // stream buffer of narrow rows, addressable by global stream index
-      val buf = new scala.collection.mutable.ArrayDeque[UnsafeRow]()
-      var bufBase = 0L // global index of buf.head
-      var pushed = 0L  // global index one past the newest push
-      def bufGet(gi: Long): UnsafeRow = buf((gi - bufBase).toInt)
-      def push(vrow: UnsafeRow): Unit = { buf.append(vrow); pushed += 1L }
-
-      // per-spec monotone frame pointers + incremental state
-      val start = new Array[Long](nSpecs) // first index with key >= t+lo
-      val end = new Array[Long](nSpecs)   // one past last with key <= t+hi
-      val cnt = new Array[Long](nSpecs)   // non-null values in frame
-      val wsum = new Array[Long](nSpecs)  // wrapping frame sum (legacy)
-      val isExt = kinds.map(kd => kd == ScanKind.Min || kd == ScanKind.Max)
-      val isMin = kinds.map(_ == ScanKind.Min)
-      val incremental = Array.tabulate(nSpecs)(i =>
-        kinds(i) == ScanKind.Count ||
-          (kinds(i) == ScanKind.Sum && !ansis(i)))
-      val gord = Array.tabulate(nSpecs)(i =>
-        if (isExt(i))
-          org.apache.spark.sql.catalyst.util.TypeUtils
-            .getInterpretedOrdering(dts(i))
-        else null)
-      // monotonic deques: (stream index, boxed value); values extracted
-      // at entry from that push's own row copy
-      val deques = Array.fill(nSpecs)(
-        new scala.collection.mutable.ArrayDeque[(Long, Any)]())
+      val frames = new SlidingFrames(kinds, ansis, dts, 1)
 
       def emit(full: InternalRow, t: Long, tNull: Boolean): UnsafeRow = {
         var i = 0
         while (i < nSpecs) {
           val loK = satAdd(t, los(i))
           val hiK = satAdd(t, his(i))
-          // ENTER: every pushed index whose key is within the frame's
-          // upper bound, ascending. A NULL current key frames exactly
-          // its peer group — the stream's null prefix (SQL range
-          // semantics: null +- offset is null). For a non-null key,
-          // null stream rows (ordered first) satisfy the <= bound and
-          // enter here, but always LEAVE again below before results are
-          // read (null < any loK), so they never contribute.
-          while (end(i) < pushed && {
-            val e = bufGet(end(i))
+          // END: past every pushed row whose key is within the frame's
+          // upper bound. A NULL current key frames exactly its peer
+          // group — the stream's null prefix (SQL range semantics: null
+          // +- offset is null). For a non-null key, null stream rows
+          // (ordered first) satisfy the <= bound, but the start always
+          // passes them again below (null < any loK), so they never
+          // contribute.
+          var end = frames.end(i)
+          while (end < frames.pushed && {
+            val e = frames.get(end)
             if (tNull) e.isNullAt(0)
             else e.isNullAt(0) || e.getLong(0) <= hiK
-          }) {
-            val vrow = bufGet(end(i))
-            if (!vrow.isNullAt(i + 1)) {
-              if (incremental(i)) {
-                cnt(i) += 1L
-                if (kinds(i) == ScanKind.Sum) wsum(i) += vrow.getLong(i + 1)
-              }
-              if (isExt(i)) {
-                val v = vrow.get(i + 1, dts(i))
-                val dq = deques(i)
-                val ord = gord(i)
-                while (dq.nonEmpty && {
-                  val c = ord.compare(dq.last._2, v)
-                  if (isMin(i)) c >= 0 else c <= 0
-                }) dq.removeLast()
-                dq.append((end(i), v))
-              }
-            }
-            end(i) += 1L
-          }
-          // LEAVE: every index whose key fell below loK (null keys
+          }) end += 1L
+          // START: past every row whose key fell below loK (null keys
           // count as below every non-null bound; a null current key
-          // leaves nothing — its peer-group frame only grows)
-          while (!tNull && start(i) < end(i) && {
-            val d = bufGet(start(i))
+          // moves no start — its peer-group frame only grows)
+          var start = frames.start(i)
+          while (!tNull && start < end && {
+            val d = frames.get(start)
             d.isNullAt(0) || d.getLong(0) < loK
-          }) {
-            val drow = bufGet(start(i))
-            if (incremental(i) && !drow.isNullAt(i + 1)) {
-              cnt(i) -= 1L
-              if (kinds(i) == ScanKind.Sum) wsum(i) -= drow.getLong(i + 1)
-            }
-            start(i) += 1L
-          }
-          kinds(i) match {
-            case ScanKind.Rows =>
-              out.setLong(i, end(i) - start(i))
-            case ScanKind.Count =>
-              out.setLong(i, cnt(i))
-            case ScanKind.Sum if !ansis(i) =>
-              out.update(i, if (cnt(i) == 0L) null else wsum(i))
-            case ScanKind.Sum => // ANSI: exact in-order re-fold — raises
-              // exactly when the native frame's in-order partial would
-              var s = 0L; var any = false
-              var gi = start(i)
-              while (gi < end(i)) {
-                val r = bufGet(gi)
-                if (!r.isNullAt(i + 1)) {
-                  s = Math.addExact(s, r.getLong(i + 1)); any = true
-                }
-                gi += 1L
-              }
-              out.update(i, if (any) s else null)
-            case ScanKind.Avg =>
-              // native parity: in-frame-order Double accumulation
-              var d = 0.0; var c = 0L
-              var gi = start(i)
-              while (gi < end(i)) {
-                val r = bufGet(gi)
-                if (!r.isNullAt(i + 1)) { d += r.getLong(i + 1); c += 1L }
-                gi += 1L
-              }
-              out.update(i, if (c > 0L) d / c else null)
-            case _ => // Min | Max: expire, then read the front
-              val dq = deques(i)
-              while (dq.nonEmpty && dq.head._1 < start(i)) dq.removeHead()
-              out.update(i,
-                if (dq.isEmpty || dq.head._1 >= end(i)) null else dq.head._2)
-          }
+          }) start += 1L
+          frames.advance(i, end, start)
+          frames.read(i, out)
           i += 1
         }
-        // evict buffer rows below every spec's frame start
-        var minStart = Long.MaxValue
-        i = 0
-        while (i < nSpecs) {
-          if (start(i) < minStart) minStart = start(i); i += 1
-        }
-        while (bufBase < minStart) { buf.removeHead(); bufBase += 1L }
+        frames.evict()
         out(full)
       }
 
-      pre.foreach(push)
+      pre.foreach(frames.push)
       // local rows pending emission until their widest frame is
       // complete: a non-null key waits for a pushed key past t + maxHi;
       // a null key waits for the first NON-null push (the null peer
@@ -494,7 +382,7 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
         val tNull = vrow.isNullAt(0)
         val t = if (tNull) 0L else vrow.getLong(0)
         val ready = drainReady(t, tNull)
-        push(vrow)
+        frames.push(vrow)
         pending.append((row, t, tNull))
         ready
       }
@@ -504,7 +392,7 @@ case class GlobalRangeExec(order: Seq[SortOrder], key: Attribute,
         val drained = post.iterator.flatMap { vrow =>
           val kNull = vrow.isNullAt(0)
           val ready = drainReady(if (kNull) 0L else vrow.getLong(0), kNull)
-          push(vrow)
+          frames.push(vrow)
           ready
         }
         drained ++ pending.iterator.map { case (row, t, tNull) =>

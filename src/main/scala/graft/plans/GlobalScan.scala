@@ -5,8 +5,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, RowOrdering, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** DISTRIBUTED PREFIX SCAN: `running = agg(value) over rows <= current` in
   * a total order, with NO single-partition stage — [[GlobalRankPlan]]'s
@@ -79,6 +80,57 @@ object ScanKind {
   case object Max extends ScanKind("max")
   /** running exact-sum / exact-count as double (null until first) */
   case object Avg extends ScanKind("avg")
+
+  /** The appended column of an aggregate of `kind` over `value`, typed
+    * and nullable as the window aggregate it replaces: counts are
+    * non-null longs; avg is a double; sum is a long; min/max keep the
+    * value's type. Sum, avg, min and max are NULL until the first
+    * non-null value, and also when the frame `maybeEmpty` (a frame that
+    * does not cover the current row is empty at the corpus edges). A
+    * non-null schema over a NULL-emitting exec would let the optimizer
+    * fold `x IS NULL` to false. Sum and avg run on Long: the rule widens
+    * integral inputs below the plan. */
+  def output(name: String, kind: ScanKind, value: Attribute,
+             maybeEmpty: Boolean): AttributeReference = {
+    if (kind == Sum || kind == Avg)
+      require(value.dataType == LongType,
+        s"${kind.sql} needs a LongType value column, got " +
+          s"${value.dataType} (the rule widens integral inputs)")
+    val nullable = value.nullable || maybeEmpty
+    val (dt, nl) = kind match {
+      case Count | Rows => (LongType: DataType, false)
+      case Avg => (DoubleType, nullable)
+      case Min | Max => (value.dataType, nullable)
+      case Sum => (LongType, nullable)
+    }
+    AttributeReference(name, dt, nl)()
+  }
+}
+
+/** A min or max over any orderable type: the value type's interpreted
+  * ordering and the spec's direction. Built where it is used, in a task
+  * or on the driver (the ordering need not be serializable). */
+private[plans] final class Extremum(dt: DataType, isMin: Boolean) {
+  private val ord = TypeUtils.getInterpretedOrdering(dt)
+  private def cmp(v: Any, cur: Any): Int =
+    if (isMin) ord.compare(cur, v) else ord.compare(v, cur)
+  /** `v` is strictly better than `cur`; null (no value yet) is beaten by
+    * anything. */
+  def beats(v: Any, cur: Any): Boolean = cur == null || cmp(v, cur) > 0
+  /** `v` is as good as or better than `cur`. */
+  def ties(v: Any, cur: Any): Boolean = cmp(v, cur) >= 0
+  /** The fold of two partial extrema: `b` replaces `a` only when
+    * strictly better; null is the identity. */
+  def pick(a: Any, b: Any): Any = if (b != null && beats(b, a)) b else a
+}
+
+private[plans] object Extremum {
+  /** One per min/max spec, null for the other kinds. */
+  def perSpec(kinds: Array[ScanKind], dts: Array[DataType])
+  : Array[Extremum] = Array.tabulate(kinds.length)(i =>
+    if (kinds(i) == ScanKind.Min || kinds(i) == ScanKind.Max)
+      new Extremum(dts(i), kinds(i) == ScanKind.Min)
+    else null)
 }
 
 /** One aggregate computed by the scan: its kind, whether sum overflow
@@ -92,40 +144,19 @@ object ScanKind {
 case class ScanSpec(kind: ScanKind, ansi: Boolean, range: Boolean)
   extends Serializable
 
-// SQL running-sum semantics: NULL until the first non-null value, so each
-// scan column must be nullable exactly when its value column is — the
-// companion apply derives it (a non-null schema over a NULL-emitting exec
-// would let the optimizer fold `running IS NULL` to false). Constructor
-// field, not a body val: copy()/transform preserve the exprIds; only
-// genuinely fresh constructions mint them.
+// A prefix always holds the current row, so a running column is
+// nullable exactly when its value column is ([[ScanKind.output]]).
+// Constructor field, not a body val: copy()/transform preserve the
+// exprIds; only genuinely fresh constructions mint them.
 object GlobalScanPlan {
   def apply(order: Seq[SortOrder], specs: Seq[ScanSpec],
             values: Seq[Attribute], child: LogicalPlan): GlobalScanPlan = {
     require(specs.nonEmpty, "GlobalScanPlan needs at least one spec")
     require(specs.length == values.length,
       "one value column per spec (a placeholder for count(*))")
-    val attrs = specs.zip(values).map { case (sp, value) =>
-      // output type/nullability mirror the window aggregate this
-      // replaces: counts are non-null longs, avg is a nullable double,
-      // sum/min/max are null exactly until the first non-null value —
-      // i.e. nullable iff the value column is
-      if (sp.kind == ScanKind.Sum || sp.kind == ScanKind.Avg)
-        require(value.dataType == LongType,
-          s"${sp.kind.sql} needs a LongType value column, got " +
-            s"${value.dataType} (the rule widens integral inputs)")
-      val (dt, nullable) = sp.kind match {
-        case ScanKind.Count | ScanKind.Rows =>
-          (LongType: org.apache.spark.sql.types.DataType, false)
-        case ScanKind.Avg =>
-          (org.apache.spark.sql.types.DoubleType, value.nullable)
-        // min/max keep the value's own type (any orderable type rides
-        // the generic path; LongType stays primitive)
-        case ScanKind.Min | ScanKind.Max => (value.dataType, value.nullable)
-        case _ => (LongType, value.nullable)
-      }
-      AttributeReference("running", dt, nullable)()
-    }
-    GlobalScanPlan(order, specs, values, child, attrs)
+    GlobalScanPlan(order, specs, values, child, specs.zip(values).map {
+      case (sp, value) => ScanKind.output("running", sp.kind, value, false)
+    })
   }
 
   /** Single-aggregate convenience (the [[GlobalScan.runningSum]] entry
@@ -183,7 +214,6 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
     val needEval = Array.tabulate(k)(i => !generics(i) &&
       (kinds(i) == ScanKind.Sum || kinds(i) == ScanKind.Avg ||
         kinds(i) == ScanKind.Min || kinds(i) == ScanKind.Max))
-    val isMin = kinds.map(_ == ScanKind.Min)
     val countsValue = kinds.map(_ != ScanKind.Rows)
     val isAvg = kinds.map(_ == ScanKind.Avg)
     val exacts = specs.map(sp =>
@@ -216,19 +246,7 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
     twoPass { (_, it) =>
       val cmp = if (anyRange) RowOrdering.create(orderLocal, childOutput)
         else null
-      // generic-extrema orderings, built per task (DataType ships fine;
-      // the interpreted ordering itself need not be serializable)
-      val gord = Array.tabulate(k)(i =>
-        if (generics(i))
-          org.apache.spark.sql.catalyst.util.TypeUtils
-            .getInterpretedOrdering(dts(i))
-        else null)
-      // null = identity (no value yet); replace when the candidate is
-      // strictly better in the spec's direction
-      def gBetter(i: Int, v: Any, cur: Any): Boolean = cur == null || {
-        val c = gord(i).compare(v, cur)
-        if (isMin(i)) c < 0 else c > 0
-      }
+      val ext = Extremum.perSpec(kinds, dts)
       val s = new Array[Long](k); val c = new Array[Long](k)
       var r = 0L
       val mn = Array.fill(k)(Long.MaxValue)
@@ -265,9 +283,9 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
               // (already-copied, persisted) row so partials survive the
               // collect
               val v = bounds(i).eval(row)
-              if (gBetter(i, v, gext(i)))
+              if (ext(i).beats(v, gext(i)))
                 gext(i) = InternalRow.copyValue(v)
-              if (anyRange && leading && gBetter(i, v, lgext(i)))
+              if (anyRange && leading && ext(i).beats(v, lgext(i)))
                 lgext(i) = InternalRow.copyValue(v)
             } else if (needEval(i)) {
               val v = bounds(i).eval(row).asInstanceOf[Long]
@@ -319,21 +337,7 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
       val gextOff = new Array[Array[Any]](k)
       val dblOff = new Array[Array[Double]](k)
       val exOk = new Array[Array[Boolean]](k)
-      // driver-side generic fold (same contract as the task-side one:
-      // null = identity, replace on strictly-better in the spec's
-      // direction)
-      val driverOrd = Array.tabulate(k)(i =>
-        if (generics(i))
-          org.apache.spark.sql.catalyst.util.TypeUtils
-            .getInterpretedOrdering(dts(i))
-        else null)
-      def gPick(i: Int, a: Any, b: Any): Any =
-        if (b == null) a
-        else if (a == null) b
-        else {
-          val c = driverOrd(i).compare(b, a)
-          if (if (isMin(i)) c < 0 else c > 0) b else a
-        }
+      val ext = Extremum.perSpec(kinds, dts)
       var si = 0
       while (si < k) {
         if (isAvg(si)) {
@@ -354,7 +358,7 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
         maxOff(si) = partials.map(_.mxs(si)).scanLeft(Long.MinValue)(Math.max)
         gextOff(si) =
           if (generics(si))
-            partials.map(_.gexts(si)).scanLeft(null: Any)(gPick(si, _, _))
+            partials.map(_.gexts(si)).scanLeft(null: Any)(ext(si).pick)
           else Array.fill[Any](nP + 1)(null)
         si += 1
       }
@@ -389,7 +393,7 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
                   if (pq.lmns(i) < dl.mns(i)) dl.mns(i) = pq.lmns(i)
                   if (pq.lmxs(i) > dl.mxs(i)) dl.mxs(i) = pq.lmxs(i)
                   if (generics(i))
-                    dl.gexts(i) = gPick(i, dl.gexts(i), pq.lgexts(i))
+                    dl.gexts(i) = ext(i).pick(dl.gexts(i), pq.lgexts(i))
                   if (isAvg(i)) {
                     if (dl.exacts(i) && !pq.lovfs(i)) {
                       try dl.sums(i) = Math.addExact(dl.sums(i), pq.lsums(i))
@@ -429,15 +433,7 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
       val mn = off.mns.clone()
       val mx = off.mxs.clone()
       val gacc = off.gexts.clone()
-      val gord2 = Array.tabulate(k)(i =>
-        if (generics(i))
-          org.apache.spark.sql.catalyst.util.TypeUtils
-            .getInterpretedOrdering(dts(i))
-        else null)
-      def gBetter2(i: Int, v: Any, cur: Any): Boolean = cur == null || {
-        val c = gord2(i).compare(v, cur)
-        if (isMin(i)) c < 0 else c > 0
-      }
+      val ext = Extremum.perSpec(kinds, dts)
       val dacc = off.ds.clone()
       val exactOk = off.exacts.clone()
       def accumulate(row: InternalRow): Unit = {
@@ -449,7 +445,7 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
             cnt(i) += 1L
             if (generics(i)) {
               val v = bounds(i).eval(row)
-              if (gBetter2(i, v, gacc(i)))
+              if (ext(i).beats(v, gacc(i)))
                 gacc(i) = InternalRow.copyValue(v)
             } else if (needEval(i)) {
               val v = bounds(i).eval(row).asInstanceOf[Long]
@@ -494,18 +490,8 @@ case class GlobalScanExec(order: Seq[SortOrder], specs: Seq[ScanSpec],
                 if (!hasD) acc(i)
                 else if (exacts(i)) Math.addExact(acc(i), del.sums(i))
                 else acc(i) + del.sums(i)
-              case ScanKind.Min if generics(i) =>
-                if (hasD && del.gexts(i) != null &&
-                    (gacc(i) == null ||
-                      gord2(i).compare(del.gexts(i), gacc(i)) < 0))
-                  del.gexts(i)
-                else gacc(i)
-              case ScanKind.Max if generics(i) =>
-                if (hasD && del.gexts(i) != null &&
-                    (gacc(i) == null ||
-                      gord2(i).compare(del.gexts(i), gacc(i)) > 0))
-                  del.gexts(i)
-                else gacc(i)
+              case ScanKind.Min | ScanKind.Max if generics(i) =>
+                if (hasD) ext(i).pick(gacc(i), del.gexts(i)) else gacc(i)
               case ScanKind.Min =>
                 if (hasD) Math.min(mn(i), del.mns(i)) else mn(i)
               case ScanKind.Max =>

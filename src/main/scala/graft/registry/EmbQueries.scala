@@ -4,7 +4,7 @@ package registry
 import SparkEntry.{tbl, staged, stagePartitionedObjects}
 import Shared.{cleanToksSql, bm25ScoresDf, pcaCovCtes, embUnnestCte}
 import graft.ops.{Dedup, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Embedding operators: similarity search (brute force, LSH, IVF, PQ),
@@ -157,6 +157,47 @@ private[graft] object EmbQueries {
       l -> mv.slice(j * subDim, (j + 1) * subDim) })
   }
 
+  /** The IVF query vector (vector 0 of `emb`, read with one `head()`
+    * job) and the coarse routing against it. */
+  private final class IvfQuery(emb: DataFrame) {
+    val vec: Seq[Double] = emb.where(col("vec_id") === 0).select("embedding")
+      .head().getSeq[Float](0).map(_.toDouble).toSeq
+    val arr: Column = array(vec.map(lit): _*)
+    private val norm = math.sqrt(vec.map(x => x * x).sum)
+    /** Every cell `(clabel, ccos)`: its label centroid's rounded cosine
+      * to the query. The centroids are one native vector-mean agg, and
+      * the scoring one native dot per row of the 10-row centroid table. */
+    def cells: DataFrame = Similarity.centroids(
+        emb, col("embedding"), col("label"))
+      .select(col("grp").as("clabel"),
+        round(Similarity.dot(col("centroid"), arr) /
+          (sqrt(Similarity.dot(col("centroid"), col("centroid"))) *
+            lit(norm)), 6).as("ccos"))
+    /** The top-3 cells by cosine, ties by label: a sort-limit
+      * (TakeOrderedAndProject over the 10-row model — no single-partition
+      * Window). */
+    def probed: DataFrame = cells.orderBy(col("ccos").desc, col("clabel").asc)
+      .limit(3).select("clabel")
+  }
+
+  /** The ADC score of rows carrying PQ codes `code_0..code_{m-1}`: per
+    * subspace j, the rounded squared distances from the query's slice j
+    * to the codebook entries (driver math, inlined as an array literal;
+    * `cb` is sorted by label, so label doubles as the lookup position),
+    * looked up by code, summed and rounded. */
+  private def adcScore(q: Seq[Double],
+                       cb: Seq[Seq[(Long, Seq[Double])]]): Column = {
+    def r6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    round(cb.zipWithIndex.map { case (cents, j) =>
+      val qs = q.slice(j * 16, (j + 1) * 16)
+      val tab = cents.map { case (_, mv) =>
+        r6(qs.zip(mv).map { case (a, b) => (a - b) * (a - b) }.sum)
+      }
+      element_at(array(tab.map(lit): _*), (col(s"code_$j") + 1).cast("int"))
+    }.reduce(_ + _), 6)
+  }
+
   /** IVF×PQ composed search (Jégou et al. 2011's IVFADC — the shape
     * that serves billion-vector ANN): the coarse quantizer routes the
     * query to nprobe=3 of 10 cells, PQ codes score ONLY those cells'
@@ -171,43 +212,19 @@ private[graft] object EmbQueries {
   private def ivfPqTop10(s: SparkSession, dir: String): DataFrame = {
     val emb = tbl(s, dir, "embeddings")
     val cb = pqCodebook(s, dir)
-    val qvec = emb.where(col("vec_id") === 0).select("embedding")
-      .head().getSeq[Float](0).map(_.toDouble).toSeq
-    val qarr = array(qvec.map(lit): _*)
-    val qnorm = math.sqrt(qvec.map(x => x * x).sum)
-    // stage 1 — coarse routing: top-3 cells by rounded centroid cosine
-    val probed = graft.ops.Similarity.centroids(
-        emb, col("embedding"), col("label"))
-      .select(col("grp").as("clabel"),
-        round(Similarity.dot(col("centroid"), qarr) /
-          (sqrt(Similarity.dot(col("centroid"), col("centroid"))) *
-            lit(qnorm)), 6).as("ccos"))
-      .orderBy(col("ccos").desc, col("clabel").asc)
-      .limit(3).select("clabel")
-    // stage 2 — ADC over the probed cells only: per-subspace distance
-    // tables from the model (driver math, broadcast as literals)
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val dt: Seq[Seq[Double]] = cb.zipWithIndex.map { case (cents, j) =>
-      val qs = qvec.slice(j * 16, (j + 1) * 16)
-      cents.map { case (_, mv) =>
-        r6(qs.zip(mv).map { case (a, b) => (a - b) * (a - b) }.sum)
-      }
-    }
+    val q = new IvfQuery(emb)
+    // stage 1 — coarse routing: top-3 cells by rounded centroid cosine;
+    // stage 2 — ADC over the probed cells only
     val candidates =
-      emb.join(broadcast(probed), col("label") === col("clabel"))
+      emb.join(broadcast(q.probed), col("label") === col("clabel"))
     val codes = Similarity.pqCodes(candidates, col("embedding"),
       col("vec_id"), cb, subDim = 16)
-    val adc = round(dt.zipWithIndex.map { case (tab, j) =>
-      element_at(array(tab.map(lit): _*),
-        (col(s"code_$j") + 1).cast("int"))
-    }.reduce(_ + _), 6)
-    val shortlist = codes.select(col("vec_id"), adc.as("adc"))
+    val shortlist = codes.select(col("vec_id"), adcScore(q.vec, cb).as("adc"))
       .orderBy(col("adc").asc, col("vec_id").asc).limit(50)
     // stage 3 — exact re-rank of the 50-row shortlist only
     emb.join(broadcast(shortlist), "vec_id")
       .select(col("vec_id"), col("adc"),
-        round(Similarity.cosine(col("embedding"), qarr), 6).as("cos"))
+        round(Similarity.cosine(col("embedding"), q.arr), 6).as("cos"))
       .orderBy(col("cos").desc, col("vec_id").asc).limit(10)
   }
 
@@ -1278,23 +1295,9 @@ private[graft] object EmbQueries {
       val q = tbl(s, dir, "embeddings").where(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>"))
         .head().getSeq[Double](0)
-      def r6(x: Double): Double =
-        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      // dt(j)(label) = rounded ||q_j - m_{j,label}||^2; cb is sorted by
-      // label 0..k-1, so label doubles as the lookup position
-      val dt: Seq[Seq[Double]] = cb.zipWithIndex.map { case (cents, j) =>
-        val qs = q.slice(j * 16, (j + 1) * 16)
-        cents.map { case (_, mv) =>
-          r6(qs.zip(mv).map { case (a, b) => (a - b) * (a - b) }.sum)
-        }
-      }
       val codes = Similarity.pqCodes(tbl(s, dir, "embeddings"),
         col("embedding"), col("vec_id"), cb, subDim = 16)
-      val adc = round(dt.zipWithIndex.map { case (tab, j) =>
-        element_at(array(tab.map(lit): _*),
-          (col(s"code_$j") + 1).cast("int"))
-      }.reduce(_ + _), 6)
-      codes.select(col("vec_id"), adc.as("adc"))
+      codes.select(col("vec_id"), adcScore(q, cb).as("adc"))
         .orderBy(col("adc").asc, col("vec_id").asc).limit(10)
     },
       s"""WITH $embUnnestCte,
@@ -1321,25 +1324,10 @@ private[graft] object EmbQueries {
     // ANN linear-scan-free at 100 TB
     Query("emb_ivf_search", (s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val qvec = emb.where(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble).toSeq
-      val qarr = array(qvec.map(lit): _*)
-      val qnorm = math.sqrt(qvec.map(x => x * x).sum)
-      // centroid train = native vector-mean agg (no posexplode); cell
-      // scoring is then one native dot per 10-row centroid table
-      val cell = graft.ops.Similarity.centroids(
-          emb, col("embedding"), col("label"))
-        .select(col("grp").as("clabel"),
-          round(Similarity.dot(col("centroid"), qarr) /
-            (sqrt(Similarity.dot(col("centroid"), col("centroid"))) *
-              lit(qnorm)), 6).as("ccos"))
-      // top-3 probed cells via sort-limit (TakeOrderedAndProject over the
-      // 10-row model — no single-partition Window anywhere in the plan)
-      val probed = cell.orderBy(col("ccos").desc, col("clabel").asc)
-        .limit(3).select("clabel")
-      emb.join(broadcast(probed), col("label") === col("clabel"))
+      val q = new IvfQuery(emb)
+      emb.join(broadcast(q.probed), col("label") === col("clabel"))
         .select(col("vec_id"), col("label"),
-          round(Similarity.cosine(col("embedding"), qarr), 6).as("cos"))
+          round(Similarity.cosine(col("embedding"), q.arr), 6).as("cos"))
         .orderBy(col("cos").desc, col("vec_id").asc).limit(10)
     },
       s"""WITH $embUnnestCte,
@@ -1382,24 +1370,13 @@ private[graft] object EmbQueries {
     // 3 of 10 cells; recall measures exactly what that pruning costs.
     Query("emb_ivf_recall", (s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val qvec = emb.where(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble).toSeq
-      val qarr = array(qvec.map(lit): _*)
-      val qnorm = math.sqrt(qvec.map(x => x * x).sum)
-      val cell = graft.ops.Similarity.centroids(
-          emb, col("embedding"), col("label"))
-        .select(col("grp").as("clabel"),
-          round(Similarity.dot(col("centroid"), qarr) /
-            (sqrt(Similarity.dot(col("centroid"), col("centroid"))) *
-              lit(qnorm)), 6).as("ccos"))
-      val probed = cell.orderBy(col("ccos").desc, col("clabel").asc)
-        .limit(3).select("clabel")
-      val ivf = emb.join(broadcast(probed), col("label") === col("clabel"))
+      val q = new IvfQuery(emb)
+      val ivf = emb.join(broadcast(q.probed), col("label") === col("clabel"))
         .select(col("vec_id"),
-          round(Similarity.cosine(col("embedding"), qarr), 6).as("cos"))
+          round(Similarity.cosine(col("embedding"), q.arr), 6).as("cos"))
         .orderBy(col("cos").desc, col("vec_id").asc).limit(10)
         .select(col("vec_id").as("ivf_id"))
-      Similarity.knn(emb, col("embedding"), col("vec_id"), qvec, 10)
+      Similarity.knn(emb, col("embedding"), col("vec_id"), q.vec, 10)
         .select(col("vec_id"))
         .join(ivf, col("vec_id") === col("ivf_id"), "left_semi")
         .agg(count(lit(1)).as("n_overlap"))
@@ -1467,16 +1444,8 @@ private[graft] object EmbQueries {
     // reads to pick its operating point.
     Query("emb_ivf_nprobe_curve", (s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val qvec = emb.where(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble).toSeq
-      val qarr = array(qvec.map(lit): _*)
-      val qnorm = math.sqrt(qvec.map(x => x * x).sum)
-      val cellRanked = graft.ops.Similarity.centroids(
-          emb, col("embedding"), col("label"))
-        .select(col("grp").as("clabel"),
-          round(Similarity.dot(col("centroid"), qarr) /
-            (sqrt(Similarity.dot(col("centroid"), col("centroid"))) *
-              lit(qnorm)), 6).as("ccos"))
+      val q = new IvfQuery(emb)
+      val cellRanked = q.cells
         .withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window
             .orderBy(col("ccos").desc, col("clabel").asc)))
@@ -1485,7 +1454,7 @@ private[graft] object EmbQueries {
       val scored = emb
         .join(broadcast(cellRanked), col("label") === col("clabel"))
         .select(col("vec_id"), col("rn"),
-          round(Similarity.cosine(col("embedding"), qarr), 6).as("cos"))
+          round(Similarity.cosine(col("embedding"), q.arr), 6).as("cos"))
       val rungs = Seq(1L, 4L, 10L)
       val nps = s.createDataFrame(rungs.map(Tuple1(_)))
         .toDF("nprobe")
@@ -1498,7 +1467,7 @@ private[graft] object EmbQueries {
             .orderBy(col("cos").desc, col("vec_id").asc)))
         .where(col("rk") <= 10).select(col("nprobe"), col("vec_id"))
       val exact = Similarity.knn(emb, col("embedding"), col("vec_id"),
-        qvec, 10).select(col("vec_id"))
+        q.vec, 10).select(col("vec_id"))
       val overlap = ivfTop.join(exact, Seq("vec_id"), "left_semi")
         .groupBy(col("nprobe")).agg(count(lit(1)).as("n_overlap"))
       val curve = nCand.join(overlap, Seq("nprobe"), "left_outer")
@@ -1605,8 +1574,7 @@ private[graft] object EmbQueries {
     // as exact-arithmetic overlap counting on both engines.
     Query("emb_ivfpq_recall", (s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val qvec = emb.where(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble).toSeq
+      val qvec = new IvfQuery(emb).vec
       val ivfpq = ivfPqTop10(s, dir).select(col("vec_id").as("pq_id"))
       Similarity.knn(emb, col("embedding"), col("vec_id"), qvec, 10)
         .select(col("vec_id"))
@@ -1720,38 +1688,15 @@ private[graft] object EmbQueries {
       // as the per-query build: coarse routing (frozen quantizer), ADC
       // over stored codes, exact re-rank of the shortlist vs the
       // snapshot
-      val qvec = emb.where(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble).toSeq
-      val qarr = array(qvec.map(lit): _*)
-      val qnorm = math.sqrt(qvec.map(x => x * x).sum)
-      val probed = graft.ops.Similarity.centroids(
-          emb, col("embedding"), col("label"))
-        .select(col("grp").as("clabel"),
-          round(Similarity.dot(col("centroid"), qarr) /
-            (sqrt(Similarity.dot(col("centroid"), col("centroid"))) *
-              lit(qnorm)), 6).as("ccos"))
-        .orderBy(col("ccos").desc, col("clabel").asc)
-        .limit(3).select("clabel")
-      def r6(x: Double): Double =
-        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val dt: Seq[Seq[Double]] = cb.zipWithIndex.map { case (cents, j) =>
-        val qs = qvec.slice(j * 16, (j + 1) * 16)
-        cents.map { case (_, mv) =>
-          r6(qs.zip(mv).map { case (a, b) => (a - b) * (a - b) }.sum)
-        }
-      }
-      val adc = round(dt.zipWithIndex.map { case (tab, j) =>
-        element_at(array(tab.map(lit): _*),
-          (col(s"code_$j") + 1).cast("int"))
-      }.reduce(_ + _), 6)
+      val q = new IvfQuery(emb)
       val shortlist = index
-        .join(broadcast(probed), col("label") === col("clabel"))
-        .select(col("vec_id"), adc.as("adc"))
+        .join(broadcast(q.probed), col("label") === col("clabel"))
+        .select(col("vec_id"), adcScore(q.vec, cb).as("adc"))
         .orderBy(col("adc").asc, col("vec_id").asc).limit(50)
       TxnLog.readSnapshot(s, logDir, 1L)
         .join(broadcast(shortlist), "vec_id")
         .select(col("vec_id"), col("adc"),
-          round(Similarity.cosine(col("embedding"), qarr), 6).as("cos"))
+          round(Similarity.cosine(col("embedding"), q.arr), 6).as("cos"))
         .orderBy(col("cos").desc, col("vec_id").asc).limit(10)
     },
       // the maintained-index search replayed: identical composition to

@@ -262,8 +262,16 @@ class GlobalFrameSpec extends AnyFunSuite {
     val df = Seq((1L, big), (2L, big), (3L, 1L)).toDF("t", "v")
       .repartition(2)
     val prev = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
     try {
+      // legacy: wrapping sliding sums equal WindowExec's bit for bit
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      val wide = spark.range(200).select(col("id").as("t"),
+        (lit(big) + col("id") * 7919L).as("v")).repartition(4)
+      val (native, got, plan) = nativeVsRewritten(b => wide.select(col("t"),
+        sum(col("v")).over(b.rowsBetween(-3, 1)).as("s")), "t")
+      assert(plan.contains("GlobalFrame"), plan)
+      assert(got == native)
+      spark.conf.set("spark.sql.ansi.enabled", "true")
       val q = df.select(col("t"), sum(col("v")).over(frame(1)).as("s"))
       assert(q.queryExecution.executedPlan.toString
         .contains("GlobalFrame"))

@@ -49,7 +49,12 @@ class GlobalRangeSpec extends AnyFunSuite {
       count(lit(1)).over(w.rangeBetween(lo, hi)).as("n"),
       min(col("v")).over(w.rangeBetween(lo, hi)).as("mn"),
       max(col("v")).over(w.rangeBetween(lo, hi)).as("mx"),
-      avg(col("v")).over(w.rangeBetween(lo, hi)).as("a"))
+      avg(col("v")).over(w.rangeBetween(lo, hi)).as("a"),
+      // a non-Long extremum: reversed digits order unlike the numbers
+      min(reverse(col("v").cast("string")))
+        .over(w.rangeBetween(lo, hi)).as("smn"),
+      max(reverse(col("v").cast("string")))
+        .over(w.rangeBetween(lo, hi)).as("smx"))
 
   private def check(lo: Long, hi: Long): Unit = {
     assertNative(q(nw, lo, hi))
